@@ -20,6 +20,12 @@ import re
 from pyspark.sql import Column, functions as F
 
 
+def quote_ident(name: str) -> str:
+    """Backtick-quote a column name for splicing into a Spark SQL string;
+    an embedded backtick is doubled, so any name parses as one identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def rnd(col: Column, digits: int) -> Column:
     """Deterministic half-up rounding, identical across engines. Returns
     DOUBLE (long floor result divided back)."""

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from pontem_spark.functions.compat import rnd
+from pontem_spark.functions.compat import quote_ident, rnd
 
 # The ONE state definition, shared by the batch DataFrame aggregations
 # below and the Python tuple form used by streaming
@@ -134,18 +134,19 @@ def decayed_state(
     # spell out the identical trees (explicit DOUBLE casts — bare SQL
     # float literals parse as DECIMAL), so weights are bit-identical.
     h = float(halflife_s)
+    ts, val = quote_ident(ts_col), quote_ident(val_col)
     w = (
-        f"power(CAST(2.0 AS DOUBLE), (-(CAST((ref_us - unix_micros({ts_col})) AS DOUBLE) "
+        f"power(CAST(2.0 AS DOUBLE), (-(CAST((ref_us - unix_micros({ts})) AS DOUBLE) "
         f"/ CAST(1000000.0 AS DOUBLE))) / CAST({h!r} AS DOUBLE))"
     )
     ref = df.groupBy(key_col).agg(
-        F.expr(f"max(unix_micros({ts_col}))").alias("ref_us")
+        F.expr(f"max(unix_micros({ts}))").alias("ref_us")
     )
     j = df.join(ref, key_col)
     return j.groupBy(key_col, "ref_us").agg(
         F.expr("CAST(count(1) AS BIGINT)").alias("n"),
         F.expr(f"sum({w})").alias("sum_w"),
-        F.expr(f"sum(({w}) * CAST({val_col} AS DOUBLE))").alias("sum_wv"),
+        F.expr(f"sum(({w}) * CAST({val} AS DOUBLE))").alias("sum_wv"),
     )
 
 
@@ -181,7 +182,7 @@ def merge_decayed(
     aw, awv = scaled("a")
     bw, bwv = scaled("b")
     return j.select(
-        F.expr(f"coalesce(a.{key_col}, b.{key_col})").alias(key_col),
+        F.expr(f"coalesce(a.{quote_ident(key_col)}, b.{quote_ident(key_col)})").alias(key_col),
         F.expr(new_ref).alias("ref_us"),
         F.expr("CAST((coalesce(a.n, 0) + coalesce(b.n, 0)) AS BIGINT)").alias("n"),
         F.expr(f"({aw}) + ({bw})").alias("sum_w"),

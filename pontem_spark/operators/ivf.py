@@ -104,7 +104,7 @@ def assign_cells(
 
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
-        mat = _np_rows(vecs)
+        mat = _np_rows(vecs, len(cands[0][1]))
         ns = _np_neg_sims(mat, _np_norm(mat), cands, scale)
         return pd.Series(_np_top_cells(ns, cids, take))
 
@@ -149,10 +149,15 @@ def _portable_round_py(x: float, round_digits: int) -> float:
 # by the pure-Python Lloyd replay test.
 
 
-def _np_rows(series) -> "object":
+def _np_rows(series, dim: int) -> "object":
+    """Stack a batch of vectors into an (n, dim) float64 matrix. A null
+    vector becomes the zero vector: its norm is 0, so every cosine
+    candidate scores +Infinity and the stable argsort picks the lowest
+    centroid id, which is what the SQL fold did with a null row."""
     import numpy as np
 
-    return np.asarray([np.asarray(v, dtype=np.float64) for v in series])
+    zero = np.zeros(dim, dtype=np.float64)
+    return np.asarray([zero if v is None else np.asarray(v, dtype=np.float64) for v in series])
 
 
 def _np_fold_dot(mat, coeffs) -> "object":
@@ -309,7 +314,7 @@ def hierarchical_assign_cells(
 
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
-        mat = _np_rows(vecs)
+        mat = _np_rows(vecs, len(gcands[0][1]))
         vnorm = _np_norm(mat)
         # stage 1: each row's g_take nearest GROUPS — gids are 0..G-1 in
         # column order, so a stable argsort tie-breaks (ns, gid) exactly
@@ -391,7 +396,7 @@ def _attach_argmin_cell(
 
         if len(vecs) == 0:
             return pd.Series([], dtype="int32")
-        mat = _np_rows(vecs)
+        mat = _np_rows(vecs, len(items[0][1]))
         ns = _np_neg_sims(mat, _np_norm(mat), items, scale)
         best = np.argsort(ns, axis=1, kind="stable")[:, 0]
         return pd.Series(np.asarray(cids, dtype="int32")[best])

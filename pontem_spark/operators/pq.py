@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Row, functions as F
 
 from pontem_spark.functions.compat import rnd
-from pontem_spark.operators.ivf import _portable_round_py
+from pontem_spark.operators.ivf import _np_rows, _portable_round_py
 
 
 def _attach_code_cols(
@@ -69,7 +69,7 @@ def _attach_code_cols(
 
             if len(vecs) == 0:
                 return pd.Series([], dtype="int32")
-            mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+            mat = _np_rows(vecs, len(cands[0][1]))
             d = np.empty((mat.shape[0], len(cands)), dtype=np.float64)
             for jj, (_cid, cvec) in enumerate(cands):
                 acc = np.zeros(mat.shape[0], dtype=np.float64)
@@ -77,6 +77,9 @@ def _attach_code_cols(
                     diff = mat[:, i] - ci
                     acc = acc + diff * diff
                 d[:, jj] = np.floor(acc * scale + 0.5) / scale
+            # a null vector's distances were all null in the SQL fold, so
+            # the cid tie-break alone chose its code: the lowest cid
+            d[vecs.isna().to_numpy()] = np.inf
             best = np.argsort(d, axis=1, kind="stable")[:, 0]
             return pd.Series(np.asarray(cids, dtype="int32")[best])
 

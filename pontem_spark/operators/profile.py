@@ -300,7 +300,7 @@ def skew_report(
     table, plus the distinct-key count.
 
     The "do I need salting?" pre-check (compare with the salted two-phase
-    join in queries/round6b.py): a key whose share approaches 1/partitions
+    join in queries/tpch.py): a key whose share approaches 1/partitions
     will bottleneck one task at scale. One map-side-combinable count
     aggregate (shuffle ~|keys| partials), a broadcast 1-row total, and a
     TakeOrderedAndProject for the top-N — the cumulative window runs over

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from pontem_spark.functions.compat import quote_ident
+
 
 def hll_rollup(
     df: DataFrame, keys: list[str], col: str, lgk: int = 12, sketch_name: str = "hll"
@@ -103,7 +105,7 @@ def histogram_state(
     lo_s = f"CAST({float(lo)!r} AS DOUBLE)"
     hi_s = f"CAST({float(hi)!r} AS DOUBLE)"
     w_s = f"CAST({float(w)!r} AS DOUBLE)"
-    xc = f"least(greatest(CAST({col} AS DOUBLE), {lo_s}), {hi_s})"
+    xc = f"least(greatest(CAST({quote_ident(col)} AS DOUBLE), {lo_s}), {hi_s})"
     b = f"least({n_bins - 1}, CAST(floor(({xc} - {lo_s}) / {w_s}) AS INT))"
     bins_arr = F.expr(
         "array("
@@ -112,9 +114,9 @@ def histogram_state(
         )
         + ")"
     ).alias(bins_name)
-    present = F.col(col).isNotNull()
+    present = F.col(quote_ident(col)).isNotNull()
     if df.schema[col].dataType.simpleString() in ("double", "float"):
-        present = present & ~F.isnan(F.col(col))  # NaN is missing, not a bin
+        present = present & ~F.isnan(F.col(quote_ident(col)))  # NaN is missing, not a bin
     return df.filter(present).groupBy(*keys).agg(bins_arr)
 
 
@@ -131,7 +133,7 @@ def merge_histograms(
         .groupBy(*keys)
         .agg(
             F.expr(
-                f"aggregate(collect_list({bins_name}), array_repeat(0L, {n_bins}), "
+                f"aggregate(collect_list({quote_ident(bins_name)}), array_repeat(0L, {n_bins}), "
                 "(acc, x) -> zip_with(acc, x, (p, q) -> p + q))"
             ).alias(bins_name)
         )

@@ -94,3 +94,88 @@ def minhash_oracle(num_hashes: int = 8, rows_per_band: int = 4) -> str:
     {minhash_cand_ctes(num_hashes, rows_per_band)}
     SELECT id_a, id_b FROM cand
     """
+
+
+HIER_COS = (
+    "(list_sum(list_transform(generate_series(1, {d}), i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))) / "
+    "(sqrt(list_sum(list_transform(generate_series(1, {d}), i -> CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE)))) * "
+    "sqrt(list_sum(list_transform(generate_series(1, {d}), i -> CAST({b}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))))))"
+)
+
+
+def kmeans_centroids_cte(k: int, pct: int, dim: int) -> str:
+    """DuckDB twin of operators/ivf.py:train_centroids (iters=2, unrolled):
+    same md5-bucket sample, same smallest-id init, same rounded-cosine
+    argmin assignment, same per-(cell, pos) AVG rebuild with empty cells
+    keeping their previous centroid. Ends in ``centroids(centroid_id,
+    centroid)`` for _ivf_hier_oracle."""
+    from pontem_spark.operators.sampling import hash_bucket_sql
+
+    hb = hash_bucket_sql("vec_id", 100)
+    sc = HIER_COS.format(a="s.embedding", b="c.centroid", d=dim)
+
+    def lloyd(prev: str, n: int) -> str:
+        return f"""a{n} AS (
+        SELECT vec_id, embedding, centroid_id FROM (
+            SELECT s.vec_id, s.embedding, c.centroid_id,
+                   ROW_NUMBER() OVER (PARTITION BY s.vec_id
+                                      ORDER BY ROUND({sc}, 6) DESC, c.centroid_id) AS r
+            FROM samp s CROSS JOIN {prev} c
+        ) WHERE r = 1
+    ), c{n}p AS (
+        SELECT centroid_id, i, ROUND(avg(CAST(embedding[i] AS DOUBLE)), 6) AS m
+        FROM a{n}, generate_series(1, {dim}) AS t(i) GROUP BY 1, 2
+    ), c{n}n AS (
+        SELECT centroid_id, list(m ORDER BY i) AS centroid FROM c{n}p GROUP BY 1
+    ), c{n} AS (
+        SELECT p.centroid_id, COALESCE(n.centroid, p.centroid) AS centroid
+        FROM {prev} p LEFT JOIN c{n}n n ON n.centroid_id = p.centroid_id
+    )"""
+
+    return f"""samp AS (
+        SELECT vec_id, embedding FROM embeddings WHERE {hb} < {pct}
+    ), init AS (
+        SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id,
+               list_transform(embedding, x -> ROUND(CAST(x AS DOUBLE), 6)) AS centroid
+        FROM samp ORDER BY vec_id LIMIT {k}
+    ), {lloyd('init', 1)}, {lloyd('c1', 2)},
+    centroids AS (SELECT centroid_id, centroid FROM c2)"""
+
+
+# the window-list expression both engines share for boilerplate removal:
+# non-overlapping 5-word chunks, last chunk may be short
+WIN_LIST = (
+    "[array_to_string(string_split(text,' ')[(i-1)*5+1:i*5],' ') "
+    "for i in generate_series(1, CAST(ceil(len(string_split(text,' '))/5.0) AS BIGINT))]"
+)
+
+
+def hist_quantile_oracle() -> str:
+    from pontem_spark.operators.sketches import histogram_quantiles_sql
+
+    items = ",\n      ".join(
+        histogram_quantiles_sql(
+            "bins", {"p50": 0.5, "p90": 0.9, "p99": 0.99}, lo=0.0, hi=640.0, n_bins=32
+        )
+    )
+    return f"""
+    WITH binned AS (
+      SELECT event_type,
+             LEAST(31, GREATEST(0, CAST(floor((value - 0.0) / 20.0) AS INTEGER))) AS b
+      FROM events WHERE value IS NOT NULL
+    ),
+    grid AS (
+      SELECT et.event_type, gs.i
+      FROM (SELECT DISTINCT event_type FROM binned) et,
+           (SELECT unnest(generate_series(0, 31)) AS i) gs
+    ),
+    cnts AS (SELECT event_type, b, COUNT(*) AS c FROM binned GROUP BY 1, 2),
+    hstate AS (
+      SELECT g.event_type, list(CAST(coalesce(c.c, 0) AS BIGINT) ORDER BY g.i) AS bins
+      FROM grid g LEFT JOIN cnts c ON g.event_type = c.event_type AND g.i = c.b
+      GROUP BY 1
+    )
+    SELECT event_type,
+      {items}
+    FROM hstate
+    """

@@ -54,117 +54,11 @@ def register(
 
 # The driver records only the FIRST 50 queries it sees each round, so
 # ``all_queries`` orders queries by how much a fresh driver row is worth.
-#
-# The ordering is COMPUTED from the CORRECTNESS_r0N.json artifacts at the
-# repo root (latest round in which each query was green), replacing the
-# hand-maintained REVERIFY_PRIORITY / R03_GREEN / _R01_GREEN_STALE tuples
-# that were one round behind their own success every round:
+# The ordering is computed from the CORRECTNESS_r*.json artifacts at the
+# repo root (latest round in which each query was green):
 #   1. never-green queries first (new work with only local evidence),
 #   2. then ascending "latest green round" (oldest driver evidence first),
-#   3. registration order breaks ties,
-#   4. the no-oracle pair pinned last (their rows-only rows never go stale
-#      in a way a re-check would improve).
-
-# Permanently no-oracle by design; their rows-only driver rows are their
-# best evidence — never compete for slots. EMPTY since round 7: the former
-# trio (q_dedup_simhash_nearpairs, q_approx_aggregates, q_sketch_hll_users)
-# now emits engine-portable derived outputs — exact twins plus in-plan
-# within-tolerance / merge-consistency booleans the oracle asserts as
-# literals — so every registered query is oracle-checked.
-NO_ORACLE: frozenset[str] = frozenset()
-
-# Queries whose IMPLEMENTATION changed semantics after earning their
-# latest green row — the one thing evidence age cannot see. Maps query →
-# round DURING which the change landed; the query sorts with the
-# never-verified group until it earns a green row in that round or later
-# (then the flag self-retires — evidence covers the changed code).
-# Round 5: jaccard pairs gained the max_doc_freq cap (new oracle too);
-# hierarchical assignment was refactored to the multi-group __gids form.
-# (Both earned green r5 rows — retired.) Round 6: the incremental rollup
-# gained the sum-of-squares state and an ``sd`` output column (oracle
-# extended to match), changing its schema and hash.
-CHANGED_IN_ROUND = {
-    "q_dedup_jaccard_pairs": 5,
-    "q_incremental_rollup": 6,
-    # (q_ann_ivf_hier_topk was flagged 5, q_graph_triangles 9 — both
-    # re-flagged 14 below by the optimization round, which changed their
-    # plans again.)
-    # r13: the same-anchor positional-composition rebuild changed the
-    # executed plans (rowalign join -> single-scan Window) of every query
-    # routing through window-free shift/ffill/rolling/ewm/resample
-    # machinery; semantics verified unchanged at sf0.01, but plan-changed
-    # counts as changed — earn fresh driver rows early.
-    "q_api_where_ffill_rolling": 13,
-    "q_api_interpolate_ffill": 13,
-    "q_api_ewm_mean": 13,
-    "q_ts_series_resample": 13,
-    "q_ts_asfreq": 13,
-    # r14: the dtype-aware Series logical rebuild wraps boolean masks in
-    # fill-False coalesce — q_api_merge_filter is the one registered
-    # query whose executed plan carries the new expression (semantics
-    # identical for its non-null comparison masks, verified 213/213 in
-    # the r14 vanilla-session sim, but plan-changed counts as changed)
-    "q_api_merge_filter": 14,
-    # r14 OPTIMIZATION round: executed plans changed (results proven
-    # identical vs the DuckDB oracle this round — see OPTIMIZATION_r14.md
-    # for the per-item before/after plan evidence). Plan-changed counts
-    # as changed: earn fresh driver rows early.
-    # triangle count: wedge join -> adjacency-intersect
-    "q_graph_triangles": 14,
-    # r15 OPTIMIZATION round (second of two): executed plans changed again —
-    # results proven identical vs the DuckDB oracle this round (vanilla-
-    # session driver-sim at sf0.01 + pytest oracles at sf0.001; plan pairs in
-    # plans/r15/). pagerank: edge table pre-partitioned by dst (per-iteration
-    # aggregate Exchange elided), single-pass node/flag build, dangling flag
-    # skipped when unused, overlapped build jobs.
-    "q_graph_pagerank": 15,
-    "q_graph_pagerank_dangling": 15,
-    # label propagation: lazy chain + shuffle_hash label join
-    "q_graph_communities": 14,
-    # connected_components gained a shuffle_hash hint on the label join
-    "q_dedup_clusters": 14,
-    "q_dedup_apply_removal": 14,
-    "q_pipeline_entity_resolution": 14,
-    # basket rules: grouping-sets shared support/total pass
-    "q_basket_association_rules": 14,
-    # quantile boundary aggregates: ensure_parallelism rebalance
-    "q_curation_winsorize": 14,
-    "q_api_qcut": 14,
-    "q_api_grouped_qcut": 14,
-    # r15: IVF/PQ argmin folds moved from interpreted higher-order-function
-    # expressions to bit-identical vectorized numpy kernels behind Arrow
-    # pandas UDFs (guide §4.2) — ArrowEvalPython now appears in these plans
-    "q_ann_ivf_topk": 15,
-    "q_ann_ivf_trained_topk": 15,
-    "q_ann_ivf_hier_topk": 15,
-    "q_ann_ivf_hier_g2_topk": 15,
-    "q_ann_pq_adc_topk": 15,
-    "q_dedup_semantic": 15,
-    # textstats: dfreq/dl single-pass window rewrite (tfidf, bm25, rrf)
-    "q_tfidf_top_terms": 14,
-    "q_text_bm25_topk": 14,
-    "q_ann_rrf_fusion": 14,
-    # streaming drains: input-size-derived state partitions (the stream's
-    # executed partitioning changed; outputs proven identical both SFs)
-    "q_stream_stream_join": 14,
-    "q_stream_hourly_rollup": 14,
-    "q_stream_session_windows": 14,
-    "q_stream_sliding_rollup": 14,
-    "q_stream_stateful_user_stats": 14,
-    "q_stream_dedup_daily_users": 14,
-    "q_stream_static_enrich": 14,
-    # foreachBatch monoid runners: lazy state chain, one post-drain pin
-    "q_stream_histogram_quantiles": 14,
-    "q_stream_incremental_rollup": 14,
-    "q_stream_time_decay": 14,
-    "q_stream_seasonal_anomaly": 14,
-    "q_stream_ks_drift": 14,
-    # upsert_parquet: disk __upsert_tmp staging -> localCheckpoint pin
-    "q_cdc_upsert_readback": 14,
-    # remove_boilerplate: ensure_parallelism rebalance before chunking
-    "q_curation_boilerplate_removal": 14,
-    "q_pipeline_corpus_prep": 14,
-}
+#   3. registration order breaks ties.
 
 
 def _latest_green_rounds() -> dict[str, int]:
@@ -206,46 +100,20 @@ def all_queries() -> dict[str, Query]:
     """Import all query modules and return the full registry, ordered so the
     driver's 50-row correctness window lands on the queries whose driver
     evidence is most stale (see the evidence-age comment above)."""
-    # Imports are deferred so `import pontem_spark` stays cheap.
-    from pontem_spark.queries import (  # noqa: F401
-        tpch2,
-        tpch3,
-        windows,
-        tpch,
-        round2,
-        round4,
-        round5,
-        round6,
-        round6b,
-        multimodal,
-        asof,
-        dedup,
-        events,
-        rangeops,
-        scalar,
-        series_api,
-        similarity,
-        streaming_q,
-        text,
-        round8,
-        round9,
-        round10,
-        round11,
-        round12,
-        round13,
-    )
+    # Imports are deferred so `import pontem_spark` stays cheap. Every module
+    # of the package is imported, so a new query module needs no edit here.
+    import importlib
+    import pkgutil
+
+    import pontem_spark.queries as package
+
+    for mod in pkgutil.iter_modules(package.__path__):
+        importlib.import_module(f"{package.__name__}.{mod.name}")
 
     order = {n: i for i, n in enumerate(_REGISTRY)}
     latest = _latest_green_rounds()
 
-    def key(n: str) -> tuple[int, int]:
-        if n in NO_ORACLE:
-            return (1_000_000, order[n])
-        if latest.get(n, 0) < CHANGED_IN_ROUND.get(n, 0):
-            return (0, order[n])
-        return (latest.get(n, 0), order[n])
-
-    names = sorted(_REGISTRY, key=key)
+    names = sorted(_REGISTRY, key=lambda n: (latest.get(n, 0), order[n]))
     return {n: _REGISTRY[n] for n in names}
 
 

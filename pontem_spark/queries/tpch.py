@@ -547,3 +547,71 @@ def q_set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = orders.filter(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("custkey"))
     f = orders.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("custkey"))
     return o.intersectAll(f)
+
+
+@register(
+    "q_join_full_outer",
+    oracle="""
+    WITH c AS (
+        SELECT c_custkey, c_acctbal FROM customer WHERE c_acctbal > 9000
+    ), o AS (
+        SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_orders
+        FROM orders WHERE o_totalprice > 300000 GROUP BY 1
+    )
+    SELECT COALESCE(c.c_custkey, o.o_custkey) AS custkey,
+           ROUND(c.c_acctbal, 2) AS acctbal,
+           o.n_orders
+    FROM c FULL OUTER JOIN o ON c.c_custkey = o.o_custkey
+    """,
+    tags=("join", "full-outer"),
+)
+def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FULL OUTER join of two filtered, non-overlapping-key frames — rich
+    customers vs big-spender order counts — so all three row classes
+    (left-only, right-only, matched) are present in the result. A plain
+    shuffle join both engines execute identically; null sides survive into
+    the output and the hash check covers them."""
+    from pontem_spark.functions.compat import rnd
+
+    cust = (
+        load_table(spark, sf_dir, "customer")
+        .filter(F.col("c_acctbal") > 9000)
+        .select("c_custkey", "c_acctbal")
+    )
+    big = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_totalprice") > 300000)
+        .groupBy("o_custkey")
+        .agg(F.count(F.lit(1)).alias("n_orders"))
+    )
+    joined = cust.join(big, cust["c_custkey"] == big["o_custkey"], "full_outer")
+    return joined.select(
+        F.coalesce(F.col("c_custkey"), F.col("o_custkey")).alias("custkey"),
+        rnd(F.col("c_acctbal"), 2).alias("acctbal"),
+        "n_orders",
+    )
+
+
+@register(
+    "q_join_bloom_prefilter",
+    oracle="""
+    SELECT o_orderkey, o_custkey FROM orders
+    WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
+    """,
+)
+def q_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bloom-filter semi-join: build a 2^17-bit filter from the BUILDING
+    customers (explode + bit_or aggregation, bounded broadcast literal),
+    drop non-matching orders MAP-SIDE before any exchange, then an exact
+    semi-join removes the false positives — so the oracle is the plain
+    semi-join itself: the pre-filter is proven lossless
+    (operators/bloom.py::bloom_semi_join)."""
+    from pontem_spark.operators.bloom import bloom_semi_join
+
+    cust = load_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    orders = load_table(spark, sf_dir, "orders")
+    return bloom_semi_join(orders, cust, "o_custkey", "c_custkey").select(
+        "o_orderkey", "o_custkey"
+    )

@@ -139,3 +139,35 @@ def q_window_share_of_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         rnd(F.col("o_totalprice") / F.sum("o_totalprice").over(w), 6).alias("spend_share"),
     )
+
+
+@register(
+    "q_window_percent_rank",
+    oracle="""
+    SELECT o_orderkey,
+           o_orderpriority,
+           ROUND(PERCENT_RANK() OVER (PARTITION BY o_orderpriority
+                                      ORDER BY o_totalprice), 6) AS pct_rank,
+           ROUND(CUME_DIST() OVER (PARTITION BY o_orderpriority
+                                   ORDER BY o_totalprice), 6) AS cume
+    FROM orders
+    """,
+    tags=("window", "percent_rank", "cume_dist"),
+)
+def q_window_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """percent_rank + cume_dist per priority partition — the two remaining
+    analytic window functions; both share ONE partitioned sort (no second
+    Exchange). Relative ranks are what feature pipelines feed models
+    instead of raw amounts."""
+    from pyspark.sql import Window
+
+    from pontem_spark.functions.compat import rnd
+
+    orders = load_table(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
+    return orders.select(
+        "o_orderkey",
+        "o_orderpriority",
+        rnd(F.percent_rank().over(w), 6).alias("pct_rank"),
+        rnd(F.cume_dist().over(w), 6).alias("cume"),
+    )

@@ -2,7 +2,15 @@
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame
+
+
+def _sibling(path: str, tag: str) -> str:
+    """A fresh ``<path>__<tag>_<uuid>`` directory name beside ``path``, so
+    concurrent writers never share a staging or backup directory."""
+    return f"{path.rstrip('/')}__{tag}_{uuid.uuid4().hex[:8]}"
 
 
 def write_parquet(
@@ -109,7 +117,7 @@ def upsert_parquet(
     test), so a daily CDC batch against a years-deep table costs
     O(touched partitions), not O(table). The touched-partition values are
     one bounded driver collect (loudly guarded). The merged working set is
-    staged to a sibling ``__upsert_tmp`` directory first because Spark
+    staged to a uuid-suffixed sibling directory first because Spark
     refuses to overwrite a path it is reading (and a mid-job failure must
     not corrupt the table); the staging write and the final dynamic
     overwrite each move only touched-partition bytes.
@@ -160,7 +168,7 @@ def upsert_parquet(
         .select(*df.columns)  # original column order
     )
     # The merged working set is pinned with localCheckpoint instead of the
-    # previous write-to-__upsert_tmp + read-back (r14): Spark refuses to
+    # previous write-to-staging-dir + read-back (r14): Spark refuses to
     # overwrite a path it is READING, and a checkpoint severs that read
     # dependency exactly like the staging copy did — minus one full parquet
     # write + listing + re-read of the touched partitions per upsert. The
@@ -188,23 +196,25 @@ def upsert_parquet(
         )
     except Exception:  # estimate unavailable → take the reliable path
         est_bytes = None
-    tmp = None
-    if est_bytes is not None and est_bytes <= bound:
-        staged = merged.localCheckpoint(eager=True)
-    else:
-        tmp = path.rstrip("/") + "__upsert_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        staged = spark.read.parquet(tmp)
-    writer = staged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    if tmp is not None:
-        import shutil
+    import shutil
 
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = None
+    try:
+        if est_bytes is not None and est_bytes <= bound:
+            staged = merged.localCheckpoint(eager=True)
+        else:
+            tmp = _sibling(path, "staging")
+            merged.write.mode("overwrite").parquet(tmp)
+            staged = spark.read.parquet(tmp)
+        writer = staged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        )
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
+    finally:
+        if tmp is not None:
+            shutil.rmtree(tmp, ignore_errors=True)
 
 
 def write_training_shards(
@@ -255,11 +265,10 @@ def atomic_overwrite_parquet(df: DataFrame, path: str) -> None:
     """
     import os
     import shutil
-    import uuid
 
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
+    staging = _sibling(path, "staging")
     df.write.mode("overwrite").parquet(staging)
-    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
+    backup = _sibling(path, "old")
     if os.path.exists(path):
         os.rename(path, backup)
     try:

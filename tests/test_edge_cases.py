@@ -152,3 +152,65 @@ def test_containment_no_shared_shingles(spark):
         [(1, "aa bb cc dd ee"), (2, "ff gg hh ii jj")], "doc_id int, text string"
     )
     assert containment_pairs(df, "doc_id", "text").collect() == []
+
+
+def test_ivf_cell_assignment_null_vector(spark):
+    """A null vector scores +Infinity against every centroid, so it lands
+    in the lowest centroid id (flat) or the lowest id of the first group
+    (hierarchical), as the SQL fold did, instead of failing the batch."""
+    from pyspark.sql import Row
+
+    from pontem_spark.operators.ivf import assign_cells, hierarchical_assign_cells
+
+    cents = [Row(centroid_id=2, centroid=[1.0, 0.0]), Row(centroid_id=7, centroid=[0.0, 1.0])]
+    corpus = spark.createDataFrame([(1, [0.0, 1.0]), (2, None)], "id int, v array<double>")
+    flat = assign_cells(corpus, cents, "id", "v", 2).collect()
+    assert sorted((r.id, r.centroid_id) for r in flat) == [(1, 7), (2, 2)]
+    hier = hierarchical_assign_cells(corpus, cents, "id", "v", 2).collect()
+    assert sorted((r.id, r.centroid_id) for r in hier) == [(1, 7), (2, 7)]
+
+
+def test_pq_code_null_vector(spark):
+    """A null vector's PQ code is the lowest centroid id of every codebook
+    (all its distances tie), not the code of the zero vector (cid 9)."""
+    from pyspark.sql import Row
+
+    from pontem_spark.operators.pq import pq_assign_codes
+
+    book = [Row(centroid_id=4, centroid=[5.0, 5.0]), Row(centroid_id=9, centroid=[0.0, 0.0])]
+    corpus = spark.createDataFrame(
+        [(1, [0.0, 0.0, 5.0, 5.0]), (2, None)], "id int, v array<double>"
+    )
+    got = pq_assign_codes(corpus, [book, book], "id", "v", 4).collect()
+    assert sorted((r.id, r.codes) for r in got) == [(1, [9, 4]), (2, [4, 4])]
+
+
+def test_sql_spliced_operators_quote_identifiers(spark):
+    """histogram_state and the decay monoid splice column names into SQL
+    strings; a name holding a backtick must give the same result as a
+    plain one."""
+    import datetime as dt
+
+    from pontem_spark.operators.incremental import (
+        decayed_state,
+        finalize_decayed,
+        merge_decayed,
+    )
+    from pontem_spark.operators.sketches import histogram_state
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [("u%d" % (i % 3), t0 + dt.timedelta(hours=i), float(i * 7 % 13)) for i in range(30)]
+    plain = spark.createDataFrame(rows, ["k", "ts", "val"])
+    odd = plain.withColumnRenamed("val", "v`al")
+
+    def hist(df, col):
+        return sorted(histogram_state(df, ["k"], col, 0.0, 13.0, 8).collect())
+
+    def decay(df, col):
+        early = F.col("ts") < t0 + dt.timedelta(hours=15)
+        a = decayed_state(df.filter(early), "k", "ts", col, 7200.0)
+        b = decayed_state(df.filter(~early), "k", "ts", col, 7200.0)
+        return sorted(finalize_decayed(merge_decayed(a, b, "k", 7200.0), "k").collect())
+
+    assert hist(odd, "v`al") == hist(plain, "val")
+    assert decay(odd, "v`al") == decay(plain, "val")

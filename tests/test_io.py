@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from pontem_spark.sources import read_csv, read_json, read_parquet, write_parquet
 from pontem_spark.sources.tables import load_table
@@ -362,11 +363,11 @@ def test_load_table_directory_tables_skip_cache(spark, tmp_path):
 def test_upsert_parquet_disk_staging_past_bound(spark, tmp_path):
     """r15 (VERDICT r14 what's-wrong #3): past
     ``pontem.upsert.checkpointStagingBytes`` the merged working set stages
-    via the reliable __upsert_tmp disk path instead of executor-resident
+    via the reliable disk-staging path instead of executor-resident
     checkpoint blocks. Force the bound to 0 and assert the MERGE result is
     identical to the checkpoint path's, replay stays idempotent, and the
     staging dir is cleaned up."""
-    import os
+    import glob
 
     from pontem_spark.sources.writers import upsert_parquet
 
@@ -399,4 +400,42 @@ def test_upsert_parquet_disk_staging_past_bound(spark, tmp_path):
         3: (1, "d2", "c1"),
         5: (1, "d4", "f1"),
     }
-    assert not os.path.exists(disk_path + "__upsert_tmp"), "staging dir leaked"
+    assert glob.glob(disk_path + "__*") == [], "staging dir leaked"
+
+
+def test_upsert_parquet_disk_staging_removed_when_final_write_fails(spark, tmp_path, monkeypatch):
+    """A failure in the final overwrite must not leak the disk-staging
+    directory beside the table."""
+    import glob
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from pontem_spark.sources.writers import upsert_parquet
+
+    schema = "k long, ver long, day string"
+    path = str(tmp_path / "cdc")
+    upsert_parquet(
+        spark, spark.createDataFrame([(1, 1, "d1")], schema), path, "k", ["ver"], partition_by=["day"]
+    )
+
+    real_parquet = DataFrameWriter.parquet
+    targets = []
+
+    def parquet_failing_on_table(self, target, *args, **kwargs):
+        targets.append(target)
+        if target == path:
+            raise RuntimeError("injected write failure")
+        return real_parquet(self, target, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_failing_on_table)
+    spark.conf.set("pontem.upsert.checkpointStagingBytes", "0")
+    try:
+        with pytest.raises(RuntimeError, match="injected write failure"):
+            upsert_parquet(
+                spark, spark.createDataFrame([(1, 2, "d1")], schema), path, "k", ["ver"],
+                partition_by=["day"],
+            )
+    finally:
+        spark.conf.unset("pontem.upsert.checkpointStagingBytes")
+    assert [t for t in targets if t.startswith(path + "__staging_")], targets  # disk path taken
+    assert glob.glob(path + "__*") == [], "staging dir leaked"

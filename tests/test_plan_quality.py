@@ -751,12 +751,12 @@ def test_r14_frame_alignment_plan_shapes(spark, sf_dir):
     - spec-None cross-anchor frame ⊕ frame (the from_spark big-data
       path) compiles to exactly ONE equi join — no window machinery, no
       cartesian, no one-row broadcast stats;
-    - the staged MultiIndex fill_value query keeps that single-join
-      shape end to end.
+    - the MultiIndex fill_value query keeps that single-join shape end
+      to end.
     """
     from pontem_spark.core import from_spark
     from pontem_spark.plans import physical_plan
-    from pontem_spark.queries.round14_pending import PENDING
+    from pontem_spark.queries.registry import all_queries
     from pontem_spark.sources.tables import load_table
     from pyspark.sql import functions as F
 
@@ -777,7 +777,7 @@ def test_r14_frame_alignment_plan_shapes(spark, sf_dir):
     assert "CartesianProduct" not in plan2, plan2
     assert "Window" not in plan2, plan2
 
-    mi_fn = next(fn for n, fn, _ in PENDING if n == "q_api_multiindex_align_fill")
+    mi_fn = all_queries()["q_api_multiindex_align_fill"].fn
     plan3 = physical_plan(mi_fn(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan3, plan3
     assert "CartesianProduct" not in plan3, plan3
