@@ -14,7 +14,15 @@ from typing import Any, Iterable, Mapping
 from pyspark.sql import Column, DataFrame as SparkDataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType
 
-from pontem_spark.core.internal import INDEX_COL, InternalFrame, default_session, next_epos_name
+from pontem_spark.core.internal import (
+    INDEX_COL,
+    InternalFrame,
+    align_rows,
+    default_session,
+    next_epos_name,
+    rowalign_keys,
+    rowalign_left_join,
+)
 from pontem_spark.core.series import _VALUE, Series
 
 _ROWID = "__rowid__"
@@ -289,35 +297,14 @@ class DataFrame:
             if value._internal.sdf is self._internal.sdf:
                 self._columns[key] = value._col
                 return
-            # align on index (left join to THIS frame's index, pandas-style).
-            # When the value carries the SAME order spec as this frame (a
-            # row-aligned derivation like df['u'].shift() — materialization
-            # rewrapped the anchor but each row still corresponds 1:1), the
-            # spec's helper columns (e.g. the __ctor__ position) join along
-            # with the label: under duplicate index labels a label-only
-            # join fans out k² per label where pandas stays positional
-            # (r12 probe: assign(shift) doubled a dup-labeled frame).
+            # align on index (left join to THIS frame's index, pandas-style);
+            # a row-aligned derivation like df['u'].shift() also joins on
+            # the shared order-spec helpers (r12 probe: assign(shift)
+            # doubled a dup-labeled frame).
             lmat = self._materialized()
             right = value._materialized("__new__")
-            shared: list[str] = []
-            if (
-                self._internal.order_spec
-                and value._internal.order_spec == self._internal.order_spec
-                # lineage proof — equal helper NAMES alone are not enough
-                # (two independent sorts share names, not values)
-                and (self._internal.row_tokens & value._internal.row_tokens)
-            ):
-                shared = [
-                    n
-                    for n, _ in self._internal.order_spec
-                    if n != INDEX_COL and n in lmat.columns and n in right.columns
-                ]
+            shared = rowalign_keys(self._internal, value._internal, lmat, right)
             right = right.select(INDEX_COL, *shared, "__new__")
-            # NULL-SAFE on the helper keys: a helper can be all-NULL
-            # (the aligned-binop __alunion__ marker), and a name-list
-            # join's plain equality would drop every match (r12)
-            from pontem_spark.core.internal import rowalign_left_join
-
             sdf = rowalign_left_join(lmat, right, shared, "__new__")
             # adding a column preserves the visible order (r10 probe)
             # AND row identity (tokens carry)
@@ -2934,26 +2921,12 @@ class DataFrame:
         the r8 hybrid return-self made ``df2 = df.update(o)`` a silent
         alias of ``df`` — returning None forces value-style call sites to
         surface at flip time instead of masking the mutation)."""
-        from pontem_spark.core.internal import rowalign_left_join
-
         a = self._materialized()
         shared = [c for c in self._columns if c in other._columns]
         b_full = other._materialized()
         # row-aligned derivation (df.update(df.shift())): join on the
-        # shared order-spec helpers too, so duplicate index labels stay
-        # positional instead of fanning the left join out (r12); lineage
-        # tokens gate it — equal helper NAMES alone are not proof
-        keys: list[str] = []
-        if (
-            self._internal.order_spec
-            and other._internal.order_spec == self._internal.order_spec
-            and (self._internal.row_tokens & other._internal.row_tokens)
-        ):
-            keys = [
-                n
-                for n, _ in self._internal.order_spec
-                if n != INDEX_COL and n in a.columns and n in b_full.columns
-            ]
+        # shared order-spec helpers too (r12)
+        keys = rowalign_keys(self._internal, other._internal, a, b_full)
         b = b_full.select(
             INDEX_COL, *keys, *[F.col(c).alias(f"__u_{c}") for c in shared]
         )
@@ -3459,13 +3432,10 @@ class DataFrame:
         self, opname: str, lcol: Column, rcol: Column,
         ldt: "str | None", rdt: "str | None", *, comparison: bool,
         missing_result: bool, reflected: bool, fill_value,
-        guard: "Column | None" = None, guard_msg: str = "",
         same_anchor: bool = False,
     ) -> Column:
         """One output cell from left/right operand columns with KNOWN
-        dtypes (resolved from the pre-join schemas by plain name).
-        ``guard`` — strict dunder comparisons — raises lazily when the
-        1-row label-mismatch stat fired."""
+        dtypes (resolved from the pre-join schemas by plain name)."""
         if reflected:
             lcol, rcol, ldt, rdt = rcol, lcol, rdt, ldt
         lc, rc = self._dtype_class(ldt), self._dtype_class(rdt)
@@ -3477,19 +3447,15 @@ class DataFrame:
                         f"'{opname}' not supported between mismatched "
                         f"dtypes ({ldt} vs {rdt})"
                     )
-                res = F.lit(opname == "ne")
-            else:
-                if lc == "bool" and rc == "num":
-                    lcol, ldt = lcol.cast("int"), "int"
-                elif rc == "bool" and lc == "num":
-                    rcol, rdt = rcol.cast("int"), "int"
-                lm = self._missing_dt(lcol, ldt)
-                rm = self._missing_dt(rcol, rdt)
-                raw = self._op_column_fn(opname)(lcol, rcol)
-                res = (raw | lm | rm) if missing_result else (raw & ~lm & ~rm)
-            if guard is not None:
-                res = F.when(guard, F.raise_error(F.lit(guard_msg))).otherwise(res)
-            return res
+                return F.lit(opname == "ne")
+            if lc == "bool" and rc == "num":
+                lcol, ldt = lcol.cast("int"), "int"
+            elif rc == "bool" and lc == "num":
+                rcol, rdt = rcol.cast("int"), "int"
+            lm = self._missing_dt(lcol, ldt)
+            rm = self._missing_dt(rcol, rdt)
+            raw = self._op_column_fn(opname)(lcol, rcol)
+            return (raw | lm | rm) if missing_result else (raw & ~lm & ~rm)
         if opname in ("and_", "or_", "xor"):
             # pandas logical/bitwise rules (r14 probe): bool ⊕ bool is
             # elementwise logical with missing filled False BEFORE the op
@@ -3682,21 +3648,12 @@ class DataFrame:
         named comparisons) and rows by index.
 
         Plan shape: same-anchor operands compose column-wise — zero
-        joins. Cross-anchor operands take ONE full-outer label join when
-        either side is in index order (spec None — the big-data path).
-        Only when BOTH sides carry a custom visible order does the
-        Series aligner's cart/pos machinery engage: a lazy 1-row
-        Index.equals stat (row_number over each side's visible order,
-        joined on position) picks positional pairing (identical
-        sequences — pandas' short-circuit, correct under duplicate
-        labels) or the per-label cartesian (differing sequences —
-        pandas' arithmetic alignment), built as two branch plans each
-        filtered by the broadcast flag so exactly one is non-empty at
-        runtime.
+        joins. Cross-anchor operands pair rows through
+        ``internal.align_rows``, the aligner Series binops use.
 
         ``strict`` (dunder comparisons) raises pandas' identically-
-        labeled ValueError — column labels eagerly, row labels lazily
-        through the same stat feeding F.raise_error."""
+        labeled ValueError — column labels eagerly here, row labels
+        lazily in the aligner."""
         from pontem_spark.core.series import Series as _PSeries
 
         is_series = isinstance(other, _PSeries)
@@ -3760,15 +3717,7 @@ class DataFrame:
                     out[c] = F.lit(None).cast("double")
             return DataFrame._from_internal(self._internal, out)
 
-        # ---- cross-anchor ----------------------------------------------
-        # MultiIndex vs flat (or differing level counts) cannot align —
-        # pandas raises before any data moves, and the struct-vs-scalar
-        # join would be a DATATYPE_MISMATCH anyway (r14 probe M4)
-        lnm, rnm = self._internal.index_name, other._internal.index_name
-        lmi = isinstance(lnm, tuple)
-        rmi = isinstance(rnm, tuple)
-        if lmi != rmi or (lmi and rmi and len(lnm) != len(rnm)):
-            raise ValueError("cannot join with no overlapping index names")
+        # ---- cross-anchor: the row aligner shared with Series ----------
         a = self._materialized()
         b = other._materialized("__frv__") if is_series else other._materialized()
         ldts = {c: a.schema[c].dataType.simpleString() for c in cols_l}
@@ -3779,194 +3728,12 @@ class DataFrame:
         else:
             rdts = {c: b.schema[c].dataType.simpleString() for c in cols_r}
             rout = {c: f"__frv{i}__" for i, c in enumerate(union) if c in cols_r}
-
-        spec = self._internal.order_spec
-        rspec = other._internal.order_spec
-
-        # row-aligned derivation fast keys (equal specs + shared lineage):
-        # the spec's helper columns pair rows positionally so duplicate
-        # labels don't fan the label join out k² per label (the Series
-        # aligner's _rowalign_keys rule, ported)
-        rkeys: list[str] = []
-        if (
-            spec
-            and rspec == spec
-            and (self._internal.row_tokens & other._internal.row_tokens)
-        ):
-            rkeys = [
-                n
-                for n, _ in spec
-                if n != INDEX_COL and n in a.columns and n in b.columns
-            ]
-        pairstat = None
-        pair_msg = ""
-        if rkeys and "__ctor__" not in rkeys:
-            gkeys = [INDEX_COL, *rkeys]
-            _gs = F.struct(*[F.col(k) for k in gkeys])
-            pairstat = (
-                a.agg((F.count(F.lit(1)) > F.count_distinct(_gs)).alias("__fdupl__"))
-                .crossJoin(
-                    b.agg(
-                        (F.count(F.lit(1)) > F.count_distinct(_gs)).alias("__fdupr__")
-                    )
-                )
-                .select((F.col("__fdupl__") | F.col("__fdupr__")).alias("__fdup_pair__"))
-            )
-            pair_msg = (
-                "cannot pair rows positionally: duplicate index labels tie "
-                "on every order-spec column; sort by a unique key or "
-                "reset_index first"
-            )
-
-        # left spec keys that are ALSO value columns must ride as the RAW
-        # LEFT value under a helper name — the visible output column
-        # becomes the COMBINED value, which would silently re-order the
-        # result (pandas keeps the LEFT frame's visible order, driven by
-        # the left frame's own values)
-        extras: list[tuple[str, str]] = []
-        if spec is not None:
-            seen: set = set()
-            for i, (n, _asc) in enumerate(spec):
-                if n == INDEX_COL or n not in a.columns or n in seen:
-                    continue
-                seen.add(n)
-                clash = n in cols_l or (cols_r is not None and n in cols_r) or n == "__frv__"
-                extras.append((n, f"__flspec{i}__" if clash else n))
-        ext_map = dict(extras)
-        spec_rewritten = (
-            tuple(
-                (ext_map.get(n, n), asc)
-                for n, asc in spec
-                if n == INDEX_COL or n in a.columns
-            )
-            if spec is not None
-            else None
+        internal, finish = align_rows(
+            self._internal, other._internal, a, b,
+            lname, {"__frv__": "__frv__"} if is_series else rout,
+            strict=self._CMP_FRAME_MSG if strict else None,
         )
-
-        def lsel(q: str):
-            return [F.col(f"{q}.{c}").alias(lname[c]) for c in union if c in lname]
-
-        def rsel(q: str):
-            if is_series:
-                return [F.col(f"{q}.__frv__").alias("__frv__")]
-            return [F.col(f"{q}.{c}").alias(rout[c]) for c in union if c in rout]
-
-        jcond = F.col(f"l.{INDEX_COL}") == F.col(f"r.{INDEX_COL}")
-        for n in rkeys:
-            jcond = jcond & F.col(f"l.{n}").eqNullSafe(F.col(f"r.{n}"))
-        joined = a.alias("l").join(b.alias("r"), jcond, "full_outer")
-
-        both_ordered = spec is not None and rspec is not None
-        if not (strict or both_ordered):
-            # label-only join; result order is the sorted union index
-            # (the Series aligner's spec-None rule) — ONE shuffle, the
-            # 100 TB path
-            sdf = joined.select(
-                F.coalesce(F.col(f"l.{INDEX_COL}"), F.col(f"r.{INDEX_COL}")).alias(INDEX_COL),
-                *lsel("l"),
-                *rsel("r"),
-            )
-            new_spec = None
-            guard_col = None
-        else:
-            from pyspark.sql.window import Window
-
-            lw = Window.orderBy(
-                *[
-                    F.col(n).asc() if asc else F.col(n).desc()
-                    for n, asc in (spec or ())
-                    if n in a.columns
-                ],
-                F.col(INDEX_COL).asc(),
-            )
-            rw = Window.orderBy(
-                *[
-                    F.col(n).asc() if asc else F.col(n).desc()
-                    for n, asc in (rspec or ())
-                    if n in b.columns
-                ],
-                F.col(INDEX_COL).asc(),
-            )
-            a_pos = a.withColumn("__flp__", F.row_number().over(lw))
-            b_pos = b.withColumn("__frp__", F.row_number().over(rw))
-            # joined ON POSITION, compared BY LABEL — pandas Index.equals
-            # exactly; duplicate labels can't fan this stat out
-            mism = (
-                a_pos.select(F.col(INDEX_COL).alias("__fli__"), "__flp__")
-                .join(
-                    b_pos.select(F.col(INDEX_COL).alias("__fri__"), "__frp__"),
-                    F.col("__flp__") == F.col("__frp__"),
-                    "full_outer",
-                )
-                .agg(
-                    F.max(
-                        F.col("__flp__").isNull()
-                        | F.col("__frp__").isNull()
-                        | ~F.col("__fli__").eqNullSafe(F.col("__fri__"))
-                    ).alias("__fmism__")
-                )
-            )
-            taken = (
-                {n for n, _ in (spec or ())}
-                | set(lname.values())
-                | set(rout.values())
-                | {dst for _, dst in extras}
-            )
-            k = 0
-            while f"__falunion{k}__" in taken:
-                k += 1
-            alunion = f"__falunion{k}__"
-            cart = (
-                joined.crossJoin(F.broadcast(mism))
-                .filter(F.col("__fmism__"))
-                .select(
-                    F.coalesce(F.col(f"l.{INDEX_COL}"), F.col(f"r.{INDEX_COL}")).alias(INDEX_COL),
-                    *lsel("l"),
-                    *rsel("r"),
-                    *[F.col(f"l.{src}").alias(dst) for src, dst in extras],
-                    F.coalesce(F.col(f"l.{INDEX_COL}"), F.col(f"r.{INDEX_COL}")).alias(alunion),
-                    F.lit(True).alias("__fguard__"),
-                )
-            )
-            idx_t = a.schema[INDEX_COL].dataType
-            pos = (
-                a_pos.alias("l")
-                .join(
-                    b_pos.alias("r"),
-                    F.col("l.__flp__") == F.col("r.__frp__"),
-                    "inner",
-                )
-                .crossJoin(F.broadcast(mism))
-                .filter(~F.col("__fmism__"))
-                .select(
-                    F.col(f"l.{INDEX_COL}").alias(INDEX_COL),
-                    *lsel("l"),
-                    *rsel("r"),
-                    *[F.col(f"l.{src}").alias(dst) for src, dst in extras],
-                    F.lit(None).cast(idx_t).alias(alunion),
-                    F.lit(False).alias("__fguard__"),
-                )
-            )
-            sdf = cart.unionByName(pos)
-            # strict comparisons keep the LEFT order (identical labels
-            # required — the cart branch raises); aligning ops order by
-            # the union helper first, falling back to the left order
-            # while the sequences were identical
-            new_spec = (
-                spec_rewritten
-                if strict
-                else ((alunion, True),) + (spec_rewritten or ())
-            )
-            guard_col = sdf["__fguard__"] if strict else None
-
-        index_name = (
-            self._internal.index_name
-            if self._internal.index_name == other._internal.index_name
-            else None
-        )
-        if pairstat is not None:
-            sdf = sdf.crossJoin(F.broadcast(pairstat))
-        internal = InternalFrame(sdf, INDEX_COL, index_name, new_spec)
+        sdf = internal.sdf
         out: dict[str, Column] = {}
         for c in union:
             has_l, has_r = c in lname, c in rout
@@ -3988,17 +3755,12 @@ class DataFrame:
                     rdts.get(c) if has_r else None,
                     comparison=comparison, missing_result=missing_result,
                     reflected=reflected, fill_value=fill_value,
-                    guard=guard_col, guard_msg=self._CMP_FRAME_MSG,
                 )
             elif comparison:
                 col = F.lit(missing_result)
             else:
                 col = F.lit(None).cast("double")
-            if pairstat is not None:
-                col = F.when(
-                    F.col("__fdup_pair__"), F.raise_error(F.lit(pair_msg))
-                ).otherwise(col)
-            out[c] = col
+            out[c] = finish(col)
         return DataFrame._from_internal(internal, out)
 
     def _elementwise_series_columns(

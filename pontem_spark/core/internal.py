@@ -189,6 +189,252 @@ def rowalign_left_join(
     )
 
 
+def rowalign_keys(
+    left: "InternalFrame",
+    right: "InternalFrame",
+    a: SparkDataFrame,
+    b: SparkDataFrame,
+) -> "list[str]":
+    """Extra join-key helper names when ``right`` is a row-aligned
+    derivation of ``left``'s visible order (EQUAL order specs — e.g.
+    s ⊕ s.shift(), df.update(df.shift())): the spec's helper columns
+    (__ctor__ position, sort keys) present in both materializations
+    ``a``/``b`` pair rows positionally, so duplicate index labels don't
+    fan the label join out k² per label where pandas stays positional
+    (r12 probe batch 4). Different specs → label-only join. Every
+    aligner — binops, where/mask, update, combine_first, setitem —
+    takes its keys from here."""
+    spec = left.order_spec
+    if not spec or right.order_spec != spec:
+        return []
+    # lineage proof required: equal spec NAMES alone are not enough —
+    # two INDEPENDENT sort_values results share helper names but not
+    # values, and joining on them would drop genuinely matched labels
+    # (r12: the suite's identical-index sort_values pin doubled)
+    if not (left.row_tokens & right.row_tokens):
+        return []
+    return [
+        n for n, _ in spec if n != INDEX_COL and n in a.columns and n in b.columns
+    ]
+
+
+_PAIR_MSG = (
+    "cannot pair rows positionally: duplicate index labels tie on every "
+    "order-spec column; sort by a unique key or reset_index first"
+)
+
+
+def align_rows(
+    left: "InternalFrame",
+    right: "InternalFrame",
+    a: SparkDataFrame,
+    b: SparkDataFrame,
+    lvals: "dict[str, str]",
+    rvals: "dict[str, str]",
+    strict: "str | None" = None,
+):
+    """pandas row alignment of two anchors — the one cross-anchor row
+    pairing under Series and DataFrame binops.
+
+    ``a``/``b`` are the materialized operands (index, value columns,
+    order-spec helpers); ``lvals``/``rvals`` map each side's value
+    columns to their names in the result. ``strict`` is the ValueError
+    message of dunder comparisons, raised lazily when the two visible
+    row sequences are not identical. Returns ``(internal, finish)``:
+    the aligned anchor (index-name merge and result order spec
+    included) and the wrapper every output cell must pass through —
+    it raises the strict and non-total-rowalign errors in-plan.
+
+    Plan shape: ONE full-outer label join when either side is in index
+    order (spec None — the big-data path). Only when BOTH sides carry a
+    custom visible order (or ``strict``) does the cart/pos machinery
+    engage."""
+    # MultiIndex vs flat (or differing level counts) cannot align —
+    # pandas raises before any data moves, and the struct-vs-scalar
+    # join would be a DATATYPE_MISMATCH anyway (r14 probe M4)
+    lnm, rnm = left.index_name, right.index_name
+    lmi, rmi = isinstance(lnm, tuple), isinstance(rnm, tuple)
+    if lmi != rmi or (lmi and len(lnm) != len(rnm)):
+        raise ValueError("cannot join with no overlapping index names")
+    spec, rspec = left.order_spec, right.order_spec
+    rkeys = rowalign_keys(left, right, a, b)
+    # pandas 2.x ARITHMETIC alignment with duplicate labels and
+    # non-identical sequences is the per-label cartesian (k_l × k_r
+    # rows per label, union of labels) — measured, NOT a raise (only
+    # the reindex-class ops — where/update/reindex — raise). A plain
+    # label join IS that semantic, so the label-only path needs no
+    # guard. The one case that must raise is the ROWALIGN path with a
+    # NON-TOTAL key: lineage says the sequences are identical (pandas
+    # would pair positionally) but the helper columns tie, so the join
+    # can neither pair rows nor produce pandas' cartesian — a lazy
+    # 1-row stat raises instead of returning k²-wrong rows. A
+    # '__ctor__' rowalign key is an arange — unique per row by
+    # construction — so the ctor hot path skips the stat's two aggs.
+    pairstat = None
+    if rkeys and "__ctor__" not in rkeys:
+        gkeys = F.struct(*[F.col(k) for k in (INDEX_COL, *rkeys)])
+
+        def dup(sdf, n):
+            return sdf.agg((F.count(F.lit(1)) > F.count_distinct(gkeys)).alias(n))
+
+        pairstat = (
+            dup(a, "__dupl__")
+            .crossJoin(dup(b, "__dupr__"))
+            .select((F.col("__dupl__") | F.col("__dupr__")).alias("__dup_pair__"))
+        )
+    # the LEFT operand's visible order carries to the result (pandas: a
+    # sorted series stays sorted through s - s.shift() — r10 probe).
+    # Left spec keys that are ALSO value columns ride as the RAW LEFT
+    # value under a helper name: the visible value column becomes the
+    # COMBINED value, which would silently re-order the result.
+    extras: dict[str, str] = {}
+    for i, (n, _) in enumerate(spec or ()):
+        if n != INDEX_COL and n in a.columns and n not in extras:
+            extras[n] = f"__lspec{i}__" if n in lvals or n in rvals else n
+    out_spec = (
+        tuple(
+            (extras.get(n, n), asc)
+            for n, asc in spec
+            if n == INDEX_COL or n in a.columns
+        )
+        if spec is not None
+        else None
+    )
+
+    def values(lq: str, rq: str) -> "list[Column]":
+        return [
+            *[F.col(f"{lq}.{s}").alias(d) for s, d in lvals.items()],
+            *[F.col(f"{rq}.{s}").alias(d) for s, d in rvals.items()],
+        ]
+
+    label = F.coalesce(F.col(f"l.{INDEX_COL}"), F.col(f"r.{INDEX_COL}"))
+    jcond = F.col(f"l.{INDEX_COL}") == F.col(f"r.{INDEX_COL}")
+    for n in rkeys:
+        jcond = jcond & F.col(f"l.{n}").eqNullSafe(F.col(f"r.{n}"))
+    joined = a.alias("l").join(b.alias("r"), jcond, "full_outer")
+    if strict is None and (spec is None or rspec is None):
+        # No left visible order to defend — or the RIGHT side is in
+        # index order (spec None), where pandas preserves the left order
+        # only when the sequences are IDENTICAL, which forces the left
+        # to be index-ordered too: either way the sorted union
+        # (materialization's index sort) is pandas-correct, and no
+        # matched-stat machinery is needed (r11 probe 3: sort_values-left
+        # ⊕ fresh-right kept left order where pandas sorts). ONE
+        # shuffle — the 100 TB path.
+        sdf = joined.select(label.alias(INDEX_COL), *values("l", "r"))
+        out_spec = None
+    else:
+        from pyspark.sql.window import Window
+
+        def position(sdf, side_spec):
+            w = Window.orderBy(
+                *[
+                    F.col(n).asc() if asc else F.col(n).desc()
+                    for n, asc in (side_spec or ())
+                    if n in sdf.columns
+                ],
+                F.col(INDEX_COL).asc(),
+            )
+            return F.row_number().over(w)
+
+        # pandas keeps the existing order only when the two visible
+        # SEQUENCES are identical (Index.equals is element-wise), so a
+        # set test is not enough: s.sort_values() + s.sort_values(
+        # ascending=False) has fully-matched labels but must re-sort to
+        # the union index (ADVICE r12). Enumerate each side's visible
+        # position (row_number over its order spec, index tie-break) and
+        # fold "any unmatched label OR any position disagreement" into
+        # one lazy 1-row stat — joined ON POSITION, compared BY LABEL,
+        # so duplicate labels can't fan the stat out like a label join
+        # would (r12 probe batch 4). Two global windows — but only on
+        # this rare path, never on the spec-None fast path.
+        a_pos = a.withColumn("__lp__", position(a, spec))
+        b_pos = b.withColumn("__rp__", position(b, rspec))
+        mism = (
+            a_pos.select(F.col(INDEX_COL).alias("__li__"), "__lp__")
+            .join(
+                b_pos.select(F.col(INDEX_COL).alias("__ri__"), "__rp__"),
+                F.col("__lp__") == F.col("__rp__"),
+                "full_outer",
+            )
+            .agg(
+                F.max(
+                    F.col("__lp__").isNull()
+                    | F.col("__rp__").isNull()
+                    | ~F.col("__li__").eqNullSafe(F.col("__ri__"))
+                ).alias("__mism__")
+            )
+        )
+        # unique union helper per alignment: chained binops ((s1+s2)+s3)
+        # would otherwise carry the previous one as a spec extra AND
+        # alias a new one — AMBIGUOUS_REFERENCE (the same collision class
+        # as chained explode's '__epos__')
+        taken = (
+            {n for n, _ in (spec or ())}
+            | set(lvals.values())
+            | set(rvals.values())
+            | set(extras.values())
+        )
+        k = 0
+        while f"__alunion{k}__" in taken:
+            k += 1
+        alunion = f"__alunion{k}__"
+        carried = [F.col(f"l.{s}").alias(d) for s, d in extras.items()]
+        flag = [F.col("__mism__")] if strict is not None else []
+        # pandas pairs POSITIONALLY when the sequences are identical
+        # (Index.equals short-circuits alignment); under duplicate labels
+        # the label join would instead produce the per-label cartesian —
+        # pandas' answer only for DIFFERING sequences (r13 probe: abs ⊕
+        # sort_index on an already-sorted ctor series fanned 5 rows to
+        # 17). Build BOTH pairings, each filtered by the 1-row broadcast
+        # flag, and union: exactly one side is non-empty at runtime.
+        cart = (
+            joined.crossJoin(F.broadcast(mism))
+            .filter(F.col("__mism__"))
+            .select(
+                label.alias(INDEX_COL),
+                *values("l", "r"),
+                *carried,
+                label.alias(alunion),
+                *flag,
+            )
+        )
+        pos = (
+            a_pos.alias("l")
+            .join(b_pos.alias("r"), F.col("l.__lp__") == F.col("r.__rp__"), "inner")
+            .crossJoin(F.broadcast(mism))
+            .filter(~F.col("__mism__"))
+            .select(
+                F.col(f"l.{INDEX_COL}").alias(INDEX_COL),
+                *values("l", "r"),
+                *carried,
+                F.lit(None).cast(a.schema[INDEX_COL].dataType).alias(alunion),
+                *flag,
+            )
+        )
+        sdf = cart.unionByName(pos)
+        # a fully-matched identical sequence keeps the left order (the
+        # union helper is constant NULL); any mismatch re-sorts to the
+        # sorted union index. Strict comparisons keep the LEFT order —
+        # identical labels are required, the cart branch raises.
+        if strict is None:
+            out_spec = ((alunion, True),) + (out_spec or ())
+    if pairstat is not None:
+        sdf = sdf.crossJoin(F.broadcast(pairstat))
+
+    def finish(col: Column) -> Column:
+        if strict is not None:
+            col = F.when(F.col("__mism__"), F.raise_error(F.lit(strict))).otherwise(col)
+        if pairstat is not None:
+            col = F.when(
+                F.col("__dup_pair__"), F.raise_error(F.lit(_PAIR_MSG))
+            ).otherwise(col)
+        return col
+
+    index_name = lnm if lnm == rnm else None
+    return InternalFrame(sdf, INDEX_COL, index_name, out_spec), finish
+
+
 def next_epos_name(order_spec) -> str:
     """A position-helper column name not already used by ``order_spec``.
 

@@ -32,7 +32,9 @@ from pyspark.sql.types import ArrayType
 from pontem_spark.core.internal import (
     INDEX_COL,
     InternalFrame,
+    align_rows,
     next_epos_name,
+    rowalign_keys,
     rowalign_left_join as _rowalign_left_join,
     to_spark_type,
 )
@@ -216,28 +218,60 @@ class Series:
 
     # -- arithmetic / comparison dunders -------------------------------------
 
-    def _binop(self, other: Any, op: Callable[[Column, Column], Column], reflected: bool = False) -> "Series":
+    _CMP_SERIES_MSG = "Can only compare identically-labeled Series objects"
+
+    def _binop(
+        self, other: Any, fn: Callable, reflected: bool = False,
+        masked: bool = False, strict: bool = False,
+    ) -> "Series":
+        """The one Series ⊕ other dispatch: same anchor → expression
+        composition; a ``_mat_pair`` hop → composition on the derived
+        anchor; any other Series → the row aligner shared with DataFrame
+        (``internal.align_rows``); a scalar → a literal operand.
+
+        ``masked``: ``fn(l, r, lm, rm)`` also receives both operands'
+        pandas-missing masks (NULL-or-NaN, dtype-aware via _missing_mask
+        — ``x != x`` CANNOT detect NaN here because Spark defines NaN =
+        NaN as TRUE, unlike IEEE; r7 probe). Only mask users pay for
+        them: _missing_mask resolves a schema over Py4J. ``strict``
+        marks dunder comparisons, which require identically-labeled
+        operands like pandas."""
         from pontem_spark.core.frame import DataFrame as _PFrame
 
         if isinstance(other, _PFrame):
             # Series ⊕ DataFrame → let Python dispatch to the frame's
             # reflected dunder (column-axis broadcast, r13)
             return NotImplemented
-        if isinstance(other, Series):
+        finish = None
+        if not isinstance(other, Series):
+            internal, scol, ocol, name = self._internal, self._col, F.lit(other), self._name
+        else:
+            name = self._name if self._name == other._name else None
             if other._internal.sdf is self._internal.sdf:
-                l, r = (other._col, self._col) if reflected else (self._col, other._col)
-                name = self._name if self._name == other._name else None
-                return Series._from_internal(self._internal, op(l, r), name)
-            pair = self._mat_pair(other)
-            if pair is not None:
-                lcol, rcol, internal = pair
-                l, r = (rcol, lcol) if reflected else (lcol, rcol)
-                name = self._name if self._name == other._name else None
-                return Series._from_internal(internal, op(l, r), name)
-            return self._aligned_binop(other, op, reflected)
-        lit = F.lit(other)
-        l, r = (lit, self._col) if reflected else (self._col, lit)
-        return Series._from_internal(self._internal, op(l, r), self._name)
+                internal, scol, ocol = self._internal, self._col, other._col
+            elif (pair := self._mat_pair(other)) is not None:
+                scol, ocol, internal = pair
+            else:
+                internal, finish = self._align(other, strict)
+                scol, ocol = internal.sdf["__a__"], internal.sdf["__b__"]
+        l, r = (ocol, scol) if reflected else (scol, ocol)
+        if masked:
+            sm = self._missing_mask(scol, internal.sdf)
+            if isinstance(other, Series):
+                om = other._missing_mask(ocol, internal.sdf)
+            else:
+                import math as _math
+
+                om = F.lit(
+                    other is None or (isinstance(other, float) and _math.isnan(other))
+                )
+            lm, rm = (om, sm) if reflected else (sm, om)
+            col = fn(l, r, lm, rm)
+        else:
+            col = fn(l, r)
+        return Series._from_internal(
+            internal, col if finish is None else finish(col), name
+        )
 
     def _mat_pair(self, other: "Series"):
         """Same-anchor composition across one materialization hop.
@@ -267,236 +301,18 @@ class Series:
                 )
         return None
 
-    def _rowalign_keys(self, other: "Series", a, b) -> list[str]:
-        """Extra join-key helper names when ``other`` is a row-aligned
-        derivation of the same visible order (EQUAL order specs — e.g.
-        s ⊕ s.shift()): the spec's helper columns (__ctor__ position,
-        sort keys) pair rows positionally, so duplicate index labels
-        don't fan the label join out k² per label where pandas stays
-        positional (r12 probe batch 4). Different specs → label-only
-        join, as before."""
-        spec = self._internal.order_spec
-        if not spec or other._internal.order_spec != spec:
-            return []
-        # lineage proof required: equal spec NAMES alone are not enough —
-        # two INDEPENDENT sort_values results share helper names but not
-        # values, and joining on them would drop genuinely matched labels
-        # (r12: the suite's identical-index sort_values pin doubled)
-        if not (self._internal.row_tokens & other._internal.row_tokens):
-            return []
-        return [
-            n
-            for n, _ in spec
-            if n != INDEX_COL and n in a.columns and n in b.columns
-        ]
-
-    def _aligned_binop(
-        self, other: "Series", op, reflected: bool, masked_fn=None
-    ) -> "Series":
-        """pandas index alignment: full outer equi-join on index, null-fill
-        non-matches. One shuffle; same-anchor operands never reach here.
-        ``masked_fn(l, r, lm, rm)`` (from _masked_binop) replaces ``op``
-        when the operation also needs both operands' missing masks."""
-        a = self._materialized("__a__")
-        b_full = other._materialized("__b__")
-        rkeys = self._rowalign_keys(other, a, b_full)
-        b = b_full.select(INDEX_COL, *rkeys, "__b__")
-        # pandas 2.x ARITHMETIC alignment with duplicate labels and
-        # non-identical sequences is the per-label cartesian (k_l × k_r
-        # rows per label, union of labels) — measured, NOT a raise (the
-        # r12 ledger's claim that pandas raises here was wrong; only the
-        # reindex-class ops — where/update/reindex — raise). A plain
-        # label join IS that semantic, so the label-only path needs no
-        # guard. The one case that must raise is the ROWALIGN path with a
-        # NON-TOTAL key: lineage says the sequences are identical (pandas
-        # would pair positionally) but the helper columns tie, so the
-        # join can neither pair rows nor produce pandas' cartesian — a
-        # lazy 1-row stat raises instead of returning k²-wrong rows. A
-        # '__ctor__' rowalign key is an arange — unique per row by
-        # construction — so the ctor hot path skips the stat's two aggs.
-        if rkeys and "__ctor__" not in rkeys:
-            gkeys = [INDEX_COL, *rkeys]
-            _gstruct = F.struct(*[F.col(k) for k in gkeys])
-            pairstat = (
-                a.agg(
-                    (F.count(F.lit(1)) > F.count_distinct(_gstruct)).alias("__dupl__")
-                )
-                .crossJoin(
-                    b.agg(
-                        (F.count(F.lit(1)) > F.count_distinct(_gstruct)).alias(
-                            "__dupr__"
-                        )
-                    )
-                )
-                .select((F.col("__dupl__") | F.col("__dupr__")).alias("__dup_pair__"))
-            )
-            pair_msg = (
-                "cannot pair rows positionally: duplicate index labels tie on "
-                "every order-spec column; sort by a unique key or reset_index "
-                "first"
-            )
-        else:
-            pairstat = None
-            pair_msg = ""
-        # the LEFT operand's visible order carries to the result (pandas:
-        # a sorted series stays sorted through s - s.shift() — r10 probe)
-        # — but ONLY while the indexes fully match. Any unmatched row
-        # means pandas rebuilds the index as the SORTED union (new labels
-        # land in position, not nulls-first at the front — ADVICE r10), so
-        # the sort key is made conditional on a lazy 1-row matched stat:
-        # a leading helper that is constant NULL when fully matched (left
-        # spec decides) and the index when not (sorted union decides).
-        extras = [
-            n
-            for n, _ in (self._internal.order_spec or ())
-            if n not in (INDEX_COL, "__a__") and n in a.columns
-        ]
-        jcond = F.col(f"l.{INDEX_COL}") == F.col(f"r.{INDEX_COL}")
-        for n in rkeys:
-            jcond = jcond & F.col(f"l.{n}").eqNullSafe(F.col(f"r.{n}"))
-        joined = a.alias("l").join(b.alias("r"), jcond, "full_outer")
-        spec = self._internal.order_spec
-        cols = [
-            F.coalesce(F.col(f"l.{INDEX_COL}"), F.col(f"r.{INDEX_COL}")).alias(INDEX_COL),
-            F.col("l.__a__").alias("__a__"),
-            F.col("r.__b__").alias("__b__"),
-            *[F.col(f"l.{n}").alias(n) for n in dict.fromkeys(extras)],
-        ]
-        if spec is None or other._internal.order_spec is None:
-            # No left visible order to defend — or the RIGHT side is in
-            # index order (spec None), where pandas preserves the left
-            # order only when the sequences are IDENTICAL, which forces
-            # the left to be index-ordered too: either way the sorted
-            # union (materialization's index sort) is pandas-correct,
-            # and no matched-stat machinery is needed (r11 probe 3:
-            # sort_values-left ⊕ fresh-right kept left order where
-            # pandas sorts).
-            sdf = joined.select(*cols)
-            spec = None
-        else:
-            # unique helper per alignment: chained binops ((s1+s2)+s3)
-            # would otherwise carry the previous '__alunion__' as a spec
-            # extra AND alias a new one — AMBIGUOUS_REFERENCE (the same
-            # collision class as chained explode's '__epos__')
-            names = {n for n, _ in spec}
-            k = 0
-            while f"__alunion{k}__" in names:
-                k += 1
-            alunion = f"__alunion{k}__"
-            # pandas keeps the existing order only when the two visible
-            # SEQUENCES are identical (Index.equals is element-wise), so a
-            # set test is not enough: s.sort_values() + s.sort_values(
-            # ascending=False) has fully-matched labels but must re-sort
-            # to the union index (ADVICE r12). Both sides are custom-
-            # ordered in this branch, so enumerate each side's visible
-            # position (row_number over its order spec, index tie-break)
-            # and fold "any unmatched label OR any position disagreement"
-            # into the one lazy 1-row stat. Two global windows — but only
-            # on this rare both-sides-custom-ordered path, never on the
-            # spec-None fast paths.
-            from pyspark.sql.window import Window
-
-            rspec = other._internal.order_spec
-            lw = Window.orderBy(
-                *[
-                    F.col(n).asc() if asc else F.col(n).desc()
-                    for n, asc in spec
-                    if n in a.columns
-                ],
-                F.col(INDEX_COL).asc(),
-            )
-            rw = Window.orderBy(
-                *[
-                    F.col(n).asc() if asc else F.col(n).desc()
-                    for n, asc in rspec
-                    if n in b_full.columns
-                ],
-                F.col(INDEX_COL).asc(),
-            )
-            a_pos = a.withColumn("__lp__", F.row_number().over(lw))
-            b_pos = b_full.withColumn("__rp__", F.row_number().over(rw)).select(
-                F.col(INDEX_COL).alias("__ri__"), F.col("__rp__"), F.col("__b__")
-            )
-            # joined ON POSITION, compared BY LABEL — pandas Index.equals
-            # exactly, and duplicate labels can't fan the stat out like a
-            # label join would (r12 probe batch 4)
-            mism = (
-                a_pos.select(F.col(INDEX_COL).alias("__li__"), "__lp__")
-                .join(
-                    b_pos.select("__ri__", "__rp__"),
-                    F.col("__lp__") == F.col("__rp__"),
-                    "full_outer",
-                )
-                .agg(
-                    F.max(
-                        F.col("__lp__").isNull()
-                        | F.col("__rp__").isNull()
-                        | ~F.col("__li__").eqNullSafe(F.col("__ri__"))
-                    ).alias("__mism__")
-                )
-            )
-            # pandas pairs POSITIONALLY when the sequences are identical
-            # (Index.equals short-circuits alignment); under duplicate
-            # labels the label join would instead produce the per-label
-            # cartesian — pandas' answer only for DIFFERING sequences
-            # (r13 probe: abs ⊕ sort_index on an already-sorted ctor
-            # series fanned 5 rows to 17). Build BOTH pairings, each
-            # filtered by the 1-row broadcast flag, and union: exactly
-            # one side is non-empty at runtime. Only on this rare
-            # both-sides-custom-ordered path, never on the spec-None
-            # big-data paths.
-            cart = (
-                joined.crossJoin(F.broadcast(mism))
-                .filter(F.col("__mism__"))
-                .select(
-                    *cols,
-                    F.coalesce(
-                        F.col(f"l.{INDEX_COL}"), F.col(f"r.{INDEX_COL}")
-                    ).alias(alunion),
-                )
-            )
-            idx_t = a.schema[INDEX_COL].dataType
-            pos = (
-                a_pos.alias("l")
-                .join(
-                    b_pos.alias("r"),
-                    F.col("l.__lp__") == F.col("r.__rp__"),
-                    "inner",
-                )
-                .crossJoin(F.broadcast(mism))
-                .filter(~F.col("__mism__"))
-                .select(
-                    F.col(f"l.{INDEX_COL}").alias(INDEX_COL),
-                    F.col("l.__a__").alias("__a__"),
-                    F.col("r.__b__").alias("__b__"),
-                    *[F.col(f"l.{n}").alias(n) for n in dict.fromkeys(extras)],
-                    F.lit(None).cast(idx_t).alias(alunion),
-                )
-            )
-            sdf = cart.unionByName(pos)
-            spec = ((alunion, True),) + spec
-        index_name = (
-            self._internal.index_name
-            if self._internal.index_name == other._internal.index_name
-            else None
+    def _align(self, other: "Series", strict: bool = False):
+        """Cross-anchor row pairing through the shared aligner; the two
+        values ride as ``__a__``/``__b__`` on the returned anchor."""
+        return align_rows(
+            self._internal,
+            other._internal,
+            self._materialized("__a__"),
+            other._materialized("__b__"),
+            {"__a__": "__a__"},
+            {"__b__": "__b__"},
+            strict=self._CMP_SERIES_MSG if strict else None,
         )
-        if pairstat is not None:
-            sdf = sdf.crossJoin(F.broadcast(pairstat))
-        internal = InternalFrame(sdf, INDEX_COL, index_name, spec)
-        l, r = (sdf["__b__"], sdf["__a__"]) if reflected else (sdf["__a__"], sdf["__b__"])
-        name = self._name if self._name == other._name else None
-        if masked_fn is not None:
-            am = self._missing_mask(sdf["__a__"], sdf)
-            bm = other._missing_mask(sdf["__b__"], sdf)
-            lm, rm = (bm, am) if reflected else (am, bm)
-            col = masked_fn(l, r, lm, rm)
-        else:
-            col = op(l, r)
-        if pairstat is not None:
-            col = F.when(
-                F.col("__dup_pair__"), F.raise_error(F.lit(pair_msg))
-            ).otherwise(col)
-        return Series._from_internal(internal, col, name)
 
     @staticmethod
     def _zero_div_value(a: Column, b: Column) -> Column:
@@ -632,12 +448,14 @@ class Series:
     def __pow__(self, o): return self._binop(o, self._pow_fn_for(o))
     def __rpow__(self, o): return self._binop(o, self._pow_fn_for(o, reflected=True), reflected=True)
 
-    def __eq__(self, o): return self._cmp_binop(o, operator.eq)  # type: ignore[override]
-    def __ne__(self, o): return self._cmp_binop(o, operator.ne, missing_result=True)  # type: ignore[override]
-    def __lt__(self, o): return self._cmp_binop(o, operator.lt)
-    def __le__(self, o): return self._cmp_binop(o, operator.le)
-    def __gt__(self, o): return self._cmp_binop(o, operator.gt)
-    def __ge__(self, o): return self._cmp_binop(o, operator.ge)
+    # dunder comparisons: STRICT — pandas requires identically-labeled
+    # operands; the named eq/ne/lt/le/gt/ge align like arithmetic
+    def __eq__(self, o): return self._cmp_binop(o, operator.eq, strict=True)  # type: ignore[override]
+    def __ne__(self, o): return self._cmp_binop(o, operator.ne, missing_result=True, strict=True)  # type: ignore[override]
+    def __lt__(self, o): return self._cmp_binop(o, operator.lt, strict=True)
+    def __le__(self, o): return self._cmp_binop(o, operator.le, strict=True)
+    def __gt__(self, o): return self._cmp_binop(o, operator.gt, strict=True)
+    def __ge__(self, o): return self._cmp_binop(o, operator.ge, strict=True)
 
     def _dtype_str(self) -> "str | None":
         try:
@@ -732,60 +550,9 @@ class Series:
     def __hash__(self):  # __eq__ returns Series; keep hashable by identity
         return id(self)
 
-    # -- mask-aware binop plumbing -------------------------------------------
-
-    def _masked_binop(self, other, fn, reflected: bool = False) -> "Series":
-        """Like :meth:`_binop`, but ``fn(l, r, lm, rm)`` also receives the
-        pandas-missing masks of both operands (NULL-or-NaN, dtype-aware via
-        _missing_mask — note ``x != x`` CANNOT detect NaN here because
-        Spark defines NaN = NaN as TRUE, unlike IEEE; r7 probe)."""
-        import math as _math
-
-        from pontem_spark.core.frame import DataFrame as _PFrame
-
-        if isinstance(other, _PFrame):
-            # Series ⊕ DataFrame → the frame's reflected dunder (r13)
-            return NotImplemented
-        if isinstance(other, Series):
-            if other._internal.sdf is self._internal.sdf:
-                lm0 = self._missing_mask(self._col)
-                rm0 = other._missing_mask(other._col)
-                l, r, lm, rm = (
-                    (other._col, self._col, rm0, lm0)
-                    if reflected
-                    else (self._col, other._col, lm0, rm0)
-                )
-                name = self._name if self._name == other._name else None
-                return Series._from_internal(self._internal, fn(l, r, lm, rm), name)
-            pair = self._mat_pair(other)
-            if pair is not None:
-                scol, ocol, internal = pair
-                sm0 = self._missing_mask(scol, internal.sdf)
-                om0 = other._missing_mask(ocol, internal.sdf)
-                l, r, lm, rm = (
-                    (ocol, scol, om0, sm0) if reflected else (scol, ocol, sm0, om0)
-                )
-                name = self._name if self._name == other._name else None
-                return Series._from_internal(internal, fn(l, r, lm, rm), name)
-            # cross-anchor: delegate to the one aligner — same join,
-            # same per-label-cartesian/positional pairing, same order
-            # machinery and non-total-rowalign guard as arithmetic (r13:
-            # _masked_binop previously had its own label join that kept
-            # the LEFT spec unconditionally, so a mismatched named op
-            # floated unmatched rows nulls-first instead of pandas'
-            # sorted union)
-            return self._aligned_binop(other, None, reflected, masked_fn=fn)
-        lit = F.lit(other)
-        om = F.lit(
-            other is None or (isinstance(other, float) and _math.isnan(other))
-        )
-        sm = self._missing_mask(self._col)
-        l, r, lm, rm = (
-            (lit, self._col, om, sm) if reflected else (self._col, lit, sm, om)
-        )
-        return Series._from_internal(self._internal, fn(l, r, lm, rm), self._name)
-
-    def _cmp_binop(self, other, op, missing_result: bool = False) -> "Series":
+    def _cmp_binop(
+        self, other, op, missing_result: bool = False, strict: bool = False
+    ) -> "Series":
         """pandas comparison semantics for missing operands: every
         comparison against NaN/NULL is False — except ``ne``, which is
         True. Spark instead orders NaN ABOVE every value (NaN >= x is
@@ -803,7 +570,7 @@ class Series:
                 return op(l, r) | lm | rm
             return op(l, r) & ~lm & ~rm
 
-        return self._masked_binop(other, cmp)
+        return self._binop(other, cmp, masked=True, strict=strict)
 
     # -- named arithmetic (pandas s.add(other, fill_value=...) family) --------
 
@@ -817,7 +584,7 @@ class Series:
             # pandas: one side missing → fill and compute; BOTH missing → NaN
             return F.when(lm & rm, F.lit(None)).otherwise(op(lf, rf))
 
-        return self._masked_binop(other, filled, reflected)
+        return self._binop(other, filled, reflected, masked=True)
 
     def add(self, other, fill_value=None): return self._named_binop(other, operator.add, fill_value)
     def radd(self, other, fill_value=None): return self._named_binop(other, operator.add, fill_value, reflected=True)
@@ -1739,13 +1506,13 @@ class Series:
         # stay positional (r12 probe batch 4).
         sdf = self._materialized("__v__")
         cmat = cond._materialized("__c__")
-        ckeys = self._rowalign_keys(cond, sdf, cmat)
+        ckeys = rowalign_keys(self._internal, cond._internal, sdf, cmat)
         sdf = _rowalign_left_join(
             sdf, cmat.select(INDEX_COL, *ckeys, "__c__"), ckeys, "__c__"
         )
         if other_is_series:
             omat = other._materialized("__o__")
-            okeys = self._rowalign_keys(other, sdf, omat)
+            okeys = rowalign_keys(self._internal, other._internal, sdf, omat)
             sdf = _rowalign_left_join(
                 sdf, omat.select(INDEX_COL, *okeys, "__o__"), okeys, "__o__"
             )
@@ -1927,11 +1694,12 @@ class Series:
 
     def combine_first(self, other: "Series") -> "Series":
         """self's non-missing values, holes filled from ``other``; index =
-        union of both. Routed through _aligned_binop so the result ORDER
-        follows the same pandas rule as arithmetic alignment: identical
-        visible sequences keep their order, anything else re-sorts to the
-        union index (r12 probe batch 4 — the old direct join dropped the
-        order spec and always displayed index-sorted)."""
+        union of both. Routed through the shared row aligner so the
+        result ORDER follows the same pandas rule as arithmetic
+        alignment: identical visible sequences keep their order, anything
+        else re-sorts to the union index (r12 probe batch 4 — the old
+        direct join dropped the order spec and always displayed
+        index-sorted)."""
         try:
             adt = self._internal.sdf.select(self._col).schema[0].dataType.simpleString()
         except Exception:
@@ -1943,9 +1711,9 @@ class Series:
                 lm = lm | F.isnan(l)
             return F.coalesce(F.when(~lm, l), r)
 
-        out = self._aligned_binop(other, op, reflected=False)
-        out._name = self._name  # combine_first keeps self's name
-        return out
+        internal, finish = self._align(other)
+        col = finish(op(internal.sdf["__a__"], internal.sdf["__b__"]))
+        return Series._from_internal(internal, col, self._name)  # keeps self's name
 
     def unstack(self):
         """2-level MultiIndexed Series (struct index, e.g. from a
@@ -2050,7 +1818,7 @@ class Series:
         a = self._materialized("__a__")
         b = other._materialized("__b__")
         jcond = F.col(f"l.{INDEX_COL}") == F.col(f"r.{INDEX_COL}")
-        for n in self._rowalign_keys(other, a, b):
+        for n in rowalign_keys(self._internal, other._internal, a, b):
             jcond = jcond & F.col(f"l.{n}").eqNullSafe(F.col(f"r.{n}"))
         joined = a.alias("l").join(b.alias("r"), jcond, "full_outer")
         sdf = joined.select(
@@ -3215,7 +2983,7 @@ class Series:
         of self — see the frame twin)."""
         a = self._materialized()
         b_full = other._materialized("__u__")
-        ukeys = self._rowalign_keys(other, a, b_full)
+        ukeys = rowalign_keys(self._internal, other._internal, a, b_full)
         b = b_full.select(INDEX_COL, *ukeys, "__u__")
         j = _rowalign_left_join(a, b, ukeys, "__u__")
         u = F.col("__u__")

@@ -984,7 +984,7 @@ def q_api_ctor_order_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_api_rowalign_dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-label row-aligned derivations, in-engine end to end —
     driver evidence for the r12 aligner campaign (core/internal.py
-    rowalign_left_join, core/series.py _rowalign_keys) and the r13
+    rowalign_left_join and rowalign_keys) and the r13
     same-anchor positional rebuild (core/series.py shift/_cum/pct_change
     fast paths + _mat_pair).
 

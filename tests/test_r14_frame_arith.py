@@ -1,5 +1,5 @@
 """Round-14 frame-arithmetic seams — pandas 2.2 semantics MEASURED by
-the r14 probe (tools/probe_r14.py) and pinned here after the fixes.
+the r14 probe and pinned here after the fixes.
 
 What r14 fixed (ADVICE r13 + the judge's three named seams):
   * cross-anchor dtype resolution: dtypes now come from the pre-join
@@ -22,7 +22,7 @@ What r14 fixed (ADVICE r13 + the judge's three named seams):
   * str ⊕ str frames concatenate on +; bool ⊕ bool frames follow numpy
     (+ OR, * AND, - raises, % int-upcasts, / // ** raise);
   * identical duplicate-label sequences pair POSITIONALLY cross-anchor
-    (the Series aligner's cart/pos union, ported to frames);
+    (the cart/pos union of the row aligner shared with Series);
   * Series(dict) ctor: keys become the index (previously the keys were
     taken as the VALUES).
 

@@ -264,3 +264,73 @@ def test_series_binop_keeps_left_order(spark):
             assert bool(pd.isna(a)) == bool(pd.isna(b))
         else:
             assert abs(float(a) - float(b)) < 1e-9
+
+
+def _chain_operands(S, F, cat):
+    """Operands of the binop/window chain-link sweep, built with the
+    Series ctor ``S``, frame ctor ``F`` and ``concat`` of either
+    library."""
+    s = S([4.0, None, 2.0, 8.0, 6.0], index=[1, 2, 3, 4, 5])
+    return {
+        "l": S([5.0, 1.0, 3.0, 7.0], index=[10, 20, 30, 40]).sort_values(),
+        "r": S([1.0, 2.0, 3.0, 4.0, 5.0], index=[10, 20, 30, 40, 50]),
+        "r2": S([9.0, 9.0, 9.0, 9.0], index=[10, 20, 30, 40]),
+        "s": s,
+        "o": S([None, 1.0, None, 2.0, None], index=[1, 2, 3, 4, 5]),
+        "fa": F({"x": [1.0, 2.0, 3.0]}),
+        "fb": F({"y": [10.0, 20.0, 30.0]}),
+        "F": F,
+        "cat": cat,
+    }
+
+
+def _local(x):
+    return x.to_pandas().tolist() if hasattr(x, "to_pandas") else x.tolist()
+
+
+# aligned-binop and window outputs as links of longer chains (the
+# conditional sorted-union order under composition), where/mask/clip/
+# combine_first chains, and concat(axis=1) outputs feeding chains
+CHAIN_LINKS = {
+    "binop>cumsum": lambda d: (d["l"] + d["r"]).cumsum(),
+    "binop>shift": lambda d: (d["l"] + d["r"]).shift(1),
+    "binop>sort_values": lambda d: (d["l"] + d["r"]).sort_values(),
+    "binop>dropna>rank": lambda d: (d["l"] + d["r"]).dropna().rank(),
+    "binop>fillna>diff": lambda d: (d["l"] + d["r"]).fillna(0.0).diff(),
+    "binop>head3": lambda d: (d["l"] + d["r"]).head(3),
+    "binop>iloc_rev": lambda d: (d["l"] + d["r"]).iloc[::-1],
+    "binop_matched>cumsum": lambda d: (d["l"] * d["r2"]).cumsum(),
+    "binop_matched>rolling2": lambda d: (d["l"] * d["r2"]).rolling(2).mean(),
+    "rolling>sort_values": lambda d: d["s"].rolling(2).mean().sort_values(),
+    "rolling>dropna>cumsum": lambda d: d["s"].rolling(2).mean().dropna().cumsum(),
+    "expanding>diff>fillna": lambda d: d["s"].expanding().sum().diff().fillna(-1.0),
+    "pct_change>clip": lambda d: d["s"].pct_change().clip(upper=1.0),
+    "diff>binop_self": lambda d: d["s"].diff() + d["s"],
+    "rolling>merge>renum": lambda d: d["F"](
+        {"k": [1, 2, 3, 4, 5], "roll": _local(d["s"].rolling(2).mean())}
+    )
+    .merge(d["F"]({"k": [2, 3, 4], "tag": ["a", "b", "c"]}), on="k")
+    .reset_index(drop=True),
+    "where>fillna>cumsum": lambda d: d["s"].where(d["s"] > 3.0).fillna(0.0).cumsum(),
+    "mask>clip>rank": lambda d: d["s"].mask(d["s"] > 6.0).clip(lower=3.0).rank(),
+    "combine_first>sort_values": lambda d: d["s"].combine_first(d["o"]).sort_values(),
+    "combine_first>binop": lambda d: d["s"].combine_first(d["o"]) * 2 + 1,
+    "concat1>sort_desc": lambda d: d["cat"]([d["fa"], d["fb"]], axis=1).sort_values(
+        "x", ascending=False
+    ),
+    "concat1>assign>filter": lambda d: (
+        lambda c: c.assign(z=c["x"] + c["y"])[c["x"] > 1.0]
+    )(d["cat"]([d["fa"], d["fb"]], axis=1)),
+}
+
+
+@pytest.mark.parametrize("chain", list(CHAIN_LINKS), ids=list(CHAIN_LINKS))
+def test_binop_and_window_outputs_as_chain_links(spark, chain):
+    from pontem_spark.core.frame import concat
+
+    fn = CHAIN_LINKS[chain]
+    got = fn(_chain_operands(Series, DataFrame, concat)).to_pandas()
+    want = fn(_chain_operands(pd.Series, pd.DataFrame, pd.concat))
+    if isinstance(want, pd.Series):
+        got, want = pd.DataFrame({"_s": list(got)}, index=got.index), want.to_frame("_s")
+    _eq_frame(got, want)
