@@ -14,6 +14,16 @@ from typing import Any, Iterable, Mapping
 from pyspark.sql import Column, DataFrame as SparkDataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType
 
+from pontem_spark.core.cells import (
+    COMPARISONS,
+    combine_cells,
+    dtype_class,
+    dtypes,
+    missing,
+    scalar_dtype,
+    truediv_cols,
+    unary,
+)
 from pontem_spark.core.internal import (
     INDEX_COL,
     InternalFrame,
@@ -164,9 +174,15 @@ class DataFrame:
     def dtypes(self):
         import pandas as pd
 
-        schema = self._materialized().schema
-        mapping = {f.name: f.dataType.simpleString() for f in schema.fields}
+        mapping = self._dtype_map()
         return pd.Series({c: mapping[c] for c in self._columns})
+
+    def _dtype_map(self) -> "dict[str, str]":
+        """Spark dtype name per materialized column (one analysis)."""
+        return {
+            f.name: f.dataType.simpleString()
+            for f in self._materialized().schema.fields
+        }
 
     # -- materialization ------------------------------------------------------
 
@@ -975,10 +991,7 @@ class DataFrame:
         asc = [ascending] * len(by) if isinstance(ascending, bool) else list(ascending)
         if len(asc) != len(by):
             raise ValueError("sort_values: ascending list must match by list")
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        schema = self._dtype_map()
         mat = self._materialized()
         # pandas accepts INDEX LEVEL names in ``by`` (r12 probe batch 3:
         # set_index('u').sort_values('u') raised UNRESOLVED_COLUMN); a
@@ -1179,10 +1192,7 @@ class DataFrame:
         # documented divergence; those columns pass through untouched).
         # A dict fills per-column like pandas (r10 probe: the dict used to
         # reach F.lit and throw LITERAL_TYPE).
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        schema = self._dtype_map()
         if isinstance(value, dict):
             return DataFrame._from_internal(
                 self._internal,
@@ -1223,20 +1233,14 @@ class DataFrame:
     def isna(self) -> "DataFrame":
         """Per-cell pandas-missing mask (NULL or float NaN) — pure
         projection, no job."""
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        schema = self._dtype_map()
         return DataFrame._from_internal(
             self._internal,
             {k: self._valid_col(k, schema).isNull() for k in self._columns},
         )
 
     def notna(self) -> "DataFrame":
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        schema = self._dtype_map()
         return DataFrame._from_internal(
             self._internal,
             {k: self._valid_col(k, schema).isNotNull() for k in self._columns},
@@ -1288,10 +1292,7 @@ class DataFrame:
             lower, upper = upper, lower
         if lower is None and upper is None:
             return self
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        schema = self._dtype_map()
         cols = dict(self._columns)
         for c in self._numeric_cols():
             clipped = self._columns[c]
@@ -1384,7 +1385,7 @@ class DataFrame:
                 if periods >= 0
                 else F.lead(cur, -periods).over(w_order)
             )
-            cols[c] = Series._truediv_cols(cur - prev, prev)
+            cols[c] = truediv_cols(cur - prev, prev)
         internal = InternalFrame(
             sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
         )
@@ -1557,7 +1558,7 @@ class DataFrame:
         # stack() requires one common type; mirror pandas' coercion — numeric
         # mix melts to double, anything else melts to string
         numeric = ("tinyint", "smallint", "int", "bigint", "float", "double")
-        schema = {f.name: f.dataType.simpleString() for f in self._materialized().schema.fields}
+        schema = self._dtype_map()
         common = "double" if all(schema[c] in numeric for c in value_vars) else "string"
         args = ", ".join(
             f"{i}, '{c}', CAST(`{c}` AS {common})" for i, c in enumerate(value_vars)
@@ -1984,7 +1985,7 @@ class DataFrame:
         import pandas as pd
 
         numeric = ("tinyint", "smallint", "int", "bigint", "float", "double")
-        schema = {f.name: f.dataType.simpleString() for f in self._materialized().schema.fields}
+        schema = self._dtype_map()
         cols = [c for c in self._columns if schema[c] in numeric]
         # NaN is pandas-missing: corr/covar skip NULL pairwise but
         # propagate NaN into the whole cell (r8 probe) — blank NaN to NULL
@@ -2036,10 +2037,7 @@ class DataFrame:
         the frame twin of Series._valid_col: Spark aggregates skip NULL but
         propagate NaN, the opposite of pandas skipna (r7 probe)."""
         if schema is None:
-            schema = {
-                f.name: f.dataType.simpleString()
-                for f in self._materialized().schema.fields
-            }
+            schema = self._dtype_map()
         v = self._columns[name]
         if schema.get(name) in ("double", "float"):
             return F.when(F.isnan(v), F.lit(None)).otherwise(v)
@@ -2052,10 +2050,7 @@ class DataFrame:
 
         from pontem_spark.core.groupby import _AGGS
 
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        schema = self._dtype_map()
         # sum/mean on a string column would ANSI-throw casting the values
         # (pandas numeric_only=True behavior instead — min/max/count stay
         # all-column, both engines order/count strings fine)
@@ -2068,7 +2063,7 @@ class DataFrame:
         return out
 
     def _numeric_cols(self) -> list[str]:
-        schema = {f.name: f.dataType.simpleString() for f in self._materialized().schema.fields}
+        schema = self._dtype_map()
         return [
             c
             for c in self._columns
@@ -2084,10 +2079,7 @@ class DataFrame:
 
         from pontem_spark.core.series import Series
 
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        schema = self._dtype_map()
         cols = [self._valid_col(c, schema) for c in self._numeric_cols()]
         if not cols:
             raise ValueError("no numeric columns for axis=1 reduction")
@@ -2145,10 +2137,7 @@ class DataFrame:
         either way (the k percentile buffers run side by side)."""
         import pandas as pd
 
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        schema = self._dtype_map()
         cols = self._numeric_cols()
         if not isinstance(q, (int, float)):
             qs = [float(x) for x in q]
@@ -2185,10 +2174,7 @@ class DataFrame:
         (var_samp, count) — one aggregation pass for every column."""
         import pandas as pd
 
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        schema = self._dtype_map()
         cols = self._numeric_cols()
         exprs = []
         for c in cols:
@@ -2247,7 +2233,7 @@ class DataFrame:
         ONE aggregation pass total (pandas layout)."""
         import pandas as pd
 
-        schema = {f.name: f.dataType.simpleString() for f in self._materialized().schema.fields}
+        schema = self._dtype_map()
         numeric = [
             c
             for c in self._columns
@@ -2287,7 +2273,7 @@ class DataFrame:
         eager pandas Series like the other axis-0 reductions."""
         import pandas as pd
 
-        schema = {f.name: f.dataType.simpleString() for f in self._materialized().schema.fields}
+        schema = self._dtype_map()
         exprs = [
             F.coalesce(F.max(self._truthy(c, schema)), F.lit(False)).alias(c)
             for c in self._columns
@@ -2299,7 +2285,7 @@ class DataFrame:
         """Per-column pandas ``all`` (skipna; empty/all-missing → True)."""
         import pandas as pd
 
-        schema = {f.name: f.dataType.simpleString() for f in self._materialized().schema.fields}
+        schema = self._dtype_map()
         exprs = [
             F.coalesce(F.min(self._truthy(c, schema)), F.lit(True)).alias(c)
             for c in self._columns
@@ -2334,7 +2320,7 @@ class DataFrame:
         family, mirroring pandas' object-upcast rule."""
         from pontem_spark.core.series import Series
 
-        schema = {f.name: f.dataType.simpleString() for f in self._materialized().schema.fields}
+        schema = self._dtype_map()
         numeric = ("tinyint", "smallint", "int", "bigint", "float", "double")
         kinds = {schema[c] for c in self._columns}
         if kinds <= set(numeric):
@@ -2466,10 +2452,7 @@ class DataFrame:
         driver job — N jobs for an N-column frame; this is 1)."""
         import pandas as pd
 
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        schema = self._dtype_map()
         cols = self._numeric_cols()
         if not cols:
             return pd.Series(dtype="float64")
@@ -3342,247 +3325,27 @@ class DataFrame:
         row.name = where
         return row
 
-    # -- scalar elementwise arithmetic / comparisons ----------------------
+    # -- elementwise arithmetic / comparisons ----------------------------
     #
-    # pandas 2.x rules, MEASURED this round (pandas 2.2.2 REPL, r14 probe
-    # — reference shape: /root/reference/pontem/tests/test_series.py:75-114
-    # generalized to frames):
+    # Cell rules (dtype classes, missing-ness, bool/str/int64 rules) are
+    # core/cells.py, shared with Series. The frame-level pandas 2.x rules,
+    # measured (pandas 2.2.2 REPL, r14 probe):
     #   * the NAMED ops (add/sub/.../pow and eq/ne/lt/le/gt/ge) ALIGN both
     #     axes exactly like arithmetic — only the DUNDER comparisons
     #     require identically-labeled operands (both index and columns,
     #     order included), raising pandas' ValueError otherwise
-    #   * bool ⊕ bool: + is OR, * is AND, - raises numpy's TypeError,
-    #     % int-upcasts, and / // ** raise NotImplementedError
-    #     ("operator 'X' not implemented for bool dtypes")
-    #   * str ⊕ str: + concatenates with NaN propagation; other arithmetic
-    #     raises TypeError (pandas' printf-style str % str is deliberately
-    #     NOT reproduced — ledgered deviation, absurd at scale)
-    #   * comparisons across dtype classes (str vs numeric): eq is False,
-    #     ne is True, ordering comparisons raise TypeError
+    #   * one-sided columns become NaN, or the missing result under the
+    #     aligning named comparisons
     #   * a Series operand with fill_value raises NotImplementedError
     #     ("fill_value X not supported.") on every axis
 
-    _NUMERIC_SIMPLE = frozenset(
-        {"tinyint", "smallint", "int", "bigint", "float", "double"}
-    )
-    _BOOL_RAISE_OPS = frozenset({"truediv", "floordiv", "pow"})
-    _ORDER_CMP_OPS = frozenset({"lt", "le", "gt", "ge"})
-    _STR_OP_ERRS = {
-        "sub": "unsupported operand type(s) for -: 'str' and 'str'",
-        "mul": "can't multiply sequence by non-int of type 'str'",
-        "truediv": "unsupported operand type(s) for /: 'str' and 'str'",
-        "floordiv": "unsupported operand type(s) for //: 'str' and 'str'",
-        "mod": "printf-style str % str formatting is not supported "
-               "(documented deviation from pandas)",
-        "pow": "unsupported operand type(s) for ** or pow(): 'str' and 'str'",
-    }
     _CMP_FRAME_MSG = (
         "Can only compare identically-labeled (both index and columns) "
         "DataFrame objects"
     )
 
-    @staticmethod
-    def _op_column_fn(opname: str):
-        """Column-level implementation per op name. Arithmetic routes
-        through the Series' pandas-corrected helpers (true-floor floordiv,
-        divisor-sign mod, 1**NaN==1 pow, /0 without the ANSI throw) — the
-        r14 probe caught the frame dunders using raw Spark % (dividend
-        sign) and floor(l/r) (floor(NaN) is 0), and ANSI DIVIDE_BY_ZERO
-        on df / 0."""
-        import operator
-
-        from pontem_spark.core.series import Series as _S
-
-        return {
-            "add": operator.add, "sub": operator.sub, "mul": operator.mul,
-            "truediv": _S._truediv_cols, "floordiv": _S._floordiv_cols,
-            "mod": _S._mod_cols, "pow": _S._pow_cols,
-            "eq": operator.eq, "ne": operator.ne, "lt": operator.lt,
-            "le": operator.le, "gt": operator.gt, "ge": operator.ge,
-        }[opname]
-
-    @staticmethod
-    def _dtype_class(dt: "str | None") -> str:
-        if dt is None:
-            return "num"  # absent-side NULL-double literal
-        if dt == "string":
-            return "str"
-        if dt == "boolean":
-            return "bool"
-        if dt in DataFrame._NUMERIC_SIMPLE or dt.startswith("decimal"):
-            return "num"
-        return "other"
-
-    @staticmethod
-    def _missing_dt(col: Column, dt: "str | None") -> Column:
-        """pandas-missing (NULL or float NaN) from a KNOWN dtype string —
-        never resolved by select() against a joined alias (ADVICE r14:
-        the cross-anchor path probed dtypes with F.col('l.x') against the
-        unaliased frames, always raising, so NaN cells counted as present
-        and boolean frames crashed)."""
-        if dt in ("double", "float"):
-            return col.isNull() | F.isnan(col)
-        return col.isNull()
-
-    def _missing_mask(self, name: str, schema) -> Column:
-        v = self._columns[name]
-        return self._missing_dt(v, schema.get(name))
-
-    def _combine_cells(
-        self, opname: str, lcol: Column, rcol: Column,
-        ldt: "str | None", rdt: "str | None", *, comparison: bool,
-        missing_result: bool, reflected: bool, fill_value,
-        same_anchor: bool = False,
-    ) -> Column:
-        """One output cell from left/right operand columns with KNOWN
-        dtypes (resolved from the pre-join schemas by plain name)."""
-        if reflected:
-            lcol, rcol, ldt, rdt = rcol, lcol, rdt, ldt
-        lc, rc = self._dtype_class(ldt), self._dtype_class(rdt)
-        if comparison:
-            compat = lc == rc or {lc, rc} == {"bool", "num"}
-            if not compat:
-                if opname in self._ORDER_CMP_OPS:
-                    raise TypeError(
-                        f"'{opname}' not supported between mismatched "
-                        f"dtypes ({ldt} vs {rdt})"
-                    )
-                return F.lit(opname == "ne")
-            if lc == "bool" and rc == "num":
-                lcol, ldt = lcol.cast("int"), "int"
-            elif rc == "bool" and lc == "num":
-                rcol, rdt = rcol.cast("int"), "int"
-            lm = self._missing_dt(lcol, ldt)
-            rm = self._missing_dt(rcol, rdt)
-            raw = self._op_column_fn(opname)(lcol, rcol)
-            return (raw | lm | rm) if missing_result else (raw & ~lm & ~rm)
-        if opname in ("and_", "or_", "xor"):
-            # pandas logical/bitwise rules (r14 probe): bool ⊕ bool is
-            # elementwise logical with missing filled False BEFORE the op
-            # (one-sided ROWS become False; one-sided COLUMNS stay NaN via
-            # the caller's absent branch); int ⊕ int is bitwise; floats
-            # and strings raise
-            import operator as _op
-
-            if lc in ("str", "other") or rc in ("str", "other"):
-                raise TypeError(
-                    f"unsupported operand type(s) for {opname}: {ldt} and {rdt}"
-                )
-            if lc == "num" and rc == "num":
-                ints = ("tinyint", "smallint", "int", "bigint")
-                if ldt in ints and rdt in ints:
-                    meth = {
-                        "and_": "bitwiseAND",
-                        "or_": "bitwiseOR",
-                        "xor": "bitwiseXOR",
-                    }[opname]
-                    return getattr(lcol, meth)(rcol)
-                raise TypeError(
-                    f"unsupported operand type(s) for {opname}: {ldt} and {rdt}"
-                )
-            # pyspark Column has no __xor__; boolean xor ≡ !=
-            fn = {
-                "and_": _op.and_,
-                "or_": _op.or_,
-                "xor": lambda a, b: a != b,
-            }[opname]
-            lb = lcol if lc == "bool" else (lcol != 0)
-            rb = rcol if rc == "bool" else (rcol != 0)
-            return fn(F.coalesce(lb, F.lit(False)), F.coalesce(rb, F.lit(False)))
-        if lc == "other" or rc == "other":
-            raise TypeError(
-                f"unsupported operand type(s) for {opname}: {ldt} and {rdt}"
-            )
-        if lc == "str" or rc == "str":
-            if lc != rc:
-                ints_b = ("tinyint", "smallint", "int", "bigint", "boolean")
-                if opname == "mul" and (
-                    (lc == "str" and rdt in ints_b)
-                    or (rc == "str" and ldt in ints_b)
-                ):
-                    # pandas str * int is python string repetition
-                    # (r14 fuzz seed 614; bool counts as 0/1)
-                    scol, ncol = (lcol, rcol) if lc == "str" else (rcol, lcol)
-                    return F.repeat(scol, F.greatest(ncol.cast("int"), F.lit(0)))
-                bad = rdt if lc == "str" else ldt
-                raise TypeError(f'can only concatenate str (not "{bad}") to str')
-            if opname != "add":
-                raise TypeError(self._STR_OP_ERRS[opname])
-            if fill_value is not None:
-                if not isinstance(fill_value, str):
-                    raise TypeError(
-                        'can only concatenate str (not '
-                        f'"{type(fill_value).__name__}") to str'
-                    )
-                lm, rm = lcol.isNull(), rcol.isNull()
-                lcol = F.when(lm & ~rm, F.lit(fill_value)).otherwise(lcol)
-                rcol = F.when(rm & ~lm, F.lit(fill_value)).otherwise(rcol)
-            return F.concat(lcol, rcol)  # NULL propagates: "a" + NaN = NaN
-        if lc == "bool" and rc == "bool":
-            if opname == "add":
-                return lcol | rcol
-            if opname == "mul":
-                return lcol & rcol
-            if opname == "sub":
-                raise TypeError(
-                    "numpy boolean subtract, the `-` operator, is not "
-                    "supported, use the bitwise_xor, the `^` operator, or "
-                    "the logical_xor function instead."
-                )
-            if opname in self._BOOL_RAISE_OPS:
-                raise NotImplementedError(
-                    f"operator '{opname}' not implemented for bool dtypes"
-                )
-            if opname == "mod":
-                # numpy int8 C semantics (r14 fuzz seed 18): bool % bool
-                # is x%1==0 or x%0==0 — always 0, never the float NaN mask
-                return F.when(
-                    lcol.isNull() | rcol.isNull(), F.lit(None).cast("int")
-                ).otherwise(F.lit(0))
-            lcol, ldt = lcol.cast("int"), "int"
-            rcol, rdt = rcol.cast("int"), "int"
-        elif lc == "bool":
-            lcol, ldt = lcol.cast("int"), "int"
-        elif rc == "bool":
-            rcol, rdt = rcol.cast("int"), "int"
-        if fill_value is not None:
-            # pandas fill_value: a cell missing on exactly ONE side takes
-            # the fill before the op; both-missing stays missing
-            lm = self._missing_dt(lcol, ldt)
-            rm = self._missing_dt(rcol, rdt)
-            lcol = F.when(lm & ~rm, F.lit(fill_value)).otherwise(lcol)
-            rcol = F.when(rm & ~lm, F.lit(fill_value)).otherwise(rcol)
-        # pandas int64-dtype rules apply only while the column stays int,
-        # which alignment holes silently break (they flip the column to
-        # float64, changing zero-division and pow semantics COLUMN-wide —
-        # action at a distance). The engine applies them exactly where
-        # hole-freedom is provable: the same-anchor path, where an int
-        # Spark dtype is int64 pandas dtype by construction (a ctor None
-        # would have made it float). Cross-anchor int quirks are ledgered
-        # in tests/test_r14_fuzz_frame_align.py.
-        ints = ("tinyint", "smallint", "int", "bigint")
-        if same_anchor and ldt in ints and rdt in ints:
-            if fill_value is not None and opname in ("mod", "floordiv"):
-                # int mod/floordiv WITH fill_value skip the zero-division
-                # masking: numpy C semantics, x % 0 == 0 and x // 0 == 0
-                # (r14 fuzz seed 41, measured on pandas 2.2.2)
-                return F.when(rcol == 0, F.lit(0)).otherwise(
-                    self._op_column_fn(opname)(lcol, rcol)
-                )
-            if opname == "pow" and lc == "num" and rc == "num":
-                # numpy: negative integer exponents raise at runtime —
-                # matched with a lazy in-plan raise (r14 fuzz seed 15)
-                return F.when(
-                    rcol < 0,
-                    F.raise_error(
-                        F.lit("Integers to negative integer powers are not allowed.")
-                    ),
-                ).otherwise(self._op_column_fn(opname)(lcol, rcol))
-        return self._op_column_fn(opname)(lcol, rcol)
-
     def _elementwise_scalar(
-        self, opname: str, other, comparison: bool = False,
-        missing_result: bool = False, reflected: bool = False,
+        self, opname: str, other, reflected: bool = False,
         fill_value=None, strict: bool = False,
     ) -> "DataFrame":
         """Frame ⊕ scalar per column — a pure projection on the same
@@ -3594,58 +3357,35 @@ class DataFrame:
             other = other.item()
         if isinstance(other, DataFrame):
             return self._elementwise_frame(
-                opname, other, comparison, missing_result, reflected,
-                fill_value=fill_value, strict=strict,
+                opname, other, reflected, fill_value=fill_value, strict=strict
             )
-        from pontem_spark.core.series import Series as _PSeries
-
-        if isinstance(other, _PSeries):
+        if isinstance(other, Series):
             if fill_value is not None:
                 raise NotImplementedError(f"fill_value {fill_value} not supported.")
             return self._elementwise_series_columns(
-                opname, other, comparison, missing_result, reflected,
-                strict=strict,
+                opname, other, reflected, strict=strict
             )
-        if isinstance(other, str):
-            rdt = "string"
-        elif isinstance(other, bool):
-            rdt = "boolean"
-        elif isinstance(other, int):
-            rdt = "bigint"
-        elif isinstance(other, float):
-            rdt = "double"
-        else:
-            raise TypeError(
-                "frame elementwise op needs a scalar, DataFrame or "
-                f"Series, got {type(other).__name__}"
-            )
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        rdt = scalar_dtype(other)
+        schema = self._dtype_map()
         rcol = F.lit(other)
         out = {
-            k: self._combine_cells(
+            k: combine_cells(
                 opname, v, rcol, schema.get(k), rdt,
-                comparison=comparison, missing_result=missing_result,
-                reflected=reflected, fill_value=fill_value,
-                same_anchor=True,
+                reflected=reflected, fill_value=fill_value, literal=True,
             )
             for k, v in self._columns.items()
         }
         return DataFrame._from_internal(self._internal, out)
 
     def _elementwise_frame(
-        self, opname: str, other, comparison: bool,
-        missing_result: bool, reflected: bool, fill_value=None,
+        self, opname: str, other, reflected: bool, fill_value=None,
         strict: bool = False,
     ) -> "DataFrame":
         """Frame ⊕ frame — and frame ⊕ Series broadcast down the INDEX
         axis (``df.sub(s, axis=0)``), where the one series value column
         combines with EVERY frame column. pandas aligns BOTH axes:
-        columns by name (sorted union when the sets differ; one-sided
-        columns become NaN, or the missing result under the aligning
-        named comparisons) and rows by index.
+        columns by name (sorted union when the sets differ) and rows by
+        index.
 
         Plan shape: same-anchor operands compose column-wise — zero
         joins. Cross-anchor operands pair rows through
@@ -3654,12 +3394,10 @@ class DataFrame:
         ``strict`` (dunder comparisons) raises pandas' identically-
         labeled ValueError — column labels eagerly here, row labels
         lazily in the aligner."""
-        from pontem_spark.core.series import Series as _PSeries
-
-        is_series = isinstance(other, _PSeries)
+        is_series = isinstance(other, Series)
         cols_l = dict(self._columns)
         if is_series:
-            cols_r = None
+            cols_r = dict.fromkeys(cols_l, other._col)
             union = list(cols_l)
         else:
             cols_r = dict(other._columns)
@@ -3670,102 +3408,66 @@ class DataFrame:
             else:
                 union = list(cols_l)
 
-        _absent = F.lit(None).cast("double")
-
-        # ---- same-anchor fast path: pure projection, zero jobs ----------
         if other._internal is self._internal:
-            sdf = self._internal.sdf
+            # same anchor: pure projection, zero jobs
+            internal, finish, sdf = self._internal, None, self._internal.sdf
+            ldts = dict(zip(cols_l, dtypes(sdf, *cols_l.values())))
+            rdts = dict(zip(cols_r, dtypes(sdf, *cols_r.values())))
+        else:
+            # cross-anchor: the row aligner shared with Series
+            a = self._materialized()
+            b = other._materialized("__frv__") if is_series else other._materialized()
+            lname = {c: f"__flv{i}__" for i, c in enumerate(union) if c in cols_l}
+            if is_series:
+                rname, rvals = dict.fromkeys(union, "__frv__"), {"__frv__": "__frv__"}
+            else:
+                rname = {c: f"__frv{i}__" for i, c in enumerate(union) if c in cols_r}
+                rvals = rname
+            ldts = {c: a.schema[c].dataType.simpleString() for c in cols_l}
+            rdts = {
+                c: b.schema["__frv__" if is_series else c].dataType.simpleString()
+                for c in rname
+            }
+            internal, finish = align_rows(
+                self._internal, other._internal, a, b, lname, rvals,
+                strict=self._CMP_FRAME_MSG if strict else None,
+            )
+            sdf = internal.sdf
+            cols_l = {c: sdf[n] for c, n in lname.items()}
+            cols_r = {c: sdf[n] for c, n in rname.items()}
 
-            def _dt(col):
-                try:
-                    return sdf.select(col).schema[0].dataType.simpleString()
-                except Exception:  # noqa: BLE001 — unresolvable: null-only
-                    return None
-
-            out: dict[str, Column] = {}
-            for c in union:
-                lcol = cols_l.get(c)
-                rcol = other._col if is_series else cols_r.get(c)
-                if lcol is not None and rcol is not None:
-                    out[c] = self._combine_cells(
-                        opname, lcol, rcol, _dt(lcol), _dt(rcol),
-                        comparison=comparison, missing_result=missing_result,
-                        reflected=reflected, fill_value=fill_value,
-                        same_anchor=True,
-                    )
-                elif comparison:
-                    out[c] = F.lit(missing_result)
-                elif fill_value is not None or (
-                    opname == "pow"
-                    and self._dtype_class(_dt(lcol if lcol is not None else rcol))
-                    in ("num", "bool")
-                ):
+        comparison = opname in COMPARISONS
+        absent = F.lit(None).cast("double")
+        out: dict[str, Column] = {}
+        for c in union:
+            lcol, rcol = cols_l.get(c), cols_r.get(c)
+            present_dt = ldts.get(c) if lcol is not None else rdts.get(c)
+            if (lcol is not None and rcol is not None) or (
+                not comparison
+                and (
+                    fill_value is not None
                     # pow must combine with the absent side: pandas'
                     # 1 ** NaN == 1 and NaN ** 0 == 1 leak through
                     # one-sided columns (r14 fuzz seed 24)
-                    out[c] = self._combine_cells(
-                        opname,
-                        lcol if lcol is not None else _absent,
-                        rcol if rcol is not None else _absent,
-                        _dt(lcol) if lcol is not None else None,
-                        _dt(rcol) if rcol is not None else None,
-                        comparison=False, missing_result=False,
-                        reflected=reflected, fill_value=fill_value,
-                        same_anchor=True,
-                    )
-                else:
-                    out[c] = F.lit(None).cast("double")
-            return DataFrame._from_internal(self._internal, out)
-
-        # ---- cross-anchor: the row aligner shared with Series ----------
-        a = self._materialized()
-        b = other._materialized("__frv__") if is_series else other._materialized()
-        ldts = {c: a.schema[c].dataType.simpleString() for c in cols_l}
-        lname = {c: f"__flv{i}__" for i, c in enumerate(union) if c in cols_l}
-        if is_series:
-            rdts = {c: b.schema["__frv__"].dataType.simpleString() for c in union}
-            rout = {c: "__frv__" for c in union}
-        else:
-            rdts = {c: b.schema[c].dataType.simpleString() for c in cols_r}
-            rout = {c: f"__frv{i}__" for i, c in enumerate(union) if c in cols_r}
-        internal, finish = align_rows(
-            self._internal, other._internal, a, b,
-            lname, {"__frv__": "__frv__"} if is_series else rout,
-            strict=self._CMP_FRAME_MSG if strict else None,
-        )
-        sdf = internal.sdf
-        out: dict[str, Column] = {}
-        for c in union:
-            has_l, has_r = c in lname, c in rout
-            lcol = sdf[lname[c]] if has_l else _absent
-            rcol = sdf[rout[c]] if has_r else _absent
-            present_dt = ldts.get(c) if has_l else rdts.get(c)
-            if (
-                (has_l and has_r)
-                or (fill_value is not None and not comparison)
-                or (
-                    opname == "pow"
-                    and not comparison
-                    and self._dtype_class(present_dt) in ("num", "bool")
+                    or (opname == "pow" and dtype_class(present_dt) in ("num", "bool"))
                 )
             ):
-                col = self._combine_cells(
-                    opname, lcol, rcol,
-                    ldts.get(c) if has_l else None,
-                    rdts.get(c) if has_r else None,
-                    comparison=comparison, missing_result=missing_result,
-                    reflected=reflected, fill_value=fill_value,
+                col = combine_cells(
+                    opname,
+                    absent if lcol is None else lcol,
+                    absent if rcol is None else rcol,
+                    ldts.get(c), rdts.get(c), reflected=reflected,
+                    fill_value=fill_value, int64=finish is None,
                 )
             elif comparison:
-                col = F.lit(missing_result)
+                col = F.lit(opname == "ne")
             else:
                 col = F.lit(None).cast("double")
-            out[c] = finish(col)
+            out[c] = col if finish is None else finish(col)
         return DataFrame._from_internal(internal, out)
 
     def _elementwise_series_columns(
-        self, opname: str, s, comparison: bool, missing_result: bool,
-        reflected: bool, strict: bool = False,
+        self, opname: str, s, reflected: bool, strict: bool = False,
     ) -> "DataFrame":
         """Frame ⊕ Series broadcast along axis='columns' (the pandas
         default): the series' labels align to the frame's COLUMN names —
@@ -3782,6 +3484,7 @@ class DataFrame:
             raise ValueError("cannot reindex on an axis with duplicate labels")
         mapping = dict(svals.items())
         cols_l = dict(self._columns)
+        comparison = opname in COMPARISONS
         if set(cols_l) != set(mapping):
             if comparison and strict:
                 raise ValueError(
@@ -3791,30 +3494,17 @@ class DataFrame:
             union = sorted({*cols_l, *mapping}, key=str)
         else:
             union = list(cols_l)
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
-
-        def _sdt(v):
-            if isinstance(v, str):
-                return "string"
-            if isinstance(v, bool):
-                return "boolean"
-            return "double" if isinstance(v, float) else "bigint"
-
+        schema = self._dtype_map()
         out: dict[str, Column] = {}
         for c in union:
             if c in cols_l and c in mapping and not pd.isna(mapping[c]):
                 v = mapping[c]
-                out[c] = self._combine_cells(
-                    opname, cols_l[c], F.lit(v), schema.get(c), _sdt(v),
-                    comparison=comparison, missing_result=missing_result,
-                    reflected=reflected, fill_value=None,
-                    same_anchor=True,
+                out[c] = combine_cells(
+                    opname, cols_l[c], F.lit(v), schema.get(c), scalar_dtype(v),
+                    reflected=reflected, literal=True,
                 )
             elif comparison:
-                out[c] = F.lit(missing_result)
+                out[c] = F.lit(opname == "ne")
             else:
                 out[c] = F.lit(None).cast("double")
         return DataFrame._from_internal(self._internal, out)
@@ -3845,35 +3535,9 @@ class DataFrame:
     def __rxor__(self, o): return self._elementwise_scalar("xor", o, reflected=True)
 
     def _unary(self, kind: str) -> "DataFrame":
-        """Elementwise unary ops: neg (numeric negate, bool → -int, str
-        raises) and invert (bool logical NOT, int bitwise NOT, float/str
-        raise) — pandas rules, r14 probe."""
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
-        ints = ("tinyint", "smallint", "int", "bigint")
-        out: dict[str, Column] = {}
-        for k, v in self._columns.items():
-            dt = schema.get(k)
-            cls_ = self._dtype_class(dt)
-            if kind == "neg":
-                if cls_ == "bool":
-                    # pandas maps unary - on bool dtype to logical NOT
-                    out[k] = ~v
-                elif cls_ == "num":
-                    out[k] = -v
-                else:
-                    raise TypeError(f"bad operand type for unary -: '{dt}'")
-            else:
-                if cls_ == "bool":
-                    out[k] = ~v
-                elif dt in ints:
-                    out[k] = F.bitwise_not(v)
-                else:
-                    raise TypeError(
-                        f"ufunc 'invert' not supported for dtype {dt}"
-                    )
+        """Elementwise ``neg``/``invert`` per column (cells.unary)."""
+        schema = self._dtype_map()
+        out = {k: unary(kind, v, schema.get(k)) for k, v in self._columns.items()}
         return DataFrame._from_internal(self._internal, out)
 
     def __neg__(self): return self._unary("neg")
@@ -3890,15 +3554,11 @@ class DataFrame:
             raise NotImplementedError("level is not supported")
         if axis not in (None, 0, 1, "index", "columns"):
             raise ValueError(f"No axis named {axis} for object type DataFrame")
-        from pontem_spark.core.series import Series as _PSeries
-
-        if isinstance(other, _PSeries):
+        if isinstance(other, Series):
             if fill_value is not None:
                 raise NotImplementedError(f"fill_value {fill_value} not supported.")
             if axis in (0, "index"):
-                return self._elementwise_frame(
-                    opname, other, False, False, reflected
-                )
+                return self._elementwise_frame(opname, other, reflected)
         return self._elementwise_scalar(
             opname, other, reflected=reflected, fill_value=fill_value
         )
@@ -3938,44 +3598,28 @@ class DataFrame:
 
     # dunder comparisons: STRICT — pandas requires identically-labeled
     # operands (both index and columns, order included)
-    def __gt__(self, o): return self._elementwise_scalar("gt", o, comparison=True, strict=True)
-    def __ge__(self, o): return self._elementwise_scalar("ge", o, comparison=True, strict=True)
-    def __lt__(self, o): return self._elementwise_scalar("lt", o, comparison=True, strict=True)
-    def __le__(self, o): return self._elementwise_scalar("le", o, comparison=True, strict=True)
-    def __eq__(self, o): return self._elementwise_scalar("eq", o, comparison=True, strict=True)  # type: ignore[override]
-    def __ne__(self, o): return self._elementwise_scalar("ne", o, comparison=True, missing_result=True, strict=True)  # type: ignore[override]
+    def __gt__(self, o): return self._elementwise_scalar("gt", o, strict=True)
+    def __ge__(self, o): return self._elementwise_scalar("ge", o, strict=True)
+    def __lt__(self, o): return self._elementwise_scalar("lt", o, strict=True)
+    def __le__(self, o): return self._elementwise_scalar("le", o, strict=True)
+    def __eq__(self, o): return self._elementwise_scalar("eq", o, strict=True)  # type: ignore[override]
+    def __ne__(self, o): return self._elementwise_scalar("ne", o, strict=True)  # type: ignore[override]
     __hash__ = None  # pandas DataFrames are unhashable too
 
-    def _cmp_named(self, opname, other, axis="columns", level=None,
-                   missing_result=False):
-        """Flexible named comparisons ALIGN both axes like arithmetic
-        (r14 probe: only the dunders raise on label mismatch)."""
-        if level is not None:
-            raise NotImplementedError("level is not supported")
-        if axis not in (None, 0, 1, "index", "columns"):
-            raise ValueError(f"No axis named {axis} for object type DataFrame")
-        from pontem_spark.core.series import Series as _PSeries
-
-        if isinstance(other, _PSeries) and axis in (0, "index"):
-            return self._elementwise_frame(
-                opname, other, True, missing_result, False
-            )
-        return self._elementwise_scalar(
-            opname, other, comparison=True, missing_result=missing_result
-        )
-
+    # flexible named comparisons ALIGN both axes like arithmetic (r14
+    # probe: only the dunders raise on label mismatch)
     def eq(self, other, axis="columns", level=None):
-        return self._cmp_named("eq", other, axis, level)
+        return self._named_op("eq", other, axis=axis, level=level)
     def ne(self, other, axis="columns", level=None):
-        return self._cmp_named("ne", other, axis, level, missing_result=True)
+        return self._named_op("ne", other, axis=axis, level=level)
     def lt(self, other, axis="columns", level=None):
-        return self._cmp_named("lt", other, axis, level)
+        return self._named_op("lt", other, axis=axis, level=level)
     def le(self, other, axis="columns", level=None):
-        return self._cmp_named("le", other, axis, level)
+        return self._named_op("le", other, axis=axis, level=level)
     def gt(self, other, axis="columns", level=None):
-        return self._cmp_named("gt", other, axis, level)
+        return self._named_op("gt", other, axis=axis, level=level)
     def ge(self, other, axis="columns", level=None):
-        return self._cmp_named("ge", other, axis, level)
+        return self._named_op("ge", other, axis=axis, level=level)
 
     # -- conditional replacement -----------------------------------------
 
@@ -4146,18 +3790,14 @@ class DataFrame:
         """Boolean mask per cell. ``values``: list (all columns) or dict
         {column: list} (unlisted columns all-False). Missing cells are
         False (pandas)."""
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+        schema = self._dtype_map()
         out: dict[str, Column] = {}
         for k, v in self._columns.items():
             vals = values.get(k, []) if isinstance(values, Mapping) else list(values)
             if not vals:
                 out[k] = F.lit(False)
             else:
-                m = self._missing_mask(k, schema)
-                out[k] = v.isin(vals) & ~m
+                out[k] = v.isin(vals) & ~missing(v, schema.get(k))
         return DataFrame._from_internal(self._internal, out)
 
     def replace(self, to_replace, value=None) -> "DataFrame":

@@ -8,6 +8,7 @@ from typing import Callable, Mapping
 
 from pyspark.sql import functions as F
 
+from pontem_spark.core.cells import truediv_cols
 from pontem_spark.core.internal import INDEX_COL, InternalFrame
 
 _AGGS: dict[str, Callable] = {
@@ -561,11 +562,10 @@ class SeriesGroupBy:
         v = _valid(self._df, self._col)
         filled = F.last(v, ignorenulls=True).over(wcum)
         prev = F.lag(filled, periods).over(w)
-        s = self._df[self._col]
         # pandas computes v/prev - 1 (not (v-prev)/prev) — same algebra,
         # different last-ulp floats; mirror its operation order exactly
         col = F.when(
-            _keys_valid(self._df, self._keys), s._truediv_cols(filled, prev) - 1
+            _keys_valid(self._df, self._keys), truediv_cols(filled, prev) - 1
         )
         return Series._from_internal(self._df._internal, col, self._col)
 

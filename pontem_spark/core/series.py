@@ -23,12 +23,19 @@ Differences from the reference, by design (SURVEY §2, §4):
 
 from __future__ import annotations
 
-import operator
 from typing import Any, Callable, Iterable
 
 from pyspark.sql import Column, DataFrame as SparkDataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType
 
+from pontem_spark.core.cells import (
+    combine_cells,
+    dtypes,
+    missing,
+    scalar_dtype,
+    truediv_cols,
+    unary,
+)
 from pontem_spark.core.internal import (
     INDEX_COL,
     InternalFrame,
@@ -119,14 +126,13 @@ class Series:
     def dtype(self):
         import numpy as np
 
-        t = self._internal.sdf.select(self._col).schema[0].dataType.simpleString()
         return {
             "tinyint": np.dtype("int8"), "smallint": np.dtype("int16"),
             "int": np.dtype("int32"), "bigint": np.dtype("int64"),
             "float": np.dtype("float32"), "double": np.dtype("float64"),
             "boolean": np.dtype("bool"), "string": np.dtype("object"),
             "timestamp": np.dtype("datetime64[us]"), "date": np.dtype("O"),
-        }.get(t, np.dtype("O"))
+        }.get(self._dtype_str(), np.dtype("O"))
 
     @property
     def shape(self) -> tuple[int]:
@@ -174,17 +180,8 @@ class Series:
         float dtypes (Spark distinguishes the two; pandas treats both as
         missing). THE one definition every skipna-style op must share —
         clip/_cum/rank/mode/autocorr all route here."""
-        missing = col.isNull()
-        try:
-            frame = sdf if sdf is not None else self._internal.sdf
-            if frame.select(col).schema[0].dataType.simpleString() in (
-                "double",
-                "float",
-            ):
-                missing = missing | F.isnan(col)
-        except Exception:  # non-resolvable dtype (synthetic column): null-only
-            pass
-        return missing
+        frame = sdf if sdf is not None else self._internal.sdf
+        return missing(col, dtypes(frame, col)[0])
 
     def to_pandas(self):
         import pandas as pd
@@ -221,21 +218,16 @@ class Series:
     _CMP_SERIES_MSG = "Can only compare identically-labeled Series objects"
 
     def _binop(
-        self, other: Any, fn: Callable, reflected: bool = False,
-        masked: bool = False, strict: bool = False,
+        self, other: Any, op: str, reflected: bool = False,
+        strict: bool = False, fill_value=None,
     ) -> "Series":
         """The one Series ⊕ other dispatch: same anchor → expression
         composition; a ``_mat_pair`` hop → composition on the derived
         anchor; any other Series → the row aligner shared with DataFrame
-        (``internal.align_rows``); a scalar → a literal operand.
-
-        ``masked``: ``fn(l, r, lm, rm)`` also receives both operands'
-        pandas-missing masks (NULL-or-NaN, dtype-aware via _missing_mask
-        — ``x != x`` CANNOT detect NaN here because Spark defines NaN =
-        NaN as TRUE, unlike IEEE; r7 probe). Only mask users pay for
-        them: _missing_mask resolves a schema over Py4J. ``strict``
-        marks dunder comparisons, which require identically-labeled
-        operands like pandas."""
+        (``internal.align_rows``); a scalar → a literal operand. The cell
+        itself comes from ``cells.combine_cells``, the table DataFrame ops
+        use. ``strict`` marks dunder comparisons, which require
+        identically-labeled operands like pandas."""
         from pontem_spark.core.frame import DataFrame as _PFrame
 
         if isinstance(other, _PFrame):
@@ -244,7 +236,9 @@ class Series:
             return NotImplemented
         finish = None
         if not isinstance(other, Series):
+            odt = scalar_dtype(other)
             internal, scol, ocol, name = self._internal, self._col, F.lit(other), self._name
+            sdt = self._dtype_str()
         else:
             name = self._name if self._name == other._name else None
             if other._internal.sdf is self._internal.sdf:
@@ -252,23 +246,15 @@ class Series:
             elif (pair := self._mat_pair(other)) is not None:
                 scol, ocol, internal = pair
             else:
-                internal, finish = self._align(other, strict)
+                internal, finish, sdt, odt = self._align(other, strict)
                 scol, ocol = internal.sdf["__a__"], internal.sdf["__b__"]
-        l, r = (ocol, scol) if reflected else (scol, ocol)
-        if masked:
-            sm = self._missing_mask(scol, internal.sdf)
-            if isinstance(other, Series):
-                om = other._missing_mask(ocol, internal.sdf)
-            else:
-                import math as _math
-
-                om = F.lit(
-                    other is None or (isinstance(other, float) and _math.isnan(other))
-                )
-            lm, rm = (om, sm) if reflected else (sm, om)
-            col = fn(l, r, lm, rm)
-        else:
-            col = fn(l, r)
+            if finish is None:  # one shared anchor: one analysis
+                sdt, odt = dtypes(internal.sdf, scol, ocol)
+        col = combine_cells(
+            op, scol, ocol, sdt, odt, reflected=reflected,
+            fill_value=fill_value, int64=finish is None,
+            literal=not isinstance(other, Series),
+        )
         return Series._from_internal(
             internal, col if finish is None else finish(col), name
         )
@@ -303,312 +289,90 @@ class Series:
 
     def _align(self, other: "Series", strict: bool = False):
         """Cross-anchor row pairing through the shared aligner; the two
-        values ride as ``__a__``/``__b__`` on the returned anchor."""
-        return align_rows(
-            self._internal,
-            other._internal,
-            self._materialized("__a__"),
-            other._materialized("__b__"),
-            {"__a__": "__a__"},
-            {"__b__": "__b__"},
+        values ride as ``__a__``/``__b__`` on the returned anchor. Returns
+        ``(internal, finish, a_dtype, b_dtype)``, the dtypes read from the
+        pre-join schemas."""
+        a, b = self._materialized("__a__"), other._materialized("__b__")
+        internal, finish = align_rows(
+            self._internal, other._internal, a, b,
+            {"__a__": "__a__"}, {"__b__": "__b__"},
             strict=self._CMP_SERIES_MSG if strict else None,
         )
-
-    @staticmethod
-    def _zero_div_value(a: Column, b: Column) -> Column:
-        # pandas float semantics for a zero divisor: x/0 → ±inf signed by
-        # BOTH operands' signs, 0/0 (and nan/0) → NaN. The divisor's sign
-        # bit matters even for zero (1.0/-0.0 = -inf); a zero's sign bit is
-        # invisible to comparisons, but CAST(-0.0 AS STRING) = '-0.0', so
-        # the sign flip reads it from the string form (zero branch only —
-        # the per-row cost exists solely where the division would THROW).
-        flip = F.when(
-            b.cast("string").startswith("-"), F.lit(-1.0)
-        ).otherwise(F.lit(1.0))
         return (
-            F.when(a > 0, F.lit(float("inf")))
-            .when(a < 0, F.lit(float("-inf")))
-            .otherwise(F.lit(float("nan")))
-        ) * flip
-
-    @staticmethod
-    def _truediv_cols(a: Column, b: Column) -> Column:
-        # Spark 4 runs ANSI mode by default, where /0 THROWS at runtime;
-        # pandas never does. Guarding with when() keeps the division branch
-        # unevaluated for zero divisors (found by hypothesis: Series/0.0
-        # killed the job).
-        return F.when(b == 0, Series._zero_div_value(a, b)).otherwise(a / b)
-
-    @staticmethod
-    def _floordiv_cols(a: Column, b: Column) -> Column:
-        # pandas floordiv is FLOOR division (the reference truncated via
-        # cast('integer'), wrong for negatives — series.py:203-209);
-        # zero divisor → same IEEE values as truediv (floor(±inf) = ±inf).
-        # A NaN quotient must be guarded: Spark's floor(NaN) silently
-        # returns 0, not NaN (r7 probe — NaN // 10 came back 0.0)
-        q = a / b
-        return F.when(b == 0, Series._zero_div_value(a, b)).otherwise(
-            F.when(F.isnan(q), F.lit(float("nan"))).otherwise(F.floor(q))
+            internal, finish,
+            a.schema["__a__"].dataType.simpleString(),
+            b.schema["__b__"].dataType.simpleString(),
         )
 
-    @staticmethod
-    def _pow_cols(a: Column, b: Column) -> Column:
-        # numpy/pandas: 1 ** x == 1 and x ** 0 == 1 even when x is
-        # missing (pd 1.0**NaN = 1.0, NaN**0 = 1.0); Spark pow propagates
-        # the null/NaN instead (r7 probe)
-        return (
-            F.when(a == 1, F.lit(1.0))
-            .when(b == 0, F.lit(1.0))
-            .otherwise(F.pow(a, b))
-        )
-
-    @staticmethod
-    def _mod_cols(a: Column, b: Column) -> Column:
-        # pandas/Python mod takes the divisor's sign; Spark % the dividend's.
-        # Zero divisor → NaN (pandas float x % 0.0).
-        return F.when(b == 0, F.lit(float("nan"))).otherwise(a - F.floor(a / b) * b)
-
-    def _operand_dtype(self, o) -> "str | None":
-        if isinstance(o, Series):
-            return o._dtype_str()
-        if isinstance(o, str):
-            return "string"
-        if isinstance(o, bool):
-            return "boolean"
-        if isinstance(o, int):
-            return "bigint"
-        if isinstance(o, float):
-            return "double"
-        return None
-
-    def _arith_fn_for(self, opname: str, o, reflected: bool = False):
-        """String-aware column fn for + and * (r14 probe: str series
-        concat/repeat crashed with ANSI cast errors; other arithmetic on
-        strings now raises pandas' TypeError instead of Spark's
-        DATATYPE_MISMATCH). Returns None for the default numeric path."""
-        ldt = self._dtype_str()
-        rdt = self._operand_dtype(o)
-        if ldt != "string" and rdt != "string":
-            return None
-        # positional: fn(a, b) receives (other, self) when reflected
-        adt, bdt = (rdt, ldt) if reflected else (ldt, rdt)
-        ints_b = self._INT_DTYPES + ("boolean",)
-        if opname == "add":
-            if adt == "string" and bdt == "string":
-                return lambda a, b: F.concat(a, b)
-            bad = bdt if adt == "string" else adt
-            raise TypeError(f'can only concatenate str (not "{bad}") to str')
-        if opname == "mul":
-            if adt == "string" and bdt in ints_b:
-                return lambda a, b: F.repeat(a, F.greatest(b.cast("int"), F.lit(0)))
-            if bdt == "string" and adt in ints_b:
-                return lambda a, b: F.repeat(b, F.greatest(a.cast("int"), F.lit(0)))
-            raise TypeError("can't multiply sequence by non-int of type 'str'")
-        raise TypeError(
-            f"unsupported operand type(s) for {opname}: 'str' operands"
-        )
-
-    def __add__(self, o): return self._binop(o, self._arith_fn_for("add", o) or operator.add)
-    def __radd__(self, o): return self._binop(o, self._arith_fn_for("add", o, reflected=True) or operator.add, reflected=True)
-    def __sub__(self, o): return self._binop(o, self._arith_fn_for("sub", o) or operator.sub)
-    def __rsub__(self, o): return self._binop(o, self._arith_fn_for("sub", o, reflected=True) or operator.sub, reflected=True)
-    def __mul__(self, o): return self._binop(o, self._arith_fn_for("mul", o) or operator.mul)
-    def __rmul__(self, o): return self._binop(o, self._arith_fn_for("mul", o, reflected=True) or operator.mul, reflected=True)
-    def __truediv__(self, o): return self._binop(o, self._truediv_cols)
-    def __rtruediv__(self, o): return self._binop(o, self._truediv_cols, reflected=True)
-    def __floordiv__(self, o): return self._binop(o, self._floordiv_cols)
-    def __rfloordiv__(self, o): return self._binop(o, self._floordiv_cols, reflected=True)
-    def __mod__(self, o): return self._binop(o, self._mod_cols)
-    def __rmod__(self, o): return self._binop(o, self._mod_cols, reflected=True)
-    def _pow_fn_for(self, o, reflected: bool = False):
-        """numpy/pandas integer-dtype rule (r14 fuzz): int ** negative-int
-        raises at runtime; matched with a lazy in-plan raise when BOTH
-        operands are genuine integer dtypes (bools excluded)."""
-        ldt = self._dtype_str()
-        if isinstance(o, Series):
-            rdt = o._dtype_str()
-        elif isinstance(o, bool):
-            rdt = None
-        elif isinstance(o, int):
-            rdt = "bigint"
-        else:
-            rdt = None
-        if ldt in self._INT_DTYPES and rdt in self._INT_DTYPES:
-            def fn(a, b):
-                # b is the exponent after any reflection swap in _binop
-                return F.when(
-                    b < 0,
-                    F.raise_error(F.lit(
-                        "Integers to negative integer powers are not allowed."
-                    )),
-                ).otherwise(Series._pow_cols(a, b))
-            return fn
-        return self._pow_cols
-
-    def __pow__(self, o): return self._binop(o, self._pow_fn_for(o))
-    def __rpow__(self, o): return self._binop(o, self._pow_fn_for(o, reflected=True), reflected=True)
+    def __add__(self, o): return self._binop(o, "add")
+    def __radd__(self, o): return self._binop(o, "add", reflected=True)
+    def __sub__(self, o): return self._binop(o, "sub")
+    def __rsub__(self, o): return self._binop(o, "sub", reflected=True)
+    def __mul__(self, o): return self._binop(o, "mul")
+    def __rmul__(self, o): return self._binop(o, "mul", reflected=True)
+    def __truediv__(self, o): return self._binop(o, "truediv")
+    def __rtruediv__(self, o): return self._binop(o, "truediv", reflected=True)
+    def __floordiv__(self, o): return self._binop(o, "floordiv")
+    def __rfloordiv__(self, o): return self._binop(o, "floordiv", reflected=True)
+    def __mod__(self, o): return self._binop(o, "mod")
+    def __rmod__(self, o): return self._binop(o, "mod", reflected=True)
+    def __pow__(self, o): return self._binop(o, "pow")
+    def __rpow__(self, o): return self._binop(o, "pow", reflected=True)
+    def __and__(self, o): return self._binop(o, "and_")
+    def __rand__(self, o): return self._binop(o, "and_", reflected=True)
+    def __or__(self, o): return self._binop(o, "or_")
+    def __ror__(self, o): return self._binop(o, "or_", reflected=True)
+    def __xor__(self, o): return self._binop(o, "xor")
+    def __rxor__(self, o): return self._binop(o, "xor", reflected=True)
 
     # dunder comparisons: STRICT — pandas requires identically-labeled
     # operands; the named eq/ne/lt/le/gt/ge align like arithmetic
-    def __eq__(self, o): return self._cmp_binop(o, operator.eq, strict=True)  # type: ignore[override]
-    def __ne__(self, o): return self._cmp_binop(o, operator.ne, missing_result=True, strict=True)  # type: ignore[override]
-    def __lt__(self, o): return self._cmp_binop(o, operator.lt, strict=True)
-    def __le__(self, o): return self._cmp_binop(o, operator.le, strict=True)
-    def __gt__(self, o): return self._cmp_binop(o, operator.gt, strict=True)
-    def __ge__(self, o): return self._cmp_binop(o, operator.ge, strict=True)
+    def __eq__(self, o): return self._binop(o, "eq", strict=True)  # type: ignore[override]
+    def __ne__(self, o): return self._binop(o, "ne", strict=True)  # type: ignore[override]
+    def __lt__(self, o): return self._binop(o, "lt", strict=True)
+    def __le__(self, o): return self._binop(o, "le", strict=True)
+    def __gt__(self, o): return self._binop(o, "gt", strict=True)
+    def __ge__(self, o): return self._binop(o, "ge", strict=True)
 
     def _dtype_str(self) -> "str | None":
-        try:
-            return (
-                self._internal.sdf.select(self._col)
-                .schema[0].dataType.simpleString()
-            )
-        except Exception:  # noqa: BLE001 — unresolvable: null-only
-            return None
-
-    _INT_DTYPES = ("tinyint", "smallint", "int", "bigint")
-
-    def _logical_binop(self, o, opname: str, reflected: bool = False) -> "Series":
-        """pandas & | ^ rules, dtype-aware (r14 probe: the raw
-        operator.and_ form crashed on ints and skipped the fill-False):
-        bool ⊕ bool is elementwise logical with missing filled False
-        BEFORE the op; int ⊕ int is bitwise; floats/strings raise
-        pandas' TypeError instead of Spark's DATATYPE_MISMATCH."""
-        ldt = self._dtype_str()
-        if isinstance(o, Series):
-            rdt = o._dtype_str()
-        elif isinstance(o, bool):
-            rdt = "boolean"
-        elif isinstance(o, int):
-            rdt = "bigint"
-        else:
-            rdt = None
-
-        def cls(dt):
-            if dt == "boolean":
-                return "bool"
-            if dt in self._INT_DTYPES:
-                return "int"
-            return "bad" if dt is not None else "bool"  # null-only ≈ missing bools
-
-        lc, rc = cls(ldt), cls(rdt)
-        sym = {"and_": "&", "or_": "|", "xor": "^"}[opname]
-        if lc == "bad" or rc == "bad":
-            raise TypeError(
-                f"unsupported operand type(s) for {sym}: {ldt} and {rdt}"
-            )
-        if lc == "int" and rc == "int":
-            meth = {
-                "and_": "bitwiseAND", "or_": "bitwiseOR", "xor": "bitwiseXOR",
-            }[opname]
-            fn = lambda a, b: getattr(a, meth)(b)  # noqa: E731
-        else:
-            raw = {
-                "and_": operator.and_,
-                "or_": operator.or_,
-                # pyspark Column has no __xor__; boolean xor ≡ !=
-                "xor": lambda a, b: a != b,
-            }[opname]
-
-            def fn(a, b, _raw=raw, _lc=lc, _rc=rc):
-                ab = a if _lc == "bool" else (a != 0)
-                bb = b if _rc == "bool" else (b != 0)
-                return _raw(
-                    F.coalesce(ab, F.lit(False)), F.coalesce(bb, F.lit(False))
-                )
-
-        return self._binop(o, fn, reflected=reflected)
-
-    def __and__(self, o): return self._logical_binop(o, "and_")
-    def __rand__(self, o): return self._logical_binop(o, "and_", reflected=True)
-    def __or__(self, o): return self._logical_binop(o, "or_")
-    def __ror__(self, o): return self._logical_binop(o, "or_", reflected=True)
-    def __xor__(self, o): return self._logical_binop(o, "xor")
-    def __rxor__(self, o): return self._logical_binop(o, "xor", reflected=True)
+        return dtypes(self._internal.sdf, self._col)[0]
 
     def __invert__(self):
-        dt = self._dtype_str()
-        if dt == "boolean" or dt is None:
-            col = ~self._col
-        elif dt in self._INT_DTYPES:
-            col = F.bitwise_not(self._col)
-        else:
-            raise TypeError(f"ufunc 'invert' not supported for dtype {dt}")
+        col = unary("invert", self._col, self._dtype_str())
         return Series._from_internal(self._internal, col, self._name)
 
     def __neg__(self):
-        dt = self._dtype_str()
-        if dt == "boolean":
-            # pandas maps unary - on bool dtype to logical NOT
-            col = ~self._col
-        elif dt == "string":
-            raise TypeError("bad operand type for unary -: 'str'")
-        else:
-            col = -self._col
+        col = unary("neg", self._col, self._dtype_str())
         return Series._from_internal(self._internal, col, self._name)
 
     def __hash__(self):  # __eq__ returns Series; keep hashable by identity
         return id(self)
 
-    def _cmp_binop(
-        self, other, op, missing_result: bool = False, strict: bool = False
-    ) -> "Series":
-        """pandas comparison semantics for missing operands: every
-        comparison against NaN/NULL is False — except ``ne``, which is
-        True. Spark instead orders NaN ABOVE every value (NaN >= x is
-        TRUE) and nulls propagate. Expressed as a CONJUNCTION of the raw
-        comparison with the not-missing terms (not a when/otherwise wrap):
-        Catalyst pushes conjuncts to the scan independently, so the mask
-        idiom s[s > x] keeps its PushedFilters (a when() wrapper killed
-        pushdown — caught by test_api_wrapper_emits_plain_plan). Three-
-        valued logic makes it exact: NULL AND FALSE = FALSE, so a missing
-        operand's NULL comparison collapses to False (or True through the
-        OR form for ne)."""
-
-        def cmp(l: Column, r: Column, lm: Column, rm: Column) -> Column:
-            if missing_result:  # ne: missing → True
-                return op(l, r) | lm | rm
-            return op(l, r) & ~lm & ~rm
-
-        return self._binop(other, cmp, masked=True, strict=strict)
-
     # -- named arithmetic (pandas s.add(other, fill_value=...) family) --------
 
-    def _named_binop(self, other, op, fill_value, reflected: bool = False) -> "Series":
-        if fill_value is None:
-            return self._binop(other, op, reflected)
-
-        def filled(l: Column, r: Column, lm: Column, rm: Column) -> Column:
-            lf = F.when(~lm, l).otherwise(F.lit(fill_value))
-            rf = F.when(~rm, r).otherwise(F.lit(fill_value))
-            # pandas: one side missing → fill and compute; BOTH missing → NaN
-            return F.when(lm & rm, F.lit(None)).otherwise(op(lf, rf))
-
-        return self._binop(other, filled, reflected, masked=True)
-
-    def add(self, other, fill_value=None): return self._named_binop(other, operator.add, fill_value)
-    def radd(self, other, fill_value=None): return self._named_binop(other, operator.add, fill_value, reflected=True)
-    def sub(self, other, fill_value=None): return self._named_binop(other, operator.sub, fill_value)
-    def rsub(self, other, fill_value=None): return self._named_binop(other, operator.sub, fill_value, reflected=True)
-    def mul(self, other, fill_value=None): return self._named_binop(other, operator.mul, fill_value)
-    def rmul(self, other, fill_value=None): return self._named_binop(other, operator.mul, fill_value, reflected=True)
-    def div(self, other, fill_value=None): return self._named_binop(other, self._truediv_cols, fill_value)
+    def add(self, other, fill_value=None): return self._binop(other, "add", fill_value=fill_value)
+    def radd(self, other, fill_value=None): return self._binop(other, "add", True, fill_value=fill_value)
+    def sub(self, other, fill_value=None): return self._binop(other, "sub", fill_value=fill_value)
+    def rsub(self, other, fill_value=None): return self._binop(other, "sub", True, fill_value=fill_value)
+    def mul(self, other, fill_value=None): return self._binop(other, "mul", fill_value=fill_value)
+    def rmul(self, other, fill_value=None): return self._binop(other, "mul", True, fill_value=fill_value)
+    def div(self, other, fill_value=None): return self._binop(other, "truediv", fill_value=fill_value)
     truediv = div
-    def rdiv(self, other, fill_value=None): return self._named_binop(other, self._truediv_cols, fill_value, reflected=True)
+    def rdiv(self, other, fill_value=None): return self._binop(other, "truediv", True, fill_value=fill_value)
     rtruediv = rdiv
-    def floordiv(self, other, fill_value=None): return self._named_binop(other, self._floordiv_cols, fill_value)
-    def rfloordiv(self, other, fill_value=None): return self._named_binop(other, self._floordiv_cols, fill_value, reflected=True)
-    def mod(self, other, fill_value=None): return self._named_binop(other, self._mod_cols, fill_value)
-    def rmod(self, other, fill_value=None): return self._named_binop(other, self._mod_cols, fill_value, reflected=True)
-    def pow(self, other, fill_value=None): return self._named_binop(other, self._pow_fn_for(other), fill_value)
-    def rpow(self, other, fill_value=None): return self._named_binop(other, self._pow_fn_for(other, reflected=True), fill_value, reflected=True)
+    def floordiv(self, other, fill_value=None): return self._binop(other, "floordiv", fill_value=fill_value)
+    def rfloordiv(self, other, fill_value=None): return self._binop(other, "floordiv", True, fill_value=fill_value)
+    def mod(self, other, fill_value=None): return self._binop(other, "mod", fill_value=fill_value)
+    def rmod(self, other, fill_value=None): return self._binop(other, "mod", True, fill_value=fill_value)
+    def pow(self, other, fill_value=None): return self._binop(other, "pow", fill_value=fill_value)
+    def rpow(self, other, fill_value=None): return self._binop(other, "pow", True, fill_value=fill_value)
 
-    def eq(self, other): return self._cmp_binop(other, operator.eq)
-    def ne(self, other): return self._cmp_binop(other, operator.ne, missing_result=True)
-    def lt(self, other): return self._cmp_binop(other, operator.lt)
-    def le(self, other): return self._cmp_binop(other, operator.le)
-    def gt(self, other): return self._cmp_binop(other, operator.gt)
-    def ge(self, other): return self._cmp_binop(other, operator.ge)
+    def eq(self, other): return self._binop(other, "eq")
+    def ne(self, other): return self._binop(other, "ne")
+    def lt(self, other): return self._binop(other, "lt")
+    def le(self, other): return self._binop(other, "le")
+    def gt(self, other): return self._binop(other, "gt")
+    def ge(self, other): return self._binop(other, "ge")
 
     def abs(self) -> "Series":
         return Series._from_internal(self._internal, F.abs(self._col), self._name)
@@ -1563,7 +1327,7 @@ class Series:
             clean = F.when(missing, F.lit(None)).otherwise(self._col)
             filled = F.last(clean, ignorenulls=True).over(w)
             prev = F.lag(filled, periods).over(Window.orderBy(*_ord))
-            col = self._truediv_cols(filled, prev) - 1
+            col = truediv_cols(filled, prev) - 1
             return Series._from_internal(self._internal, col, self._name)
         _ord = self._internal.order_columns(INDEX_COL)
         w = Window.orderBy(*_ord).rowsBetween(Window.unboundedPreceding, 0)
@@ -1576,7 +1340,7 @@ class Series:
         # NaN, not Spark 4's ANSI DIVIDE_BY_ZERO throw (fuzz: [0.0, 0.0]).
         # pandas computes v/prev - 1, not (v-prev)/prev — same algebra but
         # different last-ulp floats, so mirror its operation order
-        col = self._truediv_cols(filled, prev) - 1
+        col = truediv_cols(filled, prev) - 1
         res = Series._from_internal(
             InternalFrame(
                 sdf,
@@ -1700,19 +1464,9 @@ class Series:
         else re-sorts to the union index (r12 probe batch 4 — the old
         direct join dropped the order spec and always displayed
         index-sorted)."""
-        try:
-            adt = self._internal.sdf.select(self._col).schema[0].dataType.simpleString()
-        except Exception:
-            adt = None
-
-        def op(l: Column, r: Column) -> Column:
-            lm = l.isNull()
-            if adt in ("double", "float"):
-                lm = lm | F.isnan(l)
-            return F.coalesce(F.when(~lm, l), r)
-
-        internal, finish = self._align(other)
-        col = finish(op(internal.sdf["__a__"], internal.sdf["__b__"]))
+        internal, finish, adt, _ = self._align(other)
+        a = internal.sdf["__a__"]
+        col = finish(F.coalesce(F.when(~missing(a, adt), a), internal.sdf["__b__"]))
         return Series._from_internal(internal, col, self._name)  # keeps self's name
 
     def unstack(self):

@@ -1116,7 +1116,7 @@ def q_api_frame_axis0_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
     is derived from the SAME anchor, so the broadcast is a pure
     projection — zero joins, plan-identical to a hand-written select.
     ``(f - 30).mod(7)`` exercises the divisor-sign mod the r14 rewrite
-    routed through Series._mod_cols (qty - 30 goes negative on small
+    routed through cells.mod_cols (qty - 30 goes negative on small
     orders, where Spark's native % disagrees with pandas/Python).
 
     Scale shape: predicate-bounded aggregate in, column-wise Catalyst

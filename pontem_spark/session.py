@@ -22,6 +22,8 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "default_parallelism", "cluster_conf"]
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def cluster_conf(
     executors: int = 1000,
@@ -126,6 +128,16 @@ def get_spark(
         # addressed by heap sizing in tools/scale_step.py.)
         .config("spark.cleaner.periodicGC.interval", "10min")
     )
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    # --- python workers ----------------------------------------------------
+    # A UDF that imports pontem_spark finds it in the directory holding this
+    # package, whatever the driver's cwd. A caller's own worker PYTHONPATH
+    # comes first; Spark merges it with pyspark's own paths, and Python
+    # skips an entry that does not exist on an executor.
+    worker_path = [extra.pop("spark.executorEnv.PYTHONPATH", ""), _PACKAGE_PARENT]
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH", os.pathsep.join(p for p in worker_path if p)
+    )
+    for k, v in extra.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -2,7 +2,7 @@
 the engine's pandas row order, and it must (a) survive every
 order-preserving op and (b) drive every positional computation.
 
-The probe (tests/probe_r10_compose.py) found seven composition failures
+The r10 frame composition probe found seven composition failures
 in one sweep, all in two classes:
 1. order-preserving ops (mask filter, dropna, sample, query, setitem,
    drop_duplicates) dropped the order_spec — output silently reverted
@@ -334,3 +334,54 @@ def test_binop_and_window_outputs_as_chain_links(spark, chain):
     if isinstance(want, pd.Series):
         got, want = pd.DataFrame({"_s": list(got)}, index=got.index), want.to_frame("_s")
     _eq_frame(got, want)
+
+
+# Series → Series chains 3-4 deep through sort/mask/window/dedup and the
+# elementwise cells (s + 1.0, -s, the s[s > x] mask, pct_change), values
+# AND index order after the whole chain (the r10 batch-8 sweep's family;
+# unique values, so no tie order is involved)
+SERIES_OPS = {
+    "sort": lambda s: s.sort_values(),
+    "sort_desc": lambda s: s.sort_values(ascending=False),
+    "sort_index": lambda s: s.sort_index(),
+    "mask_pos": lambda s: s[s > -15.0],
+    "fillna0": lambda s: s.fillna(0.0),
+    "dropna": lambda s: s.dropna(),
+    "cumsum": lambda s: s.cumsum(),
+    "cummax": lambda s: s.cummax(),
+    "shift": lambda s: s.shift(1),
+    "rank": lambda s: s.rank(),
+    "abs": lambda s: s.abs(),
+    "round": lambda s: s.round(0),
+    "clip": lambda s: s.clip(-10.0, 10.0),
+    "add1": lambda s: s + 1.0,
+    "neg": lambda s: -s,
+    "drop_dup": lambda s: s.drop_duplicates(),
+    "nlargest4": lambda s: s.nlargest(4),
+    "diff": lambda s: s.diff(),
+    "pct": lambda s: s.pct_change(),
+    "head5": lambda s: s.head(5),
+    "tail6": lambda s: s.tail(6),
+}
+SERIES_CHAINS = [
+    ("sort", "mask_pos", "add1", "neg"),
+    ("sort_desc", "pct", "neg"),
+    ("shift", "add1", "mask_pos", "cumsum"),
+    ("dropna", "neg", "rank", "sort"),
+    ("nlargest4", "neg", "diff"),
+    ("fillna0", "add1", "pct", "tail6"),
+    ("sort_index", "mask_pos", "neg", "cummax"),
+    ("sort", "diff", "add1", "head5"),
+    ("clip", "neg", "drop_dup", "sort_desc"),
+    ("mask_pos", "pct", "abs", "round"),
+]
+SERIES_VALS = [7.25, None, -12.75, -3.75, 10.25, None, 26.25, -30.75, 2.25, -19.75]
+
+
+@pytest.mark.parametrize("chain", SERIES_CHAINS, ids=[">".join(c) for c in SERIES_CHAINS])
+def test_series_chains_keep_values_and_order(spark, chain):
+    s, ps = Series(SERIES_VALS, name="v"), pd.Series(SERIES_VALS, dtype="float64")
+    for name in chain:
+        s, ps = SERIES_OPS[name](s), SERIES_OPS[name](ps)
+    got = s.to_pandas()
+    _eq_frame(pd.DataFrame({"v": got.values}, index=got.index), ps.to_frame("v"))
