@@ -14,6 +14,7 @@ from typing import Any, Iterable, Mapping
 from pyspark.sql import Column, DataFrame as SparkDataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType
 
+from pontem_spark.core import window as win
 from pontem_spark.core.cells import (
     COMPARISONS,
     combine_cells,
@@ -21,7 +22,6 @@ from pontem_spark.core.cells import (
     dtypes,
     missing,
     scalar_dtype,
-    truediv_cols,
     unary,
 )
 from pontem_spark.core.internal import (
@@ -187,22 +187,7 @@ class DataFrame:
     # -- materialization ------------------------------------------------------
 
     def _materialized(self) -> SparkDataFrame:
-        # order-spec helper columns (e.g. sort_values' __miss_*__ missing
-        # flags) must SURVIVE materialization: downstream consumers
-        # (reset_index boundary sampling, positional ops) reference spec
-        # names against this projection. They are excluded again at the
-        # user-facing edges (to_pandas/to_spark/__repr__).
-        extras = [
-            n
-            for n, _ in (self._internal.order_spec or ())
-            if n != INDEX_COL and n not in self._columns and n in self._internal.sdf.columns
-        ]
-        extras = list(dict.fromkeys(extras))
-        return self._internal.sdf.select(
-            self._internal.index_col.alias(INDEX_COL),
-            *[expr.alias(name) for name, expr in self._columns.items()],
-            *[F.col(n) for n in extras],
-        )
+        return self._internal.materialize(self._columns)
 
     def _materialized_user(self) -> SparkDataFrame:
         """Exactly INDEX + user columns — for edges and frame COMBINERS
@@ -1253,10 +1238,7 @@ class DataFrame:
         """pandas raises TypeError when any column is non-numeric; so do we
         (silently passing strings through would hide the error until an
         ANSI cast throw deep in a later job)."""
-        numeric = set(self._numeric_cols())
-        bad = [c for c in self._columns if c not in numeric]
-        if bad:
-            raise TypeError(f"abs: non-numeric columns {bad}")
+        self._require_numeric("abs")
         return DataFrame._from_internal(
             self._internal, {k: F.abs(v) for k, v in self._columns.items()}
         )
@@ -1303,126 +1285,83 @@ class DataFrame:
             cols[c] = F.when(self._valid_col(c, schema).isNotNull(), clipped)
         return DataFrame._from_internal(self._internal, cols)
 
-    def _order_window(self):
-        """Unpartitioned window over the frame's VISIBLE order (the order
-        spec — a sorted frame shifts/diffs in sorted order like pandas).
-        Driver-scale shape by construction: one global sort, the same
-        caveat as Series.shift / _positional_slice; the partitioned 100 TB
-        form is groupby(...).shift()/diff() via grouped transforms."""
-        from pyspark.sql import Window
+    def _visible(self, rule, *args, numeric: "str | None" = None) -> "DataFrame":
+        """Run a core/window.py visible-order rule over every column — one
+        shared window spec, so Catalyst plans ONE sort for the whole
+        frame. ``numeric`` names an op that raises TypeError on
+        non-numeric columns, like pandas."""
+        if numeric is not None:
+            self._require_numeric(numeric)
+        internal, cols = rule(win.Visible(self._internal, self._columns), *args)
+        return DataFrame._from_internal(internal, cols)
 
-        return Window.orderBy(*self._internal.order_columns(INDEX_COL))
+    def _require_numeric(self, op: str) -> None:
+        numeric = set(self._numeric_cols())
+        bad = [c for c in self._columns if c not in numeric]
+        if bad:
+            raise TypeError(f"{op}: non-numeric columns {bad}")
 
     def shift(self, periods: int = 1) -> "DataFrame":
-        """Every column shifted along the visible order. One shared window
-        → Catalyst plans a single sort for ALL columns."""
-        w = self._order_window()
-        sdf = self._materialized()
-        mk = (
-            (lambda c: F.lag(c, periods).over(w))
-            if periods >= 0
-            else (lambda c: F.lead(c, -periods).over(w))
-        )
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, {c: mk(sdf[c]) for c in self._columns})
+        return self._visible(win.shift, periods)
 
     def diff(self, periods: int = 1) -> "DataFrame":
-        """value − shift(periods) per numeric column (pandas raises on
-        non-numeric frames; so do we). Single shared window sort."""
-        numeric = set(self._numeric_cols())
-        bad = [c for c in self._columns if c not in numeric]
-        if bad:
-            raise TypeError(f"diff: non-numeric columns {bad}")
-        w = self._order_window()
-        sdf = self._materialized()
-        mk = (
-            (lambda c: F.lag(c, periods).over(w))
-            if periods >= 0
-            else (lambda c: F.lead(c, -periods).over(w))
-        )
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(
-            internal, {c: sdf[c] - mk(sdf[c]) for c in self._columns}
-        )
+        return self._visible(win.diff, periods, numeric="diff")
 
     def pct_change(self, periods: int = 1, fill_method: str | None = "pad") -> "DataFrame":
-        """Series.pct_change semantics per numeric column (pandas 2.x 'pad'
-        default: missing cells forward-fill before differencing; None is
-        the announced future default). One shared window sort; division is
-        /0-guarded for Spark 4's ANSI mode."""
-        from pontem_spark.core.series import Series
-
-        numeric = set(self._numeric_cols())
-        bad = [c for c in self._columns if c not in numeric]
-        if bad:
-            raise TypeError(f"pct_change: non-numeric columns {bad}")
-        if fill_method not in (None, "pad", "ffill"):
-            raise ValueError(f"pct_change: fill_method {fill_method!r}")
-        from pyspark.sql import Window
-
-        w_order = self._order_window()
-        w_fill = w_order.rowsBetween(Window.unboundedPreceding, 0)
-        sdf = self._materialized()
-        schema = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-        cols = {}
-        for c in self._columns:
-            v = sdf[c]
-            if schema.get(c) in ("double", "float"):
-                clean = F.when(F.isnan(v), F.lit(None)).otherwise(v)
-            else:
-                clean = v
-            cur = (
-                F.last(clean, ignorenulls=True).over(w_fill)
-                if fill_method is not None
-                else v
-            )
-            prev = (
-                F.lag(cur, periods).over(w_order)
-                if periods >= 0
-                else F.lead(cur, -periods).over(w_order)
-            )
-            cols[c] = truediv_cols(cur - prev, prev)
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, cols)
-
-    def _cum(self, aggfn) -> "DataFrame":
-        """Cumulative agg per numeric column, pandas skipna: missing cells
-        stay missing and never enter the running state. One shared window."""
-        from pyspark.sql import Window
-
-        numeric = set(self._numeric_cols())
-        bad = [c for c in self._columns if c not in numeric]
-        if bad:
-            raise TypeError(f"cumulative op: non-numeric columns {bad}")
-        w = self._order_window().rowsBetween(Window.unboundedPreceding, 0)
-        sdf = self._materialized()
-        schema = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-        cols = {}
-        for c in self._columns:
-            v = sdf[c]
-            missing = v.isNull()
-            if schema.get(c) in ("double", "float"):
-                missing = missing | F.isnan(v)
-            cols[c] = F.when(~missing, aggfn(F.when(~missing, v)).over(w))
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, cols)
+        return self._visible(win.pct_change, periods, fill_method, numeric="pct_change")
 
     def cumsum(self) -> "DataFrame":
-        return self._cum(F.sum)
+        return self._visible(win.cum, F.sum, numeric="cumulative op")
 
     def cummax(self) -> "DataFrame":
-        return self._cum(F.max)
+        return self._visible(win.cum, F.max, numeric="cumulative op")
 
     def cummin(self) -> "DataFrame":
-        return self._cum(F.min)
+        return self._visible(win.cum, F.min, numeric="cumulative op")
+
+    def cumprod(self) -> "DataFrame":
+        return self._visible(win.cum, F.product, numeric="cumulative op")
+
+    def ffill(self) -> "DataFrame":
+        return self._visible(win.fill, True)
+
+    def bfill(self) -> "DataFrame":
+        return self._visible(win.fill, False)
+
+    pad = ffill
+    backfill = bfill
+
+    def interpolate(self, method: str = "linear", limit: "int | None" = None) -> "DataFrame":
+        return self._visible(win.interpolate, method, limit, numeric="interpolate")
+
+    def rolling(self, window: int, min_periods: "int | None" = None):
+        self._require_numeric("rolling")
+        return win.Rolling(self, window, min_periods)
+
+    def expanding(self, min_periods: int = 1):
+        self._require_numeric("rolling")
+        return win.Rolling(self, None, min_periods)
+
+    def ewm(
+        self,
+        com: float | None = None,
+        span: float | None = None,
+        halflife: float | None = None,
+        alpha: float | None = None,
+        adjust: bool = True,
+        ignore_na: bool = False,
+        min_periods: int = 0,
+    ):
+        self._require_numeric("ewm")
+        return win.Ewm(self, com, span, halflife, alpha, adjust, ignore_na, min_periods)
+
+    def resample(self, rule: str):
+        """Fixed-interval resample of every numeric column over a
+        timestamp index (core/window.py::resample)."""
+        return win.Resampler(self[self._numeric_cols()], rule)
+
+    def asfreq(self, freq: str, method: str | None = None, fill_value=None) -> "DataFrame":
+        return self._visible(win.asfreq, freq, method, fill_value)
 
     def rank(
         self,
@@ -1447,10 +1386,7 @@ class DataFrame:
             raise ValueError(
                 f"rank: na_option must be 'keep', 'top' or 'bottom', got {na_option!r}"
             )
-        numeric = set(self._numeric_cols())
-        bad = [c for c in self._columns if c not in numeric]
-        if bad:
-            raise TypeError(f"rank: non-numeric columns {bad}")
+        self._require_numeric("rank")
         sdf = self._materialized()
         schema = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
         cols = {}
@@ -2435,10 +2371,6 @@ class DataFrame:
             axis=1,
         ).set_axis(list(self._columns), axis=1)
 
-    def cumprod(self) -> "DataFrame":
-        """Per-column cumprod with pandas skipna (the shared _cum window)."""
-        return self._cum(F.product)
-
     def prod(self):
         import pandas as pd
 
@@ -2769,80 +2701,6 @@ class DataFrame:
             cols[str(out_col)] = expr
         return DataFrame._from_internal(self._internal, cols)
 
-    def rolling(self, window: int, min_periods: "int | None" = None):
-        """Per-column rolling aggregates sharing ONE window sort."""
-        from pontem_spark.core.window import FrameRolling
-
-        return FrameRolling(self, window, min_periods)
-
-    def expanding(self, min_periods: int = 1):
-        """Per-column expanding aggregates (unbounded-preceding frame)."""
-        from pontem_spark.core.window import FrameRolling
-
-        return FrameRolling(self, 0, min_periods, expanding=True)
-
-    def ewm(
-        self,
-        com: float | None = None,
-        span: float | None = None,
-        halflife: float | None = None,
-        alpha: float | None = None,
-        adjust: bool = True,
-        ignore_na: bool = False,
-        min_periods: int = 0,
-    ):
-        """Frame-wide exponentially-weighted windows — one Arrow group
-        runs the recurrence for every column (core/window.py::FrameEwm)."""
-        from pontem_spark.core.window import FrameEwm
-
-        return FrameEwm(self, com, span, halflife, alpha, adjust, ignore_na, min_periods)
-
-    def interpolate(self, method: str = "linear", limit: "int | None" = None) -> "DataFrame":
-        """Positional linear interpolation per numeric column — the
-        Series.interpolate semantics (interior gaps linear, leading stay
-        missing, trailing ffill, ``limit`` capping consecutive fills per
-        run) with the two ignore-nulls window scans SHARED across every
-        column (one sort total)."""
-        if method != "linear":
-            raise ValueError("interpolate: only method='linear'")
-        if limit is not None and (not isinstance(limit, int) or limit <= 0):
-            raise ValueError("interpolate: limit must be a positive integer")
-        from pyspark.sql import Window
-
-        numeric = set(self._numeric_cols())
-        bad = [c for c in self._columns if c not in numeric]
-        if bad:
-            raise TypeError(f"interpolate: non-numeric columns {bad}")
-        sdf = self._materialized()
-        schema = dict(sdf.dtypes)
-        order = self._internal.order_columns(INDEX_COL)
-        back = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-        fwd = Window.orderBy(*order).rowsBetween(0, Window.unboundedFollowing)
-        pos = F.row_number().over(Window.orderBy(*order))
-        cols = {}
-        for c in self._columns:
-            v = sdf[c].cast("double")
-            if schema.get(c) in ("double", "float"):
-                v = F.when(~F.isnan(sdf[c]), v)
-            valid_pos = F.when(v.isNotNull(), pos)
-            pv = F.last(v, ignorenulls=True).over(back)
-            pp = F.last(valid_pos, ignorenulls=True).over(back)
-            nv = F.first(v, ignorenulls=True).over(fwd)
-            np_ = F.first(valid_pos, ignorenulls=True).over(fwd)
-            gate = F.lit(True) if limit is None else (pos - pp) <= limit
-            cols[c] = (
-                F.when(v.isNotNull(), v)
-                .when(
-                    pv.isNotNull() & nv.isNotNull() & gate,
-                    pv + (nv - pv) * (pos - pp) / (np_ - pp).cast("double"),
-                )
-                .when(pv.isNotNull() & gate, pv)
-            )
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, cols)
-
     # -- final parity batch -------------------------------------------------
 
     @property
@@ -3131,117 +2989,6 @@ class DataFrame:
         from pontem_spark.sources.writers import write_orc
 
         write_orc(self.to_spark(), path, **kwargs)
-
-    def resample(self, rule: str):
-        """Fixed-interval resample over a timestamp index: one
-        map-side-combinable aggregate per bucket across every numeric
-        column (observed buckets only — the grid is gap_fill's job)."""
-        return _FrameResampler(self, rule)
-
-    def asfreq(self, freq: str, method: str | None = None, fill_value=None) -> "DataFrame":
-        """pandas asfreq over a timestamp index — every column taken at
-        the EXACT grid timestamps (grid anchored at the first
-        observation; see Series.asfreq for the grid/guard/fill shape).
-        One bounds agg + grid explode + exact left join; ffill/bfill add
-        one time-ordered window carrying a struct of ALL columns (one
-        pass regardless of width)."""
-        import re
-
-        from pyspark.sql import Window
-        from pyspark.sql.types import TimestampType
-
-        from pontem_spark.core.series import _Resampler
-
-        m = re.fullmatch(r"(\d*)\s*([a-zA-Z]+)", freq.strip())
-        unit = m.group(2).lower() if m else None
-        if not m or unit not in _Resampler._UNITS:
-            raise ValueError(
-                f"unsupported asfreq rule {freq!r}; fixed-width units only "
-                f"({sorted(_Resampler._UNITS)})"
-            )
-        if method not in (None, "ffill", "pad", "bfill", "backfill"):
-            raise ValueError(f"asfreq: unsupported method {method!r}")
-        sec = int(m.group(1) or 1) * _Resampler._UNITS[unit]
-        sdf = self._materialized()
-        if not isinstance(sdf.schema[INDEX_COL].dataType, TimestampType):
-            raise TypeError("asfreq requires a timestamp index")
-        # MICROSECOND grid — see Series.asfreq: unix_timestamp's whole-
-        # second truncation silently NaN'd every sub-second-anchored index
-        step = sec * 1_000_000
-        bounds = sdf.agg(
-            F.unix_micros(F.min(F.col(INDEX_COL))).alias("__mn"),
-            F.unix_micros(F.max(F.col(INDEX_COL))).alias("__mx"),
-        )
-        n = ((F.col("__mx") - F.col("__mn")) / F.lit(step)).cast("long") + 1
-        seq = F.sequence(F.col("__mn"), F.col("__mx"), F.lit(step))
-        guarded = F.when(
-            n > _Resampler._MAX_GRID,
-            F.raise_error(
-                F.concat(
-                    F.lit("asfreq: the grid has "),
-                    n.cast("string"),
-                    F.lit(
-                        f" slots (time-range/freq) — past the "
-                        f"{_Resampler._MAX_GRID} guard. Coarsen the rule."
-                    ),
-                )
-            ),
-        ).otherwise(seq)
-        grid = bounds.select(F.explode(guarded).alias("__gus")).select(
-            F.timestamp_micros(F.col("__gus")).alias("__g")
-        )
-        obs = F.struct(*[sdf[c].alias(c) for c in self._columns])
-        data = sdf.select(F.col(INDEX_COL).alias("__g"), obs.alias("__obs"))
-        if method is None:
-            joined = grid.join(data, "__g", "left")
-            cols = {}
-            for c in self._columns:
-                v = F.col("__obs").getField(c)
-                if fill_value is not None:
-                    v = F.when(F.col("__obs").isNotNull(), v).otherwise(
-                        F.lit(fill_value)
-                    )
-                cols[c] = v
-            out = joined.select(
-                F.col("__g").alias(INDEX_COL),
-                *[v.alias(c) for c, v in cols.items()],
-            )
-        else:
-            forward = method in ("ffill", "pad")
-            u = data.select("__g", "__obs", F.lit(1).alias("__src")).unionByName(
-                grid.select(
-                    "__g",
-                    F.lit(None).cast(data.schema["__obs"].dataType).alias("__obs"),
-                    F.lit(0).alias("__src"),
-                )
-            )
-            if forward:
-                w = Window.orderBy(
-                    F.col("__g").asc(), F.col("__src").desc()
-                ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                picked = F.last(F.col("__obs"), ignorenulls=True).over(w)
-            else:
-                w = Window.orderBy(
-                    F.col("__g").asc(), F.col("__src").asc()
-                ).rowsBetween(Window.currentRow, Window.unboundedFollowing)
-                picked = F.first(F.col("__obs"), ignorenulls=True).over(w)
-            out = (
-                u.withColumn("__pick", picked)
-                .filter(F.col("__src") == 0)
-                .select(
-                    F.col("__g").alias(INDEX_COL),
-                    *[
-                        F.col("__pick").getField(c).alias(c)
-                        for c in self._columns
-                    ],
-                )
-            )
-        # duplicate index timestamps fan out the grid join — pandas raises
-        from pontem_spark.core.internal import guard_unique_labels
-
-        out = guard_unique_labels(data, "__g", out, INDEX_COL)
-        internal = InternalFrame(out, INDEX_COL, self._internal.index_name)
-        return DataFrame._from_internal(internal, {c: out[c] for c in self._columns})
 
     def at_time(self, time_str: str) -> "DataFrame":
         from pontem_spark.core.series import Series as _S
@@ -3668,47 +3415,6 @@ class DataFrame:
         """Replace cells where cond holds (the inverse of where)."""
         return self._where_mask(cond, other, invert=True)
 
-    # -- fills along the visible order ------------------------------------
-
-    def ffill(self) -> "DataFrame":
-        """Forward-fill every column along the visible order (one shared
-        window sort for all columns, like shift). NaN cells count as
-        missing (pandas), so they fill too."""
-        return self._directional_fill(forward=True)
-
-    def bfill(self) -> "DataFrame":
-        return self._directional_fill(forward=False)
-
-    def _directional_fill(self, forward: bool) -> "DataFrame":
-        from pyspark.sql import Window
-
-        # materialize FIRST: window exprs ordering on the index must see a
-        # real column, not a lateral alias from the same projection
-        # (UNSUPPORTED_FEATURE.LATERAL_COLUMN_ALIAS_IN_WINDOW, caught by
-        # the where->ffill composition)
-        sdf = self._materialized()
-        base = Window.orderBy(*self._internal.order_columns(INDEX_COL))
-        w = (
-            base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            if forward
-            else base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
-        schema = dict(sdf.dtypes)
-        pick = F.last if forward else F.first
-        out = {}
-        for k in self._columns:
-            v = sdf[k]
-            if schema.get(k) in ("double", "float"):
-                v = F.when(~F.isnan(v), v)
-            out[k] = pick(v, ignorenulls=True).over(w)
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, out)
-
-    pad = ffill
-    backfill = bfill
-
     # -- misc pandas conveniences -----------------------------------------
 
     def sort_index(self, ascending: bool = True) -> "DataFrame":
@@ -3898,49 +3604,6 @@ class DataFrame:
         rr = right.rename(columns={c: c + rsuffix for c in overlap}) if rsuffix else right
         on = [c for c in lr.columns if c in rr.columns and c not in self._columns]
         return lr.merge(rr, on=on, how=how)
-
-
-class _FrameResampler:
-    """Fixed-interval resampling of every numeric column."""
-
-    def __init__(self, df: DataFrame, rule: str):
-        from pontem_spark.core.series import _Resampler
-
-        r = _Resampler.__new__(_Resampler)
-        import re
-
-        m = re.fullmatch(r"(\d*)\s*([a-zA-Z]+)", rule.strip())
-        unit = m.group(2).lower() if m else None
-        if not m or unit not in _Resampler._UNITS:
-            raise ValueError(f"unsupported resample rule {rule!r}")
-        self._df = df
-        self._sec = int(m.group(1) or 1) * _Resampler._UNITS[unit]
-
-    def _agg(self, fn) -> "DataFrame":
-        df = self._df
-        numeric = set(df._numeric_cols())
-        cols = [c for c in df._columns if c in numeric]
-        sdf = df._materialized()
-        schema = dict(sdf.dtypes)
-        epoch = F.unix_timestamp(F.col(INDEX_COL))
-        bucket = F.timestamp_seconds(epoch - (epoch % F.lit(self._sec)))
-        exprs = []
-        for c in cols:
-            v = sdf[c]
-            if schema.get(c) in ("double", "float"):
-                v = F.when(~F.isnan(v), v)
-            exprs.append(fn(v).alias(c))
-        out = sdf.select(bucket.alias("__b"), *[sdf[c] for c in cols]).groupBy(
-            "__b"
-        ).agg(*exprs)
-        internal = InternalFrame(out, "__b", df._internal.index_name)
-        return DataFrame._from_internal(internal, {c: out[c] for c in cols})
-
-    def mean(self): return self._agg(F.mean)
-    def sum(self): return self._agg(F.sum)
-    def min(self): return self._agg(F.min)
-    def max(self): return self._agg(F.max)
-    def count(self): return self._agg(F.count)
 
 
 class _FrameAtIndexer:

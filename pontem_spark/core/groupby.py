@@ -575,7 +575,7 @@ class SeriesGroupBy:
         _, wcum = self._wins()
         v = _valid(self._df, self._col)
         # missing slots stay missing; missing values never enter the
-        # running state (the Series._cum rule, partitioned)
+        # running state (core/window.py::cum, partitioned)
         col = F.when(
             v.isNotNull() & _keys_valid(self._df, self._keys), aggfn(v).over(wcum)
         )

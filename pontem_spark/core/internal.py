@@ -500,6 +500,23 @@ class InternalFrame:
         spec = self.order_spec or ((default_col, True),)
         return [F.col(c).asc() if asc else F.col(c).desc() for c, asc in spec]
 
+    def materialize(self, cols: "dict[str, Column]") -> SparkDataFrame:
+        """The anchor projected to the index (as INDEX_COL) and ``cols``
+        under their names. Order-spec helper columns (sort_values'
+        ``__miss__`` flags) survive, so downstream positional ops can
+        reference the spec; user-facing edges select by name and never
+        show them."""
+        extras = dict.fromkeys(
+            n
+            for n, _ in (self.order_spec or ())
+            if n != INDEX_COL and n not in cols and n in self.sdf.columns
+        )
+        return self.sdf.select(
+            self.index_col.alias(INDEX_COL),
+            *[c.alias(k) for k, c in cols.items()],
+            *[F.col(n) for n in extras],
+        )
+
     # ------------------------------------------------------------------
     @staticmethod
     def from_local(

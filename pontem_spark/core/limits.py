@@ -14,8 +14,9 @@ Guarded sites (SCALE.md "Driver-materialization policy" mirrors this list):
   - Series.factorize()         MAX_DRIVER_ROWS     (codes ndarray, full length)
   - DataFrame.T                MAX_DRIVER_COLS     (rows become schema fields)
   - get_dummies()              MAX_DRIVER_CATEGORIES (categories become fields)
-  - Series.ewm()._apply        MAX_SINGLE_GROUP_ROWS (one Arrow group; the
-                               scale shape is GroupedEwm - per-key parallel)
+  - core/window.py::ewm        MAX_SINGLE_GROUP_ROWS (Series.ewm and
+                               DataFrame.ewm: one Arrow group; the scale
+                               shape is GroupedEwm - per-key parallel)
 """
 
 from __future__ import annotations
@@ -36,6 +37,6 @@ MAX_DRIVER_COLS: int = 1_000
 MAX_DRIVER_CATEGORIES: int = 256
 
 # Rows allowed through a single Arrow group for inherently-sequential math
-# (Series-level ewm): one python worker holds the whole group as a pandas
+# (Series/DataFrame ewm): one python worker holds the whole group as a pandas
 # block, so the bound matches MAX_DRIVER_ROWS.
 MAX_SINGLE_GROUP_ROWS: int = MAX_DRIVER_ROWS

@@ -28,12 +28,12 @@ from typing import Any, Callable, Iterable
 from pyspark.sql import Column, DataFrame as SparkDataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType
 
+from pontem_spark.core import window as win
 from pontem_spark.core.cells import (
     combine_cells,
     dtypes,
     missing,
     scalar_dtype,
-    truediv_cols,
     unary,
 )
 from pontem_spark.core.internal import (
@@ -47,25 +47,6 @@ from pontem_spark.core.internal import (
 )
 
 _VALUE = "__value__"
-
-
-def _window_free(col: Column) -> bool:
-    """True when ``col`` provably contains no window expression, so a
-    positional op (shift/cumsum/pct_change) can wrap it in its OWN window
-    directly on the anchor DataFrame instead of materializing first. The
-    direct anchoring keeps the result on the SAME anchor as its source, so
-    ``s - s.shift(1)`` and ``f[c] = s.diff()`` compose column-wise with
-    ZERO joins — exact positional pairing even when the order spec has
-    ties between duplicate index labels (where a label+helper join would
-    fan out, r13 probe). Detection is the rendered expression: every
-    window expression prints ``... OVER (...)``; a false positive (a
-    string literal containing " OVER ") just takes the safe materialize
-    path. Spark 4 accepts nested windows, but materializing windowed
-    inputs also bounds expression growth in chains like s.diff().diff()."""
-    try:
-        return " OVER " not in str(col)
-    except Exception:
-        return False
 
 
 class Series:
@@ -156,21 +137,7 @@ class Series:
         )
 
     def _materialized(self, value_alias: str = _VALUE) -> SparkDataFrame:
-        # order-spec helper columns (sort_values' __miss__ flag) survive
-        # materialization so downstream positional ops can reference the
-        # spec; user-facing edges never show them (they select by name)
-        extras = [
-            n
-            for n, _ in (self._internal.order_spec or ())
-            if n not in (INDEX_COL, _VALUE, value_alias)
-            and n in self._internal.sdf.columns
-        ]
-        extras = list(dict.fromkeys(extras))
-        return self._internal.sdf.select(
-            self._internal.index_col.alias(INDEX_COL),
-            self._col.alias(value_alias),
-            *[F.col(n) for n in extras],
-        )
+        return self._internal.materialize({value_alias: self._col})
 
     def _ordered(self, sdf):
         return sdf.orderBy(*self._internal.order_columns(INDEX_COL))
@@ -179,7 +146,7 @@ class Series:
         """pandas missing-ness over a Spark column: NULL, plus NaN for
         float dtypes (Spark distinguishes the two; pandas treats both as
         missing). THE one definition every skipna-style op must share —
-        clip/_cum/rank/mode/autocorr all route here."""
+        clip/rank/mode/autocorr all route here."""
         frame = sdf if sdf is not None else self._internal.sdf
         return missing(col, dtypes(frame, col)[0])
 
@@ -262,11 +229,11 @@ class Series:
     def _mat_pair(self, other: "Series"):
         """Same-anchor composition across one materialization hop.
 
-        A positional op on a WINDOWED column (shift/_cum/pct_change
-        fallback) re-anchors its result on ``self._materialized()`` and
+        A visible-order rule over a WINDOWED column (core/window.py
+        ``Visible``) re-anchors its result on ``self._materialized()`` and
         tags it with ``_mat_source`` = the source series. When that result
-        later meets its own source in a binop (``s.diff().diff()`` →
-        ``m - m.shift()`` where the shift re-anchored), the source's value
+        later meets its own source in a binop (``m - m.shift()`` with
+        ``m = s.cumsum()``: the shift re-anchored), the source's value
         still lives on the derived anchor as the ``_VALUE`` column — so
         compose there, row-for-row exact, instead of falling into the
         label+helper alignment join (which fans out when duplicate index
@@ -1190,51 +1157,72 @@ class Series:
 
     # window-style transforms --------------------------------------------------
 
-    def cumsum(self) -> "Series":
-        return self._cum(F.sum)
+    def _visible(self, rule, *args) -> "Series":
+        """Run a core/window.py visible-order rule over the value column.
+        A result on the rule's one materialization hop is tagged with
+        ``_mat_source`` so it meets its source through ``_mat_pair``."""
+        src = win.Visible(self._internal, {_VALUE: self._col})
+        internal, cols = rule(src, *args)
+        res = Series._from_internal(internal, cols[_VALUE], self._name)
+        if src.materialized and internal is src.internal:
+            res._mat_source = self  # _mat_pair: source value is _VALUE here
+        return res
 
     def shift(self, periods: int = 1, fill_value=None) -> "Series":
-        """``fill_value`` fills the vacated edge positions (pandas keeps
-        the column's dtype then instead of upcasting to float).
+        return self._visible(win.shift, periods, fill_value)
 
-        A window-free value column shifts ON ITS OWN ANCHOR (no
-        materialization), so the result stays same-anchor with its source
-        and ``s - s.shift(1)`` / ``f[c] = s.shift(1)`` compose without a
-        join — the only pairing that is exact when duplicate index labels
-        tie on every order-spec column (r13 probe: the label+helper join
-        fanned 1540 rows to 2294 on a non-total sort key)."""
-        from pyspark.sql import Window
+    def diff(self, periods: int = 1) -> "Series":
+        return self._visible(win.diff, periods)
 
-        if _window_free(self._col):
-            w = Window.orderBy(
-                *self._internal.order_columns(self._internal.index_spark_col)
-            )
-            col = (
-                F.lag(self._col, periods, fill_value).over(w)
-                if periods >= 0
-                else F.lead(self._col, -periods, fill_value).over(w)
-            )
-            return Series._from_internal(self._internal, col, self._name)
-        sdf = self._materialized()
-        w = Window.orderBy(*self._internal.order_columns(INDEX_COL))
-        col = (
-            F.lag(sdf[_VALUE], periods, fill_value).over(w)
-            if periods >= 0
-            else F.lead(sdf[_VALUE], -periods, fill_value).over(w)
-        )
-        res = Series._from_internal(
-            InternalFrame(
-                sdf,
-                INDEX_COL,
-                self._internal.index_name,
-                self._internal.order_spec,
-                row_tokens=self._internal.row_tokens,
-            ),
-            col,
-            self._name,
-        )
-        res._mat_source = self  # _mat_pair: source value is _VALUE here
-        return res
+    def pct_change(self, periods: int = 1, fill_method: str | None = "pad") -> "Series":
+        return self._visible(win.pct_change, periods, fill_method)
+
+    def cumsum(self) -> "Series":
+        return self._visible(win.cum, F.sum)
+
+    def cummax(self) -> "Series":
+        return self._visible(win.cum, F.max)
+
+    def cummin(self) -> "Series":
+        return self._visible(win.cum, F.min)
+
+    def cumprod(self) -> "Series":
+        return self._visible(win.cum, F.product)
+
+    def ffill(self) -> "Series":
+        return self._visible(win.fill, True)
+
+    def bfill(self) -> "Series":
+        return self._visible(win.fill, False)
+
+    def interpolate(self, method: str = "linear", limit: "int | None" = None) -> "Series":
+        return self._visible(win.interpolate, method, limit)
+
+    def rolling(self, window: int, min_periods: "int | None" = None):
+        return win.Rolling(self, window, min_periods)
+
+    def expanding(self, min_periods: int = 1):
+        return win.Rolling(self, None, min_periods)
+
+    def ewm(
+        self,
+        com: float | None = None,
+        span: float | None = None,
+        halflife: float | None = None,
+        alpha: float | None = None,
+        adjust: bool = True,
+        ignore_na: bool = False,
+        min_periods: int = 0,
+    ):
+        return win.Ewm(self, com, span, halflife, alpha, adjust, ignore_na, min_periods)
+
+    def resample(self, rule: str):
+        """pandas ``s.resample('6h').mean()`` over a timestamp index;
+        fixed-width rules only (core/window.py::resample)."""
+        return win.Resampler(self, rule)
+
+    def asfreq(self, freq: str, method: str | None = None, fill_value=None) -> "Series":
+        return self._visible(win.asfreq, freq, method, fill_value)
 
     def where(self, cond: "Series", other=None) -> "Series":
         """Keep values where cond holds, else ``other`` (pandas.where).
@@ -1302,106 +1290,6 @@ class Series:
 
         col_name = name if name is not None else (self._name if self._name is not None else 0)
         return PFrame._from_internal(self._internal, {str(col_name): self._col})
-
-    def diff(self, periods: int = 1) -> "Series":
-        return self - self.shift(periods)
-
-    def pct_change(self, periods: int = 1, fill_method: str | None = "pad") -> "Series":
-        # pandas (2.x default) forward-fills non-leading missing values
-        # BEFORE differencing: a NaN row compares against the last real
-        # value (yielding 0.0 if nothing changed), and the next real row
-        # compares against that same carried value. fill_method=None is the
-        # announced future default: no fill, NaN rows poison both
-        # comparisons they take part in.
-        if fill_method is None:
-            prev = self.shift(periods)
-            return (self - prev) / prev
-        from pyspark.sql import Window
-
-        if _window_free(self._col):
-            # same-anchor composition — see shift(); Spark 4 extracts the
-            # lag-of-last nesting into stacked Window nodes
-            _ord = self._internal.order_columns(self._internal.index_spark_col)
-            w = Window.orderBy(*_ord).rowsBetween(Window.unboundedPreceding, 0)
-            missing = self._missing_mask(self._col)
-            clean = F.when(missing, F.lit(None)).otherwise(self._col)
-            filled = F.last(clean, ignorenulls=True).over(w)
-            prev = F.lag(filled, periods).over(Window.orderBy(*_ord))
-            col = truediv_cols(filled, prev) - 1
-            return Series._from_internal(self._internal, col, self._name)
-        _ord = self._internal.order_columns(INDEX_COL)
-        w = Window.orderBy(*_ord).rowsBetween(Window.unboundedPreceding, 0)
-        sdf = self._materialized()
-        missing = self._missing_mask(sdf[_VALUE], sdf)
-        clean = F.when(missing, F.lit(None)).otherwise(sdf[_VALUE])
-        filled = F.last(clean, ignorenulls=True).over(w)
-        prev = F.lag(filled, periods).over(Window.orderBy(*_ord))
-        # guarded division: a zero previous value must yield pandas' ±inf/
-        # NaN, not Spark 4's ANSI DIVIDE_BY_ZERO throw (fuzz: [0.0, 0.0]).
-        # pandas computes v/prev - 1, not (v-prev)/prev — same algebra but
-        # different last-ulp floats, so mirror its operation order
-        col = truediv_cols(filled, prev) - 1
-        res = Series._from_internal(
-            InternalFrame(
-                sdf,
-                INDEX_COL,
-                self._internal.index_name,
-                self._internal.order_spec,
-                row_tokens=self._internal.row_tokens,
-            ),
-            col,
-            self._name,
-        )
-        res._mat_source = self  # _mat_pair: source value is _VALUE here
-        return res
-
-    def _cum(self, aggfn) -> "Series":
-        """Cumulative agg with pandas skipna semantics: missing positions
-        stay missing, and missing values never enter the running state
-        (Spark's NaN would otherwise poison a running max as the largest
-        value; its null is skipped by the agg but pandas keeps the output
-        slot NaN)."""
-        from pyspark.sql import Window
-
-        if _window_free(self._col):
-            # same-anchor composition — see shift(): exact positional
-            # pairing for downstream binops/setitem, zero joins
-            w = Window.orderBy(
-                *self._internal.order_columns(self._internal.index_spark_col)
-            ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            v = self._col
-            missing = self._missing_mask(v)
-            col = F.when(~missing, aggfn(F.when(~missing, v)).over(w))
-            return Series._from_internal(self._internal, col, self._name)
-        w = Window.orderBy(*self._internal.order_columns(INDEX_COL)).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        sdf = self._materialized()
-        v = sdf[_VALUE]
-        missing = self._missing_mask(v, sdf)
-        col = F.when(~missing, aggfn(F.when(~missing, v)).over(w))
-        res = Series._from_internal(
-            InternalFrame(
-                sdf,
-                INDEX_COL,
-                self._internal.index_name,
-                self._internal.order_spec,
-                row_tokens=self._internal.row_tokens,
-            ),
-            col,
-            self._name,
-        )
-        res._mat_source = self  # _mat_pair: source value is _VALUE here
-        return res
-
-    def cummax(self) -> "Series":
-        return self._cum(F.max)
-
-    def cummin(self) -> "Series":
-        return self._cum(F.min)
-
-    def cumprod(self) -> "Series":
-        return self._cum(F.product)
 
     def prod(self):
         """Product of non-missing values; empty/all-missing → 1.0 (pandas
@@ -1890,140 +1778,6 @@ class Series:
         ).first()
         return row[0] if single else pd.Series({n: row[n] for n in names}, name=self._name)
 
-    def rolling(self, window: int, min_periods: "int | None" = None):
-        from pontem_spark.core.window import Rolling
-
-        return Rolling(self, window, min_periods)
-
-    def ewm(
-        self,
-        com: float | None = None,
-        span: float | None = None,
-        halflife: float | None = None,
-        alpha: float | None = None,
-        adjust: bool = True,
-        ignore_na: bool = False,
-        min_periods: int = 0,
-    ):
-        from pontem_spark.core.window import Ewm
-
-        return Ewm(self, com, span, halflife, alpha, adjust, ignore_na, min_periods)
-
-    def ffill(self) -> "Series":
-        """Forward-fill missing (NULL or NaN) from the last valid value in
-        index order; leading missing stay missing. One ignore-nulls window
-        scan (the gapfill shape)."""
-        return self._directional_fill(forward=True)
-
-    def bfill(self) -> "Series":
-        """Backward-fill missing from the next valid value; trailing
-        missing stay missing."""
-        return self._directional_fill(forward=False)
-
-    def _directional_fill(self, forward: bool) -> "Series":
-        from pyspark.sql import Window
-
-        if _window_free(self._col):
-            # same-anchor composition — the r13 positional-op rule:
-            # v - v.ffill() / setitem compose column-wise, zero joins
-            v = self._col
-            missing = self._missing_mask(v)
-            _ord = self._internal.order_columns(self._internal.index_spark_col)
-            if forward:
-                w = Window.orderBy(*_ord).rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow
-                )
-                col = F.last(F.when(~missing, v), ignorenulls=True).over(w)
-            else:
-                w = Window.orderBy(*_ord).rowsBetween(
-                    Window.currentRow, Window.unboundedFollowing
-                )
-                col = F.first(F.when(~missing, v), ignorenulls=True).over(w)
-            return Series._from_internal(self._internal, col, self._name)
-        sdf = self._materialized()
-        v = sdf[_VALUE]
-        missing = self._missing_mask(v, sdf)
-        _ord = self._internal.order_columns(INDEX_COL)
-        if forward:
-            w = Window.orderBy(*_ord).rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-            col = F.last(F.when(~missing, v), ignorenulls=True).over(w)
-        else:
-            w = Window.orderBy(*_ord).rowsBetween(
-                Window.currentRow, Window.unboundedFollowing
-            )
-            col = F.first(F.when(~missing, v), ignorenulls=True).over(w)
-        res = Series._from_internal(
-            InternalFrame(
-                sdf,
-                INDEX_COL,
-                self._internal.index_name,
-                self._internal.order_spec,
-                row_tokens=self._internal.row_tokens,
-            ),
-            col,
-            self._name,
-        )
-        res._mat_source = self  # _mat_pair: source value is _VALUE here
-        return res
-
-    def interpolate(self, method: str = "linear", limit: "int | None" = None) -> "Series":
-        """pandas-default linear interpolation by POSITION (values treated
-        as equally spaced): each interior missing run is filled linearly
-        between its surrounding valid values, leading missing stay
-        missing, and trailing missing carry the last valid value forward
-        (pandas' ``limit_direction='forward'`` default, which quietly
-        degrades extrapolation to ffill). ``limit`` caps how many
-        consecutive missing rows get filled per run, counted forward from
-        the last valid value (r8 probe). Two ignore-nulls window scans
-        (last-before + first-after, the operators/timeseries.py gapfill
-        shape) — all Catalyst, no UDF. Result dtype is double, like
-        pandas' float64."""
-        if method != "linear":
-            raise ValueError("interpolate: only method='linear' is implemented")
-        if limit is not None and (not isinstance(limit, int) or limit <= 0):
-            raise ValueError("interpolate: limit must be a positive integer")
-        from pyspark.sql import Window
-
-        mat = self._materialized()
-        sdf = mat.select(
-            INDEX_COL,
-            _VALUE,
-            F.row_number().over(
-                Window.orderBy(*self._internal.order_columns(INDEX_COL))
-            ).alias("__pos"),
-        )
-        v = sdf[_VALUE]
-        missing = self._missing_mask(v, sdf)
-        valid_v = F.when(~missing, v.cast("double"))
-        valid_p = F.when(~missing, sdf["__pos"])
-        wb = Window.orderBy("__pos").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        wf = Window.orderBy("__pos").rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        prev_v = F.last(valid_v, ignorenulls=True).over(wb)
-        prev_p = F.last(valid_p, ignorenulls=True).over(wb)
-        next_v = F.first(valid_v, ignorenulls=True).over(wf)
-        next_p = F.first(valid_p, ignorenulls=True).over(wf)
-        frac = (sdf["__pos"] - prev_p).cast("double") / (next_p - prev_p).cast("double")
-        gate = F.lit(True) if limit is None else (sdf["__pos"] - prev_p) <= limit
-        col = (
-            F.when(~missing, v.cast("double"))
-            .when(
-                prev_v.isNotNull() & next_v.isNotNull() & gate,
-                prev_v + (next_v - prev_v) * frac,
-            )
-            .when(prev_v.isNotNull() & gate, prev_v)  # trailing run: ffill
-            # leading run: stays null → NaN in pandas
-        )
-        return Series._from_internal(
-            # __pos IS the visible order — carry it as the output spec
-            InternalFrame(
-                sdf, INDEX_COL, self._internal.index_name, (("__pos", True),)
-            ),
-            col,
-            self._name,
-        )
-
     # everyday pandas conveniences (r7 batch) ---------------------------------
 
     @property
@@ -2431,10 +2185,6 @@ class Series:
             self._name,
         )
 
-    def expanding(self, min_periods: int = 1):
-        """Expanding window — Rolling with an unbounded-preceding frame."""
-        return _SeriesExpanding(self, min_periods)
-
     def transform(self, func, *args, **kwargs) -> "Series":
         """pandas transform for a callable = elementwise apply that must
         preserve length — same Arrow path as apply."""
@@ -2557,137 +2307,6 @@ class Series:
         from pontem_spark.core.groupby import GroupBy
 
         return GroupBy(f, [key_name], True)[val_name]
-
-    def resample(self, rule: str):
-        """pandas ``s.resample('6H').mean()`` for a timestamp-indexed
-        Series — thin face over the engine's resample shape
-        (operators/timeseries.py): floor the index onto the epoch grid,
-        one map-side-combinable aggregate per bucket. ``rule``: pandas
-        offset aliases h/min/s/d (fixed-width only — calendar months need
-        calendar arithmetic, use the operators module)."""
-        return _Resampler(self, rule)
-
-    def asfreq(self, freq: str, method: str | None = None, fill_value=None) -> "Series":
-        """pandas asfreq over a timestamp index: the new index is the
-        ``freq`` grid anchored at the FIRST observation (asfreq anchors
-        at index[0], unlike resample's start_day), values taken at EXACT
-        grid timestamps. Unmatched grid points get NaN / ``fill_value``,
-        or the positionally previous/next observation with
-        method='ffill'/'bfill' (pandas reindex semantics: fill by
-        POSITION — an observed NaN propagates; pre-existing NaN at a
-        matched timestamp is never replaced by fill_value). When BOTH
-        method and fill_value are given, method wins and fill_value is
-        ignored — pinned against pandas 2.2 (asfreq does not raise; the
-        in-range grid leaves method no gap for fill_value to touch).
-        Duplicate index timestamps raise like pandas ('cannot reindex on
-        an axis with duplicate labels') via the lazy in-plan guard.
-
-        Plan shape: one broadcast 1-row bounds agg + a sequence-explode
-        grid (size time-range/freq, same loud guard as resample) + an
-        exact-match left join; ffill/bfill add one time-ordered window
-        over grid+data (a single time-ordered pass — inherent to
-        positional filling, same scale caveat as rank 'first')."""
-        import re
-
-        from pyspark.sql import Window
-
-        m = re.fullmatch(r"(\d*)\s*([a-zA-Z]+)", freq.strip())
-        unit = m.group(2).lower() if m else None
-        if not m or unit not in _Resampler._UNITS:
-            raise ValueError(
-                f"unsupported asfreq rule {freq!r}; fixed-width units only "
-                f"({sorted(_Resampler._UNITS)})"
-            )
-        if method not in (None, "ffill", "pad", "bfill", "backfill"):
-            raise ValueError(f"asfreq: unsupported method {method!r}")
-        sec = int(m.group(1) or 1) * _Resampler._UNITS[unit]
-        from pyspark.sql.types import TimestampType
-
-        sdf = self._materialized()
-        if not isinstance(sdf.schema[INDEX_COL].dataType, TimestampType):
-            raise TypeError("asfreq requires a timestamp index")
-        # grid in MICROSECONDS: unix_timestamp truncates to whole seconds,
-        # which made a sub-second-anchored index never exact-match the grid
-        # (every value came back NaN — ADVICE r10); unix_micros keeps the
-        # anchor's full precision so the grid lands on the observations
-        step = sec * 1_000_000
-        bounds = sdf.agg(
-            F.unix_micros(F.min(F.col(INDEX_COL))).alias("__mn"),
-            F.unix_micros(F.max(F.col(INDEX_COL))).alias("__mx"),
-        )
-        n = ((F.col("__mx") - F.col("__mn")) / F.lit(step)).cast("long") + 1
-        seq = F.sequence(F.col("__mn"), F.col("__mx"), F.lit(step))
-        guarded = F.when(
-            n > _Resampler._MAX_GRID,
-            F.raise_error(
-                F.concat(
-                    F.lit("asfreq: the grid has "),
-                    n.cast("string"),
-                    F.lit(
-                        f" slots (time-range/freq) — past the "
-                        f"{_Resampler._MAX_GRID} guard. Coarsen the rule."
-                    ),
-                )
-            ),
-        ).otherwise(seq)
-        grid = bounds.select(F.explode(guarded).alias("__gus")).select(
-            F.timestamp_micros(F.col("__gus")).alias("__g")
-        )
-        data = sdf.select(
-            F.col(INDEX_COL).alias("__g"),
-            F.struct(F.col(_VALUE).alias("v")).alias("__obs"),
-        )
-        if method is None:
-            joined = grid.join(data, "__g", "left")
-            col = F.col("__obs").getField("v")
-            if fill_value is not None:
-                # fill only grid-introduced gaps — a matched row keeps its
-                # value even when that value is missing (pandas contract)
-                col = F.when(F.col("__obs").isNotNull(), col).otherwise(
-                    F.lit(fill_value)
-                )
-            out = joined.select(F.col("__g").alias(INDEX_COL), col.alias("__v"))
-        else:
-            forward = method in ("ffill", "pad")
-            # union data and grid rows on one timeline; at an equal
-            # timestamp the DATA row sits on the fill side of the grid row
-            # so an exact match always wins
-            u = data.select("__g", "__obs", F.lit(1).alias("__src")).unionByName(
-                grid.select(
-                    "__g", F.lit(None).cast(data.schema["__obs"].dataType).alias("__obs"),
-                    F.lit(0).alias("__src"),
-                )
-            )
-            if forward:
-                w = (
-                    Window.orderBy(F.col("__g").asc(), F.col("__src").desc())
-                    .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                )
-                picked = F.last(F.col("__obs"), ignorenulls=True).over(w)
-            else:
-                w = (
-                    Window.orderBy(F.col("__g").asc(), F.col("__src").asc())
-                    .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-                )
-                picked = F.first(F.col("__obs"), ignorenulls=True).over(w)
-            out = (
-                u.withColumn("__pick", picked)
-                .filter(F.col("__src") == 0)
-                .select(
-                    F.col("__g").alias(INDEX_COL),
-                    F.col("__pick").getField("v").alias("__v"),
-                )
-            )
-        # duplicate index timestamps would silently fan out the grid join
-        # (and make the window pick nondeterministic) — pandas raises
-        from pontem_spark.core.internal import guard_unique_labels
-
-        out = guard_unique_labels(data, "__g", out, INDEX_COL)
-        return Series._from_internal(
-            InternalFrame(out, INDEX_COL, self._internal.index_name),
-            out["__v"],
-            self._name,
-        )
 
     # alignment family (r7 batch 2) -------------------------------------------
 
@@ -2954,155 +2573,6 @@ def _positional_take_sdf(obj, positions: list):
         .withColumn("__take_ord__", F.explode(chain))
         .drop("__rn__")
     )
-
-
-class _SeriesExpanding:
-    """Expanding window over a Series (unbounded-preceding frame)."""
-
-    def __init__(self, s: "Series", min_periods: int = 1):
-        self._s = s
-        self._minp = min_periods
-
-    def _apply(self, aggfn):
-        from pyspark.sql import Window
-
-        s = self._s
-        if _window_free(s._col):
-            # same-anchor composition — the r13 positional-op rule
-            sdf, col0, internal, src = s._internal.sdf, s._col, s._internal, None
-        else:
-            sdf = s._materialized()
-            col0 = sdf[_VALUE]
-            internal = InternalFrame(
-                sdf,
-                INDEX_COL,
-                s._internal.index_name,
-                s._internal.order_spec,
-                row_tokens=s._internal.row_tokens,
-            )
-            src = s
-        wdefault = (
-            s._internal.index_spark_col if src is None else INDEX_COL
-        )
-        w = Window.orderBy(*s._internal.order_columns(wdefault)).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        v = F.when(~s._missing_mask(col0, sdf), col0)
-        cnt = F.count(v).over(w)
-        col = F.when(cnt >= self._minp, aggfn(v).over(w))
-        res = Series._from_internal(internal, col, s._name)
-        if src is not None:
-            res._mat_source = src  # _mat_pair: source value is _VALUE here
-        return res
-
-    def sum(self): return self._apply(F.sum)
-    def mean(self): return self._apply(F.mean)
-    def min(self): return self._apply(F.min)
-    def max(self): return self._apply(F.max)
-    def std(self): return self._apply(F.stddev_samp)
-    def var(self): return self._apply(F.var_samp)
-    def count(self): return self._apply(F.count)
-
-
-class _Resampler:
-    """Fixed-interval resampling over a timestamp index.
-
-    Emits the COMPLETE bucket grid like pandas (r9 probe: empty buckets
-    gap-fill — NaN for the mean family, 0 for count/sum). The grid comes
-    from one tiny min/max agg + a distributed sequence explode and a
-    left join of the observed aggregates; its size is time-range/freq,
-    UNBOUNDED by the data, so a loud guard caps it (a 10-year span at
-    '1s' is 315M grid rows — compose operators/timeseries.py::gap_fill
-    explicitly, or coarsen the rule, past the cap)."""
-
-    _UNITS = {"s": 1, "min": 60, "t": 60, "h": 3600, "d": 86400}
-    _MAX_GRID = 10_000_000
-
-    def __init__(self, s: "Series", rule: str):
-        import re
-
-        m = re.fullmatch(r"(\d*)\s*([a-zA-Z]+)", rule.strip())
-        unit = m.group(2).lower() if m else None
-        if not m or unit not in self._UNITS:
-            raise ValueError(
-                f"unsupported resample rule {rule!r}; fixed-width units only "
-                f"({sorted(self._UNITS)})"
-            )
-        self._s = s
-        self._sec = int(m.group(1) or 1) * self._UNITS[unit]
-
-    def _agg(self, fn, empty=None) -> "Series":
-        s = self._s
-        sdf = s._materialized()
-        sec = self._sec
-        # pandas anchors the grid at MIDNIGHT OF THE FIRST DAY
-        # (origin='start_day'), not the epoch — identical for any freq
-        # dividing 86400 s, but '2d' or '7min' shift (r9 probe). The
-        # anchor is a broadcast 1-row bounds frame (the engine's
-        # sanctioned crossJoin shape for scalar stats).
-        ts = F.col(INDEX_COL)
-        bounds = sdf.agg(
-            F.unix_timestamp(F.date_trunc("day", F.min(ts))).alias("__a"),
-            F.unix_timestamp(F.min(ts)).alias("__mn"),
-            F.unix_timestamp(F.max(ts)).alias("__mx"),
-        )
-        base = sdf.crossJoin(F.broadcast(bounds))
-        off = F.unix_timestamp(ts) - F.col("__a")
-        bucket = F.timestamp_seconds(
-            F.col("__a") + off - F.pmod(off, F.lit(sec))
-        )
-        v = F.col(_VALUE)
-        missing = s._missing_mask(v, sdf)
-        out = (
-            base.select(bucket.alias("__b"), F.when(~missing, v).alias("__v"))
-            .groupBy("__b")
-            .agg(fn(F.col("__v")).alias(_VALUE))
-        )
-        # pandas grid: every bucket from the first to the last, empty
-        # ones filled. The size guard (time-range/freq is UNBOUNDED by
-        # the data) is raise_error INSIDE the plan — fully lazy, and an
-        # empty input sequences to NULL → explode → zero rows.
-        omn = F.col("__mn") - F.col("__a")
-        omx = F.col("__mx") - F.col("__a")
-        lo_b = F.col("__a") + omn - F.pmod(omn, F.lit(sec))
-        hi_b = F.col("__a") + omx - F.pmod(omx, F.lit(sec))
-        n = ((hi_b - lo_b) / F.lit(sec)).cast("long") + 1
-        seq = F.sequence(
-            F.timestamp_seconds(lo_b),
-            F.timestamp_seconds(hi_b),
-            F.expr(f"INTERVAL {sec} SECONDS"),
-        )
-        guarded = F.when(
-            n > self._MAX_GRID,
-            F.raise_error(
-                F.concat(
-                    F.lit("resample: the bucket grid has "),
-                    n.cast("string"),
-                    F.lit(
-                        f" slots (time-range/freq) — past the "
-                        f"{self._MAX_GRID} guard. Coarsen the rule or "
-                        "compose operators/timeseries.py::gap_fill "
-                        "explicitly."
-                    ),
-                )
-            ),
-        ).otherwise(seq)
-        grid = bounds.select(F.explode(guarded).alias("__b"))
-        filled = grid.join(out, "__b", "left")
-        col = F.col(_VALUE)
-        if empty is not None:
-            col = F.coalesce(col, F.lit(empty))
-        return Series._from_internal(
-            InternalFrame(filled, "__b", s._internal.index_name),
-            col,
-            s._name,
-        )
-
-    def mean(self): return self._agg(F.mean)
-    def sum(self): return self._agg(F.sum, empty=0)
-    def min(self): return self._agg(F.min)
-    def max(self): return self._agg(F.max)
-    def count(self): return self._agg(F.count, empty=0)
 
 
 class _AtIndexer:

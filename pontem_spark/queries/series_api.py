@@ -620,7 +620,7 @@ def q_api_where_ffill_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The r7 frame-API surface composed end-to-end through the wrapper:
     scalar comparison (df < x, missing-compares-False), where (null out
     the gated cells), ffill (one shared window), rolling(3,
-    min_periods=1).mean() (FrameRolling, same shared sort) — the outlier
+    min_periods=1).mean() (core/window.py::rolling, same shared sort) — the outlier
     null-and-smooth idiom; the oracle replays the identical two window
     scans in SQL."""
     from pontem_spark.core import from_spark
@@ -985,8 +985,8 @@ def q_api_rowalign_dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-label row-aligned derivations, in-engine end to end —
     driver evidence for the r12 aligner campaign (core/internal.py
     rowalign_left_join and rowalign_keys) and the r13
-    same-anchor positional rebuild (core/series.py shift/_cum/pct_change
-    fast paths + _mat_pair).
+    same-anchor positional rebuild (core/window.py ``Visible`` window-free
+    staging + Series._mat_pair).
 
     Scale shape: the slice is predicate-bounded before anything else
     happens; the positional ops are Catalyst window functions over the

@@ -317,7 +317,7 @@ def q_ts_series_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     '7h' does not — its buckets land on midnight-of-first-day multiples,
     so an epoch-floor implementation on either side hash-mismatches. The
     grid itself is a broadcast 1-row bounds frame + sequence explode
-    (core/series.py::_Resampler) — never a driver-side date_range."""
+    (core/window.py::resample) — never a driver-side date_range."""
     from pontem_spark.core import from_spark
     from pontem_spark.functions.compat import rnd
 
@@ -367,7 +367,7 @@ def q_ts_series_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ts_asfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Series.asfreq through the wrapper — driver evidence for the r10
-    asfreq surface (core/series.py::asfreq): the grid anchors at the
+    asfreq surface (core/window.py::asfreq): the grid anchors at the
     FIRST observation (index[0], NOT start_day — the anchor that
     distinguishes asfreq from resample cross-engine), v_exact takes
     values at exact grid timestamps only, v_ffill fills positionally

@@ -2105,12 +2105,76 @@ def test_frame_resample_time_filters(spark):
         index=[t0 + dt.timedelta(minutes=53 * i) for i in range(40)],
     )
     got = f.resample("6h").mean().to_pandas().sort_index()
-    want = wfr.resample("6h").mean().dropna()
+    want = wfr.resample("6h").mean()
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_names=False, check_freq=False)
 
     gb = f.between_time("10:00", "14:00").to_pandas().sort_index()
     wb = wfr.between_time("10:00", "14:00").sort_index()
     assert gb.index.tolist() == wb.index.tolist()
+
+
+def test_frame_resample_full_grid_matches_pandas(spark):
+    """Frame resample emits pandas' complete bucket grid anchored at
+    midnight of the first day (origin='start_day'): empty buckets are NaN
+    for mean, 0 for sum/count. '7min' does not divide the 05:03 offset, so
+    an epoch-anchored grid lands on other buckets."""
+    import datetime as dt
+
+    from pontem_spark.core import from_spark
+
+    t0 = dt.datetime(2024, 1, 1, 5, 3)
+    idx = [t0 + dt.timedelta(minutes=m) for m in (0, 3, 4, 30, 31, 60, 95, 101)]
+    v = [float(i) for i in range(len(idx))]
+    w = [np.nan, 2.0, 4.0, np.nan, 8.0, 10.0, 12.0, 14.0]
+    base = spark.createDataFrame(list(zip(idx, v, w)), ["ts", "v", "w"])
+    f = from_spark(base, index_col="ts")[["v", "w"]]
+    wfr = pd.DataFrame({"v": v, "w": w}, index=idx)
+    for agg in ("mean", "sum", "count"):
+        got = getattr(f.resample("7min"), agg)().to_pandas().sort_index()
+        want = getattr(wfr.resample("7min"), agg)()
+        pd.testing.assert_frame_equal(
+            got, want, check_dtype=False, check_names=False, check_freq=False
+        )
+
+
+def test_frame_pct_change_exact(spark):
+    """pandas computes data / data.shift() - 1; (v - prev) / prev is the
+    same algebra but other last-ulp floats — exact equality pins it."""
+    raw = {
+        "x": [1.0, 2.0, np.nan, 4.0, 5.0, 3.5, np.nan],
+        "y": [2.0, 4.0, 6.0, np.nan, 10.0, 0.0, 1.0],
+    }
+    f = DataFrame(raw, spark=spark)
+    pdf = pd.DataFrame(raw)
+    for kw, want in (
+        ({}, pdf.ffill().pct_change(fill_method=None)),
+        ({"fill_method": None}, pdf.pct_change(fill_method=None)),
+    ):
+        pd.testing.assert_frame_equal(
+            f.pct_change(**kw).to_pandas(), want, check_exact=True
+        )
+
+
+def test_frame_ewm_single_group_scale_guard(spark, monkeypatch):
+    """Frame ewm runs every column through ONE Arrow group — the same loud
+    guard as the Series form must fire and name the per-key shape."""
+    import pontem_spark.core.limits as limits
+
+    monkeypatch.setattr(limits, "MAX_SINGLE_GROUP_ROWS", 5)
+    f = DataFrame({"a": [float(i) for i in range(10)], "b": [1.0] * 10}, spark=spark)
+    with pytest.raises(ValueError, match="GroupedEwm"):
+        f.ewm(alpha=0.3).mean()
+    monkeypatch.setattr(limits, "MAX_SINGLE_GROUP_ROWS", 1000)
+    assert f.ewm(alpha=0.3).mean().to_pandas().shape == (10, 2)
+
+
+def test_frame_rolling_median(spark):
+    raw = {"x": [1.0, 5.0, np.nan, 4.0, 2.0, 8.0], "y": [3.0, 1.0, 2.0, np.nan, np.nan, 7.0]}
+    pfr, wfr = DataFrame(raw, spark=spark), pd.DataFrame(raw)
+    _eq_frames(pfr.rolling(3).median(), wfr.rolling(3).median())
+    _eq_frames(
+        pfr.rolling(3, min_periods=1).median(), wfr.rolling(3, min_periods=1).median()
+    )
 
 
 def test_frame_dot_reorder_levels(spark):

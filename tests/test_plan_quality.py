@@ -336,7 +336,7 @@ def test_mad_outliers_broadcast_stats(spark, sf_dir):
 
 
 def test_frame_rolling_single_sort(spark):
-    """FrameRolling over 3 columns must plan exactly ONE Sort (the shared
+    """Frame rolling over 3 columns must plan exactly ONE Sort (the shared
     window), not one per column."""
     from pontem_spark.core import DataFrame as PFrame
 
@@ -741,6 +741,40 @@ def test_dup_label_rowalign_joins_stay_equi(spark):
     plan2 = physical_plan(df.assign(su=df["u"].shift(1)).to_spark())
     assert "Join" not in plan2, plan2  # same-anchor composition
     assert "CartesianProduct" not in plan2, plan2
+
+
+def test_window_free_frame_transforms_compose_without_join(spark):
+    """A window-free frame's visible-order transforms stay on the frame's
+    own anchor (core/window.py ``Visible``), so d - d.shift(1),
+    d - d.cumsum(), d - d.ffill() and d - d.rolling(2).sum() compose
+    column-wise with no Join, exactly like d["x"] - d["x"].shift(1).
+    Under duplicate index labels that same-anchor pairing is what keeps
+    the values positional, like pandas."""
+    import pandas as pd
+
+    from pontem_spark.core import DataFrame
+    from pontem_spark.plans import physical_plan
+
+    raw = {"x": [1.0, 2.0, 4.0, 7.0], "y": [3.0, None, 5.0, 1.0]}
+    ops = {
+        "shift": lambda d: d - d.shift(1),
+        "cumsum": lambda d: d - d.cumsum(),
+        "ffill": lambda d: d - d.ffill(),
+        "rolling": lambda d: d - d.rolling(2).sum(),
+    }
+    d = DataFrame(raw, spark=spark)
+    plan = physical_plan((d["x"] - d["x"].shift(1)).to_spark())
+    assert "Join" not in plan, plan
+    for name, op in ops.items():
+        plan = physical_plan(op(d).to_spark())
+        assert "Join" not in plan, (name, plan)
+
+    dup = DataFrame(raw, index=[5, 5, 7, 7], spark=spark)
+    pdup = pd.DataFrame(raw, index=[5, 5, 7, 7])
+    for name, op in ops.items():
+        pd.testing.assert_frame_equal(
+            op(dup).to_pandas(), op(pdup), check_dtype=False, obj=name
+        )
 
 
 def test_r14_frame_alignment_plan_shapes(spark, sf_dir):

@@ -8,7 +8,7 @@ sort of a slice where that pair repeats). Three fixes, pinned here:
 
 1. POSITIONAL OPS COMPOSE ON THEIR SOURCE ANCHOR. shift/cumsum/
    pct_change on a window-free value column build their window directly
-   over the anchor (core/series.py _window_free), so s ⊕ s.shift() and
+   over the anchor (core/window.py _window_free), so s ⊕ s.shift() and
    f[c] = s.diff() are column compositions — zero joins, exact pairing
    even under tie-ful specs. A binop meeting its own materialized
    derivation (diff chains, windowed sources) pairs through the recorded

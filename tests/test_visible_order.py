@@ -12,6 +12,11 @@ in one sweep, all in two classes:
    so a sorted frame COMPUTED in unsorted order — wrong values, not
    just wrong display order — and set_index rebound specs that named
    INDEX_COL (positional slices) to the NEW index.
+
+The module also holds the seeded window-family differential (rolling /
+expanding / ewm over the Series and frame forms, grouped transform,
+dt.round ties) and the resample/asfreq and reshape outputs as chain
+links, each compared against pandas.
 """
 from __future__ import annotations
 
@@ -385,3 +390,418 @@ def test_series_chains_keep_values_and_order(spark, chain):
         s, ps = SERIES_OPS[name](s), SERIES_OPS[name](ps)
     got = s.to_pandas()
     _eq_frame(pd.DataFrame({"v": got.values}, index=got.index), ps.to_frame("v"))
+
+
+# -- seeded rolling / expanding / ewm differential ----------------------------
+# The window-family differential over the Series form and the frame form
+# (one frame column per NaN density, one shared window spec): window ×
+# min_periods × NaN density × agg, and com/span/alpha/halflife × adjust ×
+# ignore_na, against pandas with the default seeds 11 and 42.
+
+_DENSITIES = (0.0, 0.18, 0.5)
+_ROLL_AGGS = ("mean", "sum", "min", "max", "std", "var", "median", "count")
+
+
+def _window_data(seed: int, n: int) -> "dict[str, list]":
+    import random
+
+    rng = random.Random(seed)
+    return {
+        f"d{round(p * 100)}": [
+            np.nan if rng.random() < p else round(rng.uniform(-4, 4), 2)
+            for _ in range(n)
+        ]
+        for p in _DENSITIES
+    }
+
+
+def _window_forms(spark, form: str, data: "dict[str, list]"):
+    """(engine object, pandas twin): the 18% column as a Series, or the
+    whole frame."""
+    if form == "series":
+        return Series(data["d18"], spark=spark), pd.Series(data["d18"])
+    return DataFrame(data, spark=spark), pd.DataFrame(data)
+
+
+def _assert_close(got, want, label: str) -> None:
+    got = got if isinstance(got, pd.DataFrame) else got.to_frame("v")
+    want = want if isinstance(want, pd.DataFrame) else want.to_frame("v")
+    assert got.shape == want.shape, label
+    for c in want.columns:
+        for i, (a, b) in enumerate(zip(got[c].values, want[c].values)):
+            if pd.isna(a) or pd.isna(b):
+                assert bool(pd.isna(a)) == bool(pd.isna(b)), (label, c, i, a, b)
+            else:
+                assert abs(float(a) - float(b)) < 1e-7 * max(1.0, abs(float(b))), (
+                    label, c, i, a, b,
+                )
+
+
+def _one_collect(results: dict) -> "dict[str, pd.DataFrame]":
+    """Collect many window results over one source in ONE job: window-free
+    sources keep every result on the source's anchor, so setitem assembles
+    them column-wise."""
+    out = None
+    for label, r in results.items():
+        cols = {label: r} if isinstance(r, Series) else {f"{label}|{c}": r[c] for c in r.columns}
+        for name, col in cols.items():
+            if out is None:
+                out = col.to_frame(name)
+            else:
+                out[name] = col
+    pdf = out.to_pandas()
+    return {
+        label: pdf[[c for c in pdf.columns if c == label or c.startswith(label + "|")]]
+        .rename(columns=lambda c: c.split("|", 1)[-1])
+        for label in results
+    }
+
+
+def _window_sweep(eng, pdo, windows: "dict[str, tuple]") -> None:
+    results, wants = {}, {}
+    for label, (kind, args, kw, agg) in windows.items():
+        results[label] = getattr(getattr(eng, kind)(*args, **kw), agg)()
+        wants[label] = getattr(getattr(pdo, kind)(*args, **kw), agg)()
+    got = _one_collect(results)
+    for label, want in wants.items():
+        g = got[label]
+        _assert_close(g.iloc[:, 0] if isinstance(want, pd.Series) else g, want, label)
+
+
+@pytest.mark.parametrize("seed", [11, 42])
+@pytest.mark.parametrize("form", ["series", "frame"])
+@pytest.mark.parametrize("window", [2, 4, 7])
+def test_rolling_differential(spark, seed, form, window):
+    eng, pdo = _window_forms(spark, form, _window_data(seed, 30))
+    _window_sweep(eng, pdo, {
+        f"rolling w{window} mp{minp} {agg}": ("rolling", (window,), {"min_periods": minp}, agg)
+        for minp in (None, 1, window)
+        for agg in _ROLL_AGGS
+    })
+
+
+@pytest.mark.parametrize("seed", [11, 42])
+@pytest.mark.parametrize("form", ["series", "frame"])
+def test_expanding_differential(spark, seed, form):
+    eng, pdo = _window_forms(spark, form, _window_data(seed, 30))
+    _window_sweep(eng, pdo, {
+        f"expanding mp{minp} {agg}": ("expanding", (), {"min_periods": minp}, agg)
+        for minp in (1, 3)
+        for agg in _ROLL_AGGS
+    })
+
+
+@pytest.mark.parametrize("seed", [11, 42])
+@pytest.mark.parametrize("form", ["series", "frame"])
+@pytest.mark.parametrize(
+    "kw", [{"com": 2.0}, {"span": 5.0}, {"alpha": 0.3}, {"halflife": 3.0}],
+    ids=["com", "span", "alpha", "halflife"],
+)
+def test_ewm_differential(spark, seed, form, kw):
+    eng, pdo = _window_forms(spark, form, _window_data(seed + 1000, 25))
+    for adjust in (True, False):
+        for ignore_na in (True, False):
+            got = eng.ewm(adjust=adjust, ignore_na=ignore_na, **kw).mean().to_pandas()
+            want = pdo.ewm(adjust=adjust, ignore_na=ignore_na, **kw).mean()
+            _assert_close(got, want, f"ewm {kw} adjust={adjust} ignore_na={ignore_na}")
+
+
+@pytest.mark.parametrize("seed", [11, 42])
+def test_grouped_transform_differential(spark, seed):
+    """groupby(k)[v].transform over NaN-bearing values and NaN keys."""
+    import random
+
+    rng = random.Random(seed + 2000)
+    data = {
+        "g": [rng.choice(["a", "b", "c", None]) for _ in range(40)],
+        "v": [np.nan if rng.random() < 0.15 else round(rng.uniform(-4, 4), 2) for _ in range(40)],
+    }
+    df, pdf = DataFrame(data, spark=spark), pd.DataFrame(data)
+    for how in ("mean", "sum", "min", "max", "count", "std"):
+        got = df.groupby("g")["v"].transform(how).to_pandas()
+        _assert_close(got, pdf.groupby("g")["v"].transform(how), f"transform {how}")
+
+
+def test_dt_round_half_even_ties(spark):
+    """pandas Timestamp.round sends .5 ties to the EVEN bucket."""
+    stamps = pd.Series(pd.to_datetime([
+        "2021-01-01 00:00:30", "2021-01-01 00:01:30", "2021-01-01 00:02:30",
+        "2021-01-01 06:00:00", "2021-01-01 18:00:00",
+        "2021-01-01 00:00:29.999999", "2021-01-01 00:07:30", "2021-01-01 00:12:30",
+    ], format="mixed"))
+    s = Series(list(stamps), spark=spark)
+    for freq in ("min", "5min", "12h", "h"):
+        got = [str(t) for t in s.dt.round(freq).to_pandas()]
+        assert got == [str(t) for t in stamps.dt.round(freq)], freq
+
+
+# -- resample / asfreq outputs as chain links ---------------------------------
+# The bucket grid and the asfreq grid feeding positional ops, aligned
+# arithmetic (same grid and different grids), rolling windows and frame
+# reshapes, compared whole-chain against pandas on index and values.
+
+_TS = pd.to_datetime([
+    "2024-03-01 00:10", "2024-03-01 05:45", "2024-03-01 03:20",
+    "2024-03-01 11:05", "2024-03-01 08:30", "2024-03-01 17:55",
+    "2024-03-01 14:40", "2024-03-01 23:59", "2024-03-02 02:15",
+    "2024-03-02 07:50",
+])
+_TS_VALS = [1.0, 2.5, None, 4.0, 5.5, 7.0, None, 8.5, 10.0, 11.5]
+_HOURLY = pd.to_datetime([
+    "2024-01-01 00:10", "2024-01-01 00:40", "2024-01-01 01:20",
+    "2024-01-01 03:05", "2024-01-01 03:50",
+])
+
+
+def _irregular(spark, sort: bool = False):
+    """Irregular timestamps, NaN values, unsorted arrival (or sorted: pandas
+    asfreq(method=...) needs a monotonic index)."""
+    ps = pd.Series(_TS_VALS, index=_TS, dtype="float64")
+    if sort:
+        ps = ps.sort_index()
+    return Series(list(ps.values), index=list(ps.index), spark=spark), ps
+
+
+def _hourly(spark):
+    vals = [1.0, 3.0, 5.0, 7.0, 9.0]
+    return Series(vals, index=_HOURLY, spark=spark), pd.Series(vals, index=_HOURLY)
+
+
+def _grid_case(spark, name):
+    s, ps = _irregular(spark)
+    ss, pss = _irregular(spark, sort=True)
+    h, ph = _hourly(spark)
+    if name == "resample_mean>sort_values":
+        return h.resample("1h").mean().sort_values(), ph.resample("1h").mean().sort_values()
+    if name == "resample_sum>cumsum":
+        return h.resample("1h").sum().cumsum(), ph.resample("1h").sum().cumsum()
+    if name == "resample_count>binop":
+        return h.resample("1h").count() * 2, ph.resample("1h").count() * 2
+    if name == "resample_mean>dropna>diff":
+        return (
+            h.resample("1h").mean().dropna().diff(),
+            ph.resample("1h").mean().dropna().diff(),
+        )
+    if name == "asfreq>fillna>cumsum":
+        return (
+            h.asfreq("30min").fillna(0.0).cumsum(),
+            ph.asfreq("30min").fillna(0.0).cumsum(),
+        )
+    if name == "asfreq_ffill>shift":
+        return (
+            h.asfreq("30min", method="ffill").shift(1),
+            ph.asfreq("30min", method="ffill").shift(1),
+        )
+    if name == "resample6h_mean>cumsum":
+        return s.resample("6h").mean().cumsum(), ps.resample("6h").mean().cumsum()
+    if name == "resample7h_sum>shift":
+        return s.resample("7h").sum().shift(1), ps.resample("7h").sum().shift(1)
+    if name == "resample_mean+max":
+        return (
+            s.resample("6h").mean() + s.resample("6h").max(),
+            ps.resample("6h").mean() + ps.resample("6h").max(),
+        )
+    if name == "resample6h-12h":
+        return (
+            s.resample("6h").sum() - s.resample("12h").sum(),
+            ps.resample("6h").sum() - ps.resample("12h").sum(),
+        )
+    if name == "resample>rolling3":
+        return (
+            s.resample("6h").mean().rolling(3).mean(),
+            ps.resample("6h").mean().rolling(3).mean(),
+        )
+    if name == "asfreq4h_ffill>cumsum":
+        return (
+            ss.asfreq("4h", method="ffill").cumsum(),
+            pss.asfreq("4h", method="ffill").cumsum(),
+        )
+    if name == "asfreq*2+resample_min":
+        return (
+            ss.asfreq("6h", method="ffill") * 2.0 + ss.resample("6h").min(),
+            pss.asfreq("6h", method="ffill") * 2.0 + pss.resample("6h").min(),
+        )
+    if name == "resample>reset_index":
+        return (
+            s.resample("6h").mean().reset_index(),
+            ps.resample("6h").mean().reset_index(),
+        )
+    if name == "resample>to_frame>assign":
+        f = s.resample("6h").mean().to_frame("m")
+        pf = ps.resample("6h").mean().to_frame("m")
+        return f.assign(cs=f["m"].cumsum()), pf.assign(cs=pf["m"].cumsum())
+    assert name == "resample>groupby_day"
+    f = s.resample("6h").sum().to_frame("v").reset_index()
+    pf = ps.resample("6h").sum().to_frame("v").reset_index()
+    f = f.assign(d=f[f.columns[0]].dt.floor("d"))
+    pf = pf.assign(d=pf[pf.columns[0]].dt.floor("d"))
+    return (
+        f.groupby("d").agg({"v": "sum"}).sort_index(),
+        pf.groupby("d").agg({"v": "sum"}).sort_index(),
+    )
+
+
+_GRID_CASES = [
+    "resample_mean>sort_values", "resample_sum>cumsum", "resample_count>binop",
+    "resample_mean>dropna>diff", "asfreq>fillna>cumsum", "asfreq_ffill>shift",
+    "resample6h_mean>cumsum", "resample7h_sum>shift", "resample_mean+max",
+    "resample6h-12h", "resample>rolling3", "asfreq4h_ffill>cumsum",
+    "asfreq*2+resample_min", "resample>reset_index", "resample>to_frame>assign",
+    "resample>groupby_day",
+]
+
+
+def _same_cell(a, b) -> bool:
+    if isinstance(a, tuple) or isinstance(b, tuple):
+        return len(a) == len(b) and all(_same_cell(x, y) for x, y in zip(a, b))
+    if pd.isna(a) or pd.isna(b):
+        return bool(pd.isna(a)) and bool(pd.isna(b))
+    if isinstance(b, (int, float, np.floating, np.integer)):
+        return abs(float(a) - float(b)) < 1e-9 * max(1.0, abs(float(b)))
+    return a == b
+
+
+def _assert_same_labeled(got, want) -> None:
+    """Whole-chain pandas parity: column labels, index and values, in the
+    displayed order."""
+    got = got if isinstance(got, pd.DataFrame) else got.to_frame("v")
+    want = want if isinstance(want, pd.DataFrame) else want.to_frame("v")
+    assert [str(c) for c in got.columns] == [str(c) for c in want.columns]
+    assert len(got) == len(want)
+    for a, b in zip(got.index, want.index):
+        assert _same_cell(a, b), ("index", list(got.index), list(want.index))
+    for cg, cw in zip(got.columns, want.columns):
+        for a, b in zip(got[cg], want[cw]):
+            assert _same_cell(a, b), (cg, list(got[cg]), list(want[cw]))
+
+
+@pytest.mark.parametrize("name", _GRID_CASES)
+def test_resample_asfreq_outputs_as_chain_links(spark, name):
+    got, want = _grid_case(spark, name)
+    _assert_same_labeled(got.to_pandas(), want)
+
+
+# -- reshape outputs as chain links -------------------------------------------
+# unstack / pivot / value_counts / xs / str.extract / str.partition results
+# feeding sorts, assigns, melts, groupbys and value_counts, plus idxmax /
+# idxmin on sorted and derived series, compared whole-chain against pandas.
+
+_DOCS = [
+    "alpha-01 beta", "gamma-22 delta", "epsilon-3 zeta", None,
+    "eta-44 theta", "iota-5 kappa", "nomatch", "lambda-66 mu",
+]
+_PAT = r"(?P<word>[a-z]+)-(?P<num>\d+)"
+
+
+def _reshape_case(spark, name):
+    pmi = pd.Series(
+        [1.0, 2.0, 3.0, 4.0],
+        index=pd.MultiIndex.from_tuples([("a", "x"), ("a", "y"), ("b", "x"), ("b", "y")]),
+    )
+    gmi = DataFrame(
+        {"l0": ["a", "a", "b", "b"], "l1": ["x", "y", "x", "y"], "v": [1.0, 2.0, 3.0, 4.0]},
+        spark=spark,
+    ).set_index(["l0", "l1"])["v"]
+    ppv = pd.DataFrame(
+        {"r": ["r1", "r1", "r2", "r2"], "c": ["c1", "c2", "c1", "c2"], "v": [1.0, 2.0, 3.0, 4.0]}
+    )
+    pp = ppv.pivot(index="r", columns="c", values="v")
+    pp.columns.name = None
+    gp = DataFrame(ppv, spark=spark).pivot(index="r", columns="c", values="v")
+    words = ["a", "b", "a", "c", "b", "a"]
+    pv, gv = pd.Series(words), Series(words, spark=spark)
+    docs, pdocs = Series(_DOCS, spark=spark), pd.Series(_DOCS, dtype="object")
+    if name == "unstack>sort_index":
+        return gmi.unstack().sort_index(), pmi.unstack().sort_index()
+    if name == "unstack>assign_sum":
+        gu, pu = gmi.unstack(), pmi.unstack()
+        return gu.assign(t=gu["x"] + gu["y"]), pu.assign(t=pu["x"] + pu["y"])
+    if name == "pivot>sort_index":
+        return gp.sort_index(), pp.sort_index()
+    if name == "pivot>reset>melt":
+        return (
+            gp.reset_index().melt(id_vars=["r"]).reset_index(drop=True),
+            pp.reset_index().melt(id_vars=["r"]).astype({"value": "float"}).reset_index(drop=True),
+        )
+    if name == "value_counts>binop":
+        return gv.value_counts() * 10, pv.value_counts() * 10
+    if name == "value_counts>sort_index":
+        return gv.value_counts().sort_index(), pv.value_counts().sort_index()
+    if name == "xs>sort_values":
+        return gmi.xs("a", level=0).sort_values(), pmi.xs("a", level=0).sort_values()
+    if name == "extract>set_index>sort_index":
+        return (
+            docs.str.extract(_PAT, expand=True).set_index("word").sort_index(),
+            pdocs.str.extract(_PAT, expand=True).set_index("word").sort_index(),
+        )
+    if name == "extract>groupby":
+        f, pf = docs.str.extract(_PAT, expand=True), pdocs.str.extract(_PAT, expand=True)
+        f = f.assign(n=f["num"].astype("float64"))
+        f = f.assign(wl=f["word"].str.len())
+        pf = pf.assign(n=pf["num"].astype("float64"))
+        pf = pf.assign(wl=pf["word"].str.len().astype("float64"))
+        got = f.groupby("wl").agg({"n": "sum"}).to_pandas().sort_index()
+        want = pf.groupby("wl").agg({"n": "sum"}).sort_index()
+        got.index = [float(i) for i in got.index]
+        want.index = [float(i) for i in want.index]
+        return got, want
+    if name == "partition":
+        pf = pdocs.str.partition("-")
+        pf.columns = [str(c) for c in pf.columns]
+        return docs.str.partition("-"), pf
+    if name == "partition>stack":
+        # compared as (index tuple -> value) maps: stack drops NaN rows in
+        # both engines
+        pf = pdocs.str.partition("-")
+        pf.columns = [str(c) for c in pf.columns]
+        got, want = docs.str.partition("-").stack().to_pandas(), pf.stack()
+
+        def cells(s):
+            return {(str(i), str(j)): v for (i, j), v in s.items()}
+
+        return pd.Series([cells(got) == cells(want)]), pd.Series([True])
+    if name == "extract>pivot":
+        f = docs.str.extract(_PAT, expand=True).dropna()
+        pf = pdocs.str.extract(_PAT, expand=True).dropna()
+        f = f.assign(one=f["num"].astype("float64") * 0 + 1.0)
+        pf = pf.assign(one=pf["num"].astype("float64") * 0 + 1.0)
+        got = f.pivot(index="word", columns="num", values="one").to_pandas().sort_index()
+        want = pf.pivot(index="word", columns="num", values="one").sort_index()
+        got.columns = [str(c) for c in got.columns]
+        want.columns = [str(c) for c in want.columns]
+        return got[sorted(got.columns)], want[sorted(want.columns)]
+    if name == "extract>value_counts":
+        return (
+            docs.str.extract(r"([a-z]+)-").fillna("none").value_counts().sort_index(),
+            pdocs.str.extract(r"([a-z]+)-", expand=False)
+            .fillna("none").value_counts().sort_index(),
+        )
+    if name == "extract>set_index>to_frame>reset_index":
+        def chain(x):
+            num = x.str.extract(_PAT, expand=True).set_index("word")["num"]
+            return num.to_frame("num").reset_index()
+
+        return chain(docs), chain(pdocs)
+    ps2 = pd.Series([4.0, 8.0, 2.0], index=[30, 10, 20])
+    gs2 = Series([4.0, 8.0, 2.0], index=[30, 10, 20], spark=spark)
+    if name == "sort_values>idxmax":
+        return pd.Series([gs2.sort_values().idxmax()]), pd.Series([ps2.sort_values().idxmax()])
+    assert name == "neg>idxmin"
+    return pd.Series([(gs2 * -1).idxmin()]), pd.Series([(ps2 * -1).idxmin()])
+
+
+_RESHAPE_CASES = [
+    "unstack>sort_index", "unstack>assign_sum", "pivot>sort_index",
+    "pivot>reset>melt", "value_counts>binop", "value_counts>sort_index",
+    "xs>sort_values", "extract>set_index>sort_index", "extract>groupby",
+    "partition", "partition>stack", "extract>pivot", "extract>value_counts",
+    "extract>set_index>to_frame>reset_index", "sort_values>idxmax", "neg>idxmin",
+]
+
+
+@pytest.mark.parametrize("name", _RESHAPE_CASES)
+def test_reshape_outputs_as_chain_links(spark, name):
+    got, want = _reshape_case(spark, name)
+    if not isinstance(got, (pd.DataFrame, pd.Series)):
+        got = got.to_pandas()
+    _assert_same_labeled(got, want)
