@@ -47,6 +47,7 @@ from pyspark.sql import Column, DataFrame as SparkDataFrame, functions as F
 
 INT_DTYPES = ("tinyint", "smallint", "int", "bigint")
 _FLOAT_DTYPES = ("float", "double")
+NUMERIC_DTYPES = INT_DTYPES + _FLOAT_DTYPES
 _TIMESTAMPS = ("timestamp", "timestamp_ntz")
 COMPARISONS = frozenset({"eq", "ne", "lt", "le", "gt", "ge"})
 _ORDER_CMP = frozenset({"lt", "le", "gt", "ge"})
@@ -118,6 +119,16 @@ def missing(col: Column, dt: "str | None") -> Column:
     if dt in _FLOAT_DTYPES:
         return col.isNull() | F.isnan(col)
     return col.isNull()
+
+
+def valid(col: Column, dt: "str | None") -> Column:
+    """``col`` with pandas-missing cells blanked to NULL: Spark aggregates
+    and window functions skip NULL but PROPAGATE NaN (sum/mean/max of a
+    NaN-bearing column is NaN, count counts it), the opposite of pandas'
+    skipna — every reduction aggregates over this."""
+    if dt in _FLOAT_DTYPES:
+        return F.when(F.isnan(col), F.lit(None)).otherwise(col)
+    return col
 
 
 # -- pandas-corrected column functions ---------------------------------

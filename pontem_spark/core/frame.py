@@ -14,15 +14,17 @@ from typing import Any, Iterable, Mapping
 from pyspark.sql import Column, DataFrame as SparkDataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType
 
-from pontem_spark.core import window as win
+from pontem_spark.core import reductions, window as win
 from pontem_spark.core.cells import (
     COMPARISONS,
+    NUMERIC_DTYPES,
     combine_cells,
     dtype_class,
     dtypes,
     missing,
     scalar_dtype,
     unary,
+    valid,
 )
 from pontem_spark.core.internal import (
     INDEX_COL,
@@ -177,12 +179,9 @@ class DataFrame:
         mapping = self._dtype_map()
         return pd.Series({c: mapping[c] for c in self._columns})
 
-    def _dtype_map(self) -> "dict[str, str]":
-        """Spark dtype name per materialized column (one analysis)."""
-        return {
-            f.name: f.dataType.simpleString()
-            for f in self._materialized().schema.fields
-        }
+    def _dtype_map(self) -> "dict[str, str | None]":
+        """Spark dtype name per column (one ``cells.dtypes`` analysis)."""
+        return dict(zip(self._columns, dtypes(self._internal.sdf, *self._columns.values())))
 
     # -- materialization ------------------------------------------------------
 
@@ -643,16 +642,18 @@ class DataFrame:
         materialize in index order, so ``All`` sorts alphabetically among
         the keys rather than pinning to the last row as pandas prints it.
         """
-        from pontem_spark.core.groupby import _AGGS
+        base = self._materialized()
+        dt = dict(base.dtypes).get(values)
+        # NaN is pandas-missing: count must not count it, sum/mean/min/max
+        # must skip it (r8 probe: a NaN-only cell counted 1)
+        valid_v = valid(base[values], dt)
 
-        agg = _AGGS[aggfunc]
-        # margins must mirror the cell path's sum min_count=0 convention
-        # (pandas: an all-missing group's sum is 0, never NULL)
-        m_agg = (
-            (lambda c: F.coalesce(agg(c), F.lit(0)))
-            if aggfunc == "sum"
-            else agg
-        )
+        def agg(empty: bool = False) -> Column:
+            # the core/reductions.py entry; ``empty`` adds pandas' result
+            # over no values (sum 0), the margins' min_count=0 convention
+            return reductions.column(
+                aggfunc, base[values], dt, order=base[INDEX_COL], empty=empty
+            )
 
         # margins over the COLUMNS path follow pandas' dropna rule (r9
         # grid probe): with dropna=True pandas computes margins from the
@@ -660,20 +661,13 @@ class DataFrame:
         # vanishes and reindexes to NaN; with dropna=False the group
         # exists and sum/count give 0 (min_count=0). sum: NULL-vs-0 via
         # coalesce; count: natively 0, nulled via when(e > 0) instead.
-        def m_margin(c):
-            e = agg(c)
+        def m_margin():
+            e = agg()
             if aggfunc == "sum":
-                return e if dropna else F.coalesce(e, F.lit(0))
+                return e if dropna else agg(True)
             if aggfunc == "count":
                 return F.when(e > 0, e) if dropna else e
             return e
-        base = self._materialized()
-        schema = dict(base.dtypes)
-        # NaN is pandas-missing: count must not count it, sum/mean/min/max
-        # must skip it (r8 probe: a NaN-only cell counted 1)
-        valid = base[values]
-        if schema.get(values) in ("double", "float"):
-            valid = F.when(~F.isnan(valid), valid)
 
         if columns is None:
             # pandas allows an index-only pivot_table: a plain grouped
@@ -687,7 +681,7 @@ class DataFrame:
             if not margins:
                 src = self
                 if drop_rows:
-                    fb = base.filter(valid.isNotNull())
+                    fb = base.filter(valid_v.isNotNull())
                     src = DataFrame._from_internal(
                         InternalFrame(fb, INDEX_COL, self._internal.index_name),
                         {c: fb[c] for c in self._columns},
@@ -701,14 +695,14 @@ class DataFrame:
                     "value"
                 )
             per_base = (
-                base.filter(valid.isNotNull()) if drop_rows else base
+                base.filter(valid_v.isNotNull()) if drop_rows else base
             )
             per_key = (
                 per_base.filter(per_base[index].isNotNull())
                 .groupBy(F.col(index).cast("string").alias(index))
-                .agg(m_agg(valid).alias(values))
+                .agg(agg(True).alias(values))
             )
-            total = base.select(m_agg(valid).alias(values)).withColumn(
+            total = base.select(agg(True).alias(values)).withColumn(
                 index, F.lit(margins_name)
             )
             sdf = per_key.unionByName(total.select(index, values))
@@ -729,8 +723,8 @@ class DataFrame:
         # (sum -> 0.0, count -> 0 in pandas); the non-missing counts also
         # feed the dropna column probe below
         raw = pivoted.agg(
-            agg(valid).alias("__pva"),
-            F.count(valid).alias("__pvc"),
+            agg().alias("__pva"),
+            F.count(valid_v).alias("__pvc"),
             F.count(F.lit(1)).alias("__pvn"),
         )
         # Always derive pivot names from raw.columns, even when
@@ -807,7 +801,7 @@ class DataFrame:
             sdf = sdf.withColumn(index, F.col(index).cast("string"))
             row_tot = (
                 base.groupBy(F.col(index).cast("string").alias(index))
-                .agg(m_margin(valid).alias(margins_name))
+                .agg(m_margin().alias(margins_name))
             )
             sdf = sdf.join(row_tot, index, "left")
             col_grouped = base.groupBy()
@@ -819,11 +813,11 @@ class DataFrame:
             # grand total ≠ reindexed margin: pandas COMPUTES it over the
             # (dropna'd) data directly, so sum/count give 0 on zero valid
             # rows in BOTH dropna modes (only vanished groups reindex to
-            # NaN) — hence m_agg here, m_margin for the per-row/column ones
+            # NaN) — hence agg(True) here, m_margin for the per-row/column ones
             margin_row = (
-                col_pivoted.agg(m_margin(valid))
+                col_pivoted.agg(m_margin())
                 .withColumn(index, F.lit(margins_name))
-                .crossJoin(base.select(m_agg(valid).alias(margins_name)))
+                .crossJoin(base.select(agg(True).alias(margins_name)))
             )
             # the margin pivot re-derives every data pivot value (a
             # superset of sdf's, which dropna may have pruned) — select
@@ -1183,20 +1177,18 @@ class DataFrame:
                 self._internal,
                 {
                     k: (
-                        F.coalesce(self._valid_col(k, schema), F.lit(value[k]))
+                        F.coalesce(valid(self._columns[k], schema.get(k)), F.lit(value[k]))
                         if k in value
                         else self._columns[k]
                     )
                     for k in self._columns
                 },
             )
-        numeric = ("tinyint", "smallint", "int", "bigint", "float", "double")
-
         def fillable(t: str) -> bool:
             if isinstance(value, bool):
                 return t == "boolean"
             if isinstance(value, (int, float)):
-                return t in numeric or t.startswith("decimal")
+                return t in NUMERIC_DTYPES or t.startswith("decimal")
             if isinstance(value, str):
                 return t == "string"
             return True
@@ -1205,7 +1197,7 @@ class DataFrame:
             self._internal,
             {
                 k: (
-                    F.coalesce(self._valid_col(k, schema), F.lit(value))
+                    F.coalesce(valid(self._columns[k], schema.get(k)), F.lit(value))
                     if fillable(schema.get(k, ""))
                     else self._columns[k]
                 )
@@ -1221,14 +1213,14 @@ class DataFrame:
         schema = self._dtype_map()
         return DataFrame._from_internal(
             self._internal,
-            {k: self._valid_col(k, schema).isNull() for k in self._columns},
+            {k: valid(self._columns[k], schema.get(k)).isNull() for k in self._columns},
         )
 
     def notna(self) -> "DataFrame":
         schema = self._dtype_map()
         return DataFrame._from_internal(
             self._internal,
-            {k: self._valid_col(k, schema).isNotNull() for k in self._columns},
+            {k: valid(self._columns[k], schema.get(k)).isNotNull() for k in self._columns},
         )
 
     isnull = isna
@@ -1282,7 +1274,7 @@ class DataFrame:
                 clipped = F.greatest(clipped, F.lit(lower))
             if upper is not None:
                 clipped = F.least(clipped, F.lit(upper))
-            cols[c] = F.when(self._valid_col(c, schema).isNotNull(), clipped)
+            cols[c] = F.when(valid(self._columns[c], schema.get(c)).isNotNull(), clipped)
         return DataFrame._from_internal(self._internal, cols)
 
     def _visible(self, rule, *args, numeric: "str | None" = None) -> "DataFrame":
@@ -1356,9 +1348,10 @@ class DataFrame:
         return win.Ewm(self, com, span, halflife, alpha, adjust, ignore_na, min_periods)
 
     def resample(self, rule: str):
-        """Fixed-interval resample of every numeric column over a
-        timestamp index (core/window.py::resample)."""
-        return win.Resampler(self[self._numeric_cols()], rule)
+        """Fixed-interval resample of every column over a timestamp index
+        (core/window.py::resample); an aggregation that a column's dtype
+        does not take raises TypeError like pandas."""
+        return win.Resampler(self, rule)
 
     def asfreq(self, freq: str, method: str | None = None, fill_value=None) -> "DataFrame":
         return self._visible(win.asfreq, freq, method, fill_value)
@@ -1459,20 +1452,21 @@ class DataFrame:
 
     def agg(self, spec: Mapping[str, str | list[str]]):
         """{'col': 'sum'} / {'col': ['sum','mean']} → pandas DataFrame of
-        scalars, ONE aggregation pass for all requested statistics."""
+        scalars: core/reductions.py entries, ONE aggregation pass for all
+        requested statistics."""
         import pandas as pd
 
-        from pontem_spark.core.groupby import _AGGS
-
-        exprs, labels = [], []
-        for col, how in spec.items():
-            for h in [how] if isinstance(how, str) else how:
-                exprs.append(_AGGS[h](self._columns[col]).alias(f"{col}__{h}"))
-                labels.append((col, h))
-        row = self._internal.sdf.select(*exprs).first()
+        dts = self._dtype_map()
+        labels = [
+            (col, h) for col, how in spec.items()
+            for h in ([how] if isinstance(how, str) else how)
+        ]
+        row = self._internal.sdf.select(
+            *[reductions.column(h, self._columns[col], dts[col]) for col, h in labels]
+        ).first()
         out: dict[str, dict[str, Any]] = {}
         for (col, h), val in zip(labels, row):
-            out.setdefault(col, {})[h] = val
+            out.setdefault(col, {})[h] = float("nan") if val is None else val
         return pd.DataFrame(out)
 
     def melt(
@@ -1493,9 +1487,8 @@ class DataFrame:
         value_vars = value_vars or [c for c in self._columns if c not in id_vars]
         # stack() requires one common type; mirror pandas' coercion — numeric
         # mix melts to double, anything else melts to string
-        numeric = ("tinyint", "smallint", "int", "bigint", "float", "double")
         schema = self._dtype_map()
-        common = "double" if all(schema[c] in numeric for c in value_vars) else "string"
+        common = "double" if all(schema[c] in NUMERIC_DTYPES for c in value_vars) else "string"
         args = ", ".join(
             f"{i}, '{c}', CAST(`{c}` AS {common})" for i, c in enumerate(value_vars)
         )
@@ -1548,13 +1541,10 @@ class DataFrame:
         return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
 
     def nunique(self):
-        """Distinct count per column in ONE aggregation pass → pandas Series
-        (Catalyst plans multi-count-distinct as a single Expand+agg scan)."""
-        import pandas as pd
-
-        exprs = [F.count_distinct(v).alias(k) for k, v in self._columns.items()]
-        row = self._internal.sdf.select(*exprs).first()
-        return pd.Series({c: row[c] for c in self._columns})
+        """Distinct non-missing count per column in ONE aggregation pass →
+        pandas Series (Catalyst plans multi-count-distinct as a single
+        Expand+agg scan)."""
+        return self._reduce("nunique")
 
     def set_index(self, column: str | list[str], drop: bool = True) -> "DataFrame":
         """Re-point the frame's index at existing column(s) — pure metadata
@@ -1920,12 +1910,11 @@ class DataFrame:
         ``diag_const``), symmetric pandas matrix out."""
         import pandas as pd
 
-        numeric = ("tinyint", "smallint", "int", "bigint", "float", "double")
         schema = self._dtype_map()
-        cols = [c for c in self._columns if schema[c] in numeric]
+        cols = [c for c in self._columns if schema[c] in NUMERIC_DTYPES]
         # NaN is pandas-missing: corr/covar skip NULL pairwise but
         # propagate NaN into the whole cell (r8 probe) — blank NaN to NULL
-        v = {c: self._valid_col(c, schema) for c in cols}
+        v = {c: valid(self._columns[c], schema.get(c)) for c in cols}
         exprs = (
             [diag_agg(v[c]).alias(f"v_{i}") for i, c in enumerate(cols)]
             if diag_agg
@@ -1968,42 +1957,29 @@ class DataFrame:
         diag = F.var_samp if ddof == 1 else F.var_pop
         return self._pairwise_matrix(pair, diag_agg=diag, diag_const=0.0)
 
-    def _valid_col(self, name: str, schema: "dict[str, str] | None" = None):
-        """Column with pandas-missing (NULL or float NaN) blanked to NULL —
-        the frame twin of Series._valid_col: Spark aggregates skip NULL but
-        propagate NaN, the opposite of pandas skipna (r7 probe)."""
-        if schema is None:
-            schema = self._dtype_map()
-        v = self._columns[name]
-        if schema.get(name) in ("double", "float"):
-            return F.when(F.isnan(v), F.lit(None)).otherwise(v)
-        return v
-
-    def _reduce_all(self, how: str):
-        """Per-column reduction → pandas Series, one aggregation pass,
-        pandas skipna (NaN excluded like NULL)."""
+    def _reduce(self, how: str, **kw):
+        """Axis-0 reduction → pandas Series: the core/reductions.py entry
+        over every eligible column (pandas numeric_only for the arithmetic
+        ones), ONE select for all of them."""
         import pandas as pd
 
-        from pontem_spark.core.groupby import _AGGS
-
-        schema = self._dtype_map()
-        # sum/mean on a string column would ANSI-throw casting the values
-        # (pandas numeric_only=True behavior instead — min/max/count stay
-        # all-column, both engines order/count strings fine)
-        cols = self._numeric_cols() if how in ("sum", "mean") else list(self._columns)
-        exprs = [_AGGS[how](self._valid_col(k, schema)).alias(k) for k in cols]
-        row = self._internal.sdf.select(*exprs).first()
-        out = pd.Series({c: row[c] for c in cols})
-        if how == "sum":  # pandas: all-missing column sums to 0
-            out = out.fillna(0)
-        return out
+        dts = self._dtype_map()
+        cols = [c for c in self._columns if reductions.eligible(how, dts[c])]
+        if not cols:
+            return pd.Series(dtype="float64")
+        row = self._internal.sdf.select(
+            *[reductions.column(how, self._columns[c], dts[c], **kw) for c in cols]
+        ).first()
+        return pd.Series(
+            [float("nan") if v is None else v for v in row], index=cols
+        )
 
     def _numeric_cols(self) -> list[str]:
         schema = self._dtype_map()
         return [
             c
             for c in self._columns
-            if schema[c] in ("tinyint", "smallint", "int", "bigint", "float", "double")
+            if schema[c] in NUMERIC_DTYPES
         ]
 
     def _reduce_rowwise(self, how: str):
@@ -2016,7 +1992,7 @@ class DataFrame:
         from pontem_spark.core.series import Series
 
         schema = self._dtype_map()
-        cols = [self._valid_col(c, schema) for c in self._numeric_cols()]
+        cols = [valid(self._columns[c], schema.get(c)) for c in self._numeric_cols()]
         if not cols:
             raise ValueError("no numeric columns for axis=1 reduction")
         if how == "sum":
@@ -2044,88 +2020,56 @@ class DataFrame:
     def sum(self, axis: int = 0):
         if axis in (1, "columns"):
             return self._reduce_rowwise("sum")
-        return self._reduce_all("sum")
+        return self._reduce("sum")
 
     def mean(self, axis: int = 0):
         if axis in (1, "columns"):
             return self._reduce_rowwise("mean")
-        return self._reduce_all("mean")
+        return self._reduce("mean")
 
     def min(self, axis: int = 0):
         if axis in (1, "columns"):
             return self._reduce_rowwise("min")
-        return self._reduce_all("min")
+        return self._reduce("min")
 
     def max(self, axis: int = 0):
         if axis in (1, "columns"):
             return self._reduce_rowwise("max")
-        return self._reduce_all("max")
+        return self._reduce("max")
 
-    def count(self):
-        return self._reduce_all("count")
+    def count(self): return self._reduce("count")
+    def median(self): return self._reduce("median")
+    def std(self, ddof: int = 1): return self._reduce("std", ddof=ddof)
+    def var(self, ddof: int = 1): return self._reduce("var", ddof=ddof)
+    def sem(self, ddof: int = 1): return self._reduce("sem", ddof=ddof)
+    def prod(self): return self._reduce("prod")
+    def skew(self): return self._reduce("skew")
+    def kurt(self): return self._reduce("kurt")
+    def any(self): return self._reduce("any")
+    def all(self): return self._reduce("all")
 
-    def median(self):
-        return self.quantile(0.5)
+    product = prod
+    kurtosis = kurt
 
     def quantile(self, q: "float | list" = 0.5):
-        """Exact percentile per numeric column → pandas Series (scalar q)
-        or pandas DataFrame indexed by q (list q), ONE aggregation pass
-        either way (the k percentile buffers run side by side)."""
+        """Exact linear percentile per numeric column → pandas Series
+        (scalar q) or pandas DataFrame indexed by q (list q), ONE
+        aggregation pass either way."""
         import pandas as pd
 
-        schema = self._dtype_map()
-        cols = self._numeric_cols()
-        if not isinstance(q, (int, float)):
-            qs = [float(x) for x in q]
-            exprs = [
-                F.percentile(
-                    self._valid_col(c, schema), F.array(*[F.lit(x) for x in qs])
-                ).alias(c)
-                for c in cols
-            ]
-            row = self._internal.sdf.select(*exprs).first()
-            return pd.DataFrame(
-                {
-                    c: [float("nan")] * len(qs) if row[c] is None else
-                       [float("nan") if v is None else float(v) for v in row[c]]
-                    for c in cols
-                },
-                index=qs,
-                dtype="float64",
-            )
-        exprs = [
-            F.percentile(self._valid_col(c, schema), F.lit(q)).alias(c) for c in cols
-        ]
-        row = self._internal.sdf.select(*exprs).first()
-        return pd.Series({c: row[c] for c in cols}, dtype="float64")
-
-    def std(self, ddof: int = 1):
-        return self._spread("std", ddof)
-
-    def var(self, ddof: int = 1):
-        return self._spread("var", ddof)
-
-    def _spread(self, kind: str, ddof: int):
-        """std/var per numeric column, arbitrary ddof derived from
-        (var_samp, count) — one aggregation pass for every column."""
-        import pandas as pd
-
-        schema = self._dtype_map()
-        cols = self._numeric_cols()
-        exprs = []
-        for c in cols:
-            v = self._valid_col(c, schema)
-            exprs += [F.var_samp(v).alias(f"{c}__v"), F.count(v).alias(f"{c}__n")]
-        row = self._internal.sdf.select(*exprs).first()
-        out = {}
-        for c in cols:
-            v, n = row[f"{c}__v"], row[f"{c}__n"]
-            if v is None or n - ddof <= 0:
-                out[c] = float("nan")
-            else:
-                var = v * (n - 1) / (n - ddof)
-                out[c] = var**0.5 if kind == "std" else var
-        return pd.Series(out, dtype="float64")
+        if isinstance(q, (int, float)):
+            return self._reduce("quantile", q=q).astype("float64")
+        qs = [float(x) for x in q]
+        out = self._reduce("quantile", q=qs)
+        return pd.DataFrame(
+            {
+                c: [float("nan") if x is None else float(x) for x in v]
+                if isinstance(v, list) else [float("nan")] * len(qs)
+                for c, v in out.items()
+            },
+            index=qs,
+            dtype="float64",
+        )
 
     def idxmax(self):
         return self._idx_extreme(descending=True)
@@ -2141,93 +2085,37 @@ class DataFrame:
         import pandas as pd
 
         mat = self._materialized()
-        schema = {f.name: f.dataType.simpleString() for f in mat.schema.fields}
+        schema = dict(mat.dtypes)
         cols = self._numeric_cols()
         agg = F.max if descending else F.min
-
-        def valid(c):
-            v = mat[c]
-            if schema.get(c) in ("double", "float"):
-                return F.when(F.isnan(v), F.lit(None)).otherwise(v)
-            return v
-
-        row = mat.select(*[agg(valid(c)).alias(c) for c in cols]).first()
+        v = {c: valid(mat[c], schema[c]) for c in cols}
+        row = mat.select(*[agg(v[c]).alias(c) for c in cols]).first()
         extremes = {c: row[c] for c in cols}
         bad = [c for c, v in extremes.items() if v is None]
         if bad:  # pandas raises on an all-missing column
             raise ValueError(f"attempt to get arg-extreme of all-missing columns {bad}")
         row2 = mat.select(
             *[
-                F.min(F.when(valid(c) == F.lit(extremes[c]), mat[INDEX_COL])).alias(c)
+                F.min(F.when(v[c] == F.lit(extremes[c]), mat[INDEX_COL])).alias(c)
                 for c in cols
             ]
         ).first()
         return pd.Series({c: row2[c] for c in cols})
 
     def describe(self):
-        """count/mean/std/min/quartiles/max for every numeric column —
+        """pandas describe (core/reductions.py) of every numeric column —
         ONE aggregation pass total (pandas layout)."""
         import pandas as pd
 
-        schema = self._dtype_map()
-        numeric = [
-            c
-            for c in self._columns
-            if schema[c] in ("tinyint", "smallint", "int", "bigint", "float", "double")
-        ]
-        stats = [
-            ("count", F.count), ("mean", F.mean), ("std", F.stddev_samp), ("min", F.min),
-            ("25%", lambda col: F.percentile(col, F.lit(0.25))),
-            ("50%", lambda col: F.percentile(col, F.lit(0.5))),
-            ("75%", lambda col: F.percentile(col, F.lit(0.75))),
-            ("max", F.max),
-        ]
-        exprs = [
-            fn(self._valid_col(c, schema)).alias(f"{c}__{label}")
-            for c in numeric
-            for label, fn in stats
-        ]
-        row = self._internal.sdf.select(*exprs).first()
-        data = {
-            c: [row[f"{c}__{label}"] for label, _ in stats] for c in numeric
-        }
-        return pd.DataFrame(data, index=[label for label, _ in stats])
-
-    def _truthy(self, col: str, schema) -> Column:
-        """pandas truthiness per dtype (0/''/False are falsy), missing →
-        NULL so skipna aggregation can skip it."""
-        v = self._valid_col(col, schema)
-        t = schema[col]
-        if t == "boolean":
-            return v
-        if t == "string":
-            return F.when(v.isNotNull(), F.length(v) > 0)
-        return F.when(v.isNotNull(), v != F.lit(0).cast(t if t != "void" else "int"))
-
-    def any(self):
-        """Per-column pandas ``any`` (skipna): one aggregation pass →
-        eager pandas Series like the other axis-0 reductions."""
-        import pandas as pd
-
-        schema = self._dtype_map()
-        exprs = [
-            F.coalesce(F.max(self._truthy(c, schema)), F.lit(False)).alias(c)
-            for c in self._columns
-        ]
-        row = self._internal.sdf.select(*exprs).first()
-        return pd.Series({c: bool(row[c]) for c in self._columns})
-
-    def all(self):
-        """Per-column pandas ``all`` (skipna; empty/all-missing → True)."""
-        import pandas as pd
-
-        schema = self._dtype_map()
-        exprs = [
-            F.coalesce(F.min(self._truthy(c, schema)), F.lit(True)).alias(c)
-            for c in self._columns
-        ]
-        row = self._internal.sdf.select(*exprs).first()
-        return pd.Series({c: bool(row[c]) for c in self._columns})
+        dts = self._dtype_map()
+        cols = [c for c in self._columns if reductions.eligible("describe", dts[c])]
+        exprs = [e for c in cols for _, e in reductions.describe(self._columns[c], dts[c])]
+        row = self._internal.sdf.select(*exprs).first() if exprs else []
+        k = len(reductions.DESCRIBE)
+        return pd.DataFrame(
+            {c: list(row[i * k:(i + 1) * k]) for i, c in enumerate(cols)},
+            index=list(reductions.DESCRIBE),
+        )
 
     def add_prefix(self, prefix: str) -> "DataFrame":
         """Zero-job column relabel (metadata only)."""
@@ -2257,9 +2145,8 @@ class DataFrame:
         from pontem_spark.core.series import Series
 
         schema = self._dtype_map()
-        numeric = ("tinyint", "smallint", "int", "bigint", "float", "double")
         kinds = {schema[c] for c in self._columns}
-        if kinds <= set(numeric):
+        if kinds <= set(NUMERIC_DTYPES):
             cast = "double"
         elif kinds == {"string"}:
             cast = "string"
@@ -2271,7 +2158,7 @@ class DataFrame:
             *[
                 F.struct(
                     F.lit(c).alias("__lbl__"),
-                    self._valid_col(c, schema).cast(cast).alias("__v__"),
+                    valid(self._columns[c], schema.get(c)).cast(cast).alias("__v__"),
                 )
                 for c in self._columns
             ]
@@ -2344,7 +2231,7 @@ class DataFrame:
         if isinstance(func, str):
             if axis in (1, "columns"):
                 return self._reduce_rowwise(func)
-            return self._reduce_all(func)
+            return self._reduce(func)
         if axis == 0:
             results = {c: func(self[c]) for c in self._columns}
             if all(isinstance(v, Series) for v in results.values()):
@@ -2371,51 +2258,6 @@ class DataFrame:
             axis=1,
         ).set_axis(list(self._columns), axis=1)
 
-    def prod(self):
-        import pandas as pd
-
-        return pd.Series({c: self[c].prod() for c in self._numeric_cols()})
-
-    product = prod
-
-    def _moment_reduce(self, expr_fn):
-        """ONE aggregation pass for a composite moment statistic across
-        every numeric column (the per-column Series methods each run a
-        driver job — N jobs for an N-column frame; this is 1)."""
-        import pandas as pd
-
-        schema = self._dtype_map()
-        cols = self._numeric_cols()
-        if not cols:
-            return pd.Series(dtype="float64")
-        exprs = [expr_fn(self._valid_col(c, schema)).alias(c) for c in cols]
-        row = self._internal.sdf.select(*exprs).first()
-        return pd.Series(
-            {c: (float("nan") if row[c] is None else row[c]) for c in cols},
-            dtype="float64",
-        )
-
-    def sem(self, ddof: int = 1):
-        from pontem_spark.core.groupby import _COMPOSITE_AGGS
-
-        if ddof == 1:
-            return self._moment_reduce(_COMPOSITE_AGGS["sem"])
-        import pandas as pd
-
-        return pd.Series({c: self[c].sem(ddof=ddof) for c in self._numeric_cols()})
-
-    def skew(self):
-        from pontem_spark.core.groupby import _skew_expr
-
-        return self._moment_reduce(_skew_expr)
-
-    def kurt(self):
-        from pontem_spark.core.groupby import _kurt_expr
-
-        return self._moment_reduce(_kurt_expr)
-
-    kurtosis = kurt
-
     def combine_first(self, other: "DataFrame") -> "DataFrame":
         """Patch missing cells from ``other``, aligned on the index (the
         pandas CDC idiom) — one full-outer join on the index, per-column
@@ -2425,16 +2267,11 @@ class DataFrame:
         sa = {f.name: f.dataType.simpleString() for f in a.schema.fields}
         sb = {f.name: f.dataType.simpleString() for f in b.schema.fields}
 
-        def blank(col: Column, t: str | None) -> Column:
-            if t in ("double", "float"):
-                return F.when(F.isnan(col), F.lit(None)).otherwise(col)
-            return col
-
         j = a.alias("a").join(b.alias("b"), "__idx", "full_outer")
         cols: dict[str, Column] = {}
         for c in list(self._columns) + [c for c in other._columns if c not in self._columns]:
-            left = blank(F.col(f"a.{c}"), sa.get(c)) if c in self._columns else F.lit(None)
-            right = blank(F.col(f"b.{c}"), sb.get(c)) if c in other._columns else F.lit(None)
+            left = valid(F.col(f"a.{c}"), sa.get(c)) if c in self._columns else F.lit(None)
+            right = valid(F.col(f"b.{c}"), sb.get(c)) if c in other._columns else F.lit(None)
             cols[c] = F.coalesce(left, right)
         internal = InternalFrame(j, "__idx", self._internal.index_name)
         return DataFrame._from_internal(internal, cols)

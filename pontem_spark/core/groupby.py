@@ -4,112 +4,18 @@ and AQE coalescing come free from Catalyst."""
 
 from __future__ import annotations
 
-from typing import Callable, Mapping
+from typing import Mapping
 
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 
-from pontem_spark.core.cells import truediv_cols
+from pontem_spark.core import reductions
+from pontem_spark.core.cells import truediv_cols, valid
 from pontem_spark.core.internal import INDEX_COL, InternalFrame
 
-_AGGS: dict[str, Callable] = {
-    "sum": F.sum,
-    "mean": F.mean,
-    "avg": F.mean,
-    "min": F.min,
-    "max": F.max,
-    "count": F.count,
-    "std": F.stddev_samp,
-    "var": F.var_samp,
-    "first": F.first,
-    "last": F.last,
-    "nunique": F.count_distinct,
-    "median": lambda c: F.percentile(c, F.lit(0.5)),
-}
-
-
-def _skew_expr(v):
-    """Adjusted Fisher-Pearson G1 from raw moments (n, Σx, Σx², Σx³) — the
-    derive-from-sums discipline that keeps the oracle portable (engine-
-    native skewness() accumulations differ). NULL when n < 3; a
-    zero-variance group is 0.0, like pandas (r8 probe: we returned NULL
-    there, pandas defines 0/0 as 0)."""
-    n = F.count(v).cast("double")
-    s1, s2, s3 = F.sum(v), F.sum(v * v), F.sum(v * v * v)
-    mu = s1 / n
-    m2 = s2 / n - mu * mu
-    m3 = s3 / n - F.lit(3.0) * mu * (s2 / n) + F.lit(2.0) * mu * mu * mu
-    g1 = m3 / F.pow(m2, F.lit(1.5))
-    return F.when(
-        n >= 3,
-        F.when(
-            m2 > 0, g1 * F.sqrt(n * (n - F.lit(1.0))) / (n - F.lit(2.0))
-        ).otherwise(F.lit(0.0)),
-    )
-
-
-def _kurt_expr(v):
-    """Pandas G2 (excess, bias-adjusted) from raw moments up to Σx⁴; NULL
-    when n < 4; a zero-variance group is 0.0, like pandas."""
-    n = F.count(v).cast("double")
-    s1, s2, s3, s4 = F.sum(v), F.sum(v * v), F.sum(v * v * v), F.sum(v * v * v * v)
-    mu = s1 / n
-    m2 = s2 / n - mu * mu
-    m4 = (
-        s4 / n
-        - F.lit(4.0) * mu * (s3 / n)
-        + F.lit(6.0) * mu * mu * (s2 / n)
-        - F.lit(3.0) * mu * mu * mu * mu
-    )
-    g2 = m4 / (m2 * m2) - F.lit(3.0)
-    return F.when(
-        n >= 4,
-        F.when(
-            m2 > 0,
-            ((n + F.lit(1.0)) * g2 + F.lit(6.0))
-            * (n - F.lit(1.0))
-            / ((n - F.lit(2.0)) * (n - F.lit(3.0))),
-        ).otherwise(F.lit(0.0)),
-    )
-
-
-# Multi-aggregate COMPOSITE expressions — valid inside groupBy().agg() but
-# not over a window (transform raises "unsupported" for them, accurately).
-_COMPOSITE_AGGS: dict[str, Callable] = {
-    "prod": lambda c: F.coalesce(F.product(c), F.lit(1.0)),
-    # sem derived from (n, Σx, Σx²) — NOT stddev_samp: engine-native
-    # stddev accumulations differ across engines, the sums form does not
-    # (the same portability discipline the incremental rollup uses).
-    # n >= 2 guard: a single-row group hits /(n-1)=0, which Spark 4 ANSI
-    # THROWS on even for doubles (r8 probe); pandas sem(ddof=1) is NaN
-    # there. greatest(...,0): the raw-sums variance can cancel to a tiny
-    # negative on constant groups — sqrt would give NaN, pandas gives 0.
-    "sem": lambda c: F.when(
-        F.count(c) >= 2,
-        F.sqrt(
-            F.greatest(
-                F.sum(c * c) - F.sum(c) * F.sum(c) / F.count(c).cast("double"),
-                F.lit(0.0),
-            )
-            / (F.count(c).cast("double") - F.lit(1.0))
-        )
-        / F.sqrt(F.count(c).cast("double")),
-    ),
-    "skew": _skew_expr,
-    "kurt": _kurt_expr,
-}
-
-
-def _valid(df, col: str):
-    """Column with pandas-missing (NULL or float NaN) blanked to NULL —
-    grouped twin of Series/DataFrame._valid_col: Spark aggregates and
-    window functions skip NULL but PROPAGATE NaN (a NaN-bearing group's
-    mean/sum/max is NaN, count counts it), the opposite of pandas
-    skipna (r7 probe: grouped transform('mean') returned all-NaN)."""
-    schema = {f.name: f.dataType.simpleString() for f in df._materialized().schema.fields}
-    v = df._columns[col]
-    if schema.get(col) in ("double", "float"):
-        return F.when(F.isnan(v), F.lit(None)).otherwise(v)
-    return v
+def _valid(df, *cols: str) -> "list[Column]":
+    """The columns blanked to pandas-valid (``cells.valid``)."""
+    dts = df._dtype_map()
+    return [valid(df._columns[c], dts[c]) for c in cols]
 
 
 def _keys_valid_sdf(sdf, keys: list[str]):
@@ -131,9 +37,23 @@ def _keys_valid(df, keys: list[str]):
     level from aggregates, and returns missing for those rows in every
     row-aligned grouped op (transform/shift/rank/cumcount — r7 probe)."""
     cond = F.lit(True)
-    for k in keys:
-        cond = cond & _valid(df, k).isNotNull()
+    for v in _valid(df, *keys):
+        cond = cond & v.isNotNull()
     return cond
+
+
+def _transform(df, keys: list[str], col: str, how: str) -> Column:
+    """Reduction ``how`` of ``col`` over its group on every row — the
+    core/reductions.py entry over one unordered window partitioned by the
+    keys; rows with a missing key get NULL."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*[df._columns[k] for k in keys])
+    over = reductions.column(
+        how, df._columns[col], df._dtype_map()[col],
+        order=df._internal.index_col, over=w,
+    )
+    return F.when(_keys_valid(df, keys), over)
 
 
 class GroupBy:
@@ -158,73 +78,50 @@ class GroupBy:
         return [c for c in self._df._columns if c not in self._hidden]
 
     def agg(self, spec: Mapping[str, str | list[str]]) -> "DataFrame":
-        """{'col': 'sum'} or {'col': ['sum', 'mean']} → one aggregation pass."""
-        from pontem_spark.core.frame import DataFrame
-
-        exprs = []
-        out_names = []
+        """{'col': 'sum'} or {'col': ['sum', 'mean']} → one aggregation pass
+        of core/reductions.py entries (first/last follow the index)."""
+        dts = self._df._dtype_map()
         idx = self._df._internal.index_col
+        exprs = {}
         for col, how in spec.items():
-            hows = [how] if isinstance(how, str) else list(how)
-            for h in hows:
+            for h in [how] if isinstance(how, str) else how:
                 out = col if isinstance(how, str) else f"{col}_{h}"
-                v = _valid(self._df, col)
-                if h in ("first", "last"):
-                    # pandas first/last SKIP missing and follow row order;
-                    # bare F.first in a groupBy is order-nondeterministic
-                    # AND NaN-blind (r7 probe). min_by/max_by ignore rows
-                    # whose ordering key is NULL, so gating the key on
-                    # validity gives the first/last NON-MISSING value.
-                    pick = F.min_by if h == "first" else F.max_by
-                    exprs.append(pick(v, F.when(v.isNotNull(), idx)).alias(out))
-                else:
-                    fn = _AGGS.get(h) or _COMPOSITE_AGGS.get(h)
-                    if fn is None:
-                        raise ValueError(f"unsupported aggregation: {h!r}")
-                    expr = fn(v)
-                    if h == "sum":
-                        # pandas sum has min_count=0: an all-missing group
-                        # is 0, not NULL (r8 probe). lit(0) keeps the sum's
-                        # own type through coalesce's coercion (int stays
-                        # bigint, float stays double).
-                        expr = F.coalesce(expr, F.lit(0))
-                    exprs.append(expr.alias(out))
-                out_names.append(out)
+                exprs[out] = reductions.column(
+                    h, self._df._columns[col], dts[col], order=idx
+                )
+        return self._aggregate(exprs, self._as_index)
+
+    def _aggregate(self, exprs: "dict[str, Column]", as_index: bool) -> "DataFrame":
+        """One ``groupBy(keys).agg`` of ``exprs`` over the rows with valid
+        keys, keyed by the group index (``as_index``) or by a fresh one."""
+        from pontem_spark.core.frame import DataFrame
 
         base = (
             self._df._internal.sdf.filter(_keys_valid(self._df, self._keys))
             .groupBy(*[self._df._columns[k].alias(k) for k in self._keys])
-            .agg(*exprs)
+            .agg(*[e.alias(n) for n, e in exprs.items()])
         )
-
-        if self._as_index and len(self._keys) == 1:
+        if as_index and len(self._keys) == 1:
             internal = InternalFrame(base, self._keys[0], self._keys[0])
-            return DataFrame._from_internal(internal, {c: base[c] for c in out_names})
-        if self._as_index:
+            return DataFrame._from_internal(internal, {c: base[c] for c in exprs})
+        if as_index:
             # multi-key → struct-backed MultiIndex, the same representation
             # set_index(list) builds (frame.py): struct ordering is
             # lexicographic by field = MultiIndex sort order, and
             # to_pandas/reset_index already translate it back
             sdf = base.withColumn("__midx__", F.struct(*[F.col(k) for k in self._keys]))
             internal = InternalFrame(sdf, "__midx__", tuple(self._keys))
-            return DataFrame._from_internal(internal, {c: sdf[c] for c in out_names})
+            return DataFrame._from_internal(internal, {c: sdf[c] for c in exprs})
         sdf = base.withColumn(INDEX_COL, F.monotonically_increasing_id())
         internal = InternalFrame(sdf, INDEX_COL, None)
         return DataFrame._from_internal(
-            internal, {c: sdf[c] for c in self._keys + out_names}
+            internal, {c: sdf[c] for c in self._keys + list(exprs)}
         )
 
     def _all_numeric(self, how: str) -> "DataFrame":
-        import numpy as np
-
-        schema = {f.name: f.dataType.simpleString() for f in self._df._materialized().schema.fields}
-        numeric = {
-            c
-            for c in self._df.columns
-            if schema[c] in ("tinyint", "smallint", "int", "bigint", "float", "double")
-        }
-        cols = [c for c in self._df.columns if c not in self._keys and (how == "count" or c in numeric)]
-        return self.agg({c: how for c in cols})
+        dts = self._df._dtype_map()
+        cols = [c for c in self._df.columns if c not in self._keys]
+        return self.agg({c: how for c in cols if reductions.eligible(how, dts[c])})
 
     def sum(self): return self._all_numeric("sum")
     def mean(self): return self._all_numeric("mean")
@@ -258,7 +155,7 @@ class GroupBy:
             idx.alias("__gidx__"),
             # _valid so a float-NaN key becomes NULL and the equi-join
             # below misses (Spark joins treat NaN = NaN as TRUE)
-            *[_valid(df, k).alias(n) for k, n in zip(self._keys, knames)],
+            *[v.alias(n) for v, n in zip(_valid(df, *self._keys), knames)],
         )
         groups = keyed.select(*knames).distinct().na.drop(how="any")
         w = Window.orderBy(*[F.col(k).asc() for k in knames])
@@ -274,48 +171,20 @@ class GroupBy:
         return Series._from_internal(internal, F.col("__ng__"), None)
 
     def describe(self):
-        """count/mean/std/min/25%/50%/75%/max of every numeric column in
-        ONE aggregation pass; columns flattened to ``{col}_{stat}`` (this
-        build has no MultiIndex columns)."""
-        from pontem_spark.core.frame import DataFrame
-
-        schema = {
-            f.name: f.dataType.simpleString()
-            for f in self._df._materialized().schema.fields
-        }
-        numeric = [
-            c
-            for c in self._df.columns
-            if c not in self._keys
-            and schema[c] in ("tinyint", "smallint", "int", "bigint", "float", "double")
-        ]
-        exprs, names = [], []
-        for c in numeric:
-            v = _valid(self._df, c)
-            for stat, e in (
-                ("count", F.count(v)),
-                ("mean", F.mean(v)),
-                ("std", F.stddev_samp(v)),
-                ("min", F.min(v)),
-                ("25%", F.percentile(v, F.lit(0.25))),
-                ("50%", F.percentile(v, F.lit(0.5))),
-                ("75%", F.percentile(v, F.lit(0.75))),
-                ("max", F.max(v)),
-            ):
-                n = f"{c}_{stat}"
-                exprs.append(e.alias(n))
-                names.append(n)
-        base = (
-            self._df._internal.sdf.filter(_keys_valid(self._df, self._keys))
-            .groupBy(*[self._df._columns[k].alias(k) for k in self._keys])
-            .agg(*exprs)
+        """pandas describe of every numeric column in ONE aggregation
+        pass; columns flattened to ``{col}_{stat}`` (this build has no
+        MultiIndex columns)."""
+        dts = self._df._dtype_map()
+        cols = [c for c in self._df.columns if c not in self._keys]
+        return self._aggregate(
+            {
+                f"{c}_{stat}": e
+                for c in cols
+                if reductions.eligible("describe", dts[c])
+                for stat, e in reductions.describe(self._df._columns[c], dts[c])
+            },
+            True,
         )
-        if len(self._keys) == 1:
-            internal = InternalFrame(base, self._keys[0], self._keys[0])
-            return DataFrame._from_internal(internal, {c: base[c] for c in names})
-        sdf = base.withColumn("__midx__", F.struct(*[F.col(k) for k in self._keys]))
-        internal = InternalFrame(sdf, "__midx__", tuple(self._keys))
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in names})
 
     def size(self):
         """Group sizes as a Series (counts rows incl. nulls, like pandas);
@@ -442,20 +311,11 @@ class GroupBy:
         set — a single shuffle on the group key, no join-back; the result
         shares this frame's anchor, so assigning it to a column stays one
         growing Catalyst plan (zero extra jobs)."""
-        from pyspark.sql import Window
-
         from pontem_spark.core.frame import DataFrame
 
-        w = Window.partitionBy(*[self._df._columns[k] for k in self._keys])
         cols = {c: self._df._columns[c] for c in self._user_columns()}
         for col, how in spec.items():
-            fn = _AGGS.get(how)
-            if fn is None:
-                raise ValueError(f"unsupported aggregation: {how!r}")
-            cols[col] = F.when(
-                _keys_valid(self._df, self._keys),
-                fn(_valid(self._df, col)).over(w),
-            )
+            cols[col] = _transform(self._df, self._keys, col, how)
         return DataFrame._from_internal(self._df._internal, cols)
 
     def apply_in_pandas(self, func, schema):
@@ -485,19 +345,9 @@ class SeriesGroupBy:
         self._col = col
 
     def transform(self, how: str):
-        from pyspark.sql import Window
-
         from pontem_spark.core.series import Series
 
-        fn = _AGGS.get(how)
-        if fn is None:
-            raise ValueError(f"unsupported aggregation: {how!r}")
-        w = Window.partitionBy(*[self._df._columns[k] for k in self._keys])
-        over = fn(_valid(self._df, self._col)).over(w)
-        if how == "sum":
-            # pandas min_count=0: an all-missing group transforms to 0
-            over = F.coalesce(over, F.lit(0))
-        col = F.when(_keys_valid(self._df, self._keys), over)
+        col = _transform(self._df, self._keys, self._col, how)
         return Series._from_internal(self._df._internal, col, self._col)
 
     def agg(self, how):
@@ -547,7 +397,7 @@ class SeriesGroupBy:
         from pontem_spark.core.series import Series
 
         w, _ = self._wins()
-        v = _valid(self._df, self._col)
+        (v,) = _valid(self._df, self._col)
         prev = F.lag(v, periods).over(w) if periods >= 0 else F.lead(v, -periods).over(w)
         col = F.when(_keys_valid(self._df, self._keys), v - prev)
         return Series._from_internal(self._df._internal, col, self._col)
@@ -559,7 +409,7 @@ class SeriesGroupBy:
         from pontem_spark.core.series import Series
 
         w, wcum = self._wins()
-        v = _valid(self._df, self._col)
+        (v,) = _valid(self._df, self._col)
         filled = F.last(v, ignorenulls=True).over(wcum)
         prev = F.lag(filled, periods).over(w)
         # pandas computes v/prev - 1 (not (v-prev)/prev) — same algebra,
@@ -573,7 +423,7 @@ class SeriesGroupBy:
         from pontem_spark.core.series import Series
 
         _, wcum = self._wins()
-        v = _valid(self._df, self._col)
+        (v,) = _valid(self._df, self._col)
         # missing slots stay missing; missing values never enter the
         # running state (core/window.py::cum, partitioned)
         col = F.when(
@@ -600,7 +450,7 @@ class SeriesGroupBy:
             raise ValueError(f"unsupported rank method {method!r}")
         idx = F.col(self._df._internal.index_spark_col)
         part = [self._df._columns[k] for k in self._keys]
-        v = _valid(self._df, self._col)
+        (v,) = _valid(self._df, self._col)
         present = v.isNotNull()
         order = [present.desc(), v.asc() if ascending else v.desc()]
         if method == "first":
@@ -694,7 +544,7 @@ class SeriesGroupBy:
 
         df = self._df
         knames = list(self._keys)
-        v = _valid(df, self._col)
+        (v,) = _valid(df, self._col)
         base = (
             df._internal.sdf.filter(v.isNotNull() & _keys_valid(df, knames))
             .groupBy(

@@ -28,13 +28,14 @@ from typing import Any, Callable, Iterable
 from pyspark.sql import Column, DataFrame as SparkDataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType
 
-from pontem_spark.core import window as win
+from pontem_spark.core import reductions, window as win
 from pontem_spark.core.cells import (
     combine_cells,
     dtypes,
     missing,
     scalar_dtype,
     unary,
+    valid,
 )
 from pontem_spark.core.internal import (
     INDEX_COL,
@@ -349,59 +350,31 @@ class Series:
         # Spark's round is half-up (2.5 -> 3.0)
         return Series._from_internal(self._internal, F.bround(self._col, decimals), self._name)
 
-    # -- reductions (all Catalyst aggregates, batched where multi-stat) ------
+    # -- reductions: core/reductions.py entries, one select each ------------
 
-    def _agg(self, col: Column) -> Any:
-        return self._internal.sdf.select(col).first()[0]
-
-    @property
-    def _valid_col(self) -> Column:
-        """The value column with pandas-missing (NULL or float NaN) blanked
-        to NULL — what every skipna reduction must aggregate over. Spark
-        aggregates skip NULL but PROPAGATE NaN (sum/mean/max of anything
-        containing NaN is NaN, count/nunique count it), which is the exact
-        opposite of pandas' skipna=True default (found by the r7 probe:
-        every reduction diverged on a NaN-bearing series)."""
-        return F.when(~self._missing_mask(self._col), self._col)
-
-    @staticmethod
-    def _nan_if_none(v):
+    def _reduce(self, how: str, **kw) -> Any:
+        col = reductions.column(how, self._col, self._dtype_str(), **kw)
+        v = self._internal.sdf.select(col).first()[0]
         # pandas returns NaN (not None) when no valid values remain
         return float("nan") if v is None else v
 
-    def sum(self):
-        # pandas: sum of an empty/all-missing series is 0, not NaN
-        v = self._agg(F.sum(self._valid_col))
-        return 0 if v is None else v
+    def sum(self): return self._reduce("sum")
+    def mean(self): return self._reduce("mean")
+    def min(self): return self._reduce("min")
+    def max(self): return self._reduce("max")
+    def count(self): return self._reduce("count")  # non-missing, like pandas
+    def std(self, ddof: int = 1): return self._reduce("std", ddof=ddof)
+    def var(self, ddof: int = 1): return self._reduce("var", ddof=ddof)
+    def sem(self, ddof: int = 1): return self._reduce("sem", ddof=ddof)
+    def median(self): return self._reduce("median")
+    def nunique(self): return self._reduce("nunique")
+    def prod(self): return self._reduce("prod")
+    def skew(self): return self._reduce("skew")
+    def kurt(self): return self._reduce("kurt")
+    def any(self): return self._reduce("any")
+    def all(self): return self._reduce("all")
 
-    def mean(self): return self._nan_if_none(self._agg(F.mean(self._valid_col)))
-    def min(self): return self._nan_if_none(self._agg(F.min(self._valid_col)))
-    def max(self): return self._nan_if_none(self._agg(F.max(self._valid_col)))
-    def count(self): return self._agg(F.count(self._valid_col))  # non-missing, like pandas
-
-    def std(self, ddof: int = 1):
-        if ddof == 1:
-            return self._nan_if_none(self._agg(F.stddev_samp(self._valid_col)))
-        if ddof == 0:
-            return self._nan_if_none(self._agg(F.stddev_pop(self._valid_col)))
-        row = self._internal.sdf.select(
-            F.var_samp(self._valid_col).alias("v"), F.count(self._valid_col).alias("n")
-        ).first()
-        if row["v"] is None or row["n"] - ddof <= 0:
-            return float("nan")
-        return (row["v"] * (row["n"] - 1) / (row["n"] - ddof)) ** 0.5
-
-    def var(self, ddof: int = 1):
-        if ddof == 1:
-            return self._nan_if_none(self._agg(F.var_samp(self._valid_col)))
-        return (
-            self._nan_if_none(self._agg(F.var_pop(self._valid_col)))
-            if ddof == 0
-            else self.std(ddof) ** 2
-        )
-
-    def median(self):
-        return self._nan_if_none(self._agg(F.percentile(self._valid_col, F.lit(0.5))))
+    kurtosis = kurt
 
     def quantile(self, q: float = 0.5, interpolation: str = "linear"):
         """Exact quantile of the non-missing values. ``linear`` is ONE
@@ -415,12 +388,9 @@ class Series:
 
             qs = [float(x) for x in q]
             if interpolation == "linear":
-                row = self._internal.sdf.select(
-                    F.percentile(
-                        self._valid_col, F.array(*[F.lit(x) for x in qs])
-                    ).alias("__q")
-                ).first()
-                vals = row["__q"] if row["__q"] is not None else [float("nan")] * len(qs)
+                vals = self._reduce("quantile", q=qs)
+                if not isinstance(vals, list):
+                    vals = [float("nan")] * len(qs)
                 return pd.Series(
                     [float("nan") if v is None else float(v) for v in vals],
                     index=qs,
@@ -432,7 +402,7 @@ class Series:
                 dtype="float64",
             )
         if interpolation == "linear":
-            return self._nan_if_none(self._agg(F.percentile(self._valid_col, F.lit(q))))
+            return self._reduce("quantile", q=q)
         if interpolation not in ("lower", "higher", "nearest", "midpoint"):
             raise ValueError(f"unsupported interpolation {interpolation!r}")
         import math
@@ -451,7 +421,7 @@ class Series:
         else:
             picks = [lo, hi] if lo != hi else [lo]
         vals = [
-            self._internal.sdf.select(self._valid_col.alias("__q"))
+            self._internal.sdf.select(valid(self._col, self._dtype_str()).alias("__q"))
             .where(F.col("__q").isNotNull())
             .orderBy(F.col("__q").asc())
             .offset(k)
@@ -461,36 +431,15 @@ class Series:
         ]
         return float(sum(vals) / len(vals)) if len(vals) > 1 else vals[0]
 
-    def nunique(self): return self._agg(F.count_distinct(self._valid_col))
-
-    def any(self):
-        # skipna like pandas: missing never decides; all-missing → False
-        v = self._agg(F.max(self._valid_col.cast("boolean")))
-        return bool(v) if v is not None else False
-
-    def all(self):
-        # all-missing/empty → True, pandas' vacuous truth
-        v = self._agg(F.min(self._valid_col.cast("boolean")))
-        return bool(v) if v is not None else True
-
     def describe(self):
-        """count/mean/std/min/quartiles/max in ONE aggregation pass,
+        """pandas describe (core/reductions.py) in ONE aggregation pass,
         returned as a pandas Series (the reference printed and returned
         None, `series.py:152-153`)."""
         import pandas as pd
 
-        v = self._valid_col
-        row = self._internal.sdf.select(
-            F.count(v).alias("count"),
-            F.mean(v).alias("mean"),
-            F.stddev_samp(v).alias("std"),
-            F.min(v).alias("min"),
-            F.percentile(v, F.lit(0.25)).alias("25%"),
-            F.percentile(v, F.lit(0.5)).alias("50%"),
-            F.percentile(v, F.lit(0.75)).alias("75%"),
-            F.max(v).alias("max"),
-        ).first()
-        return pd.Series(row.asDict(), name=self._name)
+        stats = reductions.describe(self._col, self._dtype_str())
+        row = self._internal.sdf.select(*[e for _, e in stats]).first()
+        return pd.Series(dict(zip([label for label, _ in stats], row)), name=self._name)
 
     # -- ordering / selection -------------------------------------------------
 
@@ -1291,59 +1240,6 @@ class Series:
         col_name = name if name is not None else (self._name if self._name is not None else 0)
         return PFrame._from_internal(self._internal, {str(col_name): self._col})
 
-    def prod(self):
-        """Product of non-missing values; empty/all-missing → 1.0 (pandas
-        min_count=0 identity)."""
-        v = self._agg(F.product(self._valid_col))
-        return 1.0 if v is None else v
-
-    def sem(self, ddof: int = 1):
-        """Standard error of the mean: std(ddof)/sqrt(n) in ONE pass."""
-        import math
-
-        row = self._internal.sdf.select(
-            (F.stddev_samp(self._valid_col) if ddof == 1 else F.stddev_pop(self._valid_col)).alias("s"),
-            F.count(self._valid_col).alias("n"),
-        ).first()
-        if row["s"] is None or row["n"] == 0:
-            return float("nan")
-        return row["s"] / math.sqrt(row["n"])
-
-    def skew(self):
-        """pandas adjusted Fisher-Pearson skewness G1 = g1·√(n(n−1))/(n−2),
-        with g1 Spark's population skewness — one aggregation pass; n<3 →
-        NaN like pandas."""
-        import math
-
-        row = self._internal.sdf.select(
-            F.skewness(self._valid_col).alias("g"),
-            F.count(self._valid_col).alias("n"),
-        ).first()
-        n = row["n"]
-        if n < 3:
-            return float("nan")
-        if row["g"] is None:
-            # Spark skewness() is NULL on zero variance; pandas says 0.0
-            return 0.0
-        return row["g"] * math.sqrt(n * (n - 1)) / (n - 2)
-
-    def kurt(self):
-        """pandas adjusted excess kurtosis G2 = (n−1)/((n−2)(n−3)) ·
-        ((n+1)·g2 + 6), with g2 Spark's excess kurtosis; n<4 → NaN."""
-        row = self._internal.sdf.select(
-            F.kurtosis(self._valid_col).alias("g"),
-            F.count(self._valid_col).alias("n"),
-        ).first()
-        n = row["n"]
-        if n < 4:
-            return float("nan")
-        if row["g"] is None:
-            # Spark kurtosis() is NULL on zero variance; pandas says 0.0
-            return 0.0
-        return (n - 1) / ((n - 2) * (n - 3)) * ((n + 1) * row["g"] + 6)
-
-    kurtosis = kurt
-
     def combine_first(self, other: "Series") -> "Series":
         """self's non-missing values, holes filled from ``other``; index =
         union of both. Routed through the shared row aligner so the
@@ -1394,7 +1290,7 @@ class Series:
         never a sort."""
         if side not in ("left", "right"):
             raise ValueError(f"side must be 'left' or 'right', got {side!r}")
-        v = self._valid_col
+        v = valid(self._col, self._dtype_str())
         pred = (v < F.lit(value)) if side == "left" else (v <= F.lit(value))
         row = self._internal.sdf.select(
             F.count(F.when(pred, 1)).alias("n")
@@ -1766,17 +1662,12 @@ class Series:
 
         single = isinstance(funcs, str)
         names = [funcs] if single else list(funcs)
-        mapping = {
-            "sum": F.sum, "mean": F.mean, "min": F.min, "max": F.max,
-            "count": F.count, "std": F.stddev_samp, "var": F.var_samp,
-            "median": lambda c: F.percentile(c, F.lit(0.5)),
-            "nunique": F.count_distinct,
-        }
-        v = self._valid_col  # pandas skipna, same as the named reductions
+        dt = self._dtype_str()
         row = self._internal.sdf.select(
-            *[mapping[n](v).alias(n) for n in names]
+            *[reductions.column(n, self._col, dt) for n in names]
         ).first()
-        return row[0] if single else pd.Series({n: row[n] for n in names}, name=self._name)
+        vals = [float("nan") if v is None else v for v in row]
+        return vals[0] if single else pd.Series(dict(zip(names, vals)), name=self._name)
 
     # everyday pandas conveniences (r7 batch) ---------------------------------
 
@@ -1791,7 +1682,7 @@ class Series:
     @property
     def is_unique(self) -> bool:
         """One aggregate job: count == count_distinct (pandas counts
-        missing as a value here, so no _valid_col blanking)."""
+        missing as a value here, so no cells.valid blanking)."""
         sdf = self._materialized()
         row = sdf.select(
             F.count(F.lit(1)).alias("n"),

@@ -18,6 +18,7 @@ import re
 
 from pyspark.sql import Column, Window, functions as F
 
+from pontem_spark.core import reductions
 from pontem_spark.core.cells import combine_cells, dtypes, missing, truediv_cols
 from pontem_spark.core.internal import INDEX_COL, InternalFrame
 
@@ -407,14 +408,19 @@ def _guarded_grid(n: Column, seq: Column, label: str, advice: str = "") -> Colum
     ).otherwise(seq)
 
 
-def resample(src: Visible, sec: int, fn, empty=None):
+def resample(src: Visible, sec: int, how: str, empty=None):
     """Fixed-interval resampling over a timestamp index: floor the index
     onto the bucket grid, one map-side-combinable aggregate per bucket,
     and the COMPLETE bucket grid like pandas (r9 probe: empty buckets
     gap-fill — NaN for the mean family, ``empty`` (0) for count/sum). The
     grid comes from one tiny min/max agg + a distributed sequence explode
     and a left join of the observed aggregates (compose
-    operators/timeseries.py::gap_fill explicitly past the grid guard)."""
+    operators/timeseries.py::gap_fill explicitly past the grid guard).
+    ``how`` is a core/reductions.py entry; a column whose dtype it does
+    not take raises TypeError, as pandas' resample does."""
+    bad = {k: dt for k, dt in src.dts.items() if not reductions.eligible(how, dt)}
+    if bad:
+        raise TypeError(f"agg function failed [how->{how}]: columns {bad}")
     sdf = src.sdf()
     # pandas anchors the grid at MIDNIGHT OF THE FIRST DAY
     # (origin='start_day'), not the epoch — identical for any freq
@@ -431,12 +437,14 @@ def resample(src: Visible, sec: int, fn, empty=None):
     off = F.unix_timestamp(ts) - F.col("__a")
     bucket = F.timestamp_seconds(F.col("__a") + off - F.pmod(off, F.lit(sec)))
     out = (
-        base.select(
-            bucket.alias("__b"),
-            *[F.when(~missing(F.col(k), src.dts[k]), F.col(k)).alias(k) for k in src.cols],
-        )
+        base.select(bucket.alias("__b"), *src.cols)
         .groupBy("__b")
-        .agg(*[fn(F.col(k)).alias(k) for k in src.cols])
+        .agg(
+            *[
+                reductions.column(how, F.col(k), src.dts[k], empty=False).alias(k)
+                for k in src.cols
+            ]
+        )
     )
     omn = F.col("__mn") - F.col("__a")
     omx = F.col("__mx") - F.col("__a")
@@ -471,14 +479,14 @@ class Resampler:
         self._owner = owner
         self._sec = _rule_seconds(rule, "resample")
 
-    def _agg(self, fn, empty=None):
-        return self._owner._visible(resample, self._sec, fn, empty)
+    def _agg(self, how: str, empty=None):
+        return self._owner._visible(resample, self._sec, how, empty)
 
-    def mean(self): return self._agg(F.mean)
-    def sum(self): return self._agg(F.sum, empty=0)
-    def min(self): return self._agg(F.min)
-    def max(self): return self._agg(F.max)
-    def count(self): return self._agg(F.count, empty=0)
+    def mean(self): return self._agg("mean")
+    def sum(self): return self._agg("sum", empty=0)
+    def min(self): return self._agg("min")
+    def max(self): return self._agg("max")
+    def count(self): return self._agg("count", empty=0)
 
 
 def asfreq(src: Visible, freq: str, method: "str | None", fill_value):

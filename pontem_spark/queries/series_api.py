@@ -693,10 +693,11 @@ def q_api_value_counts_xs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_api_groupby_skew_sem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped skewness (adjusted Fisher-Pearson G1) and standard error
-    of the mean per order priority — both derived from raw moment sums
-    (n, Σx, Σx², Σx³) on BOTH engines (core/groupby.py::_COMPOSITE_AGGS;
-    engine-native skewness()/stddev accumulations differ, the
-    derive-from-sums discipline does not)."""
+    of the mean per order priority. The engine takes both from
+    core/reductions.py: Spark's central-moment ``skewness`` and
+    ``stddev_samp`` with pandas' bias adjustment, exact where raw power
+    sums cancel. The oracle derives them from raw moment sums (n, Σx, Σx²,
+    Σx³), which agree to the 6 decimals compared on these prices."""
     from pontem_spark.core import from_spark
     from pontem_spark.functions.compat import rnd
 

@@ -759,8 +759,8 @@ def test_rowwise_reductions_match_pandas(spark):
         pd.testing.assert_series_equal(
             got.astype("float64"), want.astype("float64"), check_names=False
         )
-    # axis=0 unchanged (numeric projection; _reduce_all sums every
-    # selected column, so project like pandas numeric_only first)
+    # axis=0 unchanged (the core/reductions.py sum of every selected
+    # column, so project like pandas numeric_only first)
     assert df[["a", "b", "c"]].sum()["c"] == 1000
 
 
@@ -1172,8 +1172,9 @@ def test_get_dummies_parity(spark):
 
 def test_probe_pins_round8(spark):
     """r8 probe batch over the r7 parity surface (r7 verdict task 8):
-    (1) SeriesGroupBy grew prod/sem/skew/kurt (frame-level GroupBy had
-    them, the per-column path raised AttributeError); (2) grouped
+    (1) SeriesGroupBy has prod/sem/skew/kurt (the core/reductions.py
+    entries GroupBy.agg applies; the per-column path once raised
+    AttributeError); (2) grouped
     idxmax/idxmin keep an all-NaN group as a NULL row like pandas 2.x
     instead of dropping the group."""
     import math
@@ -1997,7 +1998,7 @@ def test_groupby_prod_sem_skew_kurt(spark):
                 assert g != g or g is None, (m, k, g)
             else:
                 assert g == pytest.approx(w, rel=1e-9), (m, k)
-    # series-level grouped agg spec routes through the same composites
+    # series-level grouped agg spec routes through the same table entries
     got = DataFrame(raw, spark=spark).groupby("g")["v"].agg("skew").to_pandas().sort_index()
     want = pd.DataFrame(raw).groupby("g")["v"].skew().sort_index()
     assert got["x"] == pytest.approx(want["x"], rel=1e-9)
@@ -2132,6 +2133,30 @@ def test_frame_resample_full_grid_matches_pandas(spark):
     for agg in ("mean", "sum", "count"):
         got = getattr(f.resample("7min"), agg)().to_pandas().sort_index()
         want = getattr(wfr.resample("7min"), agg)()
+        pd.testing.assert_frame_equal(
+            got, want, check_dtype=False, check_names=False, check_freq=False
+        )
+
+    # a str column rides along under the reduction table's eligibility:
+    # count counts it and min/max order it like pandas; mean raises
+    # TypeError like pandas. Ledgered: sum raises where pandas
+    # concatenates a bucket's str cells (the table's sum is numeric-only).
+    hourly = [dt.datetime(2024, 1, 1, h) for h in range(4)]
+    sx = {"s": ["a", "b", "", "cd"], "x": [1.0, np.nan, 3.0, 4.0]}
+    base = spark.createDataFrame(list(zip(hourly, *sx.values())), ["ts", "s", "x"])
+    f = from_spark(base, index_col="ts")[["s", "x"]]
+    wfr = pd.DataFrame(sx, index=hourly)
+    for agg in ("mean", "sum", "min", "max", "count"):
+        try:
+            want = getattr(wfr.resample("2h"), agg)()
+        except TypeError:
+            want = None
+        if want is None or agg == "sum":
+            with pytest.raises(TypeError, match="agg function failed"):
+                getattr(f.resample("2h"), agg)()
+            assert (want is None) == (agg != "sum"), agg
+            continue
+        got = getattr(f.resample("2h"), agg)().to_pandas().sort_index()
         pd.testing.assert_frame_equal(
             got, want, check_dtype=False, check_names=False, check_freq=False
         )
