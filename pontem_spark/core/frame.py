@@ -1364,96 +1364,15 @@ class DataFrame:
         na_option: str = "keep",
     ) -> "DataFrame":
         """pandas frame.rank(axis=0): each numeric column ranked
-        independently. ``na_option``: 'keep' ranks missing as missing;
-        'top'/'bottom' rank the missing block as one tie group before/
-        after every valid value (float64 result, like pandas). Plan
-        shape: one global window PER COLUMN (each needs its own
-        ordering) — k sequential sorts, inherently; average/min/max
-        derive from rank() + a value-partition count so no per-column
-        distinct-frame join is needed."""
-        from pyspark.sql import Window
-
-        if method not in ("average", "min", "max", "dense", "first"):
-            raise ValueError(f"rank method {method!r}")
-        if na_option not in ("keep", "top", "bottom"):
-            raise ValueError(
-                f"rank: na_option must be 'keep', 'top' or 'bottom', got {na_option!r}"
-            )
-        self._require_numeric("rank")
-        sdf = self._materialized()
-        schema = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-        cols = {}
-        for c in self._columns:
-            v = sdf[c]
-            missing = v.isNull()
-            if schema.get(c) in ("double", "float"):
-                missing = missing | F.isnan(v)
-            present = ~missing
-            # the missing block sorts at the chosen end: FIRST for 'top'
-            # (its ranks lead), LAST otherwise ('keep' excludes it, so it
-            # must not inflate present ranks — the Series.rank trick).
-            lead = present.asc() if na_option == "top" else present.desc()
-            val = F.when(present, v)
-            order = [lead, val.asc() if ascending else val.desc()]
-            m_cnt = F.sum(missing.cast("long")).over(Window.partitionBy())
-            if method == "first":
-                r = F.row_number().over(Window.orderBy(*order, F.col(INDEX_COL).asc()))
-            elif method == "dense":
-                # the missing bucket at either end offsets present dense
-                # ranks naturally (and ranks itself 1 or K+1)
-                r = F.dense_rank().over(Window.orderBy(*order))
-            else:
-                lo = F.rank().over(Window.orderBy(*order))
-                cnt = F.count(F.when(present, F.lit(1))).over(Window.partitionBy(val))
-                # the missing block's tie-group size is the missing count
-                # (cnt over its NULL-val partition counts present rows = 0)
-                cnt_eff = F.when(present, cnt).otherwise(m_cnt)
-                if method == "min":
-                    r = lo
-                elif method == "max":
-                    r = lo + cnt_eff - 1
-                else:  # average
-                    r = (lo.cast("double") + (lo + cnt_eff - 1)) / 2.0
-            r = r.cast("double")
-            if pct:
-                if method == "dense":
-                    # distinct window aggregates are unsupported; bucket
-                    # count via the two-direction dense_rank identity:
-                    # dr_fwd + dr_bwd − 1 = #buckets on every row. 'keep'
-                    # pins the missing bucket LAST in both directions so
-                    # only present buckets count; 'top'/'bottom' use the
-                    # EXACT reverse so the missing bucket counts too.
-                    if na_option == "keep":
-                        rev = [present.desc(), val.desc() if ascending else val.asc()]
-                    else:
-                        rev = [
-                            present.desc() if na_option == "top" else present.asc(),
-                            val.desc() if ascending else val.asc(),
-                        ]
-                    denom = (
-                        F.dense_rank().over(Window.orderBy(*order))
-                        + F.dense_rank().over(Window.orderBy(*rev))
-                        - 1
-                    )
-                    if na_option != "keep":
-                        # present rows see the true bucket count already;
-                        # missing rows also do (exact reversal) — nothing
-                        # extra needed
-                        pass
-                else:
-                    n_cnt = F.sum(present.cast("long")).over(Window.partitionBy())
-                    denom = n_cnt if na_option == "keep" else n_cnt + m_cnt
-                r = r / denom
-            cols[c] = r if na_option != "keep" else F.when(present, r)
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, cols)
+        independently by the core/window.py rule — one window sort per
+        column, all on one partitioning."""
+        return self._visible(win.rank, method, ascending, pct, na_option, numeric="rank")
 
     def agg(self, spec: Mapping[str, str | list[str]]):
-        """{'col': 'sum'} / {'col': ['sum','mean']} → pandas DataFrame of
-        scalars: core/reductions.py entries, ONE aggregation pass for all
-        requested statistics."""
+        """{'col': ['sum','mean']} → pandas DataFrame of scalars, and
+        {'col': 'sum'} (a str for every column) → a pandas Series by
+        column, like pandas: core/reductions.py entries, ONE aggregation
+        pass for all requested statistics."""
         import pandas as pd
 
         dts = self._dtype_map()
@@ -1467,6 +1386,8 @@ class DataFrame:
         out: dict[str, dict[str, Any]] = {}
         for (col, h), val in zip(labels, row):
             out.setdefault(col, {})[h] = float("nan") if val is None else val
+        if all(isinstance(how, str) for how in spec.values()):
+            return pd.Series({col: out[col][how] for col, how in spec.items()})
         return pd.DataFrame(out)
 
     def melt(
@@ -2072,35 +1993,25 @@ class DataFrame:
         )
 
     def idxmax(self):
-        return self._idx_extreme(descending=True)
+        return self._extreme_labels(descending=True)
 
     def idxmin(self):
-        return self._idx_extreme(descending=False)
+        return self._extreme_labels(descending=False)
 
-    def _idx_extreme(self, descending: bool):
-        """Per numeric column, the index label of the extreme value with
-        pandas' FIRST-occurrence tie-break — TWO aggregation passes total
-        for all columns (pass 1: the extreme values; pass 2: min index
-        among the rows attaining them), never a per-column sort job."""
+    def _extreme_labels(self, descending: bool):
+        """The core/window.py idx-extreme rule over every numeric column
+        in one action; pandas raises on an all-missing column."""
         import pandas as pd
 
-        mat = self._materialized()
-        schema = dict(mat.dtypes)
-        cols = self._numeric_cols()
-        agg = F.max if descending else F.min
-        v = {c: valid(mat[c], schema[c]) for c in cols}
-        row = mat.select(*[agg(v[c]).alias(c) for c in cols]).first()
-        extremes = {c: row[c] for c in cols}
-        bad = [c for c, v in extremes.items() if v is None]
-        if bad:  # pandas raises on an all-missing column
+        cols = {c: self._columns[c] for c in self._numeric_cols()}
+        found = {}
+        if cols:
+            row = win.idx_extreme(win.Visible(self._internal, cols), descending).first()
+            found = {c: row[c] for c in cols}
+        bad = [c for c, v in found.items() if v is None]
+        if bad:
             raise ValueError(f"attempt to get arg-extreme of all-missing columns {bad}")
-        row2 = mat.select(
-            *[
-                F.min(F.when(v[c] == F.lit(extremes[c]), mat[INDEX_COL])).alias(c)
-                for c in cols
-            ]
-        ).first()
-        return pd.Series({c: row2[c] for c in cols})
+        return pd.Series({c: v.label for c, v in found.items()})
 
     def describe(self):
         """pandas describe (core/reductions.py) of every numeric column —

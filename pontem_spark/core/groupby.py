@@ -4,12 +4,13 @@ and AQE coalescing come free from Catalyst."""
 
 from __future__ import annotations
 
+import functools
 from typing import Mapping
 
 from pyspark.sql import Column, functions as F
 
-from pontem_spark.core import reductions
-from pontem_spark.core.cells import truediv_cols, valid
+from pontem_spark.core import reductions, window as win
+from pontem_spark.core.cells import valid
 from pontem_spark.core.internal import INDEX_COL, InternalFrame
 
 def _valid(df, *cols: str) -> "list[Column]":
@@ -44,15 +45,18 @@ def _keys_valid(df, keys: list[str]):
 
 def _transform(df, keys: list[str], col: str, how: str) -> Column:
     """Reduction ``how`` of ``col`` over its group on every row — the
-    core/reductions.py entry over one unordered window partitioned by the
-    keys; rows with a missing key get NULL."""
+    core/reductions.py entry over one window partitioned by the keys;
+    rows with a missing key get NULL. first/last read the group along its
+    visible order, the window framed over the whole group."""
     from pyspark.sql import Window
 
+    internal = df._internal
     w = Window.partitionBy(*[df._columns[k] for k in keys])
-    over = reductions.column(
-        how, df._columns[col], df._dtype_map()[col],
-        order=df._internal.index_col, over=w,
-    )
+    if how in ("first", "last"):
+        w = w.orderBy(*internal.order_columns(internal.index_spark_col)).rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+    over = reductions.column(how, df._columns[col], df._dtype_map()[col], over=w)
     return F.when(_keys_valid(df, keys), over)
 
 
@@ -79,25 +83,37 @@ class GroupBy:
 
     def agg(self, spec: Mapping[str, str | list[str]]) -> "DataFrame":
         """{'col': 'sum'} or {'col': ['sum', 'mean']} → one aggregation pass
-        of core/reductions.py entries (first/last follow the index)."""
+        of core/reductions.py entries (first/last follow the visible
+        order: the index, or each row's position in its group under an
+        order spec)."""
         dts = self._df._dtype_map()
-        idx = self._df._internal.index_col
-        exprs = {}
-        for col, how in spec.items():
-            for h in [how] if isinstance(how, str) else how:
-                out = col if isinstance(how, str) else f"{col}_{h}"
-                exprs[out] = reductions.column(
-                    h, self._df._columns[col], dts[col], order=idx
-                )
-        return self._aggregate(exprs, self._as_index)
+        internal = self._df._internal
+        hows = {
+            (col, h): col if isinstance(how, str) else f"{col}_{h}"
+            for col, how in spec.items()
+            for h in ([how] if isinstance(how, str) else how)
+        }
+        sdf, order = internal.sdf, internal.index_col
+        if internal.order_spec and any(h in ("first", "last") for _, h in hows):
+            sdf = sdf.withColumn("__pos__", self.cumcount()._col)
+            order = sdf["__pos__"]
+        exprs = {
+            out: reductions.column(h, self._df._columns[col], dts[col], order=order)
+            for (col, h), out in hows.items()
+        }
+        return self._aggregate(exprs, self._as_index, sdf)
 
-    def _aggregate(self, exprs: "dict[str, Column]", as_index: bool) -> "DataFrame":
+    def _aggregate(
+        self, exprs: "dict[str, Column]", as_index: bool, sdf=None
+    ) -> "DataFrame":
         """One ``groupBy(keys).agg`` of ``exprs`` over the rows with valid
-        keys, keyed by the group index (``as_index``) or by a fresh one."""
+        keys (of the anchor, or ``sdf`` derived from it), keyed by the
+        group index (``as_index``) or by a fresh one."""
         from pontem_spark.core.frame import DataFrame
 
         base = (
-            self._df._internal.sdf.filter(_keys_valid(self._df, self._keys))
+            (self._df._internal.sdf if sdf is None else sdf)
+            .filter(_keys_valid(self._df, self._keys))
             .groupBy(*[self._df._columns[k].alias(k) for k in self._keys])
             .agg(*[e.alias(n) for n, e in exprs.items()])
         )
@@ -337,7 +353,9 @@ class SeriesGroupBy:
     """``df.groupby(k)['col']`` — single-column grouped view.
 
     ``transform`` keeps the parent anchor (window expression, no join);
-    ``agg``/named reductions delegate to the frame-level GroupBy."""
+    ``agg``/named reductions delegate to the frame-level GroupBy; the
+    ordered ops are the core/window.py rules with the group keys as the
+    :class:`~pontem_spark.core.window.Visible` partition."""
 
     def __init__(self, df, keys: list[str], col: str):
         self._df = df
@@ -361,153 +379,67 @@ class SeriesGroupBy:
         frame = GroupBy(self._df, self._keys).agg({self._col: how})
         return frame[self._col]
 
-    # ordered per-group window transforms (r7 probe) --------------------
-    # Each is one partitioned window over the group keys ordered by the
-    # index — a single shuffle on the keys, result shares the parent
-    # anchor (assigning back stays one growing plan).
+    # ordered per-group ops: the core/window.py rules partitioned by the
+    # keys — a single shuffle on the keys; a row-aligned result shares the
+    # parent anchor (assigning back stays one growing plan)
 
-    def _wins(self):
-        from pyspark.sql import Window
+    def _source(self, dropna_keys: bool) -> "win.Visible":
+        df = self._df
+        keys = {f"__key{i}__": df._columns[k] for i, k in enumerate(self._keys)}
+        return win.Visible(
+            df._internal, {self._col: df._columns[self._col]}, keys, dropna_keys
+        )
 
-        # within-group ROW order = the frame's VISIBLE order (a sorted
-        # frame's grouped cumsum/shift accumulate in sorted order, like
-        # pandas — r10 composition probe)
-        idx_name = self._df._internal.index_spark_col
-        spec = self._df._internal.order_spec or ((idx_name, True),)
-        order = [F.col(n).asc() if asc else F.col(n).desc() for n, asc in spec]
-        part = [self._df._columns[k] for k in self._keys]
-        w = Window.partitionBy(*part).orderBy(*order)
-        wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        return w, wcum
+    @functools.cached_property
+    def _rows(self) -> "win.Visible":
+        """Every row: the row-aligned ops blank a missing key's rows."""
+        return self._source(False)
+
+    @functools.cached_property
+    def _kept(self) -> "win.Visible":
+        """The rows of valid keys: pandas leaves the others out of
+        rolling/expanding/ewm and idxmax/idxmin."""
+        return self._source(True)
+
+    def _visible(self, rule, *args):
+        from pontem_spark.core.series import Series
+
+        src = self._kept if rule in (win.rolling, win.ewm) else self._rows
+        internal, cols = rule(src, *args)
+        col = cols[self._col]
+        if src is self._rows:
+            col = F.when(src.keys_valid, col)
+        return Series._from_internal(internal, col, self._col)
 
     def shift(self, periods: int = 1, fill_value=None):
-        from pontem_spark.core.series import Series
-
-        w, _ = self._wins()
-        raw = self._df._columns[self._col]
-        col = (
-            F.lag(raw, periods, fill_value).over(w)
-            if periods >= 0
-            else F.lead(raw, -periods, fill_value).over(w)
-        )
-        col = F.when(_keys_valid(self._df, self._keys), col)
-        return Series._from_internal(self._df._internal, col, self._col)
+        return self._visible(win.shift, periods, fill_value)
 
     def diff(self, periods: int = 1):
-        from pontem_spark.core.series import Series
-
-        w, _ = self._wins()
-        (v,) = _valid(self._df, self._col)
-        prev = F.lag(v, periods).over(w) if periods >= 0 else F.lead(v, -periods).over(w)
-        col = F.when(_keys_valid(self._df, self._keys), v - prev)
-        return Series._from_internal(self._df._internal, col, self._col)
+        return self._visible(win.diff, periods)
 
     def pct_change(self, periods: int = 1):
-        """Pandas 2.x semantics: non-leading missing values pad forward
-        WITHIN the group before differencing; /0 yields ±inf/NaN (the
-        Series.pct_change guard), never an ANSI throw."""
-        from pontem_spark.core.series import Series
+        """pandas 2.x: missing values pad forward within the group."""
+        return self._visible(win.pct_change, periods, "pad")
 
-        w, wcum = self._wins()
-        (v,) = _valid(self._df, self._col)
-        filled = F.last(v, ignorenulls=True).over(wcum)
-        prev = F.lag(filled, periods).over(w)
-        # pandas computes v/prev - 1 (not (v-prev)/prev) — same algebra,
-        # different last-ulp floats; mirror its operation order exactly
-        col = F.when(
-            _keys_valid(self._df, self._keys), truediv_cols(filled, prev) - 1
-        )
-        return Series._from_internal(self._df._internal, col, self._col)
-
-    def _cum(self, aggfn):
-        from pontem_spark.core.series import Series
-
-        _, wcum = self._wins()
-        (v,) = _valid(self._df, self._col)
-        # missing slots stay missing; missing values never enter the
-        # running state (core/window.py::cum, partitioned)
-        col = F.when(
-            v.isNotNull() & _keys_valid(self._df, self._keys), aggfn(v).over(wcum)
-        )
-        return Series._from_internal(self._df._internal, col, self._col)
-
-    def cumsum(self): return self._cum(F.sum)
-    def cummax(self): return self._cum(F.max)
-    def cummin(self): return self._cum(F.min)
+    def cumsum(self): return self._visible(win.cum, F.sum)
+    def cummax(self): return self._visible(win.cum, F.max)
+    def cummin(self): return self._visible(win.cum, F.min)
 
     def cumcount(self):
         return GroupBy(self._df, self._keys).cumcount()
 
     def rank(self, method: str = "average", ascending: bool = True, pct: bool = False):
-        """Series.rank partitioned by the group keys — missing keeps NULL,
-        pct divides by the group's non-missing count ('dense': its
-        distinct count via the two-direction dense_rank identity)."""
-        from pyspark.sql import Window
+        return self._visible(win.rank, method, ascending, pct, "keep")
 
+    def _extreme_labels(self, descending: bool):
+        """Each group's idx-extreme label (core/window.py); an all-missing
+        group keeps its row with a NULL label — the pandas 2.x shape."""
         from pontem_spark.core.series import Series
 
-        if method not in ("average", "min", "max", "dense", "first"):
-            raise ValueError(f"unsupported rank method {method!r}")
-        idx = F.col(self._df._internal.index_spark_col)
-        part = [self._df._columns[k] for k in self._keys]
-        (v,) = _valid(self._df, self._col)
-        present = v.isNotNull()
-        order = [present.desc(), v.asc() if ascending else v.desc()]
-        if method == "first":
-            r = F.row_number().over(
-                Window.partitionBy(*part).orderBy(*order, idx.asc())
-            ).cast("double")
-        elif method == "dense":
-            r = F.dense_rank().over(Window.partitionBy(*part).orderBy(*order)).cast("double")
-        else:
-            lo = F.rank().over(Window.partitionBy(*part).orderBy(*order))
-            cnt = F.count(F.when(present, F.lit(1))).over(
-                Window.partitionBy(*part, v)
-            )
-            if method == "min":
-                r = lo.cast("double")
-            elif method == "max":
-                r = (lo + cnt - 1).cast("double")
-            else:
-                r = (lo.cast("double") + (lo + cnt - 1)) / 2.0
-        if pct:
-            if method == "dense":
-                rev = [present.desc(), v.desc() if ascending else v.asc()]
-                denom = (
-                    F.dense_rank().over(Window.partitionBy(*part).orderBy(*order))
-                    + F.dense_rank().over(Window.partitionBy(*part).orderBy(*rev))
-                    - 1
-                )
-            else:
-                denom = F.sum(present.cast("long")).over(Window.partitionBy(*part))
-            r = r / denom
-        return Series._from_internal(
-            self._df._internal,
-            F.when(present & _keys_valid(self._df, self._keys), r),
-            self._col,
-        )
-
-    def _idx_of(self, best_first_order):
-        from pyspark.sql import Window
-
-        from pontem_spark.core.series import Series
-
-        idx = INDEX_COL  # _materialized() travels the index under INDEX_COL
-        sdf = self._df._materialized()
-        v = sdf[self._col]
-        if dict(sdf.dtypes).get(self._col) in ("double", "float"):
-            v = F.when(~F.isnan(v), v)
-        w = Window.partitionBy(*self._keys).orderBy(
-            *best_first_order(v), F.col(idx).asc()
-        )
-        picked = (
-            sdf.filter(_keys_valid_sdf(sdf, self._keys))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            # an all-missing group keeps its row with a NULL index — the
-            # pandas 2.x shape (idxmax of an all-NaN group is NaN; r8
-            # probe found these groups were dropped entirely)
-            .select(*self._keys, F.when(v.isNotNull(), F.col(idx)).alias("__value__"))
+        src = self._kept
+        picked = win.idx_extreme(src, descending).select(
+            *[F.col(p).alias(k) for p, k in zip(src.keys, self._keys)],
+            F.col(self._col).getField("label").alias("__value__"),
         )
         if len(self._keys) == 1:
             internal = InternalFrame(picked, self._keys[0], self._keys[0])
@@ -517,22 +449,16 @@ class SeriesGroupBy:
         return Series._from_internal(internal, out["__value__"], self._col)
 
     def idxmax(self):
-        """Index of the group's first maximal non-missing value (pandas
-        tie rule) — one partitioned window + filter, no join-back."""
-        return self._idx_of(lambda v: [v.desc_nulls_last()])
+        return self._extreme_labels(descending=True)
 
     def idxmin(self):
-        return self._idx_of(lambda v: [v.asc_nulls_last()])
+        return self._extreme_labels(descending=False)
 
     def rolling(self, window: int):
-        from pontem_spark.core.window import GroupedRolling
-
-        return GroupedRolling(self._df, self._keys, self._col, window)
+        return win.Rolling(self, window)
 
     def expanding(self, min_periods: int = 1):
-        from pontem_spark.core.window import GroupedExpanding
-
-        return GroupedExpanding(self._df, self._keys, self._col, min_periods)
+        return win.Rolling(self, None, min_periods)
 
     def value_counts(self, ascending: bool = False):
         """Counts per (group, value) as a MultiIndexed Series, ordered
@@ -570,9 +496,7 @@ class SeriesGroupBy:
         return Series._from_internal(internal, sdf["__value__"], self._col)
 
     def ewm(self, **kwargs):
-        from pontem_spark.core.window import GroupedEwm
-
-        return GroupedEwm(self._df, self._keys, self._col, kwargs)
+        return win.Ewm(self, **kwargs)
 
     def sum(self): return self.agg("sum")
     def mean(self): return self.agg("mean")

@@ -16,7 +16,8 @@ Guarded sites (SCALE.md "Driver-materialization policy" mirrors this list):
   - get_dummies()              MAX_DRIVER_CATEGORIES (categories become fields)
   - core/window.py::ewm        MAX_SINGLE_GROUP_ROWS (Series.ewm and
                                DataFrame.ewm: one Arrow group; the scale
-                               shape is GroupedEwm - per-key parallel)
+                               shape is df.groupby(k)[col].ewm - one
+                               group per key, in parallel)
 """
 
 from __future__ import annotations

@@ -16,7 +16,8 @@ computed in the plan:
   raw power sums cancel (values around 1e6);
 - bool cells count as 0/1 for the arithmetic reductions; any/all use
   pandas' per-dtype truthiness (0, '' and False are falsy);
-- first/last are the first/last non-missing value in a row ``order``.
+- first/last are the first/last non-missing value in a row ``order``
+  (or along an ordered window ``over``).
 
 Series applies an entry in one ``select(...).first()``, DataFrame over
 its :func:`eligible` columns in one ``select``, GroupBy inside
@@ -106,13 +107,17 @@ def _truth(c: _Cell) -> Column:
     return c.v != F.lit(0)
 
 
-def _pick(fn) -> Callable[[_Cell], Column]:
+def _pick(fn, edge) -> Callable[[_Cell], Column]:
     # min_by/max_by skip rows whose ordering key is NULL, so gating the
-    # key on validity picks the first/last NON-MISSING value
+    # key on validity picks the first/last NON-MISSING value; a transform
+    # passes no ``order`` but an ``over`` ordered by the rows and framed
+    # over the whole partition, whose first/last valid value is the pick
     def entry(c: _Cell) -> Column:
-        if c.order is None:
+        if c.order is not None:
+            return c.agg(fn(c.v, F.when(c.v.isNotNull(), c.order)))
+        if c.over is None:
             raise ValueError("first/last need a row order (a grouped reduction)")
-        return c.agg(fn(c.v, F.when(c.v.isNotNull(), c.order)))
+        return c.agg(edge(c.v, ignorenulls=True))
 
     return entry
 
@@ -143,8 +148,8 @@ REDUCTIONS: "dict[str, _Entry]" = {
     "prod": _Entry(lambda c: c.agg(F.product(c.num)), 1.0),
     "skew": _Entry(_skew),
     "kurt": _Entry(_kurt),
-    "first": _Entry(_pick(F.min_by)),
-    "last": _Entry(_pick(F.max_by)),
+    "first": _Entry(_pick(F.min_by, F.first)),
+    "last": _Entry(_pick(F.max_by, F.last)),
     "any": _Entry(lambda c: c.agg(F.max(_truth(c))), False),
     "all": _Entry(lambda c: c.agg(F.min(_truth(c))), True),
 }

@@ -1447,166 +1447,24 @@ class Series:
         na_option: str = "keep",
     ) -> "Series":
         """pandas rank: 'average' (the pandas default), 'min', 'max',
-        'dense', or 'first'. ``na_option``: 'keep' ranks missing as
-        missing; 'top'/'bottom' rank the whole missing block as one tie
-        group before/after every valid value (float64 result, like
-        pandas). ``pct=True`` rescales to (0, 1]: by the non-missing row
-        count under 'keep' ('dense': by the DISTINCT value count), by the
-        TOTAL row count under 'top'/'bottom' ('dense': distinct values
-        plus one bucket for the missing block).
+        'dense', or 'first'; ``na_option`` 'keep', 'top' or 'bottom';
+        ``pct`` rescales to (0, 1] — the core/window.py rule."""
+        return self._visible(win.rank, method, ascending, pct, na_option)
 
-        Scale shape: average/min/max/dense are derived on the
-        DISTINCT-VALUE frame — one groupBy shuffle at value_counts
-        cardinality, a single unpartitioned window over the K distinct
-        values (K rows, never the raw data), then an equi-join back on the
-        value; 'top'/'bottom'/pct add one broadcast 1-row stats frame. No
-        full-row global sort anywhere. 'first' (appearance-order
-        tie-break) genuinely needs per-row positions, so it keeps the
-        on-demand global window (same scale caveat as _positional_slice).
-        """
-        from pyspark.sql import Window
-
-        if na_option not in ("keep", "top", "bottom"):
-            raise ValueError(
-                f"rank: na_option must be 'keep', 'top' or 'bottom', got {na_option!r}"
-            )
-        sdf = self._materialized()
-        # pandas treats NaN as missing; Spark distinguishes NULL from NaN
-        # (a float Series built from None may carry either), so exclude both
-        present = ~self._missing_mask(sdf[_VALUE], sdf)
-
-        if method == "first":
-            val_order = F.col(_VALUE).asc() if ascending else F.col(_VALUE).desc()
-            # the missing block sorts at the chosen end ('keep' excludes it,
-            # so it must not inflate ranked rows — it sorts last)
-            lead = (
-                F.col("__p").asc() if na_option == "top" else F.col("__p").desc()
-            )
-            w = Window.orderBy(lead, val_order, F.col(INDEX_COL).asc())
-            sdf2 = sdf.withColumn("__p", present)
-            rn = F.row_number().over(w)
-            col = (
-                rn if na_option != "keep" else F.when(F.col("__p"), rn)
-            ).cast("double")
-            if pct:
-                denom = (
-                    F.sum(F.col("__p").cast("long")).over(Window.partitionBy())
-                    if na_option == "keep"
-                    else F.count(F.lit(1)).over(Window.partitionBy())
-                )
-                col = col / denom
-            return Series._from_internal(
-                InternalFrame(sdf2, INDEX_COL, self._internal.index_name),
-                col,
-                self._name,
-            )
-        if method not in ("average", "min", "max", "dense"):
-            raise ValueError(
-                f"rank method {method!r} (use 'average', 'min', 'max', 'dense', or 'first')"
-            )
-
-        per_val = (
-            sdf.filter(present)
-            .groupBy(F.col(_VALUE).alias("__v"))
-            .agg(F.count(F.lit(1)).alias("__c"))
-        )
-        order = F.col("__v").asc() if ascending else F.col("__v").desc()
-        cum = F.sum("__c").over(
-            Window.orderBy(order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        before = cum - F.col("__c")
-        if method == "average":
-            r = before + (F.col("__c") + 1) / 2.0
-        elif method == "min":
-            r = before + 1
-        elif method == "max":
-            r = cum
-        else:  # dense
-            r = F.row_number().over(Window.orderBy(order))
-        ranked = per_val.select("__v", r.cast("double").alias("__r"))
-        joined = sdf.join(ranked, sdf[_VALUE] == ranked["__v"], "left")
-
-        need_stats = pct or na_option != "keep"
-        if need_stats:
-            # one broadcast 1-row stats frame: missing rows, valid rows,
-            # distinct valid values — partial-agg combinable, no window
-            # over the raw data
-            stats = sdf.agg(
-                F.coalesce(F.sum((~present).cast("long")), F.lit(0)).alias("__m"),
-                F.coalesce(F.sum(present.cast("long")), F.lit(0)).alias("__n"),
-                F.count_distinct(F.when(present, sdf[_VALUE])).alias("__k"),
-            )
-            joined = joined.crossJoin(F.broadcast(stats))
-            m, nv, k = F.col("__m"), F.col("__n"), F.col("__k")
-            if na_option == "top":
-                shift = F.when(m > 0, F.lit(1)).otherwise(F.lit(0)) if method == "dense" else m
-                valid_r = F.col("__r") + shift
-                fill = {
-                    "average": (m + 1) / 2.0,
-                    "min": F.lit(1.0),
-                    "max": m.cast("double"),
-                    "dense": F.lit(1.0),
-                }[method]
-            elif na_option == "bottom":
-                valid_r = F.col("__r")
-                fill = {
-                    "average": nv + (m + 1) / 2.0,
-                    "min": (nv + 1).cast("double"),
-                    "max": (nv + m).cast("double"),
-                    "dense": (k + 1).cast("double"),
-                }[method]
-            else:
-                valid_r = F.col("__r")
-                fill = F.lit(None)
-            final = F.when(F.col("__r").isNotNull(), valid_r.cast("double")).otherwise(fill)
-            if pct:
-                if na_option == "keep":
-                    denom = k if method == "dense" else nv
-                else:
-                    denom = (
-                        k + F.when(m > 0, F.lit(1)).otherwise(F.lit(0))
-                        if method == "dense"
-                        else nv + m
-                    )
-                final = final / denom
-        else:
-            final = F.col("__r")
-        extras = [
-            n
-            for n, _ in (self._internal.order_spec or ())
-            if n not in (INDEX_COL, _VALUE) and n in joined.columns
-        ]
-        joined = joined.select(
-            INDEX_COL,
-            *dict.fromkeys(extras),
-            final.cast("double").alias("__r"),
-        )
-        return Series._from_internal(
-            InternalFrame(
-                joined, INDEX_COL, self._internal.index_name, self._internal.order_spec
-            ),
-            joined["__r"],
-            self._name,
-        )
-
-    def _idx_extreme(self, descending: bool) -> Any:
-        # skipna like pandas: NaN/NULL rows can never be the arg-extreme
-        # (Spark sorts NaN as the LARGEST double, so an unfiltered ascending
-        # order is safe but a descending one would hand idxmax the NaN row;
-        # filter missing outright so both directions share one shape)
-        mat = self._materialized()
-        mat = mat.filter(~self._missing_mask(F.col(_VALUE), mat))
-        order = F.col(_VALUE).desc() if descending else F.col(_VALUE).asc()
-        row = mat.orderBy(order, F.col(INDEX_COL)).select(INDEX_COL).first()
-        if row is None:  # pandas raises on all-missing input
+    def _extreme_label(self, descending: bool) -> Any:
+        """The core/window.py idx-extreme rule over the value column;
+        pandas raises on all-missing input."""
+        src = win.Visible(self._internal, {_VALUE: self._col})
+        found = win.idx_extreme(src, descending).first()[_VALUE]
+        if found is None:
             raise ValueError("attempt to get argmax of an empty sequence")
-        return row[0]
+        return found.label
 
     def idxmax(self):
-        return self._idx_extreme(descending=True)
+        return self._extreme_label(descending=True)
 
     def idxmin(self):
-        return self._idx_extreme(descending=False)
+        return self._extreme_label(descending=False)
 
     def sample(
         self,

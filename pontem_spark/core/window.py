@@ -1,14 +1,15 @@
-"""Visible-order transforms, written once for Series and DataFrame.
+"""Visible-order transforms, written once for Series, DataFrame and the
+grouped Series.
 
 shift, diff, pct_change, the cumulative ops, ffill/bfill, interpolate,
-rolling/expanding, ewm, resample and asfreq are each ONE rule over a
-dict of value columns on an ``InternalFrame``: a Series passes its one
-value column, a DataFrame all of its columns under one shared window
-spec (Catalyst plans one sort for the whole frame). :class:`Visible`
-stages the columns — on their own anchor when they are window-free,
-else across one materialization — and every rule returns
-``(internal, {name: column})``. The grouped windows (partitioned by the
-group keys) follow at the end of the module.
+rolling/expanding, ewm, rank, the idx-extreme, resample and asfreq are
+each ONE rule over a dict of value columns on an ``InternalFrame``: a
+Series passes its one value column, a DataFrame all of its columns under
+one shared window spec (Catalyst plans one sort for the whole frame).
+:class:`Visible` stages the columns — on their own anchor when they are
+window-free, else across one materialization — with the group key
+columns of ``df.groupby(k)[col]`` as its partition (none for a Series or
+a DataFrame), and every rule returns ``(internal, {name: column})``.
 """
 
 from __future__ import annotations
@@ -36,7 +37,7 @@ def _window_free(col: Column) -> bool:
 
 class Visible:
     """Value columns staged for a visible-order rule: THE window-free
-    decision under Series and DataFrame.
+    decision under Series, DataFrame and the grouped Series.
 
     Window-free columns stay ON THEIR OWN ANCHOR, so a row-preserving
     result is same-anchor with its source and ``s - s.shift(1)``,
@@ -48,13 +49,27 @@ class Visible:
     lineage (``row_tokens``); a Series result on that hop is tagged for
     ``Series._mat_pair``. Spark 4 accepts nested windows, but
     materializing windowed inputs also bounds expression growth in
-    chains like ``s.diff().diff()``."""
+    chains like ``s.diff().diff()``.
 
-    def __init__(self, internal: InternalFrame, cols: "dict[str, Column]"):
-        cols = dict(cols)
-        self.materialized = not all(_window_free(c) for c in cols.values())
+    ``keys`` (name → column) partition every window: the group keys of
+    a grouped Series, empty otherwise. ``dropna_keys`` leaves out the
+    rows whose key is missing (pandas' groupby rolling/expanding/ewm
+    and idxmax); the row-aligned grouped ops keep them and blank their
+    result with :attr:`keys_valid`."""
+
+    def __init__(
+        self,
+        internal: InternalFrame,
+        cols: "dict[str, Column]",
+        keys: "dict[str, Column] | None" = None,
+        dropna_keys: bool = False,
+    ):
+        cols, keys = dict(cols), dict(keys or {})
+        self.materialized = not all(
+            _window_free(c) for c in (*cols.values(), *keys.values())
+        )
         if self.materialized:
-            sdf = internal.materialize(cols)
+            sdf = internal.materialize({**cols, **keys})
             internal = InternalFrame(
                 sdf,
                 INDEX_COL,
@@ -63,11 +78,28 @@ class Visible:
                 row_tokens=internal.row_tokens,
             )
             cols = {k: sdf[k] for k in cols}
-        self.internal, self.cols = internal, cols
+            keys = {k: sdf[k] for k in keys}
+        self.internal, self.cols, self.keys = internal, cols, keys
+        if dropna_keys and keys:
+            self.internal = InternalFrame(
+                internal.sdf.filter(self.keys_valid),
+                internal.index_spark_col,
+                internal.index_name,
+                internal.order_spec,
+            )
 
     @functools.cached_property
     def dts(self) -> "dict[str, str | None]":
         return dict(zip(self.cols, dtypes(self.internal.sdf, *self.cols.values())))
+
+    @functools.cached_property
+    def keys_valid(self) -> Column:
+        """TRUE where no group key is missing (pandas' dropna=True)."""
+        cond = F.lit(True)
+        keys = list(self.keys.values())
+        for c, dt in zip(keys, dtypes(self.internal.sdf, *keys)):
+            cond = cond & ~missing(c, dt)
+        return cond
 
     def missing(self, k: str) -> Column:
         return missing(self.cols[k], self.dts[k])
@@ -77,20 +109,30 @@ class Visible:
         float NaN), so window counts and aggregates skip it like pandas."""
         return F.when(~self.missing(k), self.cols[k])
 
+    @property
+    def order(self) -> "list[Column]":
+        """The visible order: the order spec (a sorted frame shifts in
+        sorted order like pandas), else the index."""
+        return self.internal.order_columns(self.internal.index_spark_col)
+
+    def over(self, *order: Column):
+        """A window partitioned by the keys (one partition without them:
+        driver-scale by construction), ordered by ``order``."""
+        w = Window.partitionBy(*self.keys.values())
+        return w.orderBy(*order) if order else w
+
     def window(self, lo=None, hi=Window.currentRow):
-        """The visible order (the order spec — a sorted frame shifts in
-        sorted order like pandas), framed ``rowsBetween(lo, hi)`` when
-        ``lo`` is given. Unpartitioned: driver-scale by construction; the
-        partitioned form is the grouped windows below."""
-        w = Window.orderBy(*self.internal.order_columns(self.internal.index_spark_col))
+        """The visible-order window, framed ``rowsBetween(lo, hi)`` when
+        ``lo`` is given."""
+        w = self.over(*self.order)
         return w if lo is None else w.rowsBetween(lo, hi)
 
     def sdf(self):
         """The materialized projection: index as INDEX_COL, the values
-        under their names, the order-spec helpers."""
+        and keys under their names, the order-spec helpers."""
         if self.materialized:
             return self.internal.sdf
-        return self.internal.materialize(self.cols)
+        return self.internal.materialize({**self.cols, **self.keys})
 
 
 def _offset(col: Column, periods: int, default, w) -> Column:
@@ -233,11 +275,11 @@ def rolling(src: Visible, n: "int | None", minp: int, agg):
     missing first, so window counts see NaN as missing — pandas' rule, the
     opposite of Spark's count() (r7 probe: min_periods over a NaN-bearing
     series diverged). ``count`` alone gates on the ROW count (a 3-row
-    window with 2 NaNs still counts 1). ``median`` is exact: Spark forbids
-    median()/percentile() with a window FRAME, so collect_list over the
-    frame (bounded by the window size for rolling; the whole prefix for
-    expanding), sort, midpoint — collect_list drops NULLs, which is
-    exactly pandas' skipna."""
+    window with 2 NaNs still counts 1) and is float64 like pandas'.
+    ``median`` is exact: Spark forbids median()/percentile() with a
+    window FRAME, so collect_list over the frame (bounded by the window
+    size for rolling; the whole prefix for expanding), sort, midpoint —
+    collect_list drops NULLs, which is exactly pandas' skipna."""
     lo = Window.unboundedPreceding if n is None else -(n - 1)
     w = src.window(lo)
     out = {}
@@ -248,13 +290,15 @@ def rolling(src: Visible, n: "int | None", minp: int, agg):
             out[k] = F.when(F.size(arr) >= minp, _midpoint(arr))
         else:
             gate = F.count(F.lit(1) if agg is F.count else v).over(w)
-            out[k] = F.when(gate >= minp, agg(v).over(w))
+            r = agg(v).over(w)
+            out[k] = F.when(gate >= minp, r.cast("double") if agg is F.count else r)
     return src.internal, out
 
 
 class Rolling:
     """``owner.rolling(n)`` and ``owner.expanding()`` (``window`` None) for
-    a Series or a DataFrame owner: each agg is the :func:`rolling` rule."""
+    a Series, DataFrame or grouped-Series owner: each agg is the
+    :func:`rolling` rule."""
 
     def __init__(self, owner, window: "int | None", min_periods: "int | None" = None):
         self._owner = owner
@@ -286,25 +330,26 @@ def ewm(src: Visible, params: dict, op: str):
     group via applyInPandas — every value column in one pass — delegating
     the recurrence to pandas itself: exact parity with every parameter
     combination by construction. The 100 TB shape is per-KEY ewm over a
-    grouped frame (:class:`GroupedEwm`), where each group is bounded."""
+    grouped Series: one Arrow group per key (the Visible's keys), each
+    bounded, all in parallel."""
     import pandas as pd
 
     from pontem_spark.core import limits
 
     sdf = src.sdf()
     # loud scale guard (r7 verdict #6, same pattern as Series.unique):
-    # the recurrence funnels EVERY row through one Arrow group — fail
-    # before a billion-row input materializes in one python worker, and
-    # point at the per-key parallel shape.
+    # without keys the recurrence funnels EVERY row through one Arrow
+    # group — fail before a billion-row input materializes in one python
+    # worker, and point at the per-key parallel shape.
     cap = limits.MAX_SINGLE_GROUP_ROWS
-    if sdf.limit(cap + 1).count() > cap:
+    if not src.keys and sdf.limit(cap + 1).count() > cap:
         raise ValueError(
             f"ewm(): more than {cap} rows; ewm over a Series or DataFrame is "
             "inherently sequential and runs as ONE Arrow group. Use "
             "df.groupby(key)[col].ewm(...) (GroupedEwm) — per-key groups run "
             "in parallel — or pre-aggregate to bounded input."
         )
-    keys = list(src.cols)
+    names = list(src.cols)
     # the recurrence runs in the VISIBLE order (order_spec), not raw
     # index order — ewm after sort_values must accumulate in sorted
     # order like pandas (r10 composition probe class); (name, asc) pairs
@@ -316,12 +361,15 @@ def ewm(src: Visible, params: dict, op: str):
     ] or [(INDEX_COL, True)]
     ord_names = [n for n, _ in spec]
     ord_asc = [a for _, a in spec]
-    extras = [n for n in dict.fromkeys(ord_names) if n != INDEX_COL and n not in keys]
+    extras = [
+        n for n in dict.fromkeys(ord_names)
+        if n != INDEX_COL and n not in names and n not in src.keys
+    ]
 
     def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values(ord_names, ascending=ord_asc)
         out = {INDEX_COL: pdf[INDEX_COL]}
-        for k in keys:
+        for k in names:
             vals = pd.to_numeric(pdf[k], errors="coerce").astype("float64")
             out[k] = getattr(vals.ewm(**params), op)()
         for n in extras:
@@ -330,16 +378,17 @@ def ewm(src: Visible, params: dict, op: str):
 
     schema = ", ".join(
         [f"{INDEX_COL} {sdf.schema[INDEX_COL].dataType.simpleString()}"]
-        + [f"`{k}` double" for k in keys]
+        + [f"`{k}` double" for k in names]
         + [f"`{n}` {sdf.schema[n].dataType.simpleString()}" for n in extras]
     )
     res = (
         sdf.select(
             INDEX_COL,
-            *[F.col(k).cast("double").alias(k) for k in keys],
+            *src.keys,
+            *[F.col(k).cast("double").alias(k) for k in names],
             *[F.col(n) for n in extras],
         )
-        .groupBy(F.lit(0).alias("__g"))
+        .groupBy(*src.keys or [F.lit(0).alias("__g")])
         .applyInPandas(fn, schema=schema)
     )
     # the extras pass through the Arrow fn so the display order (spec)
@@ -347,13 +396,17 @@ def ewm(src: Visible, params: dict, op: str):
     internal = InternalFrame(
         res, INDEX_COL, src.internal.index_name, src.internal.order_spec
     )
-    return internal, {k: res[k] for k in keys}
+    return internal, {k: res[k] for k in names}
 
 
 class Ewm:
-    """``owner.ewm(...)`` for a Series or a DataFrame owner."""
+    """``owner.ewm(...)`` for a Series, DataFrame or grouped-Series owner
+    (pandas' defaults)."""
 
-    def __init__(self, owner, com, span, halflife, alpha, adjust, ignore_na, min_periods):
+    def __init__(
+        self, owner, com=None, span=None, halflife=None, alpha=None,
+        adjust=True, ignore_na=False, min_periods=0,
+    ):
         self._owner = owner
         self._params = dict(
             com=com, span=span, halflife=halflife, alpha=alpha,
@@ -367,6 +420,86 @@ class Ewm:
     def sum(self): return self._apply("sum")
     def std(self): return self._apply("std")
     def var(self): return self._apply("var")
+
+
+def rank(src: Visible, method: str, ascending: bool, pct: bool, na_option: str):
+    """pandas rank of every value column, within each group of the keys
+    (over the whole column without them): one window sort per column,
+    all on one partitioning — no join back, no distinct-value frame.
+
+    - 'min' is ``rank()``; 'max' counts the rows of the ordered window's
+      default RANGE frame, which takes in the value's ties; 'average' is
+      their midpoint; 'dense' is ``dense_rank()``; 'first' is
+      ``row_number()`` with ties in the visible order (pandas' position).
+    - ``na_option``: the missing block sorts first for 'top' and last
+      otherwise, so it ranks as one tie group of its own; 'keep' blanks
+      it. The result is float64 like pandas'.
+    - ``pct`` divides by the rows ranked ('keep': the valid rows);
+      'dense' by its bucket count — distinct window aggregates are
+      unsupported, so the two-direction identity dense_rank + reverse
+      dense_rank − 1 counts them on every row ('keep' pins the missing
+      bucket last both ways so it does not count)."""
+    if method not in ("average", "min", "max", "dense", "first"):
+        raise ValueError(
+            f"rank method {method!r} (use 'average', 'min', 'max', 'dense', or 'first')"
+        )
+    if na_option not in ("keep", "top", "bottom"):
+        raise ValueError(
+            f"rank: na_option must be 'keep', 'top' or 'bottom', got {na_option!r}"
+        )
+    out = {}
+    for k in src.cols:
+        present, val = ~src.missing(k), src.valid(k)
+        lead = present.asc() if na_option == "top" else present.desc()
+        order = [lead, val.asc() if ascending else val.desc()]
+        w = src.over(*order)
+        if method == "first":
+            r = F.row_number().over(src.over(*order, *src.order))
+        elif method == "dense":
+            r = F.dense_rank().over(w)
+        else:
+            lo, hi = F.rank().over(w), F.count(F.lit(1)).over(w)
+            r = {"min": lo, "max": hi, "average": (lo + hi) / 2.0}[method]
+        r = r.cast("double")
+        if pct:
+            if method == "dense":
+                back = present.asc() if na_option == "bottom" else present.desc()
+                rev = src.over(back, val.desc() if ascending else val.asc())
+                r = r / (F.dense_rank().over(w) + F.dense_rank().over(rev) - 1)
+            else:
+                ranked = val if na_option == "keep" else F.lit(1)
+                r = r / F.count(ranked).over(src.over())
+        out[k] = F.when(present, r) if na_option == "keep" else r
+    return src.internal, out
+
+
+def idx_extreme(src: Visible, descending: bool):
+    """pandas idxmax (``descending``) and idxmin of every value column,
+    within each group of the keys (over the whole column without them):
+    the label of the first extreme valid value, ties to the earlier row in
+    the visible order. One window per column on one partitioning, then one
+    aggregate: a Spark frame of one row per group (one row without keys)
+    holding the keys and, per column, the struct ``(label)`` — NULL where
+    the column has no valid value (a NULL label stays a found label)."""
+    # staged on the named projection, so the window partitions by the very
+    # key columns the aggregate groups by: one Exchange, not two
+    sdf = src.sdf()
+    src = Visible(
+        InternalFrame(sdf, INDEX_COL, src.internal.index_name, src.internal.order_spec),
+        {k: sdf[k] for k in src.cols},
+        {n: sdf[n] for n in src.keys},
+    )
+    hits = {}
+    for k in src.cols:
+        v = src.valid(k)
+        w = src.over(v.desc_nulls_last() if descending else v.asc_nulls_last(), *src.order)
+        hit = (F.row_number().over(w) == 1) & v.isNotNull()
+        hits[k] = F.when(hit, F.struct(sdf[INDEX_COL].alias("label")))
+    return (
+        sdf.select(*src.keys.values(), *[h.alias(k) for k, h in hits.items()])
+        .groupBy(*src.keys)
+        .agg(*[F.first(k, ignorenulls=True).alias(k) for k in src.cols])
+    )
 
 
 # -- fixed-width time grids (resample / asfreq) ------------------------------
@@ -585,213 +718,3 @@ def asfreq(src: Visible, freq: str, method: "str | None", fill_value):
         InternalFrame(out, INDEX_COL, src.internal.index_name),
         {k: out[k] for k in src.cols},
     )
-
-
-# -- grouped windows: partitioned by the group keys ---------------------------
-
-
-class GroupedRolling:
-    """``df.groupby(k)[col].rolling(n)`` — rolling windows WITHIN each group.
-
-    Unlike :class:`Rolling` (which orders globally — a
-    single-partition window, fine for driver-scale series, wrong for big
-    frames), this partitions by the group keys, so at scale it is one
-    ordinary hash-partitioned window pass; NaN-key groups are omitted
-    from the result entirely (pandas dropna), so the output index is the
-    surviving subset of the parent's."""
-
-    def __init__(self, df, keys: list[str], col: str, window: int):
-        self._df = df
-        self._keys = keys
-        self._col = col
-        self._n = window
-
-    def _base(self):
-        """Materialized frame with NaN-or-NULL-key rows DROPPED — pandas
-        groupby().rolling()/expanding() omit NaN-key groups from the
-        result entirely (unlike transform, which keeps the rows as NaN)."""
-        from pontem_spark.core.groupby import _keys_valid_sdf
-
-        base = self._df._materialized()
-        return base.filter(_keys_valid_sdf(base, self._keys))
-
-    def _valid_value(self, sdf):
-        v = sdf[self._col]
-        if dict(sdf.dtypes).get(self._col) in ("double", "float"):
-            return F.when(~F.isnan(v), v)
-        return v
-
-    def _win(self, sdf, lo):
-        # _materialized() travels the index under INDEX_COL; within-group
-        # row order = the frame's VISIBLE order (r10 composition probe)
-        spec = self._df._internal.order_spec or ((INDEX_COL, True),)
-        return (
-            Window.partitionBy(*self._keys)
-            .orderBy(*[F.col(n).asc() if asc else F.col(n).desc() for n, asc in spec])
-            .rowsBetween(lo, Window.currentRow)
-        )
-
-    def _apply(self, aggfn):
-        from pontem_spark.core.series import Series
-
-        sdf = self._base()
-        v = self._valid_value(sdf)
-        w = self._win(sdf, -(self._n - 1))
-        cnt = F.count(v).over(w)
-        # pandas yields NaN until the window holds `window` observations
-        col = F.when(cnt >= self._n, aggfn(v).over(w))
-        internal = InternalFrame(sdf, INDEX_COL, self._df._internal.index_name)
-        return Series._from_internal(internal, col, self._col)
-
-    def sum(self): return self._apply(F.sum)
-    def mean(self): return self._apply(F.mean)
-    def min(self): return self._apply(F.min)
-    def max(self): return self._apply(F.max)
-    def std(self): return self._apply(F.stddev_samp)
-    def var(self): return self._apply(F.var_samp)
-
-    def median(self):
-        """Exact grouped rolling median — the collect_list midpoint form
-        (see :func:`rolling`), partitioned by the group keys."""
-        from pontem_spark.core.series import Series
-
-        sdf = self._base()
-        w = self._win(sdf, -(self._n - 1))
-        arr = F.sort_array(F.collect_list(self._valid_value(sdf)).over(w))
-        col = F.when(F.size(arr) >= self._n, _midpoint(arr))
-        internal = InternalFrame(sdf, INDEX_COL, self._df._internal.index_name)
-        return Series._from_internal(internal, col, self._col)
-
-    def count(self):
-        """Gates on the ROW count reaching the window size, not the
-        non-missing count — the :func:`rolling` count asymmetry, grouped."""
-        from pontem_spark.core.series import Series
-
-        sdf = self._base()
-        v = self._valid_value(sdf)
-        w = self._win(sdf, -(self._n - 1))
-        rows = F.count(F.lit(1)).over(w)
-        col = F.when(rows >= self._n, F.count(v).over(w))
-        internal = InternalFrame(sdf, INDEX_COL, self._df._internal.index_name)
-        return Series._from_internal(internal, col, self._col)
-
-
-class GroupedEwm:
-    """``df.groupby(k)[col].ewm(...)`` — per-KEY exponentially-weighted
-    windows: the 100 TB shape of :class:`Ewm` (whose single Arrow group is
-    Series/driver-scale by design). Each group is one Arrow batch via
-    applyInPandas — groups run in parallel across executors, the recurrence
-    inside a group is inherently sequential; pandas computes it, so every
-    parameter combination is exact. Result rows are (index, value) per
-    original row, ordered by index within each group."""
-
-    def __init__(self, df, keys: list[str], col: str, params: dict):
-        self._df = df
-        self._keys = keys
-        self._col = col
-        self._params = dict(params)
-
-    def _apply(self, op: str):
-        import pandas as pd
-
-        from pontem_spark.core.series import Series
-
-        df = self._df
-        key_aliases = [f"__k{i}" for i in range(len(self._keys))]
-        # within-group row order = the frame's VISIBLE order (r10
-        # composition probe); spec helper columns ride through the
-        # projection so the Arrow fn can sort by them
-        spec = df._internal.order_spec or ((INDEX_COL, True),)
-        extras = [
-            n for n in dict.fromkeys(n for n, _ in spec)
-            if n != INDEX_COL and n in df._internal.sdf.columns
-        ]
-        # filter (name, asc) PAIRS together — filtering names and flags
-        # separately shifted each surviving column onto the PRECEDING
-        # column's direction whenever a spec column was dropped, reversing
-        # the ewm recurrence order (ADVICE r10)
-        pairs = [(n, a) for n, a in spec if n == INDEX_COL or n in extras]
-        sort_names = [n for n, _ in pairs]
-        sort_asc = [a for _, a in pairs]
-        sdf = df._internal.sdf.select(
-            df._internal.index_col.alias(INDEX_COL),
-            *[df._columns[k].alias(a) for k, a in zip(self._keys, key_aliases)],
-            df._columns[self._col].cast("double").alias("__v"),
-            *[F.col(n) for n in extras],
-        )
-        from pontem_spark.core.groupby import _keys_valid_sdf
-
-        # pandas omits NaN-key groups from the result entirely
-        sdf = sdf.filter(_keys_valid_sdf(sdf, key_aliases))
-        idx_type = sdf.schema[INDEX_COL].dataType.simpleString()
-        if idx_type.startswith("struct"):
-            raise ValueError(
-                "GroupedEwm over a MultiIndex frame: reset_index() first"
-            )
-        params = self._params
-
-        def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.sort_values(sort_names or [INDEX_COL],
-                                  ascending=sort_asc or True)
-            out = getattr(pdf["__v"].ewm(**params), op)()
-            return pd.DataFrame({INDEX_COL: pdf[INDEX_COL], "__value__": out})
-
-        res = sdf.groupBy(*key_aliases).applyInPandas(
-            fn, schema=f"{INDEX_COL} {idx_type}, __value__ double"
-        )
-        return Series._from_internal(
-            InternalFrame(res, INDEX_COL, df._internal.index_name),
-            res["__value__"],
-            self._col,
-        )
-
-    def mean(self): return self._apply("mean")
-    def sum(self): return self._apply("sum")
-    def std(self): return self._apply("std")
-    def var(self): return self._apply("var")
-
-
-class GroupedExpanding:
-    """``df.groupby(k)[col].expanding()`` — running windows WITHIN each
-    group: one hash-partitioned window pass (unboundedPreceding →
-    currentRow); NaN-key groups are omitted like GroupedRolling, and NaN
-    is blanked to NULL first so window counts follow pandas' missing
-    rule."""
-
-    def __init__(self, df, keys: list[str], col: str, min_periods: int = 1):
-        self._df = df
-        self._keys = keys
-        self._col = col
-        self._minp = min_periods
-
-    def _apply(self, aggfn):
-        from pontem_spark.core.groupby import _keys_valid_sdf
-        from pontem_spark.core.series import Series
-
-        df = self._df
-        base = df._materialized()
-        # pandas omits NaN-key groups from the result entirely
-        sdf = base.filter(_keys_valid_sdf(base, self._keys))
-        expr = sdf[self._col]
-        if dict(sdf.dtypes).get(self._col) in ("double", "float"):
-            expr = F.when(~F.isnan(expr), expr)
-        spec = df._internal.order_spec or ((INDEX_COL, True),)
-        w = (
-            Window.partitionBy(*self._keys)
-            .orderBy(*[F.col(n).asc() if asc else F.col(n).desc() for n, asc in spec])
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cnt = F.count(expr).over(w)
-        col = F.when(cnt >= self._minp, aggfn(expr).over(w))
-        internal = InternalFrame(
-            sdf, INDEX_COL, df._internal.index_name, df._internal.order_spec
-        )
-        return Series._from_internal(internal, col, self._col)
-
-    def sum(self): return self._apply(F.sum)
-    def mean(self): return self._apply(F.mean)
-    def min(self): return self._apply(F.min)
-    def max(self): return self._apply(F.max)
-    def std(self): return self._apply(F.stddev_samp)
-    def var(self): return self._apply(F.var_samp)
-    def count(self): return self._apply(F.count)

@@ -306,9 +306,9 @@ def q_api_qcut(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_api_groupby_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """groupby(user)[value].rolling(3).mean() through the wrapper == one
-    hash-partitioned window pass (core/window.py::GroupedRolling — no
-    global sort, no join-back), NaN until the window holds 3 observations,
-    exactly as pandas gates it."""
+    hash-partitioned window pass (core/window.py::rolling with the group
+    keys as the partition — no global sort, no join-back), NaN until the
+    window holds 3 observations, exactly as pandas gates it."""
     from pontem_spark.core import from_spark
     from pontem_spark.functions.compat import rnd
 
@@ -339,10 +339,11 @@ def q_api_groupby_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_api_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pandas Series.rank (method='average') over customer balances,
-    per-customer — computed on the distinct-value frame (groupBy shuffle at
-    value_counts cardinality + one window over the K distinct balances +
-    join back), never a global sort of the raw rows (core/series.py::rank).
-    The oracle derives the same average rank relationally."""
+    per-customer — one window sort of the rows (core/window.py::rank:
+    rank() and the count of the value's RANGE frame, averaged), no join
+    back. The balances are nearly all distinct, so a distinct-value frame
+    would save no traffic. The oracle derives the same average rank
+    relationally."""
     from pontem_spark.core import from_spark
 
     df = from_spark(
@@ -744,13 +745,12 @@ def q_api_groupby_skew_sem(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_api_rank_na_option(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Series.rank through the wrapper — driver evidence for the r10
-    na_option tail (core/series.py::rank): the missing block ranks as ONE
+    na_option tail (core/window.py::rank): the missing block ranks as ONE
     tie group before ('top') / after ('bottom') every valid value, or
     stays missing ('keep'); dense+top gives the block its own dense
-    bucket. Scale shape: average/dense derive on the DISTINCT-value frame
-    (a window over ~46 quantity values, never the raw rows) + one
-    equi-join back — the injected NULL block (quantity > 45) rides the
-    same path as real missing data."""
+    bucket. Each rank is one window sort of the rows, on the Series'
+    own anchor — the injected NULL block (quantity > 45) rides the same
+    path as real missing data."""
     from pontem_spark.core import from_spark
     from pontem_spark.functions.compat import rnd
 

@@ -1056,6 +1056,11 @@ def test_frame_reduction_parity(spark):
     assert f.idxmin().to_dict() == num.idxmin().to_dict()
     with pytest.raises(ValueError):
         DataFrame({"a": [nan, nan]}, spark=spark).idxmax()
+    # ties go to the earlier row, not the smaller label
+    tied = {"a": [3.0, 1.0, 3.0, 1.0], "b": [2.0, 0.0, 0.0, 2.0]}
+    ft, pt = DataFrame(tied, index=[2, 1, 0, 3], spark=spark), pd.DataFrame(tied, index=[2, 1, 0, 3])
+    assert ft.idxmax().to_dict() == pt.idxmax().to_dict()
+    assert ft.idxmin().to_dict() == pt.idxmin().to_dict()
 
 
 def test_concat_and_merge_after_sort(spark):
@@ -1211,6 +1216,13 @@ def test_probe_pins_round8(spark):
             bn = isinstance(b, float) and math.isnan(b)
             an = a is None or (isinstance(a, float) and math.isnan(a))
             assert an == bn and (an or int(a) == int(b)), (op, k, a, b)
+    # on an unsorted index, ties go to the earlier row, not the smaller label
+    tied = {"k": ["a", "a", "a", "b"], "v": [3.0, 1.0, 3.0, 1.0]}
+    gt = DataFrame(tied, index=[2, 1, 0, 3], spark=spark).groupby("k")["v"]
+    pt = pd.DataFrame(tied, index=[2, 1, 0, 3]).groupby("k")["v"]
+    for op in ("idxmax", "idxmin"):
+        got = getattr(gt, op)().to_pandas().sort_index()
+        assert got.to_dict() == getattr(pt, op)().to_dict(), op
 
 
 def test_probe_pins_round8b(spark):

@@ -1,6 +1,6 @@
-"""Round-10 API tail: rank(na_option), nlargest/nsmallest(keep),
-drop_duplicates(keep), quantile(list-q), value_counts(sort=False) —
-differential-pinned vs pandas.
+"""Round-10 API tail: rank(na_option) — also over an unsorted index —,
+nlargest/nsmallest(keep), drop_duplicates(keep), quantile(list-q),
+value_counts(sort=False) — differential-pinned vs pandas.
 
 Deviation note (same contract as sort_values): boundary ties order by
 INDEX (asc for keep='first'/'all', desc for keep='last'), not pandas'
@@ -17,6 +17,8 @@ from pontem_spark.core.frame import DataFrame
 from pontem_spark.core.series import Series
 
 VALS = [3.0, None, 1.0, 3.0, None, 2.0, 1.0, 5.0]
+# an unsorted index: rank 'first' breaks ties by row position, not label
+UNSORTED = [7, 2, 5, 0, 3, 6, 1, 4]
 
 
 def _eq(got: pd.Series, want: pd.Series, order: bool = True) -> None:
@@ -40,16 +42,17 @@ def _eq(got: pd.Series, want: pd.Series, order: bool = True) -> None:
 @pytest.mark.parametrize("method", ["average", "min", "max", "dense", "first"])
 @pytest.mark.parametrize("na_option", ["keep", "top", "bottom"])
 def test_rank_na_option(spark, method, na_option):
-    ps = pd.Series(VALS, dtype="float64")
-    ss = Series(VALS, name="v")
-    for ascending, pct in ((True, False), (False, True), (True, True)):
-        got = ss.rank(
-            method=method, ascending=ascending, pct=pct, na_option=na_option
-        ).to_pandas()
-        want = ps.rank(
-            method=method, ascending=ascending, pct=pct, na_option=na_option
-        )
-        _eq(got, want)
+    for index in (None, UNSORTED):
+        ps = pd.Series(VALS, dtype="float64", index=index)
+        ss = Series(VALS, name="v", index=index)
+        for ascending, pct in ((True, False), (False, True), (True, True)):
+            got = ss.rank(
+                method=method, ascending=ascending, pct=pct, na_option=na_option
+            ).to_pandas()
+            want = ps.rank(
+                method=method, ascending=ascending, pct=pct, na_option=na_option
+            )
+            _eq(got, want)
 
 
 def test_rank_na_option_all_missing(spark):
@@ -123,13 +126,14 @@ def test_value_counts_sort_false(spark):
 @pytest.mark.parametrize("method", ["average", "min", "max", "dense", "first"])
 def test_frame_rank_na_option(spark, method, na_option):
     data = {"a": VALS, "b": [5.0, 1.0, None, 2.0, 2.0, None, 7.0, 0.0]}
-    pdf = pd.DataFrame(data).astype("float64")
-    df = DataFrame(data)
-    for pct in (False, True):
-        got = df.rank(method=method, pct=pct, na_option=na_option).to_pandas()
-        want = pdf.rank(method=method, pct=pct, na_option=na_option)
-        for c in ("a", "b"):
-            _eq(got[c], want[c])
+    for index in (None, UNSORTED):
+        pdf = pd.DataFrame(data, index=index).astype("float64")
+        df = DataFrame(data, index=index)
+        for pct in (False, True):
+            got = df.rank(method=method, pct=pct, na_option=na_option).to_pandas()
+            want = pdf.rank(method=method, pct=pct, na_option=na_option)
+            for c in ("a", "b"):
+                _eq(got[c], want[c])
 
 
 @pytest.mark.parametrize("keep", ["first", "last", "all"])

@@ -7,8 +7,10 @@ any and all), through four forms:
 
 - ``Series``: the named reduction;
 - ``DataFrame``: the named reduction of a one-column frame;
-- ``DataFrame.agg({col: [hows]})``;
-- ``groupby(k).agg({col: [hows]})`` with a single group;
+- ``DataFrame.agg({col: [hows]})``, and ``DataFrame.agg({col: how})``,
+  which returns a Series;
+- ``groupby(k).agg({col: [hows]})`` with a single group, also over an
+  unsorted index, where first/last follow the row order, not the labels;
 
 and ``describe`` of the Series, DataFrame and GroupBy forms. A case is
 compared wherever pandas returns a value for it (pandas raises for a bool
@@ -23,7 +25,7 @@ import math
 import pandas as pd
 import pytest
 
-from pontem_spark.core import from_spark
+from pontem_spark.core import DataFrame, from_spark
 
 NAN = float("nan")
 BIG = [1e6 + 0.1, 1e6 + 0.2, 1e6 + 0.7, 1e6 + 1.3, NAN, 1e6 + 2.9]
@@ -118,6 +120,12 @@ def frames(spark):
         pdf = pd.DataFrame({"k": pd.Series([1] * len(values), dtype="int64"),
                             "v": pd.Series(values, dtype=pdt)})
         out[name] = (from_spark(sdf, index_col="i"), pdf)
+    # rows in the order of an unsorted index: first/last read that order
+    values, index = [NAN, 5.0, 6.0], [2, 1, 0]
+    out["unsorted"] = (
+        DataFrame({"k": [1, 1, 1], "v": values}, index=index, spark=spark),
+        pd.DataFrame({"k": [1, 1, 1], "v": values}, index=index),
+    )
     return out
 
 
@@ -147,9 +155,17 @@ def test_frame_reductions(frames, name):
     })
 
 
+def _series_only(r):
+    """pandas returns a Series for a str-per-column agg spec."""
+    if not isinstance(r, pd.Series):
+        raise TypeError(f"agg({{col: how}}) returned a {type(r).__name__}")
+    return r
+
+
 @pytest.mark.parametrize("name", list(FIXTURES))
 def test_frame_agg(frames, name):
-    """One agg call per fixture: every reduction in one spec."""
+    """One agg call per fixture: every reduction in one spec; plus a str
+    spec, which returns a Series."""
     f, pdf = frames[name]
     hows = _hows(name)
     got = _run(lambda: f.agg({"v": hows}))
@@ -157,10 +173,13 @@ def test_frame_agg(frames, name):
     cases = {}
     for h in hows:
         cases[h] = ((lambda h=h: got.loc[h, "v"]), (lambda h=h: pdf.agg({"v": [h]}).loc[h, "v"]))
+    cases["str spec"] = (
+        lambda: _series_only(f.agg({"v": "max"}))["v"], lambda: pdf.agg({"v": "max"})["v"]
+    )
     _check(cases)
 
 
-@pytest.mark.parametrize("name", list(FIXTURES))
+@pytest.mark.parametrize("name", [*FIXTURES, "unsorted"])
 def test_groupby_agg(frames, name):
     """One single-group agg per fixture; what pandas rejects (a grouped
     kurt) drops out of the spec."""

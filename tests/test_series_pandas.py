@@ -381,6 +381,10 @@ def test_rank(spark):
 def test_idxmax_idxmin(ps, pds):
     assert ps.idxmax() == pds.idxmax()
     assert ps.idxmin() == pds.idxmin()
+    # ties go to the earlier row, not the smaller label
+    s = Series([3.0, 1.0, 3.0, 1.0], index=[2, 1, 0, 3])
+    w = pd.Series([3.0, 1.0, 3.0, 1.0], index=[2, 1, 0, 3])
+    assert (s.idxmax(), s.idxmin()) == (w.idxmax(), w.idxmin())
 
 
 def test_series_agg(ps, pds):
@@ -620,17 +624,28 @@ def test_rank_keeps_nulls(spark):
             )
 
 
-def test_rank_no_global_sort_for_tie_methods(spark):
-    """average/min/max/dense rank via the distinct-value frame: the raw-row
-    side of the plan must carry no unpartitioned row-level Sort — only the
-    K-row aggregate is windowed globally."""
-    from pontem_spark.plans import physical_plan
+def test_rank_plans_one_exchange(spark):
+    """Series, DataFrame and grouped rank are one window rule
+    (core/window.py::rank): every method sorts within one partitioning —
+    one Exchange, no join back to the rows."""
+    from pontem_spark.core.frame import DataFrame
+    from pontem_spark.plans import count_exchanges, physical_plan
 
-    s = Series([10, 30, 20, 30, 5, 20, 20], spark=spark)
-    plan = physical_plan(s.rank()._materialized())
-    # the join back is on the value; a full-row global window would show a
-    # row_number/Window over the unaggregated side
-    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan
+    vals = [10, 30, 20, 30, 5, 20, 20]
+    s = Series(vals, spark=spark)
+    f = DataFrame({"a": vals, "b": vals[::-1], "k": [1, 2, 1, 2, 1, 2, 1]}, spark=spark)
+    for method in ("average", "min", "max", "dense", "first"):
+        for na_option in ("keep", "top"):
+            for pct in (False, True):
+                for label, r in (
+                    ("series", s.rank(method=method, pct=pct, na_option=na_option)),
+                    ("frame", f[["a", "b"]].rank(method=method, pct=pct, na_option=na_option)),
+                ):
+                    plan = physical_plan(r._materialized())
+                    assert count_exchanges(r._materialized()) == 1, (label, method, plan)
+                    assert "Join" not in plan, (label, method, plan)
+            g = f.groupby("k")["a"].rank(method=method, pct=True)
+            assert count_exchanges(g._materialized()) == 1, ("grouped", method)
 
 
 def test_mode(spark):

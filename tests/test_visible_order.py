@@ -14,9 +14,10 @@ in one sweep, all in two classes:
    INDEX_COL (positional slices) to the NEW index.
 
 The module also holds the seeded window-family differential (rolling /
-expanding / ewm over the Series and frame forms, grouped transform,
-dt.round ties) and the resample/asfreq and reshape outputs as chain
-links, each compared against pandas.
+expanding / ewm, shift / diff / pct_change / cum* and rank over the
+Series, frame and grouped forms, grouped transform, dt.round ties) and
+the resample/asfreq and reshape outputs as chain links, each compared
+against pandas.
 """
 from __future__ import annotations
 
@@ -416,22 +417,50 @@ def _window_data(seed: int, n: int) -> "dict[str, list]":
 
 
 def _window_forms(spark, form: str, data: "dict[str, list]"):
-    """(engine object, pandas twin): the 18% column as a Series, or the
-    whole frame."""
+    """(engine object, pandas twin): the 18% column as a Series, the whole
+    frame, or the 18% column grouped by ``k`` — three groups and a NaN
+    key, on a shuffled (non-monotonic) index."""
     if form == "series":
         return Series(data["d18"], spark=spark), pd.Series(data["d18"])
-    return DataFrame(data, spark=spark), pd.DataFrame(data)
+    if form == "frame":
+        return DataFrame(data, spark=spark), pd.DataFrame(data)
+    import random
+
+    n = len(data["d18"])
+    rng = random.Random(n)
+    cols = {"k": [rng.choice([0.0, 1.0, 2.0, np.nan]) for _ in range(n)], "v": data["d18"]}
+    index = rng.sample(range(3 * n), n)
+    return (
+        DataFrame(cols, index=index, spark=spark).groupby("k")["v"],
+        pd.DataFrame(cols, index=index).groupby("k")["v"],
+    )
+
+
+def _by_label(got, want):
+    """pandas indexes a grouped rolling/expanding/ewm result by (key,
+    label) in group order; the engine keeps the labels of the valid-key
+    rows in the visible order — the same rows, compared by label."""
+    if not isinstance(want.index, pd.MultiIndex):
+        return want
+    want = want.droplevel(0)
+    assert sorted(got.index) == sorted(want.index)
+    return want.loc[got.index]
 
 
 def _assert_close(got, want, label: str) -> None:
+    """Values match within 1e-7 relative (equal infinities exactly),
+    missing matches missing; a ``count`` also matches pandas' dtype
+    (float64 for rolling/expanding)."""
     got = got if isinstance(got, pd.DataFrame) else got.to_frame("v")
     want = want if isinstance(want, pd.DataFrame) else want.to_frame("v")
     assert got.shape == want.shape, label
     for c in want.columns:
+        if "count" in label:
+            assert got[c].dtype == want[c].dtype, (label, c, got[c].dtype, want[c].dtype)
         for i, (a, b) in enumerate(zip(got[c].values, want[c].values)):
             if pd.isna(a) or pd.isna(b):
                 assert bool(pd.isna(a)) == bool(pd.isna(b)), (label, c, i, a, b)
-            else:
+            elif float(a) != float(b):  # equal infinities match too
                 assert abs(float(a) - float(b)) < 1e-7 * max(1.0, abs(float(b))), (
                     label, c, i, a, b,
                 )
@@ -465,23 +494,28 @@ def _window_sweep(eng, pdo, windows: "dict[str, tuple]") -> None:
     got = _one_collect(results)
     for label, want in wants.items():
         g = got[label]
-        _assert_close(g.iloc[:, 0] if isinstance(want, pd.Series) else g, want, label)
+        g = g.iloc[:, 0] if isinstance(want, pd.Series) else g
+        _assert_close(g, _by_label(g, want), label)
 
 
 @pytest.mark.parametrize("seed", [11, 42])
-@pytest.mark.parametrize("form", ["series", "frame"])
+@pytest.mark.parametrize("form", ["series", "frame", "grouped"])
 @pytest.mark.parametrize("window", [2, 4, 7])
 def test_rolling_differential(spark, seed, form, window):
+    """The grouped rolling takes no min_periods (pandas' full window)."""
     eng, pdo = _window_forms(spark, form, _window_data(seed, 30))
+    minps = (None,) if form == "grouped" else (None, 1, window)
     _window_sweep(eng, pdo, {
-        f"rolling w{window} mp{minp} {agg}": ("rolling", (window,), {"min_periods": minp}, agg)
-        for minp in (None, 1, window)
+        f"rolling w{window} mp{minp} {agg}": (
+            "rolling", (window,), {} if minp is None else {"min_periods": minp}, agg
+        )
+        for minp in minps
         for agg in _ROLL_AGGS
     })
 
 
 @pytest.mark.parametrize("seed", [11, 42])
-@pytest.mark.parametrize("form", ["series", "frame"])
+@pytest.mark.parametrize("form", ["series", "frame", "grouped"])
 def test_expanding_differential(spark, seed, form):
     eng, pdo = _window_forms(spark, form, _window_data(seed, 30))
     _window_sweep(eng, pdo, {
@@ -492,7 +526,7 @@ def test_expanding_differential(spark, seed, form):
 
 
 @pytest.mark.parametrize("seed", [11, 42])
-@pytest.mark.parametrize("form", ["series", "frame"])
+@pytest.mark.parametrize("form", ["series", "frame", "grouped"])
 @pytest.mark.parametrize(
     "kw", [{"com": 2.0}, {"span": 5.0}, {"alpha": 0.3}, {"halflife": 3.0}],
     ids=["com", "span", "alpha", "halflife"],
@@ -503,7 +537,52 @@ def test_ewm_differential(spark, seed, form, kw):
         for ignore_na in (True, False):
             got = eng.ewm(adjust=adjust, ignore_na=ignore_na, **kw).mean().to_pandas()
             want = pdo.ewm(adjust=adjust, ignore_na=ignore_na, **kw).mean()
-            _assert_close(got, want, f"ewm {kw} adjust={adjust} ignore_na={ignore_na}")
+            _assert_close(
+                got, _by_label(got, want), f"ewm {kw} adjust={adjust} ignore_na={ignore_na}"
+            )
+
+
+_ROW_OPS = {
+    "shift 1": ("shift", (1,)),
+    "shift -2": ("shift", (-2,)),
+    "diff 1": ("diff", (1,)),
+    "diff 2": ("diff", (2,)),
+    "pct_change": ("pct_change", ()),
+    "cumsum": ("cumsum", ()),
+    "cummax": ("cummax", ()),
+    "cummin": ("cummin", ()),
+}
+
+
+@pytest.mark.parametrize("seed", [11, 42])
+@pytest.mark.parametrize("form", ["series", "frame", "grouped"])
+def test_row_aligned_differential(spark, seed, form):
+    """shift/diff/pct_change/cum* and rank (method × ascending × pct) over
+    whole-number values, so ranks tie; the grouped form's shuffled index
+    makes rank 'first' break ties by row position, not by label. One
+    collect per form: every result is row-aligned on the source anchor."""
+    data = {
+        c: [v if np.isnan(v) else float(round(v)) for v in vals]
+        for c, vals in _window_data(seed + 3000, 30).items()
+    }
+    eng, pdo = _window_forms(spark, form, data)
+    ops = {label: (op, args, {}) for label, (op, args) in _ROW_OPS.items()}
+    ops.update({
+        f"rank {method} asc={asc} pct={pct}": (
+            "rank", (), {"method": method, "ascending": asc, "pct": pct}
+        )
+        for method in ("average", "min", "max", "dense", "first")
+        for asc in (True, False)
+        for pct in (False, True)
+    })
+    results, wants = {}, {}
+    for label, (op, args, kw) in ops.items():
+        results[label] = getattr(eng, op)(*args, **kw)
+        wants[label] = getattr(pdo, op)(*args, **kw)
+    got = _one_collect(results)
+    for label, want in wants.items():
+        g = got[label]
+        _assert_close(g.iloc[:, 0] if isinstance(want, pd.Series) else g, want, label)
 
 
 @pytest.mark.parametrize("seed", [11, 42])
@@ -517,7 +596,7 @@ def test_grouped_transform_differential(spark, seed):
         "v": [np.nan if rng.random() < 0.15 else round(rng.uniform(-4, 4), 2) for _ in range(40)],
     }
     df, pdf = DataFrame(data, spark=spark), pd.DataFrame(data)
-    for how in ("mean", "sum", "min", "max", "count", "std"):
+    for how in ("mean", "sum", "min", "max", "count", "std", "first", "last"):
         got = df.groupby("g")["v"].transform(how).to_pandas()
         _assert_close(got, pdf.groupby("g")["v"].transform(how), f"transform {how}")
 
@@ -805,3 +884,52 @@ def test_reshape_outputs_as_chain_links(spark, name):
     if not isinstance(got, (pd.DataFrame, pd.Series)):
         got = got.to_pandas()
     _assert_same_labeled(got, want)
+
+
+# -- chains over a non-monotonic explicit index -------------------------------
+# The construction order is the pandas row order; each chain feeds it
+# through sorts, positional picks, fills, filters, reset/sort_index and
+# the positional, rank and grouped ops, and compares the whole result.
+
+_UNSORTED_OPS = {
+    "sort_u": lambda d: d.sort_values("u"),
+    "sort_u_desc": lambda d: d.sort_values("u", ascending=False),
+    "head5": lambda d: d.head(5),
+    "tail4": lambda d: d.tail(4),
+    "fillna0": lambda d: d.fillna(0.0),
+    "dropna": lambda d: d.dropna(),
+    "assign_w": lambda d: d.assign(w=d["v"] * 2 + 1),
+    "filter_pos": lambda d: d[d["u"] > -20.0],
+    "nlargest3": lambda d: d.nlargest(3, "u"),
+    "reset_index": lambda d: d.reset_index(drop=True),
+    "sort_index": lambda d: d.sort_index(),
+    "cumsum_v": lambda d: d.assign(cs=d["v"].cumsum()),
+    "iloc_rev_head": lambda d: d.iloc[::-1].head(4),
+    "rank_u": lambda d: d.assign(r=d["u"].rank(method="first")),
+    "g_cumsum": lambda d: d.assign(gc=d.groupby("k")["u"].cumsum()),
+    "g_shift": lambda d: d.assign(gs=d.groupby("k")["u"].shift(1)),
+    "ffill": lambda d: d.ffill(),
+    "shift_v": lambda d: d.assign(sv=d["v"].shift(1)),
+}
+_UNSORTED_CHAINS = [
+    "sort_u_desc>tail4>fillna0",
+    "dropna>filter_pos>nlargest3",
+    "iloc_rev_head>reset_index>ffill",
+    "assign_w>head5>shift_v",
+    "sort_u>rank_u>g_cumsum",
+    "g_shift>sort_index>cumsum_v",
+    "rank_u>g_shift>sort_u_desc>head5",
+]
+
+
+@pytest.mark.parametrize("chain", _UNSORTED_CHAINS)
+def test_unsorted_index_chains(spark, chain):
+    u = [12.5, -30.5, 41.5, 3.5, -7.5, 28.5, -19.5, 35.5, 0.5, -44.5, 17.5]
+    v = [1.5, None, -2.5, 3.0, None, 4.5, -1.0, 2.0, None, 0.5, 3.0]
+    k = list("xyzxzyxyzzx")
+    index = [117, 104, 130, 101, 125, 109, 112, 121, 106, 128, 115]
+    df = DataFrame({"u": u, "v": v, "k": k}, index=index, spark=spark)
+    pdf = pd.DataFrame({"u": u, "v": v, "k": k}, index=index).astype({"v": "float64"})
+    for op in chain.split(">"):
+        df, pdf = _UNSORTED_OPS[op](df), _UNSORTED_OPS[op](pdf)
+    _eq_frame(df.to_pandas(), pdf)
