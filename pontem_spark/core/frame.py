@@ -9,6 +9,7 @@ bookkeeping — zero jobs until an action.
 
 from __future__ import annotations
 
+import functools
 from typing import Any, Iterable, Mapping
 
 from pyspark.sql import Column, DataFrame as SparkDataFrame, SparkSession, functions as F
@@ -23,41 +24,26 @@ from pontem_spark.core.cells import (
     dtypes,
     missing,
     scalar_dtype,
-    unary,
     valid,
 )
+from pontem_spark.core.generic import Frame
 from pontem_spark.core.internal import (
     INDEX_COL,
     InternalFrame,
     align_rows,
-    default_session,
     next_epos_name,
     rowalign_keys,
     rowalign_left_join,
+    upload,
 )
 from pontem_spark.core.series import _VALUE, Series
 
 _ROWID = "__rowid__"
 
 
-class _ReverseOrder:
-    """Sort-key wrapper inverting comparisons — lets ``sorted`` order a
-    mixed asc/desc multi-column key tuple driver-side (reset_index
-    boundary derivation)."""
+class DataFrame(Frame):
+    """2-D labeled frame over a Spark anchor: a frame of many value columns."""
 
-    __slots__ = ("v",)
-
-    def __init__(self, v):
-        self.v = v
-
-    def __lt__(self, other):
-        return other.v < self.v
-
-    def __eq__(self, other):
-        return self.v == other.v
-
-
-class DataFrame:
     # -- construction -------------------------------------------------------
 
     def __init__(
@@ -78,73 +64,7 @@ class DataFrame:
                 index if isinstance(index, pd.MultiIndex) else list(index),
                 axis=0,
             )
-        spark = spark or default_session()
-        cols = [str(c) for c in pdf.columns]
-        if isinstance(pdf.index, pd.MultiIndex):
-            # struct-backed MultiIndex, same representation as
-            # set_index([k1, k2]) — one struct column whose field ORDER
-            # is the level order (struct sort == MultiIndex sort).
-            # index_name keeps the TRUE level names (None preserved, so
-            # to_pandas round-trips unnamed levels); struct fields fall
-            # back to level_{i} — _index_level_names/reset_index resolve
-            # display names against the schema (r14).
-            mi = pdf.index
-            upload = pdf.reset_index(drop=True)
-            upload.columns = cols
-            lvl_fields = [
-                str(n) if n is not None else f"level_{i}"
-                for i, n in enumerate(mi.names)
-            ]
-            for i, fld in enumerate(lvl_fields):
-                upload.insert(i, fld, mi.get_level_values(i).to_numpy())
-            mi_name: "tuple | None" = tuple(mi.names)
-        else:
-            upload = pdf.reset_index().rename(columns={"index": INDEX_COL})
-            upload.columns = [INDEX_COL] + cols
-            lvl_fields = None
-            mi_name = None
-        # pandas preserves CONSTRUCTION order; with a non-monotonic explicit
-        # index, "sort by index at materialization" (spec None) would both
-        # display differently AND feed positional ops (shift/cumsum/head)
-        # the wrong row order (r11 probe 5). A monotonic index with
-        # DUPLICATE labels needs the helper too: Spark's sort is unstable,
-        # so intra-duplicate order would be nondeterministic (ADVICE r11).
-        # Record the pandas order in a helper column — only when index
-        # order alone can't reproduce it, so the common RangeIndex path
-        # stays column-free.
-        try:
-            ordered = bool(pdf.index.is_monotonic_increasing and pdf.index.is_unique)
-        except TypeError:
-            ordered = False
-        spec = None
-        if not ordered:
-            import numpy as np
-
-            # a user column literally named like the helper must not be
-            # silently overwritten (ADVICE r11) — mint a fresh name
-            ctor = "__ctor__"
-            k = 2
-            while ctor in cols:
-                ctor = f"__ctor{k}__"
-                k += 1
-            upload[ctor] = np.arange(len(upload), dtype="int64")
-            spec = ((ctor, True),)
-        from pontem_spark.core.internal import devoid, empty_upload_schema
-
-        if len(upload) == 0:
-            sdf = devoid(
-                spark.createDataFrame(upload, schema=empty_upload_schema(upload))
-            )
-        else:
-            sdf = devoid(spark.createDataFrame(upload))
-        if lvl_fields is not None:
-            sdf = sdf.withColumn(
-                INDEX_COL, F.struct(*[F.col(n) for n in lvl_fields])
-            ).drop(*lvl_fields)
-            self._internal = InternalFrame(sdf, INDEX_COL, mi_name, spec)
-        else:
-            self._internal = InternalFrame(sdf, INDEX_COL, pdf.index.name, spec)
-        self._columns: dict[str, Column] = {c: sdf[c] for c in cols}
+        self._internal, self._columns = upload(pdf, spark)
 
     @classmethod
     def _from_internal(cls, internal: InternalFrame, columns: dict[str, Column]) -> "DataFrame":
@@ -153,17 +73,59 @@ class DataFrame:
         df._columns = dict(columns)
         return df
 
+    # -- the Frame hooks and the column-key side of the indexers -------------
+
+    def _values(self) -> "dict[str, Column]":
+        return self._columns
+
+    def _with(self, internal: InternalFrame, cols: "dict[str, Column]") -> "DataFrame":
+        return DataFrame._from_internal(internal, cols)
+
+    def _split_key(self, key):
+        return key if isinstance(key, tuple) and len(key) == 2 else (key, None)
+
+    def _iloc_columns(self, key):
+        """Column keys of ``iloc``: int (→ that Series) / list / slice over
+        column POSITIONS."""
+        names = list(self._columns)
+        if isinstance(key, slice):
+            picked = names[key]
+        elif isinstance(key, int):
+            return self[names[key]]  # Series
+        elif isinstance(key, (list, tuple)):
+            picked = [names[int(k)] for k in key]
+        else:
+            raise TypeError(f"iloc column key: {type(key)}")
+        return self[picked]
+
+    def _row(self, key):
+        """A one-row slice as a pandas Series (``iloc[int]``)."""
+        pdf = self.to_pandas()
+        if len(pdf) == 0:
+            raise IndexError(key)
+        row = pdf.iloc[0]
+        row.name = pdf.index[0]
+        return row
+
+    def _label(self, label, one_col: bool = False):
+        """``loc[label]``: that row as a pandas Series (its one cell for
+        ``loc[label, col]``); a repeated label gives the frame of its rows,
+        like pandas."""
+        msdf = self._materialized().filter(F.col(INDEX_COL) == F.lit(label))
+        pdf = msdf.select(*list(self._columns)).toPandas()
+        if len(pdf) == 0:
+            raise KeyError(label)
+        if len(pdf) > 1:
+            return self._rewrap(msdf)
+        row = pdf.iloc[0]
+        row.name = label
+        return row.iloc[0] if one_col else row
+
     # -- metadata -----------------------------------------------------------
 
     @property
     def columns(self) -> list[str]:
         return list(self._columns)
-
-    @property
-    def index(self):
-        from pontem_spark.core.indexes import Index
-
-        return Index(self)
 
     @property
     def shape(self) -> tuple[int, int]:
@@ -179,14 +141,7 @@ class DataFrame:
         mapping = self._dtype_map()
         return pd.Series({c: mapping[c] for c in self._columns})
 
-    def _dtype_map(self) -> "dict[str, str | None]":
-        """Spark dtype name per column (one ``cells.dtypes`` analysis)."""
-        return dict(zip(self._columns, dtypes(self._internal.sdf, *self._columns.values())))
-
     # -- materialization ------------------------------------------------------
-
-    def _materialized(self) -> SparkDataFrame:
-        return self._internal.materialize(self._columns)
 
     def _materialized_user(self) -> SparkDataFrame:
         """Exactly INDEX + user columns — for edges and frame COMBINERS
@@ -204,34 +159,6 @@ class DataFrame:
         if index_col is not None:
             sdf = sdf.withColumnRenamed(INDEX_COL, index_col)
         return sdf
-
-    def _ordered(self, sdf):
-        return sdf.orderBy(*self._internal.order_columns(INDEX_COL))
-
-    def to_pandas(self):
-        import pandas as pd
-
-        pdf = self._ordered(self._materialized()).toPandas()
-        pdf = pdf[[INDEX_COL, *self._columns]]  # drop order-spec helpers
-        name = self._internal.index_name
-        if isinstance(name, tuple):  # struct-backed MultiIndex
-            if len(pdf) == 0:
-                # from_tuples([]) cannot infer the level count
-                idx = pd.MultiIndex.from_arrays([[] for _ in name], names=list(name))
-            else:
-                # Arrow materializes structs as dicts; classic rows as Row tuples
-                idx = pd.MultiIndex.from_tuples(
-                    [tuple(r.values()) if isinstance(r, dict) else tuple(r) for r in pdf[INDEX_COL]],
-                    names=list(name),
-                )
-            return pdf.drop(columns=[INDEX_COL]).set_index(idx)
-        if len(pdf) and isinstance(pdf[INDEX_COL].iloc[0], dict):
-            # a FLAT index of python tuples uploads as a struct column;
-            # convert the Arrow dicts back to tuples (r14 probe C9)
-            pdf[INDEX_COL] = [tuple(r.values()) for r in pdf[INDEX_COL]]
-        out = pdf.set_index(INDEX_COL)
-        out.index.name = name
-        return out
 
     def __repr__(self) -> str:
         preview = self._ordered(self._materialized()).limit(6).toPandas()
@@ -253,43 +180,7 @@ class DataFrame:
                 raise KeyError(missing)
             return DataFrame._from_internal(self._internal, {k: self._columns[k] for k in key})
         if isinstance(key, Series):  # boolean mask
-            if key._internal.sdf is self._internal.sdf:
-                # project the columns + mask FIRST, then filter: a
-                # window-derived column (df.assign(dd=df.duplicated())[mask])
-                # must keep its PRE-filter values (r10 composition probe);
-                # Catalyst substitutes the mask alias, so plain predicates
-                # still push to the scan. The filter itself preserves the
-                # visible order.
-                extras = [
-                    n
-                    for n, _ in (self._internal.order_spec or ())
-                    if n != INDEX_COL
-                    and n not in self._columns
-                    and n in self._internal.sdf.columns
-                ]
-                sdf = (
-                    self._internal.sdf.select(
-                        self._internal.index_col.alias(INDEX_COL),
-                        *[expr.alias(name) for name, expr in self._columns.items()],
-                        *dict.fromkeys(extras),
-                        key._col.alias("__mask__"),
-                    )
-                    .filter(F.col("__mask__"))
-                    .drop("__mask__")
-                )
-                internal = InternalFrame(
-                    sdf, INDEX_COL, self._internal.index_name,
-                    self._internal.order_spec,
-                )
-                return DataFrame._from_internal(
-                    internal, {c: sdf[c] for c in self._columns}
-                )
-            mask = key._materialized("__m__").select(INDEX_COL, "__m__")
-            sdf = self._materialized().join(mask, INDEX_COL, "inner").filter(F.col("__m__")).drop("__m__")
-            internal = InternalFrame(
-                sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-            )
-            return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
+            return self._masked(key)
         raise TypeError(f"unsupported key: {type(key)}")
 
     def __setitem__(self, key: str, value) -> None:
@@ -308,16 +199,8 @@ class DataFrame:
             sdf = rowalign_left_join(lmat, right, shared, "__new__")
             # adding a column preserves the visible order (r10 probe)
             # AND row identity (tokens carry)
-            internal = InternalFrame(
-                sdf,
-                INDEX_COL,
-                self._internal.index_name,
-                self._internal.order_spec,
-                row_tokens=self._internal.row_tokens,
-            )
-            cols = {c: sdf[c] for c in self._columns}
-            cols[key] = sdf["__new__"]
-            self._internal, self._columns = internal, cols
+            out = self._rewrap(sdf, row_tokens=self._internal.row_tokens)
+            self._internal, self._columns = out._internal, {**out._columns, key: sdf["__new__"]}
             return
         if isinstance(value, Column):
             self._columns[key] = value
@@ -329,74 +212,6 @@ class DataFrame:
         for k, v in kwargs.items():
             out[k] = v(out) if callable(v) else v
         return out
-
-    # -- positional indexing --------------------------------------------------
-
-    def _positional_slice(self, key: slice) -> "DataFrame":
-        """Positional row slice — the frame twin of
-        Series._positional_slice (series.py:369): row_number over the
-        frame's VISIBLE order (``order_spec``), so chained positional ops
-        compose (``df.iloc[::-1].iloc[:3]`` is the last three rows,
-        reversed). The global window is on-demand only — pandas-positional
-        semantics fundamentally need a total order (SURVEY §7)."""
-        from pyspark.sql import Window
-
-        step = 1 if key.step is None else key.step
-        if step == 0:
-            raise ValueError("slice step cannot be zero")
-        w = Window.orderBy(*self._internal.order_columns(INDEX_COL))
-        cur_spec = self._internal.order_spec
-        base = self._materialized()
-        if step < 0:
-            start, stop, step = key.indices(len(self))
-            sdf = base.withColumn("__rn__", F.row_number().over(w) - 1)
-            cond = (
-                (F.col("__rn__") <= start)
-                & (F.col("__rn__") > stop)
-                & ((F.lit(start) - F.col("__rn__")) % F.lit(-step) == 0)
-            )
-            sdf = sdf.filter(cond).drop("__rn__")
-            flipped = tuple((c, not asc) for c, asc in (cur_spec or ((INDEX_COL, True),)))
-            # double reverse lands back on plain index order — drop the
-            # spec so downstream ops take the no-metadata fast paths
-            if flipped == ((INDEX_COL, True),):
-                flipped = None
-            internal = InternalFrame(
-                sdf, INDEX_COL, self._internal.index_name, order_spec=flipped
-            )
-            return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
-        if (key.start or 0) < 0 or (key.stop is not None and key.stop < 0):
-            start, stop, step = key.indices(len(self))
-        else:
-            start, stop = key.start or 0, key.stop
-        sdf = base.withColumn("__rn__", F.row_number().over(w) - 1)
-        cond = F.col("__rn__") >= start
-        if stop is not None:
-            cond = cond & (F.col("__rn__") < stop)
-        if step != 1:
-            cond = cond & ((F.col("__rn__") - F.lit(start)) % F.lit(step) == 0)
-        sdf = sdf.filter(cond).drop("__rn__")
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, order_spec=cur_spec
-        )
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
-
-    def _positional_take(self, positions: list) -> "DataFrame":
-        """iloc with an integer list, counting over the VISIBLE order; full
-        pandas take semantics — request order, duplicates preserved (r10
-        probe; same shared helper as Series._positional_take)."""
-        from pontem_spark.core.series import _positional_take_sdf
-
-        sdf = _positional_take_sdf(self, positions)
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name,
-            order_spec=(("__take_ord__", True),),
-        )
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
-
-    @property
-    def iloc(self):
-        return _FrameILocIndexer(self)
 
     def drop(self, columns: list[str] | str) -> "DataFrame":
         drop = {columns} if isinstance(columns, str) else set(columns)
@@ -682,10 +497,7 @@ class DataFrame:
                 src = self
                 if drop_rows:
                     fb = base.filter(valid_v.isNotNull())
-                    src = DataFrame._from_internal(
-                        InternalFrame(fb, INDEX_COL, self._internal.index_name),
-                        {c: fb[c] for c in self._columns},
-                    )
+                    src = self._rewrap(fb, order_spec=None)
                 return src.groupby(index).agg({values: aggfunc})
             if not base.filter(
                 F.col(index).cast("string") == margins_name
@@ -960,22 +772,15 @@ class DataFrame:
         ascending: "bool | list[bool]" = True,
         na_position: str = "last",
     ) -> "DataFrame":
-        """Lazy order spec; ``ascending`` may be per-column. Missing cells
-        (NULL or NaN) stay at the chosen END in both directions — Spark
-        orders NaN as the largest value, which would lead a descending
-        sort (same fix as Series.sort_values, r7)."""
-        if na_position not in ("last", "first"):
-            raise ValueError(f"sort_values: na_position must be 'first' or 'last', got {na_position!r}")
+        """Lazy order spec (the Frame sort); ``ascending`` may be
+        per-column. pandas accepts INDEX LEVEL names in ``by`` (r12 probe
+        batch 3: set_index('u').sort_values('u') raised
+        UNRESOLVED_COLUMN); a name matching BOTH a column and a level is
+        the same ambiguity error as groupby."""
         by = [by] if isinstance(by, str) else list(by)
         asc = [ascending] * len(by) if isinstance(ascending, bool) else list(ascending)
         if len(asc) != len(by):
             raise ValueError("sort_values: ascending list must match by list")
-        schema = self._dtype_map()
-        mat = self._materialized()
-        # pandas accepts INDEX LEVEL names in ``by`` (r12 probe batch 3:
-        # set_index('u').sort_values('u') raised UNRESOLVED_COLUMN); a
-        # name matching BOTH a column and a level is the same ambiguity
-        # error as groupby
         iname = self._internal.index_name
         levels = (
             tuple(str(l) for l in iname)
@@ -999,108 +804,10 @@ class DataFrame:
                 )
             else:
                 raise KeyError(c)
-        spec = []
-        miss_cols = {}
-        for c in by:
-            try:
-                dt = (
-                    schema.get(c)
-                    if c in self._columns
-                    else mat.select(exprs[c]).schema[0].dataType.simpleString()
-                )
-            except Exception:
-                dt = None
-            if dt in ("double", "float"):
-                miss_cols[f"__miss_{c}__"] = exprs[c].isNull() | F.isnan(exprs[c])
-            else:
-                miss_cols[f"__miss_{c}__"] = exprs[c].isNull()
-        # helper names are minted PAST any the prior spec already uses:
-        # re-sorting by the same column must not overwrite the recorded
-        # old sort values the prior spec (the tie-break below) points at
-        taken = {n for n, _ in (self._internal.order_spec or ())}
-
-        def _mint(base: str) -> str:
-            if base not in taken:
-                return base
-            k = 2
-            while f"{base[:-2]}{k}__" in taken:
-                k += 1
-            return f"{base[:-2]}{k}__"
-
-        miss_names = {c: _mint(f"__miss_{c}__") for c in by}
-        sv_names = {c: _mint(f"__sv_{c}__") for c in by}
-        sdf = mat
-        for c in by:
-            sdf = sdf.withColumn(miss_names[c], miss_cols[f"__miss_{c}__"])
-        # sort keys live in DEDICATED helper columns, not the user column
-        # names: _materialized() re-aliases the CURRENT column exprs under
-        # those names, so replacing a sort column after the sort
-        # (df['a'] = df['a'] > 0) would re-sort rows by the derived
-        # values (r10 probe — value_counts' ADVICE bug class).
-        for c in by:
-            sdf = sdf.withColumn(sv_names[c], exprs[c])
-        for c, a in zip(by, asc):
-            spec.append((miss_names[c], na_position == "last"))
-            spec.append((sv_names[c], a))
-        # rows tied on the sort keys keep their previous VISIBLE order:
-        # the old spec rides along as the tie-break, exactly like
-        # sort_index (r13 probe: a post-merge sort broke the documented
-        # kind='stable' contract by tie-breaking on the rowid index,
-        # which is scan order, not the merge's pandas row order). The
-        # index stays the tie-break of last resort.
-        seen = {n for n, _ in spec}
-        for n, a in (self._internal.order_spec or ()):
-            if n not in seen and n in sdf.columns:
-                spec.append((n, a))
-                seen.add(n)
-        if INDEX_COL not in seen:
-            spec.append((INDEX_COL, True))
-        internal = InternalFrame(
-            sdf,
-            INDEX_COL,
-            self._internal.index_name,
-            tuple(spec),
-            row_tokens=self._internal.row_tokens,
-        )
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
-
-    def head(self, n: int = 5) -> "DataFrame":
-        sdf = self._ordered(self._materialized()).limit(n)
-        internal = InternalFrame(sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec)
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
+        return self._sort_by(exprs, asc, na_position)
 
     def drop_duplicates(self, subset: list[str] | None = None, keep: "str | bool" = "first") -> "DataFrame":
-        """pandas semantics: the SURVIVOR of each duplicate group is chosen
-        by index ('first' = lowest, 'last' = highest; False drops whole
-        groups) — Spark's own dropDuplicates keeps an ARBITRARY row
-        (whichever partition wins), which is nondeterministic across runs
-        and cluster sizes. One window shuffle on the keys either way (the
-        dup flag is materialized as a column first — Spark forbids window
-        functions directly inside WHERE)."""
-        from pyspark.sql import Window
-
-        keys = subset or list(self._columns)
-        mat = self._materialized()
-        if keep is False:
-            dup = F.count(F.lit(1)).over(Window.partitionBy(*[F.col(k) for k in keys])) > 1
-        elif keep in ("first", "last"):
-            # 'first' = first in the VISIBLE order (a sorted frame keeps
-            # the sorted-first row, like pandas — r10 composition probe);
-            # 'last' reverses every direction of the spec
-            ospec = self._internal.order_spec or ((INDEX_COL, True),)
-            order = [
-                F.col(n).asc() if (asc == (keep == "first")) else F.col(n).desc()
-                for n, asc in ospec
-            ]
-            w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
-            dup = F.row_number().over(w) > 1
-        else:
-            raise ValueError(f"drop_duplicates: keep must be 'first', 'last' or False, got {keep!r}")
-        sdf = mat.withColumn("__dup__", dup).filter(~F.col("__dup__")).drop("__dup__")
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
+        return self._drop_duplicates(subset or list(self._columns), keep)
 
     def astype(self, dtype) -> "DataFrame":
         """Per-column casts: a single dtype for every column, or a
@@ -1134,34 +841,7 @@ class DataFrame:
         return DataFrame._from_internal(self._internal, cols)
 
     def dropna(self, subset: list[str] | None = None, how: str = "any") -> "DataFrame":
-        """pandas-missing aware (NULL or float NaN — Spark's own dropna is
-        NULL-only); how='any' drops a row with any missing cell among the
-        checked columns, 'all' only when every one is missing."""
-        if how not in ("any", "all"):
-            raise ValueError(f"dropna: how must be 'any' or 'all', got {how!r}")
-        mat = self._materialized()
-        schema = {f.name: f.dataType.simpleString() for f in mat.schema.fields}
-        keys = subset or list(self._columns)
-
-        def _miss(k):
-            # reference the MATERIALIZED projection's column, not the raw
-            # expression: a window-expression column (grouped cumsum
-            # assigned back) inside WHERE is illegal in Spark (r10 probe)
-            v = mat[k]
-            m = v.isNull()
-            if schema.get(k) in ("double", "float"):
-                m = m | F.isnan(v)
-            return m
-
-        miss = [_miss(k) for k in keys]
-        from functools import reduce as _reduce
-
-        combined = _reduce((lambda a, b: a | b) if how == "any" else (lambda a, b: a & b), miss)
-        sdf = mat.filter(~combined)
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
+        return self._dropna(subset or list(self._columns), how)
 
     def fillna(self, value) -> "DataFrame":
         # NULL or NaN both fill (a bare coalesce is NULL-only — r7 probe).
@@ -1277,16 +957,6 @@ class DataFrame:
             cols[c] = F.when(valid(self._columns[c], schema.get(c)).isNotNull(), clipped)
         return DataFrame._from_internal(self._internal, cols)
 
-    def _visible(self, rule, *args, numeric: "str | None" = None) -> "DataFrame":
-        """Run a core/window.py visible-order rule over every column — one
-        shared window spec, so Catalyst plans ONE sort for the whole
-        frame. ``numeric`` names an op that raises TypeError on
-        non-numeric columns, like pandas."""
-        if numeric is not None:
-            self._require_numeric(numeric)
-        internal, cols = rule(win.Visible(self._internal, self._columns), *args)
-        return DataFrame._from_internal(internal, cols)
-
     def _require_numeric(self, op: str) -> None:
         numeric = set(self._numeric_cols())
         bad = [c for c in self._columns if c not in numeric]
@@ -1295,78 +965,6 @@ class DataFrame:
 
     def shift(self, periods: int = 1) -> "DataFrame":
         return self._visible(win.shift, periods)
-
-    def diff(self, periods: int = 1) -> "DataFrame":
-        return self._visible(win.diff, periods, numeric="diff")
-
-    def pct_change(self, periods: int = 1, fill_method: str | None = "pad") -> "DataFrame":
-        return self._visible(win.pct_change, periods, fill_method, numeric="pct_change")
-
-    def cumsum(self) -> "DataFrame":
-        return self._visible(win.cum, F.sum, numeric="cumulative op")
-
-    def cummax(self) -> "DataFrame":
-        return self._visible(win.cum, F.max, numeric="cumulative op")
-
-    def cummin(self) -> "DataFrame":
-        return self._visible(win.cum, F.min, numeric="cumulative op")
-
-    def cumprod(self) -> "DataFrame":
-        return self._visible(win.cum, F.product, numeric="cumulative op")
-
-    def ffill(self) -> "DataFrame":
-        return self._visible(win.fill, True)
-
-    def bfill(self) -> "DataFrame":
-        return self._visible(win.fill, False)
-
-    pad = ffill
-    backfill = bfill
-
-    def interpolate(self, method: str = "linear", limit: "int | None" = None) -> "DataFrame":
-        return self._visible(win.interpolate, method, limit, numeric="interpolate")
-
-    def rolling(self, window: int, min_periods: "int | None" = None):
-        self._require_numeric("rolling")
-        return win.Rolling(self, window, min_periods)
-
-    def expanding(self, min_periods: int = 1):
-        self._require_numeric("rolling")
-        return win.Rolling(self, None, min_periods)
-
-    def ewm(
-        self,
-        com: float | None = None,
-        span: float | None = None,
-        halflife: float | None = None,
-        alpha: float | None = None,
-        adjust: bool = True,
-        ignore_na: bool = False,
-        min_periods: int = 0,
-    ):
-        self._require_numeric("ewm")
-        return win.Ewm(self, com, span, halflife, alpha, adjust, ignore_na, min_periods)
-
-    def resample(self, rule: str):
-        """Fixed-interval resample of every column over a timestamp index
-        (core/window.py::resample); an aggregation that a column's dtype
-        does not take raises TypeError like pandas."""
-        return win.Resampler(self, rule)
-
-    def asfreq(self, freq: str, method: str | None = None, fill_value=None) -> "DataFrame":
-        return self._visible(win.asfreq, freq, method, fill_value)
-
-    def rank(
-        self,
-        method: str = "average",
-        ascending: bool = True,
-        pct: bool = False,
-        na_option: str = "keep",
-    ) -> "DataFrame":
-        """pandas frame.rank(axis=0): each numeric column ranked
-        independently by the core/window.py rule — one window sort per
-        column, all on one partitioning."""
-        return self._visible(win.rank, method, ascending, pct, na_option, numeric="rank")
 
     def agg(self, spec: Mapping[str, str | list[str]]):
         """{'col': ['sum','mean']} → pandas DataFrame of scalars, and
@@ -1458,14 +1056,7 @@ class DataFrame:
         spec = (self._internal.order_spec or ((INDEX_COL, True),)) + (
             (epos, True),
         )
-        internal = InternalFrame(sdf, INDEX_COL, self._internal.index_name, spec)
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
-
-    def nunique(self):
-        """Distinct non-missing count per column in ONE aggregation pass →
-        pandas Series (Catalyst plans multi-count-distinct as a single
-        Expand+agg scan)."""
-        return self._reduce("nunique")
+        return self._rewrap(sdf, order_spec=spec)
 
     def set_index(self, column: str | list[str], drop: bool = True) -> "DataFrame":
         """Re-point the frame's index at existing column(s) — pure metadata
@@ -1595,11 +1186,16 @@ class DataFrame:
                         out.append(v)
                 return tuple(out)
 
+            def _cmp(a: tuple, b: tuple) -> int:
+                # the frame's order over a mixed asc/desc key tuple
+                for x, y, asc in zip(a, b, ascending):
+                    if x != y:
+                        return (-1 if x < y else 1) * (1 if asc else -1)
+                return 0
+
             keys = sorted(
                 [tuple(r) for r in sample_rows if None not in _flat(tuple(r))],
-                key=lambda t: tuple(
-                    (v if asc else _ReverseOrder(v)) for v, asc in zip(t, ascending)
-                ),
+                key=functools.cmp_to_key(_cmp),
             )
             step = max(1, len(keys) // n_parts)
             boundaries = [keys[i] for i in range(step, len(keys), step)][: n_parts - 1]
@@ -1708,121 +1304,20 @@ class DataFrame:
             ).drop(*[f"__q_{c}" for c in floats])
         else:
             sdf = sdf.filter(F.expr(expr))
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
-
-    def sample(self, frac: float, seed: int | None = None) -> "DataFrame":
-        """Bernoulli row sample — per-partition, no shuffle. For the
-        engine-reproducible variant use ``operators/sampling.py`` (md5-hash
-        buckets); ``sample`` matches pandas' RNG contract instead."""
-        sdf = self._materialized().sample(fraction=frac, seed=seed)
-        internal = InternalFrame(
-            sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
+        return self._rewrap(sdf)
 
     def nlargest(self, n: int, columns: str | list[str], keep: str = "first") -> "DataFrame":
-        """Top-n by column(s): a lazy descending order spec + limit, so the
-        plan is TakeOrderedAndProject (per-partition heaps + driver merge),
-        never a global sort."""
-        return self._n_extreme_frame(n, columns, largest=True, keep=keep)
+        return self._n_extreme(n, [columns] if isinstance(columns, str) else list(columns), True, keep)
 
     def nsmallest(self, n: int, columns: str | list[str], keep: str = "first") -> "DataFrame":
-        return self._n_extreme_frame(n, columns, largest=False, keep=keep)
-
-    def _n_extreme_frame(self, n: int, columns, largest: bool, keep: str = "first") -> "DataFrame":
-        """``keep``: 'first'/'last' break boundary ties by lowest/highest
-        index (pandas: position — the documented index-order deviation);
-        'all' keeps every row tying the n-th key, so the result can exceed
-        n rows (one extra broadcast 1-row boundary join, no global sort).
-        Rows missing in a sort column order AFTER every valid value in
-        that column (pandas na_position contract; Spark's asc-nulls-first
-        / NaN-is-largest defaults would otherwise lead nsmallest/nlargest
-        with the missing rows — r10 probe)."""
-        if keep not in ("first", "last", "all"):
-            raise ValueError(
-                f"nlargest/nsmallest: keep must be 'first', 'last' or 'all', got {keep!r}"
-            )
-        by = [columns] if isinstance(columns, str) else list(columns)
-        sdf = self._materialized()
-        schema = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-        # dedicated sort-key helpers — same derived-rebind fix as
-        # sort_values (r10 probe); plus a per-column missing flag so the
-        # missing block always sorts LAST regardless of direction
-        for c in by:
-            miss = F.col(c).isNull()
-            if schema.get(c) in ("double", "float"):
-                miss = miss | F.isnan(F.col(c))
-            sdf = sdf.withColumn(f"__svm_{c}__", miss).withColumn(
-                f"__sv_{c}__", F.when(~miss, F.col(c))
-            )
-        pair_spec: list[tuple[str, bool]] = []
-        for c in by:
-            pair_spec += [(f"__svm_{c}__", True), (f"__sv_{c}__", not largest)]
-        if keep == "all":
-            spec = tuple(pair_spec) + ((INDEX_COL, True),)
-            # boundary = the WORST kept key: order the (≤ n)-row top frame
-            # by the REVERSED spec and take one row
-            top = sdf.orderBy(
-                *[F.col(c).asc() if asc else F.col(c).desc() for c, asc in spec]
-            ).limit(n)
-            rev = top.orderBy(
-                *[F.col(c).desc() if asc else F.col(c).asc() for c, asc in spec[:-1]]
-            ).limit(1)
-            bcols = [x for c in by for x in (f"__svm_{c}__", f"__sv_{c}__")]
-            boundary = rev.select(*[F.col(x).alias(f"__b_{x}") for x in bcols])
-            # lexicographic ties-or-beats the boundary key: a row is kept
-            # unless some leading-tie column leaves it strictly worse
-            worse = F.lit(False)
-            tie = F.lit(True)
-            for c in by:
-                mc, bm = F.col(f"__svm_{c}__"), F.col(f"__b___svm_{c}__")
-                vc, bv = F.col(f"__sv_{c}__"), F.col(f"__b___sv_{c}__")
-                beaten = (vc < bv) if largest else (vc > bv)
-                col_worse = (mc & ~bm) | (~mc & ~bm & F.coalesce(beaten, F.lit(False)))
-                col_tie = (mc & bm) | (~mc & ~bm & F.coalesce(vc == bv, F.lit(False)))
-                worse = worse | (tie & col_worse)
-                tie = tie & col_tie
-            kept = sdf.crossJoin(F.broadcast(boundary)).filter(~worse)
-            sdf = kept.drop(*[f"__b_{x}" for x in bcols])
-            internal = InternalFrame(sdf, INDEX_COL, self._internal.index_name, spec)
-            return DataFrame._from_internal(
-                internal, {c: sdf[c] for c in self._columns}
-            )
-        tie_asc = keep == "first"
-        spec = tuple(pair_spec) + ((INDEX_COL, tie_asc),)
-        internal = InternalFrame(sdf, INDEX_COL, self._internal.index_name, spec)
-        out = DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
-        return out.head(n)
+        return self._n_extreme(n, [columns] if isinstance(columns, str) else list(columns), False, keep)
 
     def duplicated(self, subset: list[str] | None = None, keep: "str | bool" = "first") -> Series:
-        """Boolean Series marking duplicate rows, pandas ``keep`` semantics
-        ('first' = lowest index survives, 'last' = highest, ``False`` marks
-        all members). One window shuffle on the key columns; the anchor is
-        preserved so ``df[~df.duplicated()]`` is the plain dedup idiom."""
-        from pyspark.sql import Window
-
-        keys = subset or list(self._columns)
-        part = [self._columns[k] for k in keys]
-        if keep is False:
-            col = F.count(F.lit(1)).over(Window.partitionBy(*part)) > 1
-        elif keep in ("first", "last"):
-            # 'first' = first in the VISIBLE order (r10 composition probe);
-            # spec entries resolve against the anchor sdf, where the helper
-            # columns live
-            idx_name = self._internal.index_spark_col
-            ospec = self._internal.order_spec or ((idx_name, True),)
-            order = [
-                F.col(n).asc() if (asc == (keep == "first")) else F.col(n).desc()
-                for n, asc in ospec
-            ]
-            w = Window.partitionBy(*part).orderBy(*order)
-            col = F.row_number().over(w) > 1
-        else:
-            raise ValueError(f"duplicated: keep must be 'first', 'last' or False, got {keep!r}")
-        return Series._from_internal(self._internal, col, None)
+        """Boolean Series marking duplicate rows (the Frame rule) on the
+        anchor, so ``df[~df.duplicated()]`` is the plain dedup idiom."""
+        part = [self._columns[k] for k in subset or list(self._columns)]
+        flag = self._duplicate_flag(part, keep, "duplicated", self._internal.index_spark_col)
+        return Series._from_internal(self._internal, flag, None)
 
     def _pairwise_matrix(self, pair_agg, diag_agg=None, diag_const: float = 1.0):
         """Shared scaffolding for corr/cov: numeric-column selection, ONE
@@ -1957,20 +1452,6 @@ class DataFrame:
         if axis in (1, "columns"):
             return self._reduce_rowwise("max")
         return self._reduce("max")
-
-    def count(self): return self._reduce("count")
-    def median(self): return self._reduce("median")
-    def std(self, ddof: int = 1): return self._reduce("std", ddof=ddof)
-    def var(self, ddof: int = 1): return self._reduce("var", ddof=ddof)
-    def sem(self, ddof: int = 1): return self._reduce("sem", ddof=ddof)
-    def prod(self): return self._reduce("prod")
-    def skew(self): return self._reduce("skew")
-    def kurt(self): return self._reduce("kurt")
-    def any(self): return self._reduce("any")
-    def all(self): return self._reduce("all")
-
-    product = prod
-    kurtosis = kurt
 
     def quantile(self, q: "float | list" = 0.5):
         """Exact linear percentile per numeric column → pandas Series
@@ -2115,10 +1596,6 @@ class DataFrame:
 
     # -- label indexing, elementwise map, row-wise apply -------------------
 
-    @property
-    def loc(self):
-        return _FrameLocIndexer(self)
-
     def map(self, func, na_action: str | None = None) -> "DataFrame":
         """Elementwise callable over every cell (pandas DataFrame.map /
         legacy applymap) — each column routes through Series.map's Arrow
@@ -2227,17 +1704,6 @@ class DataFrame:
             },
         )
 
-    @property
-    def values(self):
-        return self.to_pandas().values
-
-    def copy(self, deep: bool = True) -> "DataFrame":
-        return DataFrame._from_internal(self._internal, dict(self._columns))
-
-    @property
-    def empty(self) -> bool:
-        return self._internal.sdf.limit(1).count() == 0
-
     def pop(self, column: str) -> Series:
         """Remove and return a column (in-place on the wrapper's column
         dict — the anchor itself is immutable)."""
@@ -2256,16 +1722,6 @@ class DataFrame:
         items.insert(loc, (column, col))
         self._columns.clear()
         self._columns.update(items)
-
-    @property
-    def at(self):
-        """Scalar label accessor: df.at[label, col] (loc's scalar cell)."""
-        return _FrameAtIndexer(self, positional=False)
-
-    @property
-    def iat(self):
-        """Scalar positional accessor: df.iat[pos, colpos]."""
-        return _FrameAtIndexer(self, positional=True)
 
     def value_counts(self, normalize: bool = False, ascending: bool = False) -> Series:
         """Row-combination counts as a Series with the columns as a
@@ -2293,69 +1749,6 @@ class DataFrame:
             )
         name = "proportion" if normalize else "count"
         return Series._from_internal(internal, F.col("__n"), name)
-
-    def rename_axis(self, name) -> "DataFrame":
-        """Rename the index (zero-job metadata)."""
-        internal = InternalFrame(
-            self._internal.sdf,
-            self._internal.index_spark_col,
-            name,
-            self._internal.order_spec,
-        )
-        return DataFrame._from_internal(internal, dict(self._columns))
-
-    def _level_rebuild(self, keep: "list[str]", base_sdf=None) -> "DataFrame":
-        m = base_sdf if base_sdf is not None else self._materialized()
-        # pandas droplevel/swaplevel/xs PRESERVE row order; the rebuilt
-        # index must not become the sort key (r8 probe: droplevel re-sorted
-        # by the remaining levels). The original struct index keeps the
-        # order — but under a HELPER name: _materialized() re-aliases the
-        # new index to INDEX_COL, so a spec naming INDEX_COL would resolve
-        # to the rebuilt index, not the original one.
-        spec = self._internal.order_spec
-        if spec is None:
-            m = m.withColumn("__lvlorder__", F.col(INDEX_COL))
-            spec = (("__lvlorder__", True),)
-        if len(keep) == 1:
-            sdf = m.withColumn("__idx2__", F.col(f"{INDEX_COL}.{keep[0]}"))
-            internal = InternalFrame(sdf, "__idx2__", keep[0], order_spec=spec)
-        else:
-            sdf = m.withColumn(
-                "__idx2__",
-                F.struct(*[F.col(f"{INDEX_COL}.{n}").alias(n) for n in keep]),
-            )
-            internal = InternalFrame(sdf, "__idx2__", tuple(keep), order_spec=spec)
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
-
-    def _index_level_names(self) -> list:
-        name = self._internal.index_name
-        if not isinstance(name, tuple):
-            raise TypeError("not a MultiIndex")
-        if any(n is None for n in name):
-            # ctor MultiIndexes keep pandas' unnamed levels (None) in
-            # index_name; the struct schema holds the level_{i} fallback
-            # field names the level machinery addresses (r14)
-            fields = self._materialized().schema[INDEX_COL].dataType.names
-            return [n if n is not None else f for n, f in zip(name, fields)]
-        return list(name)
-
-    def droplevel(self, level) -> "DataFrame":
-        names = self._index_level_names()
-        drop = names[level] if isinstance(level, int) else level
-        return self._level_rebuild([n for n in names if n != drop])
-
-    def swaplevel(self, i: int = -2, j: int = -1) -> "DataFrame":
-        names = self._index_level_names()
-        names[i], names[j] = names[j], names[i]
-        return self._level_rebuild(names)
-
-    def xs(self, key, level=0) -> "DataFrame":
-        """MultiIndex cross-section: pushdown filter on the level + level
-        drop."""
-        names = self._index_level_names()
-        lvl = names[level] if isinstance(level, int) else level
-        m = self._materialized().filter(F.col(f"{INDEX_COL}.{lvl}") == F.lit(key))
-        return self._level_rebuild([n for n in names if n != lvl], base_sdf=m)
 
     def unstack(self) -> "DataFrame":
         """2-level MultiIndexed frame → wide frame: the inner level's
@@ -2424,12 +1817,6 @@ class DataFrame:
         row = j.agg(*exprs).first()
         return pd.Series({c: row[c] for c in shared})
 
-    def reorder_levels(self, order: "list") -> "DataFrame":
-        """Reorder MultiIndex levels (struct field reorder — zero-job)."""
-        names = self._index_level_names()
-        new = [names[l] if isinstance(l, int) else l for l in order]
-        return self._level_rebuild(new)
-
     def dot(self, other: "DataFrame"):
         """Matrix product: self (n×k, distributed) · other (k×m, k =
         #columns so driver-sized by definition) — ``other`` is collected
@@ -2459,9 +1846,6 @@ class DataFrame:
     def size(self) -> int:
         return len(self) * len(self._columns)
 
-    def tail(self, n: int = 5) -> "DataFrame":
-        return self.iloc[-n:] if n > 0 else self.iloc[len(self):]
-
     def aggregate(self, spec):
         return self.agg(spec)
 
@@ -2488,20 +1872,6 @@ class DataFrame:
 
     def transpose(self) -> "DataFrame":
         return self.T
-
-    def truncate(self, before=None, after=None) -> "DataFrame":
-        """Index-label range filter, inclusive (pushdown-friendly)."""
-        sdf = self._materialized()
-        cond = F.lit(True)
-        if before is not None:
-            cond = cond & (F.col(INDEX_COL) >= F.lit(before))
-        if after is not None:
-            cond = cond & (F.col(INDEX_COL) <= F.lit(after))
-        m = sdf.filter(cond)
-        internal = InternalFrame(
-            m, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, {c: m[c] for c in self._columns})
 
     def update(self, other: "DataFrame") -> None:
         """Overwrite cells from ``other``'s non-missing values on matching
@@ -2617,10 +1987,8 @@ class DataFrame:
             "__idx", *[F.col(c).alias(f"__r_{c}") for c in other._columns]
         )
         j = a.join(b, "__idx", "full_outer")
-        import functools as _ft
-
         neq = [~j[c].eqNullSafe(j[f"__r_{c}"]) for c in self._columns]
-        diff = j.filter(_ft.reduce(lambda x, y: x | y, neq))
+        diff = j.filter(functools.reduce(lambda x, y: x | y, neq))
         internal = InternalFrame(diff, "__idx", self._internal.index_name)
         cols: dict[str, Column] = {}
         for c in self._columns:
@@ -2628,35 +1996,6 @@ class DataFrame:
             cols[f"{c}_self"] = F.when(~same, diff[c])
             cols[f"{c}_other"] = F.when(~same, diff[f"__r_{c}"])
         return DataFrame._from_internal(internal, cols)
-
-    def first_valid_index(self):
-        """First index label with ANY non-missing cell, in visible order."""
-        return self._frame_valid_edge(first=True)
-
-    def last_valid_index(self):
-        return self._frame_valid_edge(first=False)
-
-    def _frame_valid_edge(self, first: bool):
-        import functools as _ft
-
-        sdf = self._materialized()
-        schema = dict(sdf.dtypes)
-        masks = []
-        for c in self._columns:
-            v = sdf[c]
-            m = v.isNotNull()
-            if schema.get(c) in ("double", "float"):
-                m = m & ~F.isnan(v)
-            masks.append(m)
-        any_valid = _ft.reduce(lambda x, y: x | y, masks)
-        spec = self._internal.order_spec or ((INDEX_COL, True),)
-        order = [
-            F.col(c).asc() if (asc if first else not asc) else F.col(c).desc()
-            for c, asc in spec
-        ]
-        rows = sdf.filter(any_valid).orderBy(*order).select(INDEX_COL).limit(1).collect()
-        return rows[0][INDEX_COL] if rows else None
-
 
     @classmethod
     def from_dict(cls, data: Mapping, spark=None) -> "DataFrame":
@@ -2700,31 +2039,11 @@ class DataFrame:
     def info(self, *args, **kwargs):
         return self.to_pandas().info(*args, **kwargs)
 
-    def to_dict(self, *args, **kwargs):
-        return self.to_pandas().to_dict(*args, **kwargs)
-
-    def to_numpy(self):
-        return self.to_pandas().to_numpy()
-
     def to_records(self, *args, **kwargs):
         return self.to_pandas().to_records(*args, **kwargs)
 
-    def to_string(self, *args, **kwargs) -> str:
-        return self.to_pandas().to_string(*args, **kwargs)
-
-    def to_markdown(self, *args, **kwargs) -> str:
-        return self.to_pandas().to_markdown(*args, **kwargs)
-
     def to_html(self, *args, **kwargs) -> str:
         return self.to_pandas().to_html(*args, **kwargs)
-
-    def to_csv(self, *args, **kwargs):
-        """Driver-side pandas terminal; the DISTRIBUTED sink is
-        sources/writers.py::write_csv."""
-        return self.to_pandas().to_csv(*args, **kwargs)
-
-    def to_json(self, *args, **kwargs):
-        return self.to_pandas().to_json(*args, **kwargs)
 
     def to_parquet(self, path: str, **kwargs) -> None:
         """DISTRIBUTED parquet sink (writers.py) — never a driver
@@ -2737,36 +2056,6 @@ class DataFrame:
         from pontem_spark.sources.writers import write_orc
 
         write_orc(self.to_spark(), path, **kwargs)
-
-    def at_time(self, time_str: str) -> "DataFrame":
-        from pontem_spark.core.series import Series as _S
-
-        t = _S._normalize_time(time_str)
-        return self._index_time_filter(
-            F.date_format(F.col(INDEX_COL), "HH:mm:ss") == F.lit(t)
-        )
-
-    def between_time(self, start: str, end: str) -> "DataFrame":
-        from pontem_spark.core.series import Series as _S
-
-        t = F.date_format(F.col(INDEX_COL), "HH:mm:ss")
-        lo, hi = _S._normalize_time(start), _S._normalize_time(end)
-        cond = (
-            (t >= F.lit(lo)) & (t <= F.lit(hi))
-            if lo <= hi
-            else (t >= F.lit(lo)) | (t <= F.lit(hi))
-        )
-        return self._index_time_filter(cond)
-
-    def _index_time_filter(self, cond: Column) -> "DataFrame":
-        sdf = self._materialized()
-        m = sdf.filter(cond)
-        internal = InternalFrame(
-            m, INDEX_COL, self._internal.index_name, self._internal.order_spec
-        )
-        return DataFrame._from_internal(internal, {c: m[c] for c in self._columns})
-
-    def divide(self, other): return self / other
 
     def transform(self, func) -> "DataFrame":
         """Elementwise shape-preserving transform: a callable routes
@@ -2783,27 +2072,12 @@ class DataFrame:
             self._internal, {k: named[func](v) for k, v in self._columns.items()}
         )
 
-    def infer_objects(self) -> "DataFrame":
-        return self
-
-    def convert_dtypes(self) -> "DataFrame":
-        return self
-
     def asof(self, where):
         """Last row (as a pandas Series) whose index is <= ``where``, with
         at least one non-missing cell — ordered limit-1 job, the frame
         twin of Series.asof."""
-        import functools as _ft
-
         sdf = self._materialized()
-        schema = dict(sdf.dtypes)
-        masks = []
-        for c in self._columns:
-            m = sdf[c].isNotNull()
-            if schema.get(c) in ("double", "float"):
-                m = m & ~F.isnan(sdf[c])
-            masks.append(m)
-        any_valid = _ft.reduce(lambda x, y: x | y, masks)
+        any_valid = self._any_valid(sdf)
         pdf = (
             sdf.filter((F.col(INDEX_COL) <= F.lit(where)) & any_valid)
             .orderBy(F.col(INDEX_COL).desc())
@@ -2839,13 +2113,14 @@ class DataFrame:
         "DataFrame objects"
     )
 
-    def _elementwise_scalar(
-        self, opname: str, other, reflected: bool = False,
-        fill_value=None, strict: bool = False,
+    def _binop(
+        self, other, opname: str, reflected: bool = False,
+        strict: bool = False, fill_value=None,
     ) -> "DataFrame":
-        """Frame ⊕ scalar per column — a pure projection on the same
-        anchor (zero jobs). Frame and Series operands dispatch to the
-        aligned forms. ``strict`` marks DUNDER comparisons."""
+        """The one DataFrame ⊕ other dispatch (the Frame dunders land
+        here): a scalar is a pure projection per column on the same anchor
+        (zero jobs); frame and Series operands go to the aligned forms.
+        ``strict`` marks DUNDER comparisons."""
         import numpy as np
 
         if isinstance(other, np.generic):
@@ -3006,37 +2281,6 @@ class DataFrame:
 
     # -- operator surface -------------------------------------------------
 
-    def __add__(self, o): return self._elementwise_scalar("add", o)
-    def __radd__(self, o): return self._elementwise_scalar("add", o, reflected=True)
-    def __sub__(self, o): return self._elementwise_scalar("sub", o)
-    def __rsub__(self, o): return self._elementwise_scalar("sub", o, reflected=True)
-    def __mul__(self, o): return self._elementwise_scalar("mul", o)
-    def __rmul__(self, o): return self._elementwise_scalar("mul", o, reflected=True)
-    def __truediv__(self, o): return self._elementwise_scalar("truediv", o)
-    def __rtruediv__(self, o): return self._elementwise_scalar("truediv", o, reflected=True)
-    def __floordiv__(self, o): return self._elementwise_scalar("floordiv", o)
-    def __rfloordiv__(self, o): return self._elementwise_scalar("floordiv", o, reflected=True)
-    def __mod__(self, o): return self._elementwise_scalar("mod", o)
-    def __rmod__(self, o): return self._elementwise_scalar("mod", o, reflected=True)
-    def __pow__(self, o): return self._elementwise_scalar("pow", o)
-    def __rpow__(self, o): return self._elementwise_scalar("pow", o, reflected=True)
-    # logical/bitwise — the (df > 0) & (df2 < 5) idiom; aligning, never
-    # strict (pandas & with mismatched labels unions, it does not raise)
-    def __and__(self, o): return self._elementwise_scalar("and_", o)
-    def __rand__(self, o): return self._elementwise_scalar("and_", o, reflected=True)
-    def __or__(self, o): return self._elementwise_scalar("or_", o)
-    def __ror__(self, o): return self._elementwise_scalar("or_", o, reflected=True)
-    def __xor__(self, o): return self._elementwise_scalar("xor", o)
-    def __rxor__(self, o): return self._elementwise_scalar("xor", o, reflected=True)
-
-    def _unary(self, kind: str) -> "DataFrame":
-        """Elementwise ``neg``/``invert`` per column (cells.unary)."""
-        schema = self._dtype_map()
-        out = {k: unary(kind, v, schema.get(k)) for k, v in self._columns.items()}
-        return DataFrame._from_internal(self._internal, out)
-
-    def __neg__(self): return self._unary("neg")
-    def __invert__(self): return self._unary("invert")
     def __pos__(self): return DataFrame._from_internal(self._internal, dict(self._columns))
     def __abs__(self): return self.abs()
 
@@ -3054,9 +2298,7 @@ class DataFrame:
                 raise NotImplementedError(f"fill_value {fill_value} not supported.")
             if axis in (0, "index"):
                 return self._elementwise_frame(opname, other, reflected)
-        return self._elementwise_scalar(
-            opname, other, reflected=reflected, fill_value=fill_value
-        )
+        return self._binop(other, opname, reflected=reflected, fill_value=fill_value)
 
     def add(self, other, axis="columns", level=None, fill_value=None):
         return self._named_op("add", other, fill_value, axis=axis, level=level)
@@ -3090,16 +2332,6 @@ class DataFrame:
     rtruediv = rdiv
     multiply = mul
     subtract = sub
-
-    # dunder comparisons: STRICT — pandas requires identically-labeled
-    # operands (both index and columns, order included)
-    def __gt__(self, o): return self._elementwise_scalar("gt", o, strict=True)
-    def __ge__(self, o): return self._elementwise_scalar("ge", o, strict=True)
-    def __lt__(self, o): return self._elementwise_scalar("lt", o, strict=True)
-    def __le__(self, o): return self._elementwise_scalar("le", o, strict=True)
-    def __eq__(self, o): return self._elementwise_scalar("eq", o, strict=True)  # type: ignore[override]
-    def __ne__(self, o): return self._elementwise_scalar("ne", o, strict=True)  # type: ignore[override]
-    __hash__ = None  # pandas DataFrames are unhashable too
 
     # flexible named comparisons ALIGN both axes like arithmetic (r14
     # probe: only the dunders raise on label mismatch)
@@ -3165,57 +2397,6 @@ class DataFrame:
 
     # -- misc pandas conveniences -----------------------------------------
 
-    def sort_index(self, ascending: bool = True) -> "DataFrame":
-        """Reorder the VISIBLE order back to the index — zero-job metadata
-        (order_spec rewrite + one lazy projection), the inverse of
-        sort_values. The sort key lives in a DEDICATED helper column
-        (__si_ord__), not the index name: a later set_index re-points the
-        index and a spec naming it would follow the NEW index (r10
-        composition probe — the derived-rebind class, same fix as
-        sort_values). _materialized() also normalizes merge/reindex
-        anchors' __rowid__/__idx/__vidx__ index names (r10 probe crash)."""
-        mat = self._materialized()
-        names = {n for n, _ in (self._internal.order_spec or ())}
-        si, sm = "__si_ord__", "__si_miss__"
-        k = 2
-        while si in names or sm in names:
-            si, sm = f"__si_ord{k}__", f"__si_miss{k}__"
-            k += 1
-        # pandas sort_index puts missing labels LAST for both directions
-        # (na_position='last'); Spark's ascending default is NULLS FIRST
-        # (r12 probe: extract().set_index() floated the no-match rows to
-        # the top), so a leading missing flag steers them
-        miss = F.col(INDEX_COL).isNull()
-        try:
-            if mat.schema[INDEX_COL].dataType.simpleString() in ("double", "float"):
-                miss = miss | F.isnan(F.col(INDEX_COL))
-        except Exception:  # non-resolvable index dtype: null-only
-            pass
-        sdf = mat.withColumn(sm, miss).withColumn(si, F.col(INDEX_COL))
-        # rows tied on the index keep their previous visible order: the
-        # old spec rides along as the tie-break — its helper columns
-        # survive _materialized() by design (r12 probe). Documented
-        # deviation: pandas' default sort_index kind is QUICKSORT, whose
-        # intra-duplicate order is a partitioning artifact, not a
-        # contract; this engine is deterministically stable instead
-        # (pandas' own kind='stable' order).
-        prior = tuple(
-            (n, asc)
-            for n, asc in (self._internal.order_spec or ())
-            if n in sdf.columns
-        )
-        internal = InternalFrame(
-            sdf,
-            INDEX_COL,
-            self._internal.index_name,
-            ((sm, True), (si, ascending)) + prior,
-            row_tokens=self._internal.row_tokens,
-        )
-        return DataFrame._from_internal(internal, {c: sdf[c] for c in self._columns})
-
-    def pipe(self, func, *args, **kwargs):
-        return func(self, *args, **kwargs)
-
     def equals(self, other: "DataFrame") -> bool:
         """Exact equality: same columns, same index→row mapping, missing
         cells equal each other (pandas). One distributed anti-join-style
@@ -3231,14 +2412,8 @@ class DataFrame:
             ~(F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}")))
             for c in self._columns
         ]
-        import functools as _ft
-
-        bad = j.filter(_ft.reduce(lambda x, y: x | y, neq)).limit(1).count()
+        bad = j.filter(functools.reduce(lambda x, y: x | y, neq)).limit(1).count()
         return bad == 0 and a.count() == b.count()
-
-    def take(self, positions: list) -> "DataFrame":
-        """Positional row selection (iloc with a list)."""
-        return self._positional_take(list(positions))
 
     def isin(self, values) -> "DataFrame":
         """Boolean mask per cell. ``values``: list (all columns) or dict
@@ -3352,162 +2527,6 @@ class DataFrame:
         rr = right.rename(columns={c: c + rsuffix for c in overlap}) if rsuffix else right
         on = [c for c in lr.columns if c in rr.columns and c not in self._columns]
         return lr.merge(rr, on=on, how=how)
-
-
-class _FrameAtIndexer:
-    """df.at[label, col] / df.iat[pos, colpos] — scalar cell access."""
-
-    def __init__(self, df: DataFrame, positional: bool):
-        self._df = df
-        self._positional = positional
-
-    def __getitem__(self, key):
-        row, col = key
-        if self._positional:
-            series_row = self._df.iloc[row]
-            return series_row.iloc[col] if isinstance(col, int) else series_row[col]
-        return self._df.loc[row, col]
-
-
-class _FrameLocIndexer:
-    """``df.loc[rows]`` / ``df.loc[rows, cols]`` — LABEL-based selection.
-
-    Row keys: boolean Series mask (the pushdown-friendly idiom), a single
-    label (returns that row as a pandas Series, like iloc[int]), a label
-    list (KeyError on absent labels, pandas parity — one membership-count
-    job), or a label slice (INCLUSIVE both ends, pandas label-slicing).
-    Results keep frame order (this engine's documented sort contract).
-    Column keys: name / list of names."""
-
-    def __init__(self, df: DataFrame):
-        self._df = df
-
-    def __getitem__(self, key):
-        if isinstance(key, tuple):
-            rows, cols = key
-            base = self._df[cols] if isinstance(cols, list) else self._df[[cols]]
-        else:
-            rows, base = key, self._df
-        if isinstance(rows, Series):
-            out = base[rows]
-        elif isinstance(rows, slice):
-            if rows.step is not None:
-                raise TypeError("label slices do not support a step")
-            sdf = base._materialized()
-            cond = F.lit(True)
-            if rows.start is not None:
-                cond = cond & (F.col(INDEX_COL) >= F.lit(rows.start))
-            if rows.stop is not None:
-                cond = cond & (F.col(INDEX_COL) <= F.lit(rows.stop))
-            matched = sdf.filter(cond)
-            internal = InternalFrame(
-                matched, INDEX_COL, base._internal.index_name,
-                base._internal.order_spec,
-            )
-            out = DataFrame._from_internal(
-                internal, {c: matched[c] for c in base._columns}
-            )
-        elif isinstance(rows, list):
-            sdf = base._materialized()
-            matched = sdf.filter(F.col(INDEX_COL).isin(rows))
-            found = {
-                r[INDEX_COL]
-                for r in matched.select(INDEX_COL).distinct().collect()
-            }
-            missing = [l for l in rows if l not in found]
-            if missing:
-                raise KeyError(missing)
-            internal = InternalFrame(
-                matched, INDEX_COL, base._internal.index_name,
-                base._internal.order_spec,
-            )
-            out = DataFrame._from_internal(
-                internal, {c: matched[c] for c in base._columns}
-            )
-        else:  # single label -> that row as a pandas Series
-            msdf = base._materialized().filter(F.col(INDEX_COL) == F.lit(rows))
-            pdf = msdf.select(*list(base._columns)).toPandas()
-            if len(pdf) == 0:
-                raise KeyError(rows)
-            if len(pdf) > 1:  # duplicate labels: pandas returns a frame
-                internal = InternalFrame(
-                    msdf, INDEX_COL, base._internal.index_name,
-                    base._internal.order_spec,
-                )
-                return DataFrame._from_internal(
-                    internal, {c: msdf[c] for c in base._columns}
-                )
-            row = pdf.iloc[0]
-            row.name = rows
-            if isinstance(key, tuple) and not isinstance(key[1], list):
-                return row.iloc[0]  # df.loc[label, col] -> scalar
-            return row
-        if isinstance(key, tuple) and not isinstance(key[1], list):
-            return out[key[1]]
-        return out
-
-
-class _FrameILocIndexer:
-    """``df.iloc[rows]`` / ``df.iloc[rows, cols]`` — positional over the
-    frame's visible order (rows) and registration order (columns).
-
-    Row keys: slice (incl. negative step), int (returns a pandas Series of
-    that row, like pandas), integer list. Column keys: int / list / slice
-    over column POSITIONS. ``df.iloc[:, 0]`` returns the Series at column
-    position 0."""
-
-    def __init__(self, df: DataFrame):
-        self._df = df
-
-    def _select_cols(self, df: "DataFrame", key):
-        names = list(df._columns)
-        if isinstance(key, slice):
-            picked = names[key]
-        elif isinstance(key, int):
-            return df[names[key]]  # Series
-        elif isinstance(key, (list, tuple)):
-            picked = [names[int(k)] for k in key]
-        else:
-            raise TypeError(f"iloc column key: {type(key)}")
-        return df[picked]
-
-    def __getitem__(self, key):
-        col_key = None
-        if isinstance(key, tuple) and len(key) == 2:
-            key, col_key = key
-        if isinstance(key, bool):
-            raise TypeError("iloc key: bool")
-        if isinstance(key, slice):
-            out = self._df._positional_slice(key)
-        elif isinstance(key, int):
-            k = key
-            if k < 0:
-                k += len(self._df)
-                if k < 0:
-                    raise IndexError(key)
-            sliced = self._df._positional_slice(slice(k, k + 1))
-            if col_key is not None:
-                sliced = self._select_cols(sliced, col_key)
-                if isinstance(sliced, Series):
-                    rows = sliced._materialized().collect()
-                    if not rows:
-                        raise IndexError(key)
-                    return rows[0][_VALUE]
-            pdf = sliced.to_pandas()
-            if len(pdf) == 0:
-                raise IndexError(key)
-            row = pdf.iloc[0]
-            row.name = pdf.index[0]
-            return row
-        elif isinstance(key, (list, tuple)) or (
-            hasattr(key, "__array__") and getattr(key, "ndim", 1) == 1
-        ):
-            out = self._df._positional_take(list(key))
-        else:
-            raise TypeError(f"iloc key: {type(key)}")
-        if col_key is not None:
-            out = self._select_cols(out, col_key)
-        return out
 
 
 def concat(frames: list, axis: int = 0) -> DataFrame:

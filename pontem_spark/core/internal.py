@@ -16,7 +16,7 @@ id only when explicitly requested — never silently materialize 0..n-1 over
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+from typing import Any
 
 from pyspark.sql import Column, DataFrame as SparkDataFrame, SparkSession, functions as F
 
@@ -460,6 +460,75 @@ def default_session() -> SparkSession:
     return get_spark()
 
 
+def upload(pdf, spark: "SparkSession | None" = None):
+    """The one driver-local upload: a pandas frame → ``(InternalFrame,
+    {name: Column})`` with the index as INDEX_COL and one column per pandas
+    column, named ``str(c)`` — one Arrow createDataFrame call, no RDD round
+    trip, no inference jobs (the reference ran take(1)/zipWithIndex jobs
+    during construction, ``data_prep.py:50-95``). DataFrame uploads its
+    frame; Series uploads itself as a one-column frame."""
+    import numpy as np
+    import pandas as pd
+
+    spark = spark or default_session()
+    cols = [str(c) for c in pdf.columns]
+    if isinstance(pdf.index, pd.MultiIndex):
+        # struct-backed MultiIndex, same representation as
+        # set_index([k1, k2]) — one struct column whose field ORDER
+        # is the level order (struct sort == MultiIndex sort).
+        # index_name keeps the TRUE level names (None preserved, so
+        # to_pandas round-trips unnamed levels); struct fields fall
+        # back to level_{i} — _index_level_names/reset_index resolve
+        # display names against the schema (r14).
+        mi = pdf.index
+        frame = pdf.reset_index(drop=True)
+        frame.columns = cols
+        lvl_fields = [
+            str(n) if n is not None else f"level_{i}" for i, n in enumerate(mi.names)
+        ]
+        for i, fld in enumerate(lvl_fields):
+            frame.insert(i, fld, mi.get_level_values(i).to_numpy())
+        index_name: Any = tuple(mi.names)
+    else:
+        frame = pdf.reset_index()
+        frame.columns = [INDEX_COL] + cols
+        lvl_fields = None
+        index_name = pdf.index.name
+    # pandas preserves CONSTRUCTION order; with a non-monotonic explicit
+    # index, "sort by index at materialization" (spec None) would both
+    # display differently AND feed positional ops (shift/cumsum/head)
+    # the wrong row order (r11 probe 5). A monotonic index with
+    # DUPLICATE labels needs the helper too: Spark's sort is unstable,
+    # so intra-duplicate order would be nondeterministic (ADVICE r11).
+    # Record the pandas order in a helper column — only when index
+    # order alone can't reproduce it, so the common RangeIndex path
+    # stays column-free.
+    try:
+        ordered = bool(pdf.index.is_monotonic_increasing and pdf.index.is_unique)
+    except TypeError:
+        ordered = False
+    spec = None
+    if not ordered:
+        # a user column literally named like the helper must not be
+        # silently overwritten (ADVICE r11) — mint a fresh name
+        ctor = "__ctor__"
+        k = 2
+        while ctor in cols:
+            ctor = f"__ctor{k}__"
+            k += 1
+        frame[ctor] = np.arange(len(frame), dtype="int64")
+        spec = ((ctor, True),)
+    if len(frame) == 0:
+        sdf = devoid(spark.createDataFrame(frame, schema=empty_upload_schema(frame)))
+    else:
+        sdf = devoid(spark.createDataFrame(frame))
+    if lvl_fields is not None:
+        sdf = sdf.withColumn(INDEX_COL, F.struct(*[F.col(n) for n in lvl_fields])).drop(
+            *lvl_fields
+        )
+    return InternalFrame(sdf, INDEX_COL, index_name, spec), {c: sdf[c] for c in cols}
+
+
 class InternalFrame:
     """Anchor Spark DataFrame + index metadata. Immutable.
 
@@ -516,76 +585,3 @@ class InternalFrame:
             *[c.alias(k) for k, c in cols.items()],
             *[F.col(n) for n in extras],
         )
-
-    # ------------------------------------------------------------------
-    @staticmethod
-    def from_local(
-        data: Iterable,
-        index: Iterable | None,
-        spark: SparkSession | None,
-        data_name: str = "__value__",
-    ) -> tuple["InternalFrame", str]:
-        """Build an anchor from driver-local data with an explicit schema via
-        pandas/Arrow — one createDataFrame call, no RDD round trip, no
-        inference jobs (the reference ran take(1)/zipWithIndex jobs during
-        construction, ``data_prep.py:50-95``)."""
-        import numpy as np
-        import pandas as pd
-
-        spark = spark or default_session()
-
-        from collections.abc import Mapping as _Mapping
-
-        if isinstance(data, _Mapping):
-            # pandas: dict keys become the index; an explicit index
-            # REINDEXES by label (missing labels -> NaN), it does not
-            # relabel positionally (r14 probe: the dict ctor previously
-            # took the keys as the VALUES)
-            data = pd.Series(data)
-            if index is not None:
-                data = data.reindex(list(index))
-                index = None
-        if isinstance(data, pd.Series):
-            if index is None:
-                index = data.index.to_numpy()
-            data = data.to_numpy()
-        if isinstance(data, np.ndarray):
-            data = data.tolist()
-        elif isinstance(data, range):
-            data = list(data)
-        elif not isinstance(data, (list, tuple)):
-            data = list(data)
-
-        if index is None:
-            index_values = np.arange(len(data))
-        else:
-            if isinstance(index, pd.Index):
-                index = index.to_numpy()
-            index_values = np.asarray(list(index) if not isinstance(index, np.ndarray) else index)
-            if len(index_values) != len(data):
-                raise ValueError(
-                    f"index length {len(index_values)} != data length {len(data)}"
-                )
-
-        pdf = pd.DataFrame({INDEX_COL: index_values, data_name: data})
-        # pandas preserves CONSTRUCTION order; a non-monotonic explicit
-        # index would otherwise display index-sorted AND feed positional
-        # ops the wrong row order (r11 probe 5 — see DataFrame.__init__).
-        # Monotonic-with-duplicates also needs the helper: Spark's sort
-        # is unstable within equal labels (ADVICE r11).
-        try:
-            idx = pd.Index(index_values)
-            mono = bool(idx.is_monotonic_increasing and idx.is_unique)
-        except TypeError:
-            mono = False
-        spec = None
-        if not mono:
-            pdf["__ctor__"] = np.arange(len(pdf), dtype="int64")
-            spec = (("__ctor__", True),)
-        if len(pdf) == 0:
-            sdf = devoid(
-                spark.createDataFrame(pdf, schema=empty_upload_schema(pdf))
-            )
-        else:
-            sdf = devoid(spark.createDataFrame(pdf))
-        return InternalFrame(sdf, INDEX_COL, order_spec=spec), data_name

@@ -34,9 +34,9 @@ from pontem_spark.core.cells import (
     dtypes,
     missing,
     scalar_dtype,
-    unary,
     valid,
 )
+from pontem_spark.core.generic import Frame
 from pontem_spark.core.internal import (
     INDEX_COL,
     InternalFrame,
@@ -45,13 +45,15 @@ from pontem_spark.core.internal import (
     rowalign_keys,
     rowalign_left_join as _rowalign_left_join,
     to_spark_type,
+    upload,
 )
 
 _VALUE = "__value__"
 
 
-class Series:
-    """1-D labeled array over a Spark anchor DataFrame."""
+class Series(Frame):
+    """1-D labeled array over a Spark anchor DataFrame: a frame of one value
+    column (``__value__``) plus its name."""
 
     # -- construction -------------------------------------------------------
 
@@ -63,6 +65,10 @@ class Series:
         spark: SparkSession | None = None,
         sc: Any = None,
     ):
+        import numpy as np
+        import pandas as pd
+        from collections.abc import Mapping
+
         if data is None:
             raise ValueError("Series requires data")
         if spark is None and sc is not None:
@@ -70,9 +76,32 @@ class Series:
             # SparkContext (`pontem/series/series.py:22-49`); accept either a
             # SparkContext or a SparkSession here and use the active session.
             spark = sc if isinstance(sc, SparkSession) else SparkSession.getActiveSession()
-        internal, _ = InternalFrame.from_local(data, index, spark, _VALUE)
-        self._internal = internal
-        self._col = internal.sdf[_VALUE]
+        if isinstance(data, Mapping):
+            # pandas: dict keys become the index; an explicit index
+            # REINDEXES by label (missing labels -> NaN), it does not
+            # relabel positionally (r14 probe: the dict ctor previously
+            # took the keys as the VALUES)
+            data = pd.Series(data)
+            if index is not None:
+                data, index = data.reindex(list(index)), None
+        if isinstance(data, pd.Series):
+            if index is None:
+                index = data.index
+            data = data.to_numpy()
+        # python scalars, as the values always uploaded
+        if isinstance(data, np.ndarray):
+            data = data.tolist()
+        elif not isinstance(data, (list, tuple)):
+            data = list(data)
+        if index is not None:
+            # a pd.MultiIndex stays multi-level; any other iterable
+            # (including a list of tuples) is a flat index, like pandas
+            if not isinstance(index, pd.Index):
+                index = list(index)
+            if len(index) != len(data):
+                raise ValueError(f"index length {len(index)} != data length {len(data)}")
+        self._internal, cols = upload(pd.Series(data, index=index).to_frame(_VALUE), spark)
+        self._col = cols[_VALUE]
         self._name = name
         self._cached_len: int | None = None
 
@@ -84,6 +113,42 @@ class Series:
         s._name = name
         s._cached_len = None
         return s
+
+    # -- the Frame hooks ------------------------------------------------------
+
+    def _values(self) -> "dict[str, Column]":
+        return {_VALUE: self._col}
+
+    def _with(self, internal: InternalFrame, cols: "dict[str, Column]") -> "Series":
+        return Series._from_internal(internal, cols[_VALUE], self._name)
+
+    def _pandas(self, pdf):
+        out = pdf[_VALUE]
+        out.name = self._name
+        return out
+
+    def _require_numeric(self, op: str) -> None:
+        """A Series window op takes any dtype its rule takes (pandas ranks
+        str values)."""
+
+    def _row(self, key):
+        """The one value of a one-row slice (``iloc[int]``)."""
+        rows = self._materialized().collect()
+        if not rows:
+            raise IndexError(key)
+        return rows[0][_VALUE]
+
+    def _label(self, label, one_col: bool = False):
+        """Label lookup → the scalar, or a pandas Series when the label
+        repeats."""
+        rows = self._materialized().filter(F.col(INDEX_COL) == F.lit(label)).collect()
+        if len(rows) == 1:
+            return rows[0][_VALUE]
+        if len(rows) == 0:
+            raise KeyError(label)
+        import pandas as pd
+
+        return pd.Series([r[_VALUE] for r in rows], index=[r[INDEX_COL] for r in rows], name=self._name)
 
     # -- metadata -----------------------------------------------------------
 
@@ -97,12 +162,6 @@ class Series:
 
     def rename(self, name: Any) -> "Series":
         return Series._from_internal(self._internal, self._col, name)
-
-    @property
-    def index(self):
-        from pontem_spark.core.indexes import Index
-
-        return Index(self)
 
     @property
     def dtype(self):
@@ -137,12 +196,6 @@ class Series:
             self._internal.index_col.alias(iname), self._col.alias(vname)
         )
 
-    def _materialized(self, value_alias: str = _VALUE) -> SparkDataFrame:
-        return self._internal.materialize({value_alias: self._col})
-
-    def _ordered(self, sdf):
-        return sdf.orderBy(*self._internal.order_columns(INDEX_COL))
-
     def _missing_mask(self, col: Column, sdf: "SparkDataFrame | None" = None) -> Column:
         """pandas missing-ness over a Spark column: NULL, plus NaN for
         float dtypes (Spark distinguishes the two; pandas treats both as
@@ -150,27 +203,6 @@ class Series:
         clip/rank/mode/autocorr all route here."""
         frame = sdf if sdf is not None else self._internal.sdf
         return missing(col, dtypes(frame, col)[0])
-
-    def to_pandas(self):
-        import pandas as pd
-
-        pdf = self._ordered(self._materialized()).toPandas()
-        name = self._internal.index_name
-        if isinstance(name, tuple):  # struct-backed MultiIndex
-            if len(pdf) == 0:
-                idx = pd.MultiIndex.from_arrays([[] for _ in name], names=list(name))
-            else:
-                idx = pd.MultiIndex.from_tuples(
-                    [
-                        tuple(r.values()) if isinstance(r, dict) else tuple(r)
-                        for r in pdf[INDEX_COL]
-                    ],
-                    names=list(name),
-                )
-            return pd.Series(pdf[_VALUE].values, index=idx, name=self._name)
-        out = pd.Series(pdf[_VALUE].values, index=pdf[INDEX_COL].values, name=self._name)
-        out.index.name = name
-        return out
 
     def __repr__(self) -> str:  # never a full count/scan (SURVEY §4: repr hazard)
         preview = self._ordered(self._materialized()).limit(6).toPandas()
@@ -181,7 +213,7 @@ class Series:
         lines.append(f"Name: {self._name}, dtype: {self.dtype} (pontem_spark.Series, lazy)")
         return "\n".join(lines)
 
-    # -- arithmetic / comparison dunders -------------------------------------
+    # -- arithmetic / comparison (the dunders live on Frame) -------------------
 
     _CMP_SERIES_MSG = "Can only compare identically-labeled Series objects"
 
@@ -272,46 +304,8 @@ class Series:
             b.schema["__b__"].dataType.simpleString(),
         )
 
-    def __add__(self, o): return self._binop(o, "add")
-    def __radd__(self, o): return self._binop(o, "add", reflected=True)
-    def __sub__(self, o): return self._binop(o, "sub")
-    def __rsub__(self, o): return self._binop(o, "sub", reflected=True)
-    def __mul__(self, o): return self._binop(o, "mul")
-    def __rmul__(self, o): return self._binop(o, "mul", reflected=True)
-    def __truediv__(self, o): return self._binop(o, "truediv")
-    def __rtruediv__(self, o): return self._binop(o, "truediv", reflected=True)
-    def __floordiv__(self, o): return self._binop(o, "floordiv")
-    def __rfloordiv__(self, o): return self._binop(o, "floordiv", reflected=True)
-    def __mod__(self, o): return self._binop(o, "mod")
-    def __rmod__(self, o): return self._binop(o, "mod", reflected=True)
-    def __pow__(self, o): return self._binop(o, "pow")
-    def __rpow__(self, o): return self._binop(o, "pow", reflected=True)
-    def __and__(self, o): return self._binop(o, "and_")
-    def __rand__(self, o): return self._binop(o, "and_", reflected=True)
-    def __or__(self, o): return self._binop(o, "or_")
-    def __ror__(self, o): return self._binop(o, "or_", reflected=True)
-    def __xor__(self, o): return self._binop(o, "xor")
-    def __rxor__(self, o): return self._binop(o, "xor", reflected=True)
-
-    # dunder comparisons: STRICT — pandas requires identically-labeled
-    # operands; the named eq/ne/lt/le/gt/ge align like arithmetic
-    def __eq__(self, o): return self._binop(o, "eq", strict=True)  # type: ignore[override]
-    def __ne__(self, o): return self._binop(o, "ne", strict=True)  # type: ignore[override]
-    def __lt__(self, o): return self._binop(o, "lt", strict=True)
-    def __le__(self, o): return self._binop(o, "le", strict=True)
-    def __gt__(self, o): return self._binop(o, "gt", strict=True)
-    def __ge__(self, o): return self._binop(o, "ge", strict=True)
-
     def _dtype_str(self) -> "str | None":
         return dtypes(self._internal.sdf, self._col)[0]
-
-    def __invert__(self):
-        col = unary("invert", self._col, self._dtype_str())
-        return Series._from_internal(self._internal, col, self._name)
-
-    def __neg__(self):
-        col = unary("neg", self._col, self._dtype_str())
-        return Series._from_internal(self._internal, col, self._name)
 
     def __hash__(self):  # __eq__ returns Series; keep hashable by identity
         return id(self)
@@ -362,19 +356,6 @@ class Series:
     def mean(self): return self._reduce("mean")
     def min(self): return self._reduce("min")
     def max(self): return self._reduce("max")
-    def count(self): return self._reduce("count")  # non-missing, like pandas
-    def std(self, ddof: int = 1): return self._reduce("std", ddof=ddof)
-    def var(self, ddof: int = 1): return self._reduce("var", ddof=ddof)
-    def sem(self, ddof: int = 1): return self._reduce("sem", ddof=ddof)
-    def median(self): return self._reduce("median")
-    def nunique(self): return self._reduce("nunique")
-    def prod(self): return self._reduce("prod")
-    def skew(self): return self._reduce("skew")
-    def kurt(self): return self._reduce("kurt")
-    def any(self): return self._reduce("any")
-    def all(self): return self._reduce("all")
-
-    kurtosis = kurt
 
     def quantile(self, q: float = 0.5, interpolation: str = "linear"):
         """Exact quantile of the non-missing values. ``linear`` is ONE
@@ -443,323 +424,22 @@ class Series:
 
     # -- ordering / selection -------------------------------------------------
 
-    def head(self, n: int = 5) -> "Series":
-        sdf = self._ordered(self._materialized()).limit(n)
-        return Series._from_internal(
-            InternalFrame(sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec),
-            sdf[_VALUE],
-            self._name,
-        )
-
     def sort_values(self, ascending: bool = True, na_position: str = "last") -> "Series":
-        # lazy: only the order SPEC changes; the sort runs at materialization.
-        # pandas keeps missing at the chosen END regardless of direction;
-        # Spark orders NaN as the LARGEST value, which silently puts NaN
-        # FIRST on a descending sort — so missing-ness leads the order spec.
-        if na_position not in ("last", "first"):
-            raise ValueError(f"sort_values: na_position must be 'first' or 'last', got {na_position!r}")
-        sdf = self._materialized()
-        miss = self._missing_mask(F.col(_VALUE), sdf)
-        # the sort keys live in DEDICATED helper columns, not the
-        # rebindable _VALUE alias: a derived series (s2 = sorted > 0)
-        # would otherwise re-materialize sorted by the DERIVED expression
-        # (r10 probe — value_counts' ADVICE bug class, same fix). Helper
-        # names are minted past any the prior spec uses (re-sorting must
-        # not overwrite the recorded old sort values the tie-break below
-        # points at).
-        taken = {n for n, _ in (self._internal.order_spec or ())}
-        sm, sv = "__miss__", "__sv_ord__"
-        k = 2
-        while sm in taken or sv in taken:
-            sm, sv = f"__miss{k}__", f"__sv_ord{k}__"
-            k += 1
-        sdf = sdf.withColumn(sm, miss).withColumn(sv, F.col(_VALUE))
-        # rows tied on the sort key — including the whole missing block —
-        # keep their previous VISIBLE order (the prior spec rides along as
-        # the tie-break, like sort_index; pandas kind='stable'), with the
-        # index as the tie-break of last resort.
-        spec = [(sm, na_position == "last"), (sv, ascending)]
-        seen = {sm, sv}
-        for n, a in (self._internal.order_spec or ()):
-            if n not in seen and n in sdf.columns:
-                spec.append((n, a))
-                seen.add(n)
-        if INDEX_COL not in seen:
-            spec.append((INDEX_COL, True))
-        internal = InternalFrame(
-            sdf,
-            INDEX_COL,
-            self._internal.index_name,
-            # ascending=True sorts False(valid) before True(missing) → "last"
-            tuple(spec),
-            row_tokens=self._internal.row_tokens,
-        )
-        return Series._from_internal(internal, sdf[_VALUE], self._name)
-
-    def sort_index(self, ascending: bool = True) -> "Series":
-        # the sort key lives in a DEDICATED helper column, not INDEX_COL:
-        # a later set_index/index rebind would re-sort by the NEW index
-        # (r10 composition probe — the derived-rebind class). Missing
-        # labels sort LAST both directions (pandas na_position='last');
-        # ties keep the previous visible order (pandas kind='stable' —
-        # the quicksort default's intra-tie order is an artifact, see
-        # DataFrame.sort_index).
-        mat = self._materialized()
-        names = {n for n, _ in (self._internal.order_spec or ())}
-        si, sm = "__si_ord__", "__si_miss__"
-        k = 2
-        while si in names or sm in names:
-            si, sm = f"__si_ord{k}__", f"__si_miss{k}__"
-            k += 1
-        miss = F.col(INDEX_COL).isNull()
-        try:
-            if mat.schema[INDEX_COL].dataType.simpleString() in ("double", "float"):
-                miss = miss | F.isnan(F.col(INDEX_COL))
-        except Exception:  # non-resolvable index dtype: null-only
-            pass
-        sdf = mat.withColumn(sm, miss).withColumn(si, F.col(INDEX_COL))
-        prior = tuple(
-            (n, asc)
-            for n, asc in (self._internal.order_spec or ())
-            if n in sdf.columns
-        )
-        internal = InternalFrame(
-            sdf,
-            INDEX_COL,
-            self._internal.index_name,
-            ((sm, True), (si, ascending)) + prior,
-            row_tokens=self._internal.row_tokens,
-        )
-        return Series._from_internal(internal, sdf[_VALUE], self._name)
+        return self._sort_by({_VALUE: F.col(_VALUE)}, [ascending], na_position)
 
     def nlargest(self, n: int = 5, keep: str = "first") -> "Series":
-        # TakeOrderedAndProject: k rows per partition move, no global sort.
-        # pandas ranks only VALID values (Spark's NaN-is-largest would put
-        # NaN at rank 1 of nlargest); missing rows fill the tail when n
-        # exceeds the valid count, which is also what pandas does.
-        return self._n_extreme(n, largest=True, keep=keep)
+        return self._n_extreme(n, [_VALUE], largest=True, keep=keep)
 
     def nsmallest(self, n: int = 5, keep: str = "first") -> "Series":
-        return self._n_extreme(n, largest=False, keep=keep)
-
-    def _n_extreme(self, n: int, largest: bool, keep: str = "first") -> "Series":
-        """``keep``: 'first'/'last' break boundary ties by lowest/highest
-        index (pandas: first/last POSITION — the documented index-order
-        deviation); 'all' keeps every row tying the n-th value, so the
-        result can exceed n rows (ONE extra broadcast 1-row threshold
-        join, still no global sort)."""
-        if keep not in ("first", "last", "all"):
-            raise ValueError(f"nlargest/nsmallest: keep must be 'first', 'last' or 'all', got {keep!r}")
-        mat = self._materialized()
-        miss = self._missing_mask(F.col(_VALUE), mat)
-        # dedicated sort-key helper — same derived-rebind fix as
-        # sort_values (r10 probe)
-        sdf = mat.withColumn("__miss__", miss).withColumn(
-            "__sv_ord__", F.col(_VALUE)
-        )
-        val_order = F.col(_VALUE).desc() if largest else F.col(_VALUE).asc()
-        if keep == "all":
-            # boundary value among the valid top-n; every valid row tying
-            # or beating it survives (missing rows only fill the tail when
-            # n exceeds the valid count, same as pandas)
-            top = (
-                sdf.filter(~F.col("__miss__"))
-                .orderBy(val_order)
-                .limit(n)
-                .agg(
-                    (F.min if largest else F.max)(_VALUE).alias("__thr__"),
-                    F.count(F.lit(1)).alias("__nv__"),
-                )
-            )
-            boundary = (
-                F.col(_VALUE) >= F.col("__thr__")
-                if largest
-                else F.col(_VALUE) <= F.col("__thr__")
-            )
-            kept = sdf.crossJoin(F.broadcast(top)).filter(
-                (~F.col("__miss__") & (F.col("__nv__") > 0) & boundary)
-                # when n exceeds the valid count pandas appends the WHOLE
-                # missing block (the NaN tail is one boundary tie group —
-                # keep='all' never truncates a tie group)
-                | (F.col("__miss__") & (F.col("__nv__") < n))
-            )
-            sdf = kept.drop("__thr__", "__nv__")
-            tie_asc = True
-        else:
-            tie_asc = keep == "first"
-            idx_order = F.col(INDEX_COL).asc() if tie_asc else F.col(INDEX_COL).desc()
-            sdf = sdf.orderBy(F.col("__miss__").asc(), val_order, idx_order).limit(n)
-        internal = InternalFrame(
-            sdf,
-            INDEX_COL,
-            self._internal.index_name,
-            (("__miss__", True), ("__sv_ord__", not largest), (INDEX_COL, tie_asc)),
-        )
-        return Series._from_internal(internal, sdf[_VALUE], self._name)
-
-    def _filter(self, cond: Column) -> "Series":
-        # a filter preserves the visible order (r10 composition probe)
-        sdf = self._materialized().filter(cond)
-        return Series._from_internal(
-            InternalFrame(
-                sdf,
-                INDEX_COL,
-                self._internal.index_name,
-                self._internal.order_spec,
-                row_tokens=self._internal.row_tokens,
-            ),
-            sdf[_VALUE],
-            self._name,
-        )
+        return self._n_extreme(n, [_VALUE], largest=False, keep=keep)
 
     def __getitem__(self, key):
         if isinstance(key, Series):  # boolean mask — the s[s > 0] idiom
-            if key._internal.sdf is self._internal.sdf:
-                # project value + mask FIRST, then filter: a window-derived
-                # value (s.cumsum()[mask]) must keep its PRE-filter values
-                # (r10 composition probe). Catalyst substitutes the mask
-                # alias, so plain predicates still push to the scan.
-                extras = [
-                    n
-                    for n, _ in (self._internal.order_spec or ())
-                    if n not in (INDEX_COL, _VALUE)
-                    and n in self._internal.sdf.columns
-                ]
-                sdf = (
-                    self._internal.sdf.select(
-                        self._internal.index_col.alias(INDEX_COL),
-                        self._col.alias(_VALUE),
-                        *dict.fromkeys(extras),
-                        key._col.alias("__mask__"),
-                    )
-                    .filter(F.col("__mask__"))
-                    .drop("__mask__")
-                )
-                return Series._from_internal(
-                    InternalFrame(
-                        sdf,
-                        INDEX_COL,
-                        self._internal.index_name,
-                        self._internal.order_spec,
-                    ),
-                    sdf[_VALUE],
-                    self._name,
-                )
-            # mask from another anchor: align on index first
-            mask = key._materialized("__m__").select(INDEX_COL, "__m__")
-            sdf = self._materialized().join(mask, INDEX_COL, "inner").filter(F.col("__m__")).drop("__m__")
-            return Series._from_internal(
-                InternalFrame(
-                    sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-                ),
-                sdf[_VALUE],
-                self._name,
-            )
+            return self._masked(key)
         if isinstance(key, slice):
             return self._positional_slice(key)
         # scalar label lookup → scalar (or Series if duplicated labels)
-        rows = self._materialized().filter(F.col(INDEX_COL) == F.lit(key)).collect()
-        if len(rows) == 1:
-            return rows[0][_VALUE]
-        if len(rows) == 0:
-            raise KeyError(key)
-        import pandas as pd
-
-        return pd.Series([r[_VALUE] for r in rows], index=[r[INDEX_COL] for r in rows], name=self._name)
-
-    def _positional_slice(self, key: slice) -> "Series":
-        """Positional slice via row_number over index order. The global
-        (unpartitioned) window is deliberate and on-demand only — never part
-        of a hot path; pandas-positional semantics fundamentally need a total
-        order (SURVEY §7 'hard parts').
-
-        Negative start/stop resolve against the length (one cached count).
-        Negative steps (``s[::-1]``, ``s[10:2:-2]``) select the same
-        positions as pandas and record a DESCENDING ``order_spec`` on the
-        result frame, so materialization (to_pandas/head/repr) shows the
-        reversed order without the engine ever storing a reversed table —
-        order is metadata here, exactly the property order_spec exists for.
-
-        Positions are always computed over the frame's VISIBLE order
-        (``order_spec``), so chained positional ops compose: ``s[::-1][:3]``
-        numbers rows descending and returns the last three, and
-        ``s[::-1][::-1]`` restores ascending order.
-        """
-        from pyspark.sql import Window
-
-        step = 1 if key.step is None else key.step
-        if step == 0:
-            raise ValueError("slice step cannot be zero")
-        w = Window.orderBy(*self._internal.order_columns(INDEX_COL))
-        cur_spec = self._internal.order_spec
-        if step < 0:
-            start, stop, step = key.indices(len(self))
-            sdf = self._materialized().withColumn("__rn__", F.row_number().over(w) - 1)
-            # positions start, start+step, ... (exclusive of stop)
-            cond = (
-                (F.col("__rn__") <= start)
-                & (F.col("__rn__") > stop)
-                & ((F.lit(start) - F.col("__rn__")) % F.lit(-step) == 0)
-            )
-            sdf = sdf.filter(cond).drop("__rn__")
-            flipped = tuple((c, not asc) for c, asc in (cur_spec or ((INDEX_COL, True),)))
-            # double reverse lands back on plain index order — drop the spec
-            # so downstream ops take the no-metadata fast paths
-            if flipped == ((INDEX_COL, True),):
-                flipped = None
-            return Series._from_internal(
-                InternalFrame(
-                    sdf, INDEX_COL, self._internal.index_name,
-                    order_spec=flipped,
-                ),
-                sdf[_VALUE],
-                self._name,
-            )
-        if (key.start or 0) < 0 or (key.stop is not None and key.stop < 0):
-            start, stop, step = key.indices(len(self))
-        else:
-            start, stop = key.start or 0, key.stop
-        sdf = self._materialized().withColumn("__rn__", F.row_number().over(w) - 1)
-        cond = F.col("__rn__") >= start
-        if stop is not None:
-            cond = cond & (F.col("__rn__") < stop)
-        if step != 1:
-            cond = cond & ((F.col("__rn__") - F.lit(start)) % F.lit(step) == 0)
-        sdf = sdf.filter(cond).drop("__rn__")
-        return Series._from_internal(
-            InternalFrame(sdf, INDEX_COL, self._internal.index_name, order_spec=cur_spec),
-            sdf[_VALUE],
-            self._name,
-        )
-
-    def _positional_take(self, positions: list) -> "Series":
-        """iloc with an integer list: keep the rows at those positions, IN
-        REQUEST ORDER, duplicates included — full pandas take semantics
-        (r10 probe; previously rows came back in visible order and
-        duplicate positions collapsed). Positions count over the frame's
-        VISIBLE order (``order_spec``), so ``s[::-1].iloc[[0]]`` is the
-        last row. Each matched row explodes a literal array of its
-        request-ranks (one CASE branch per distinct position — the list is
-        driver-sized by construction) and the rank drives the order spec."""
-        from pyspark.sql import Window
-
-        sdf = _positional_take_sdf(self, positions)
-        return Series._from_internal(
-            InternalFrame(
-                sdf, INDEX_COL, self._internal.index_name,
-                order_spec=(("__take_ord__", True),),
-            ),
-            sdf[_VALUE],
-            self._name,
-        )
-
-    @property
-    def loc(self):
-        return _LocIndexer(self)
-
-    @property
-    def iloc(self):
-        return _ILocIndexer(self)
+        return self._label(key)
 
     # -- elementwise transforms ----------------------------------------------
 
@@ -811,8 +491,7 @@ class Series:
         )
 
     def dropna(self) -> "Series":
-        mat = self._materialized()
-        return self._filter(~self._missing_mask(F.col(_VALUE), mat))
+        return self._dropna([_VALUE])
 
     def replace(self, to_replace, value=None) -> "Series":
         """pandas replace: dict form maps listed values, a LIST maps every
@@ -837,28 +516,10 @@ class Series:
         )
 
     def duplicated(self, keep: "str | bool" = "first") -> "Series":
-        """Boolean duplicate mask, pandas ``keep`` semantics: 'first' marks
-        every occurrence after the first (first = lowest index), 'last'
-        every one before the last, ``False`` ALL members of any duplicated
-        value. One window shuffle on the value either way."""
-        from pyspark.sql import Window
-
-        if keep is False:
-            w = Window.partitionBy(self._col)
-            col = F.count(F.lit(1)).over(w) > 1
-        elif keep in ("first", "last"):
-            # 'first' = first in the VISIBLE order (r10 composition probe)
-            idx_name = self._internal.index_spark_col
-            ospec = self._internal.order_spec or ((idx_name, True),)
-            order = [
-                F.col(n).asc() if (asc == (keep == "first")) else F.col(n).desc()
-                for n, asc in ospec
-            ]
-            w = Window.partitionBy(self._col).orderBy(*order)
-            col = F.row_number().over(w) > 1
-        else:
-            raise ValueError(f"duplicated: keep must be 'first', 'last' or False, got {keep!r}")
-        return Series._from_internal(self._internal, col, self._name)
+        """Boolean duplicate mask, pandas ``keep`` semantics (the Frame
+        rule): a same-anchor window on the value."""
+        flag = self._duplicate_flag([self._col], keep, "duplicated", self._internal.index_spark_col)
+        return Series._from_internal(self._internal, flag, self._name)
 
     def isin(self, values: Iterable) -> "Series":
         # pandas: missing rows are False (not NULL) unless the value set
@@ -951,9 +612,7 @@ class Series:
                 .join(F.broadcast(lookup), F.col(_VALUE) == F.col("__lk__"), "left")
                 .select(INDEX_COL, F.col("__mapped__").alias(_VALUE))
             )
-            return Series._from_internal(
-                InternalFrame(sdf, INDEX_COL, self._internal.index_name), sdf[_VALUE], self._name
-            )
+            return self._rewrap(sdf, order_spec=None)
         raise TypeError(f"unsupported map argument: {type(arg)}")
 
     def _apply_udf(self, func: Callable, return_type: str | None) -> "Series":
@@ -995,66 +654,7 @@ class Series:
         return [r[0] for r in distinct.collect()]
 
     def drop_duplicates(self, keep: "str | bool" = "first") -> "Series":
-        """pandas ``keep``: 'first' keeps the lowest-index occurrence,
-        'last' the highest, ``False`` drops every duplicated value. One
-        groupBy shuffle at distinct-value cardinality either way."""
-        if keep not in ("first", "last", False):
-            raise ValueError(
-                f"drop_duplicates: keep must be 'first', 'last' or False, got {keep!r}"
-            )
-        mat = self._materialized()
-        out_spec = None
-        if self._internal.order_spec is not None:
-            # survivors are picked and DISPLAYED in the VISIBLE order
-            # (sorted().drop_duplicates() keeps the sorted-first row and
-            # sorted output order, like pandas — r10 composition probe).
-            # One global row_number over the spec, same on-demand scale
-            # caveat as rank 'first'.
-            from pyspark.sql import Window
-
-            rn = F.row_number().over(
-                Window.orderBy(*self._internal.order_columns(INDEX_COL))
-            )
-            # window first, THEN project: the spec helper columns it
-            # references live on the materialized frame
-            mat = mat.withColumn("__rn__", rn).select(INDEX_COL, _VALUE, "__rn__")
-            grouped = mat.groupBy(_VALUE)
-            if keep is False:
-                sdf = (
-                    grouped.agg(
-                        F.min(INDEX_COL).alias(INDEX_COL),
-                        F.min("__rn__").alias("__dd_ord__"),
-                        F.count(F.lit(1)).alias("__n__"),
-                    )
-                    .filter(F.col("__n__") == 1)
-                    .drop("__n__")
-                )
-            else:
-                pick, pord = (F.min_by, F.min) if keep == "first" else (F.max_by, F.max)
-                sdf = grouped.agg(
-                    pick(INDEX_COL, F.col("__rn__")).alias(INDEX_COL),
-                    pord("__rn__").alias("__dd_ord__"),
-                )
-            out_spec = (("__dd_ord__", True),)
-        else:
-            grouped = mat.groupBy(_VALUE)
-            if keep is False:
-                sdf = (
-                    grouped.agg(
-                        F.min(INDEX_COL).alias(INDEX_COL),
-                        F.count(F.lit(1)).alias("__n__"),
-                    )
-                    .filter(F.col("__n__") == 1)
-                    .drop("__n__")
-                )
-            else:
-                pick = F.min if keep == "first" else F.max
-                sdf = grouped.agg(pick(INDEX_COL).alias(INDEX_COL))
-        return Series._from_internal(
-            InternalFrame(sdf, INDEX_COL, self._internal.index_name, out_spec),
-            sdf[_VALUE],
-            self._name,
-        )
+        return self._drop_duplicates([_VALUE], keep)
 
     def value_counts(
         self,
@@ -1106,72 +706,8 @@ class Series:
 
     # window-style transforms --------------------------------------------------
 
-    def _visible(self, rule, *args) -> "Series":
-        """Run a core/window.py visible-order rule over the value column.
-        A result on the rule's one materialization hop is tagged with
-        ``_mat_source`` so it meets its source through ``_mat_pair``."""
-        src = win.Visible(self._internal, {_VALUE: self._col})
-        internal, cols = rule(src, *args)
-        res = Series._from_internal(internal, cols[_VALUE], self._name)
-        if src.materialized and internal is src.internal:
-            res._mat_source = self  # _mat_pair: source value is _VALUE here
-        return res
-
     def shift(self, periods: int = 1, fill_value=None) -> "Series":
         return self._visible(win.shift, periods, fill_value)
-
-    def diff(self, periods: int = 1) -> "Series":
-        return self._visible(win.diff, periods)
-
-    def pct_change(self, periods: int = 1, fill_method: str | None = "pad") -> "Series":
-        return self._visible(win.pct_change, periods, fill_method)
-
-    def cumsum(self) -> "Series":
-        return self._visible(win.cum, F.sum)
-
-    def cummax(self) -> "Series":
-        return self._visible(win.cum, F.max)
-
-    def cummin(self) -> "Series":
-        return self._visible(win.cum, F.min)
-
-    def cumprod(self) -> "Series":
-        return self._visible(win.cum, F.product)
-
-    def ffill(self) -> "Series":
-        return self._visible(win.fill, True)
-
-    def bfill(self) -> "Series":
-        return self._visible(win.fill, False)
-
-    def interpolate(self, method: str = "linear", limit: "int | None" = None) -> "Series":
-        return self._visible(win.interpolate, method, limit)
-
-    def rolling(self, window: int, min_periods: "int | None" = None):
-        return win.Rolling(self, window, min_periods)
-
-    def expanding(self, min_periods: int = 1):
-        return win.Rolling(self, None, min_periods)
-
-    def ewm(
-        self,
-        com: float | None = None,
-        span: float | None = None,
-        halflife: float | None = None,
-        alpha: float | None = None,
-        adjust: bool = True,
-        ignore_na: bool = False,
-        min_periods: int = 0,
-    ):
-        return win.Ewm(self, com, span, halflife, alpha, adjust, ignore_na, min_periods)
-
-    def resample(self, rule: str):
-        """pandas ``s.resample('6h').mean()`` over a timestamp index;
-        fixed-width rules only (core/window.py::resample)."""
-        return win.Resampler(self, rule)
-
-    def asfreq(self, freq: str, method: str | None = None, fill_value=None) -> "Series":
-        return self._visible(win.asfreq, freq, method, fill_value)
 
     def where(self, cond: "Series", other=None) -> "Series":
         """Keep values where cond holds, else ``other`` (pandas.where).
@@ -1320,8 +856,7 @@ class Series:
         spec = (self._internal.order_spec or ((INDEX_COL, True),)) + (
             (epos, True),
         )
-        internal = InternalFrame(sdf, INDEX_COL, self._internal.index_name, spec)
-        return Series._from_internal(internal, sdf[_VALUE], self._name)
+        return self._rewrap(sdf, order_spec=spec)
 
     def explode(self) -> "Series":
         """Array-valued Series → one row per element with the index label
@@ -1346,8 +881,7 @@ class Series:
         spec = (self._internal.order_spec or ((INDEX_COL, True),)) + (
             (epos, True),
         )
-        internal = InternalFrame(sdf, INDEX_COL, self._internal.index_name, spec)
-        return Series._from_internal(internal, sdf[_VALUE], self._name)
+        return self._rewrap(sdf, order_spec=spec)
 
     def _pairwise(self, other: "Series"):
         """Outer-align two series on the index (the combine_first join)
@@ -1439,18 +973,6 @@ class Series:
         row = sdf.agg(F.corr(v, lagged)).first()
         return row[0] if row and row[0] is not None else float("nan")
 
-    def rank(
-        self,
-        method: str = "average",
-        ascending: bool = True,
-        pct: bool = False,
-        na_option: str = "keep",
-    ) -> "Series":
-        """pandas rank: 'average' (the pandas default), 'min', 'max',
-        'dense', or 'first'; ``na_option`` 'keep', 'top' or 'bottom';
-        ``pct`` rescales to (0, 1] — the core/window.py rule."""
-        return self._visible(win.rank, method, ascending, pct, na_option)
-
     def _extreme_label(self, descending: bool) -> Any:
         """The core/window.py idx-extreme rule over the value column;
         pandas raises on all-missing input."""
@@ -1465,53 +987,6 @@ class Series:
 
     def idxmin(self):
         return self._extreme_label(descending=False)
-
-    def sample(
-        self,
-        frac: float | None = None,
-        n: int | None = None,
-        seed: int | None = None,
-        random_state: int | None = None,
-    ) -> "Series":
-        """pandas-shaped sampling: ``frac`` maps to Spark's Bernoulli
-        sample (approximate row count, exact at scale); ``n`` draws an
-        EXACT count deterministically by rank of md5(index, seed) — the
-        engine's content-deterministic sampling idiom, reproducible across
-        cluster sizes, one TakeOrderedAndProject."""
-        seed = random_state if random_state is not None else seed
-        if (frac is None) == (n is None):
-            raise ValueError("sample: pass exactly one of frac= or n=")
-        if frac is not None:
-            if seed is None:  # pandas: no seed = a fresh draw per call
-                sdf = self._materialized().sample(fraction=frac)
-            else:
-                # seeded draws are CONTENT-deterministic (md5 of index ⊕
-                # seed < frac) — reproducible across calls, cluster sizes
-                # and engines, unlike Spark's per-partition Bernoulli,
-                # which re-rolls when partitioning shifts (r10 probe:
-                # two identical seeded calls disagreed)
-                mat = self._materialized()
-                u = F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws("\x1f", F.col(INDEX_COL).cast("string"), F.lit(str(seed)))),
-                        1, 15,
-                    ),
-                    16, 10,
-                ).cast("double") / float(16 ** 15)
-                sdf = mat.filter(u < F.lit(float(frac)))
-            return Series._from_internal(
-                InternalFrame(
-                    sdf, INDEX_COL, self._internal.index_name, self._internal.order_spec
-                ),
-                sdf[_VALUE],
-                self._name,
-            )
-        mat = self._materialized()
-        key = F.md5(F.concat_ws("\x1f", F.col(INDEX_COL).cast("string"), F.lit(str(seed))))
-        sdf = mat.orderBy(key).limit(n)
-        return Series._from_internal(
-            InternalFrame(sdf, INDEX_COL, self._internal.index_name), sdf[_VALUE], self._name
-        )
 
     def agg(self, funcs):
         """'sum' | ['sum', 'mean', ...] → scalar or pandas Series, computed
@@ -1591,9 +1066,6 @@ class Series:
     def is_monotonic_decreasing(self) -> bool:
         return self._monotonic(False)
 
-    def pipe(self, func, *args, **kwargs):
-        return func(self, *args, **kwargs)
-
     def equals(self, other: "Series") -> bool:
         """Exact index→value equality incl. missing==missing; distributed
         full-outer comparison, no row collect."""
@@ -1604,9 +1076,6 @@ class Series:
         j = a.join(b, INDEX_COL, "full_outer")
         bad = j.filter(~F.col("__a").eqNullSafe(F.col("__b"))).limit(1).count()
         return bad == 0 and a.count() == b.count()
-
-    def take(self, positions: list) -> "Series":
-        return self.iloc[list(positions)]
 
     def get(self, key, default=None):
         """Label lookup returning ``default`` when absent (never raising —
@@ -1635,12 +1104,6 @@ class Series:
         return list(self.to_pandas())
 
     to_list = tolist
-
-    def to_dict(self) -> dict:
-        return self.to_pandas().to_dict()
-
-    def to_numpy(self):
-        return self.to_pandas().to_numpy()
 
     def items(self):
         s = self.to_pandas()
@@ -1673,42 +1136,11 @@ class Series:
         rows = valid.orderBy(*order).select("__pos").limit(1).collect()
         return int(rows[0]["__pos"]) if rows else -1
 
-    def first_valid_index(self):
-        """Index label of the first non-missing value in visible order
-        (None when all-missing)."""
-        return self._valid_edge(first=True)
-
-    def last_valid_index(self):
-        return self._valid_edge(first=False)
-
-    def _valid_edge(self, first: bool):
-        sdf = self._materialized()
-        valid = sdf.filter(~self._missing_mask(F.col(_VALUE), sdf))
-        # order_columns returns SortOrder exprs; invert from the SPEC for
-        # the "last" direction (calling .desc() on a SortOrder nests two
-        # sort orders -> Spark codegen INTERNAL_ERROR, caught by test)
-        spec = self._internal.order_spec or ((INDEX_COL, True),)
-        order = [
-            F.col(c).asc() if (asc if first else not asc) else F.col(c).desc()
-            for c, asc in spec
-        ]
-        rows = valid.orderBy(*order).select(INDEX_COL).limit(1).collect()
-        return rows[0][INDEX_COL] if rows else None
-
     def drop(self, labels) -> "Series":
         """Drop rows by index label(s) — the filter complement of
         ``self[labels]``; pure filter, pushdown-friendly."""
         labels = labels if isinstance(labels, (list, tuple, set)) else [labels]
-        return Series._from_internal(
-            InternalFrame(
-                self._materialized().filter(~F.col(INDEX_COL).isin(list(labels))),
-                INDEX_COL,
-                self._internal.index_name,
-                self._internal.order_spec,
-            ),
-            F.col(_VALUE),
-            self._name,
-        )
+        return self._filter(~F.col(INDEX_COL).isin(list(labels)))
 
     def filter(self, items=None, like: str | None = None, regex: str | None = None) -> "Series":
         """Subset rows by INDEX label (pandas Series.filter semantics —
@@ -1722,36 +1154,7 @@ class Series:
             cond = idx.cast("string").contains(like)
         else:
             cond = idx.cast("string").rlike(regex)
-        return Series._from_internal(
-            InternalFrame(
-                self._materialized().filter(cond),
-                INDEX_COL,
-                self._internal.index_name,
-                self._internal.order_spec,
-            ),
-            F.col(_VALUE),
-            self._name,
-        )
-
-    def truncate(self, before=None, after=None) -> "Series":
-        """Rows with index label in [before, after] — pure range filter on
-        the index (pushdown-friendly; pandas requires a sorted index for
-        the same reason)."""
-        cond = F.lit(True)
-        if before is not None:
-            cond = cond & (F.col(INDEX_COL) >= F.lit(before))
-        if after is not None:
-            cond = cond & (F.col(INDEX_COL) <= F.lit(after))
-        return Series._from_internal(
-            InternalFrame(
-                self._materialized().filter(cond),
-                INDEX_COL,
-                self._internal.index_name,
-                self._internal.order_spec,
-            ),
-            F.col(_VALUE),
-            self._name,
-        )
+        return self._filter(cond)
 
     def case_when(self, caselist) -> "Series":
         """pandas 2.2 Series.case_when: ``[(cond_series, value), ...]``
@@ -1785,14 +1188,6 @@ class Series:
             internal, {"self": F.col("self"), "other": F.col("other")}
         )
 
-    @property
-    def at(self):
-        return _AtIndexer(self, positional=False)
-
-    @property
-    def iat(self):
-        return _AtIndexer(self, positional=True)
-
     def asof(self, where):
         """Last non-missing value whose index label is <= ``where`` (NaN
         when none) — an ordered limit-1 job, the scalar cousin of the
@@ -1805,13 +1200,7 @@ class Series:
         rows = valid.orderBy(F.col(INDEX_COL).desc()).select(_VALUE).limit(1).collect()
         return rows[0][_VALUE] if rows else float("nan")
 
-    @property
-    def values(self):
-        """Eager numpy materialization (pandas contract: ndarray is
-        driver-sized by definition)."""
-        return self.to_pandas().values
-
-    array = values
+    array = Frame.values
 
     @property
     def T(self) -> "Series":
@@ -1822,15 +1211,6 @@ class Series:
 
     def ravel(self):
         return self.to_pandas().values
-
-    def copy(self, deep: bool = True) -> "Series":
-        """New wrapper over the same immutable anchor — frames here are
-        never mutated in place, so deep and shallow coincide."""
-        return Series._from_internal(self._internal, self._col, self._name)
-
-    @property
-    def empty(self) -> bool:
-        return self._internal.sdf.limit(1).count() == 0
 
     def argsort(self) -> "Series":
         """pandas (current) argsort: positions WITHIN the non-missing
@@ -1890,16 +1270,6 @@ class Series:
     def nbytes(self) -> int:
         return int(self.to_pandas().nbytes)
 
-    def infer_objects(self) -> "Series":
-        return self
-
-    def convert_dtypes(self) -> "Series":
-        return self
-
-    def tail(self, n: int = 5) -> "Series":
-        """Last n rows in visible order — the iloc[-n:] positional path."""
-        return self.iloc[-n:] if n > 0 else self.iloc[len(self):]
-
     def squeeze(self):
         """Length-1 Series → scalar; otherwise self (pandas)."""
         rows = self._materialized().select(_VALUE).limit(2).collect()
@@ -1942,18 +1312,8 @@ class Series:
     def aggregate(self, funcs):
         return self.agg(funcs)
 
-    def divide(self, other): return self / other
     def multiply(self, other): return self * other
     def subtract(self, other): return self - other
-
-    def product(self):
-        return self.prod()
-
-    def pad(self) -> "Series":
-        return self.ffill()
-
-    def backfill(self) -> "Series":
-        return self.bfill()
 
     def reset_index(self, drop: bool = False):
         """drop=True → renumber 0..n-1 through the frame's DISTRIBUTED
@@ -1977,48 +1337,6 @@ class Series:
             return renumbered[str(name)].rename(self._name)
         return renumbered
 
-    def at_time(self, time_str: str) -> "Series":
-        """Rows whose TIMESTAMP index is exactly this time of day — a
-        pure pushdown-friendly filter (date_format equality)."""
-        return self._filter(
-            F.date_format(F.col(INDEX_COL), "HH:mm:ss")
-            == F.lit(self._normalize_time(time_str))
-        )
-
-    def between_time(self, start: str, end: str) -> "Series":
-        """Rows whose time of day falls in [start, end] inclusive
-        (pandas default inclusive='both'); wrapping ranges (start > end)
-        select the complement band like pandas."""
-        t = F.date_format(F.col(INDEX_COL), "HH:mm:ss")
-        lo, hi = self._normalize_time(start), self._normalize_time(end)
-        cond = (
-            (t >= F.lit(lo)) & (t <= F.lit(hi))
-            if lo <= hi
-            else (t >= F.lit(lo)) | (t <= F.lit(hi))
-        )
-        return self._filter(cond)
-
-    @staticmethod
-    def _normalize_time(t: str) -> str:
-        parts = t.split(":")
-        while len(parts) < 3:
-            parts.append("00")
-        return ":".join(p.zfill(2) for p in parts)
-
-    def to_string(self, *args, **kwargs) -> str:
-        return self.to_pandas().to_string(*args, **kwargs)
-
-    def to_markdown(self, *args, **kwargs) -> str:
-        return self.to_pandas().to_markdown(*args, **kwargs)
-
-    def to_csv(self, *args, **kwargs):
-        """Driver-side pandas terminal (the DISTRIBUTED csv sink is
-        sources/writers.py::write_csv)."""
-        return self.to_pandas().to_csv(*args, **kwargs)
-
-    def to_json(self, *args, **kwargs):
-        return self.to_pandas().to_json(*args, **kwargs)
-
     def groupby(self, by=None, level=None):
         """s.groupby(key_series).mean() for a SAME-ANCHOR key series (the
         df-derived idiom), or s.groupby(level=...) over a struct-backed
@@ -2027,7 +1345,7 @@ class Series:
         from pontem_spark.core.frame import DataFrame as PFrame
 
         if level is not None:
-            names = self._level_names()
+            names = self._index_level_names()
             lvl = names[level] if isinstance(level, int) else level
             key_col = F.col(f"{INDEX_COL}.{lvl}")
             sdf = self._materialized()
@@ -2072,11 +1390,7 @@ class Series:
         j = guard_unique_labels(
             data, INDEX_COL, lab.join(data, INDEX_COL, "left"), INDEX_COL
         )
-        return Series._from_internal(
-            InternalFrame(j, INDEX_COL, self._internal.index_name),
-            F.col(_VALUE),
-            self._name,
-        )
+        return self._rewrap(j, order_spec=None)
 
     def reindex_like(self, other: "Series") -> "Series":
         """Conform to ``other``'s index — ``reindex(other.index)`` without
@@ -2091,11 +1405,7 @@ class Series:
         j = guard_unique_labels(
             data, INDEX_COL, lab.join(data, INDEX_COL, "left"), INDEX_COL
         )
-        return Series._from_internal(
-            InternalFrame(j, INDEX_COL, self._internal.index_name),
-            F.col(_VALUE),
-            self._name,
-        )
+        return self._rewrap(j, order_spec=None)
 
     def update(self, other: "Series") -> None:
         """Overwrite with ``other``'s non-missing values on matching
@@ -2177,19 +1487,6 @@ class Series:
     def rdivmod(self, other) -> "tuple[Series, Series]":
         return self.__rfloordiv__(other), self.__rmod__(other)
 
-    def rename_axis(self, name) -> "Series":
-        """Rename the INDEX (zero-job metadata, like rename for values)."""
-        return Series._from_internal(
-            InternalFrame(
-                self._internal.sdf,
-                self._internal.index_spark_col,
-                name,
-                self._internal.order_spec,
-            ),
-            self._col,
-            self._name,
-        )
-
     def factorize(self):
         """(codes, uniques) — ndarray results are driver-sized by
         definition (pandas contract), so this is an eager terminal like
@@ -2208,72 +1505,9 @@ class Series:
 
     # MultiIndex level plumbing ------------------------------------------------
 
-    def _level_names(self) -> list:
-        name = self._internal.index_name
-        if not isinstance(name, tuple):
-            raise TypeError("not a MultiIndex")
-        return list(name)
-
-    def _rebuild_index(self, keep: "list[str]") -> "Series":
-        m = self._materialized()
-        # pandas droplevel/swaplevel/xs preserve ROW ORDER — keep ordering
-        # anchored to the original struct index under a helper name (the
-        # frame's _level_rebuild fix, r8 probe: re-sorting by the rebuilt
-        # index reordered rows)
-        spec = self._internal.order_spec
-        if spec is None:
-            m = m.withColumn("__lvlorder__", F.col(INDEX_COL))
-            spec = (("__lvlorder__", True),)
-        if len(keep) == 1:
-            sdf = m.withColumn("__idx2__", F.col(f"{INDEX_COL}.{keep[0]}"))
-            internal = InternalFrame(sdf, "__idx2__", keep[0], order_spec=spec)
-        else:
-            sdf = m.withColumn(
-                "__idx2__",
-                F.struct(*[F.col(f"{INDEX_COL}.{n}").alias(n) for n in keep]),
-            )
-            internal = InternalFrame(sdf, "__idx2__", tuple(keep), order_spec=spec)
-        return Series._from_internal(internal, F.col(_VALUE), self._name)
-
-    def droplevel(self, level) -> "Series":
-        names = self._level_names()
-        drop = names[level] if isinstance(level, int) else level
-        return self._rebuild_index([n for n in names if n != drop])
-
-    def swaplevel(self, i: int = -2, j: int = -1) -> "Series":
-        names = self._level_names()
-        names[i], names[j] = names[j], names[i]
-        return self._rebuild_index(names)
-
-    def reorder_levels(self, order: "list") -> "Series":
-        """Reorder MultiIndex levels (struct field reorder — zero-job)."""
-        names = self._level_names()
-        new = [names[l] if isinstance(l, int) else l for l in order]
-        return self._rebuild_index(new)
-
     @property
     def dtypes(self):
         return self.dtype
-
-    def xs(self, key, level=0) -> "Series":
-        """Cross-section: rows where the given index LEVEL equals key,
-        that level dropped — a pure pushdown-friendly filter plus the
-        droplevel rebuild."""
-        names = self._level_names()
-        lvl = names[level] if isinstance(level, int) else level
-        m = self._materialized()
-        filtered = m.filter(F.col(f"{INDEX_COL}.{lvl}") == F.lit(key))
-        keep = [n for n in names if n != lvl]
-        if len(keep) == 1:
-            sdf = filtered.withColumn("__idx2__", F.col(f"{INDEX_COL}.{keep[0]}"))
-            internal = InternalFrame(sdf, "__idx2__", keep[0])
-        else:
-            sdf = filtered.withColumn(
-                "__idx2__",
-                F.struct(*[F.col(f"{INDEX_COL}.{n}").alias(n) for n in keep]),
-            )
-            internal = InternalFrame(sdf, "__idx2__", tuple(keep))
-        return Series._from_internal(internal, F.col(_VALUE), self._name)
 
     # accessors ---------------------------------------------------------------
 
@@ -2289,96 +1523,3 @@ class Series:
 
         return DatetimeAccessor(self)
 
-
-def _positional_take_sdf(obj, positions: list):
-    """Shared Series/DataFrame take: rows at the given VISIBLE-order
-    positions, carrying a ``__take_ord__`` request-rank column so the
-    result materializes in pandas' take order with duplicates preserved.
-    One global row_number window (on-demand only — positional semantics
-    need a total order) + a CASE chain over the DISTINCT positions."""
-    from collections import defaultdict
-
-    from pyspark.sql import Window
-
-    keys = [int(k) for k in positions]
-    if any(k < 0 for k in keys):
-        n = len(obj)
-        keys = [k + n if k < 0 else k for k in keys]
-        if any(k < 0 for k in keys):
-            raise IndexError(f"position out of bounds for length {n}")
-    ranks: "dict[int, list[int]]" = defaultdict(list)
-    for i, k in enumerate(keys):
-        ranks[k].append(i)
-    w = Window.orderBy(*obj._internal.order_columns(INDEX_COL))
-    mat = obj._materialized().withColumn("__rn__", F.row_number().over(w) - 1)
-    chain = None
-    for k, rs in ranks.items():
-        cond = F.col("__rn__") == k
-        chain = F.when(cond, F.lit(rs)) if chain is None else chain.when(cond, F.lit(rs))
-    if chain is None:  # empty positions list
-        return mat.filter(F.lit(False)).withColumn("__take_ord__", F.lit(0)).drop("__rn__")
-    return (
-        mat.filter(F.col("__rn__").isin(list(ranks)))
-        .withColumn("__take_ord__", F.explode(chain))
-        .drop("__rn__")
-    )
-
-
-class _AtIndexer:
-    """s.at[label] / s.iat[pos] — scalar access."""
-
-    def __init__(self, s: "Series", positional: bool):
-        self._s = s
-        self._positional = positional
-
-    def __getitem__(self, key):
-        if self._positional:
-            return self._s.iloc[key]
-        sentinel = object()
-        out = self._s.get(key, sentinel)
-        if out is sentinel:
-            raise KeyError(key)
-        return out
-
-
-class _LocIndexer:
-    def __init__(self, s: Series):
-        self._s = s
-
-    def __getitem__(self, key):
-        if isinstance(key, Series):
-            return self._s[key]
-        if isinstance(key, slice):  # label slice: inclusive both ends (pandas loc)
-            cond = F.lit(True)
-            if key.start is not None:
-                cond = cond & (F.col(INDEX_COL) >= F.lit(key.start))
-            if key.stop is not None:
-                cond = cond & (F.col(INDEX_COL) <= F.lit(key.stop))
-            return self._s._filter(cond)
-        return self._s[key]
-
-
-class _ILocIndexer:
-    def __init__(self, s: Series):
-        self._s = s
-
-    def __getitem__(self, key):
-        if isinstance(key, slice):
-            return self._s._positional_slice(key)
-        if isinstance(key, bool):
-            raise TypeError("iloc key: bool")
-        if isinstance(key, int):
-            if key < 0:
-                key += len(self._s)
-                if key < 0:
-                    raise IndexError(key)
-            sliced = self._s._positional_slice(slice(key, key + 1))
-            rows = sliced._materialized().collect()
-            if not rows:
-                raise IndexError(key)
-            return rows[0][_VALUE]
-        if isinstance(key, (list, tuple)) or (
-            hasattr(key, "__array__") and getattr(key, "ndim", 1) == 1
-        ):
-            return self._s._positional_take(list(key))
-        raise TypeError(f"iloc key: {type(key)}")

@@ -346,7 +346,7 @@ def ewm(src: Visible, params: dict, op: str):
         raise ValueError(
             f"ewm(): more than {cap} rows; ewm over a Series or DataFrame is "
             "inherently sequential and runs as ONE Arrow group. Use "
-            "df.groupby(key)[col].ewm(...) (GroupedEwm) — per-key groups run "
+            "df.groupby(key)[col].ewm(...) — per-key groups run "
             "in parallel — or pre-aggregate to bounded input."
         )
     names = list(src.cols)

@@ -814,12 +814,13 @@ def q_api_rank_na_option(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_api_nextreme_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Series.nlargest/nsmallest keep= through the wrapper — driver
-    evidence for the r10 keep tail (core/series.py::_n_extreme): integer
-    per-date order counts tie heavily at the n-th value, so 'all' must
-    return the whole boundary tie group (rows > n), while 'first'/'last'
-    pick by lowest/highest index among the ties. Plan shape:
+    evidence for the r10 keep tail (core/generic.py::Frame._n_extreme):
+    integer per-date order counts tie heavily at the n-th value, so 'all'
+    must return the whole boundary tie group (rows > n), while 'first'/
+    'last' pick the first/last visible position among the ties — the
+    date index here, which leaves the frame in index order. Plan shape:
     TakeOrderedAndProject for first/last (k rows per partition move, no
-    global sort); 'all' adds one broadcast 1-row threshold join."""
+    global sort); 'all' adds one broadcast 1-row boundary join."""
     from pontem_spark.core import from_spark
 
     cnts = (
@@ -827,7 +828,7 @@ def q_api_nextreme_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_orderdate").alias("d"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    s = from_spark(cnts).set_index("d")["cnt"]
+    s = from_spark(cnts, index_col="d")["cnt"]
     parts = []
     for variant, res in (
         ("nlargest_all", s.nlargest(10, keep="all")),
@@ -878,8 +879,8 @@ def q_api_nextreme_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_api_ctor_order_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional cumsum/shift through the pandas-parity constructors —
-    driver evidence for the construction-order spec (core/frame.py
-    ``__ctor__``, core/internal.py from_local): non-monotonic explicit
+    driver evidence for the construction-order spec (``__ctor__``,
+    core/internal.py upload): non-monotonic explicit
     index (r11 fix) and monotonic-with-duplicate-labels (r12 ADVICE fix).
 
     Scale shape: the CONSTRUCTION path is driver-local by definition

@@ -2199,7 +2199,7 @@ def test_frame_ewm_single_group_scale_guard(spark, monkeypatch):
 
     monkeypatch.setattr(limits, "MAX_SINGLE_GROUP_ROWS", 5)
     f = DataFrame({"a": [float(i) for i in range(10)], "b": [1.0] * 10}, spark=spark)
-    with pytest.raises(ValueError, match="GroupedEwm"):
+    with pytest.raises(ValueError, match="groupby"):
         f.ewm(alpha=0.3).mean()
     monkeypatch.setattr(limits, "MAX_SINGLE_GROUP_ROWS", 1000)
     assert f.ewm(alpha=0.3).mean().to_pandas().shape == (10, 2)

@@ -1,11 +1,13 @@
-"""Round-10 API tail: rank(na_option) — also over an unsorted index —,
-nlargest/nsmallest(keep), drop_duplicates(keep), quantile(list-q),
-value_counts(sort=False) — differential-pinned vs pandas.
+"""Round-10 API tail: rank(na_option) and nlargest/nsmallest(keep) —
+both also over an unsorted index —, drop_duplicates(keep),
+quantile(list-q), value_counts(sort=False) — differential-pinned vs
+pandas.
 
-Deviation note (same contract as sort_values): boundary ties order by
-INDEX (asc for keep='first'/'all', desc for keep='last'), not pandas'
-original position — keep='last' with n >= len(s) differs from pandas
-only in tie DISPLAY order, so those cases compare membership.
+nlargest/nsmallest break boundary ties by visible position, like pandas.
+Deviation: with n >= len(s) pandas falls back to a stable sort_values,
+so its keep='last' DISPLAYS ties in first-position order while the lazy
+plan (which cannot know n >= len without a count) shows them last-first;
+those cases compare membership.
 """
 from __future__ import annotations
 
@@ -72,14 +74,15 @@ def test_rank_bad_na_option(spark):
 
 @pytest.mark.parametrize("keep", ["first", "last", "all"])
 def test_series_n_extreme_keep(spark, keep):
-    ps = pd.Series(VALS, dtype="float64")
-    ss = Series(VALS, name="v")
-    for n in (0, 1, 2, 3, 6, 10):
-        # keep='last' with n >= len: pandas tie display order is
-        # positional — documented index-order deviation, membership only
-        order = not (keep == "last" and n >= len(VALS))
-        _eq(ss.nlargest(n, keep=keep).to_pandas(), ps.nlargest(n, keep=keep), order=order)
-        _eq(ss.nsmallest(n, keep=keep).to_pandas(), ps.nsmallest(n, keep=keep), order=order)
+    for index in (None, UNSORTED):
+        ps = pd.Series(VALS, dtype="float64", index=index)
+        ss = Series(VALS, name="v", index=index)
+        for n in (0, 1, 2, 3, 6, 10):
+            # keep='last' with n >= len: pandas' stable-sort fallback
+            # (module docstring), membership only
+            order = not (keep == "last" and n >= len(VALS))
+            _eq(ss.nlargest(n, keep=keep).to_pandas(), ps.nlargest(n, keep=keep), order=order)
+            _eq(ss.nsmallest(n, keep=keep).to_pandas(), ps.nsmallest(n, keep=keep), order=order)
 
 
 def test_series_n_extreme_bad_keep(spark):
@@ -139,16 +142,19 @@ def test_frame_rank_na_option(spark, method, na_option):
 @pytest.mark.parametrize("keep", ["first", "last", "all"])
 def test_frame_n_extreme_keep(spark, keep):
     data = {"x": [3.0, None, 1.0, 3.0, 2.0, 3.0], "y": [1, 2, 3, 4, 5, 0]}
-    pdf = pd.DataFrame({"x": [3.0, np.nan, 1.0, 3.0, 2.0, 3.0], "y": data["y"]})
-    df = DataFrame(data)
-    for n in (0, 1, 2, 3, 5, 8):
-        order = not (keep == "last" and n >= len(data["y"]))
-        for g, w in (
-            (df.nlargest(n, "x", keep=keep).to_pandas(), pdf.nlargest(n, "x", keep=keep)),
-            (df.nsmallest(n, "x", keep=keep).to_pandas(), pdf.nsmallest(n, "x", keep=keep)),
-        ):
-            _eq(g["x"], w["x"], order=order)
-            _eq(g["y"], w["y"], order=order)
+    for index in (None, [4, 0, 5, 2, 1, 3]):
+        pdf = pd.DataFrame(
+            {"x": [3.0, np.nan, 1.0, 3.0, 2.0, 3.0], "y": data["y"]}, index=index
+        )
+        df = DataFrame(data, index=index)
+        for n in (0, 1, 2, 3, 5, 8):
+            order = not (keep == "last" and n >= len(data["y"]))
+            for g, w in (
+                (df.nlargest(n, "x", keep=keep).to_pandas(), pdf.nlargest(n, "x", keep=keep)),
+                (df.nsmallest(n, "x", keep=keep).to_pandas(), pdf.nsmallest(n, "x", keep=keep)),
+            ):
+                _eq(g["x"], w["x"], order=order)
+                _eq(g["y"], w["y"], order=order)
 
 
 def test_frame_nsmallest_missing_sorts_last(spark):

@@ -9,8 +9,8 @@
 2. (low) Construction order is recorded for a MONOTONIC index with
    duplicate labels too — Spark's sort is unstable within equal labels,
    so positional ops (shift/cumsum) disagreed with pandas
-   nondeterministically. Both DataFrame.__init__ and
-   InternalFrame.from_local (Series).
+   nondeterministically. Both constructors (one upload,
+   core/internal.py::upload).
 3. (low) _java_named_groups no longer rewrites LITERAL '(?P<' text
    inside character classes or behind a backslash.
 4. (low) A user column literally named '__ctor__' is no longer silently

@@ -143,3 +143,25 @@ def test_dup_label_differing_sequences_cartesian(spark, caller):
 def test_both_ordered_axis0_differing_sequences(spark):
     got, want = _run("frame_axis0", spark, ([3.0, 1.0, 2.0], [0, 1, 2]), ([5.0, 9.0, 7.0], [2, 0, 3]))
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda s, f: s[s > 1] + s,
+        lambda s, f: s.dropna() + s,
+        lambda s, f: (f[f["x"] > 1] + f)["x"],
+        lambda s, f: (f.dropna() + f)["x"],
+    ],
+    ids=["series_mask", "series_dropna", "frame_mask", "frame_dropna"],
+)
+def test_filtered_result_meets_source_by_label(spark, op):
+    """A filter is not 1 row in, 1 row out, so a filtered result pairs
+    with its source by label: a repeated label takes pandas' per-label
+    cartesian, not a match on the source's helper columns."""
+    vals, idx = [1.0, 2.0, None, 4.0], [5, 5, 3, 1]
+    got = op(Series(vals, index=idx, spark=spark), PFrame({"x": vals}, index=idx, spark=spark))
+    want = op(pd.Series(vals, index=idx), pd.DataFrame({"x": vals}, index=idx))
+    got = got.to_pandas()
+    assert list(got.index) == list(want.index)
+    assert sorted(map(str, zip(got.index, got.values))) == sorted(map(str, zip(want.index, want.values)))

@@ -48,14 +48,22 @@ def assert_series_equal(got: Series, want: pd.Series):
 )
 @pytest.mark.parametrize(
     "index",
-    [None, [10, 20, 30, 40, 50], np.array([5, 6, 7, 8, 9]), range(5)],
-    ids=["default", "list", "ndarray", "range"],
+    [
+        None,
+        [10, 20, 30, 40, 50],
+        np.array([5, 6, 7, 8, 9]),
+        range(5),
+        # a flat index of tuples, and a real MultiIndex (struct-backed)
+        [(i, "abcde"[i]) for i in range(5)],
+        pd.MultiIndex.from_tuples([(i, "abcde"[i]) for i in range(5)]),
+    ],
+    ids=["default", "list", "ndarray", "range", "tuples", "multiindex"],
 )
 def test_construction_matrix(spark, data, index):
     got = Series(data, index=index, spark=spark)
     want = pd.Series(
         data if not isinstance(data, range) else list(data),
-        index=list(index) if index is not None else None,
+        index=index if isinstance(index, pd.MultiIndex) or index is None else list(index),
     )
     assert got.shape == want.shape
     assert_series_equal(got, want)
@@ -430,6 +438,12 @@ def test_array_valued_series(spark):
     got = s.to_pandas()
     assert [list(v) for v in got.values] == [[1, 1], [2, 2], [3, 3], [4, 4]]
     assert list(got.index) == [2, 4, 6, 8]
+    # tuple labels come back as tuples from a frame column too
+    from pontem_spark.core import DataFrame as PFrame
+
+    labels = [(1, "a"), (2, "b")]
+    col = PFrame({"v": [1.0, 2.0]}, index=labels, spark=spark)["v"].to_pandas()
+    assert col.index.tolist() == labels and col.tolist() == [1.0, 2.0]
 
 
 def test_sql_over_frames(spark):
@@ -772,12 +786,12 @@ def test_series_level_ops_preserve_row_order(spark):
 def test_ewm_single_group_scale_guard(spark, monkeypatch):
     """Series-level ewm funnels every row through ONE Arrow group — the
     loud guard (r7 verdict #6) must fire before that group materializes
-    and point at the per-key parallel shape (GroupedEwm)."""
+    and point at the per-key parallel shape (df.groupby(key)[col].ewm)."""
     import pontem_spark.core.limits as limits
 
     monkeypatch.setattr(limits, "MAX_SINGLE_GROUP_ROWS", 5)
     s = Series([float(i) for i in range(10)], spark=spark)
-    with pytest.raises(ValueError, match="GroupedEwm"):
+    with pytest.raises(ValueError, match="groupby"):
         s.ewm(alpha=0.3).mean()
     monkeypatch.setattr(limits, "MAX_SINGLE_GROUP_ROWS", 1000)
     assert len(s.ewm(alpha=0.3).mean().to_pandas()) == 10
@@ -1285,6 +1299,13 @@ def test_series_multiindex_levels(spark):
     assert s.xs(1, level="h").to_pandas().sort_index().equals(
         ws.xs(1, level="h").sort_index()
     )
+    # an unnamed MultiIndex passed to the constructor: levels by position
+    mi = pd.MultiIndex.from_tuples([("y", 2), ("x", 1), ("x", 3)])
+    s = Series([1.0, 2.0, 3.0], index=mi, spark=spark)
+    ws = pd.Series([1.0, 2.0, 3.0], index=mi)
+    assert s.to_pandas().equals(ws)
+    assert s.droplevel(0).to_pandas().equals(ws.droplevel(0))
+    assert s.xs("x").to_pandas().equals(ws.xs("x"))
 
 
 def test_series_at_iat_asof(spark):
@@ -1540,6 +1561,38 @@ def test_r9_astype_bool_truthiness(spark):
     assert got_f == pd.Series(f_cases).astype("bool").tolist()
 
 
+@pytest.mark.parametrize(
+    "data, dtype",
+    [
+        ([1.5, float("inf")], "int64"),
+        (["1.5", "abc"], "float64"),
+        (["15", "1.5"], "int64"),
+        ([-1.7, 2.7], "int64"),
+        (["", "x"], "bool"),
+    ],
+    ids=["inf_to_int", "str_to_float", "str_float_to_int", "neg_trunc", "bool_str"],
+)
+def test_astype_conversion_edges(spark, data, dtype):
+    """r10 probe pin: a conversion pandas refuses raises here too (the
+    exception type may differ), and one it takes gives pandas' values."""
+    try:
+        want = pd.Series(data).astype(dtype).tolist()
+    except Exception:  # noqa: BLE001 — pandas refuses: the engine must too
+        with pytest.raises(Exception):
+            Series(data, spark=spark).astype(dtype).to_pandas()
+    else:
+        assert Series(data, spark=spark).astype(dtype).to_pandas().tolist() == want
+
+
+def test_astype_documented_deviations(spark):
+    """NaN → int keeps the missing value (pandas raises
+    IntCastingNaNError); an int32 overflow raises (pandas 2.x wraps)."""
+    got = Series([1.5, float("nan")], spark=spark).astype("int64").to_pandas()
+    assert got.iloc[0] == 1 and pd.isna(got.iloc[1])
+    with pytest.raises(Exception):
+        Series([3e10], spark=spark).astype("int32").to_pandas()
+
+
 def test_r9_resample_gapfill_and_anchor(spark):
     """Round-9 probe pin: Series.resample emits the COMPLETE bucket grid
     like pandas (empty buckets gap-fill — NaN for the mean family, 0 for
@@ -1617,7 +1670,7 @@ def test_reindex_duplicate_labels_raise(spark):
 
 def test_sorted_output_derived_keeps_sort_order(spark):
     """r10 probe pin: sort_values/nlargest/nsmallest key their order spec
-    on dedicated __sv_ord__ helpers, so a NON-monotonic derived series
+    on dedicated __sv_{col}__ helpers, so a NON-monotonic derived series
     (sorted > 0) keeps the sort order instead of re-sorting by the
     derived booleans (value_counts' ADVICE bug class)."""
     vals = [3.0, -1.0, 2.0, -5.0, float("nan"), 4.0]
@@ -1634,9 +1687,7 @@ def test_sorted_output_derived_keeps_sort_order(spark):
         want = pdx > 0
         assert got.tolist() == want.tolist()
         assert got.index.tolist() == want.index.tolist()
-    # the missing tail orders by INDEX (documented deviation — pandas'
-    # positional order is not reproducible distributed); values match
-    # position-for-position here because there is a single NaN
+    # the missing tail keeps the visible order (pandas' stable position)
     got = (s.sort_values() * 2).to_pandas()
     want = w.sort_values() * 2
     assert got.index.tolist() == want.index.tolist()
@@ -1722,6 +1773,17 @@ def test_take_request_order_duplicates_and_seeded_sample(spark):
     a = s.sample(frac=0.5, random_state=42).to_pandas()
     b = s.sample(frac=0.5, random_state=42).to_pandas()
     assert a.tolist() == b.tolist() and a.index.tolist() == b.index.tolist()
+    # the frame draws by the same rule: exact n, repeatable, and the same
+    # labels as its column under one seed
+    from pontem_spark.core import DataFrame as PFrame
+
+    f = PFrame({"v": [float(i) for i in range(40)], "w": [str(i) for i in range(40)]}, spark=spark)
+    a = f.sample(n=7, random_state=3).to_pandas()
+    b = f.sample(n=7, random_state=3).to_pandas()
+    assert len(a) == 7 and a.equals(b)
+    picked = f.sample(frac=0.5, seed=11).to_pandas().index.tolist()
+    assert 0 < len(picked) < 40
+    assert picked == f["v"].sample(frac=0.5, seed=11).to_pandas().index.tolist()
     assert s.replace([10.0, 30.0], 0.0).to_pandas().tolist() == w.replace([10.0, 30.0], 0.0).tolist()
 
 

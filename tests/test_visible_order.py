@@ -933,3 +933,74 @@ def test_unsorted_index_chains(spark, chain):
     for op in chain.split(">"):
         df, pdf = _UNSORTED_OPS[op](df), _UNSORTED_OPS[op](pdf)
     _eq_frame(df.to_pandas(), pdf)
+
+
+def _same_series(got: pd.Series, want: pd.Series, label) -> None:
+    """Values (NaN-aware) and labels, position for position."""
+    assert got.index.tolist() == want.index.tolist(), label
+    for a, b in zip(got.tolist(), want.tolist()):
+        assert (pd.isna(a) and pd.isna(b)) or a == b, (label, got.tolist(), want.tolist())
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_sorted_output_derived_chains(spark, seed):
+    """Sorted outputs keep their row order through a rebinding derivation
+    (*2, round, a comparison) and a head: sort_values (asc, desc,
+    na_position='first'), nlargest/nsmallest, a negative-step slice and a
+    reversed-then-sliced series, the frame's sort/nlargest with a
+    replaced sort column, frame value_counts and concat of sorted blocks
+    — over a shuffled index with ties and a NaN/None block, against
+    pandas (stable sorts: ties keep their position)."""
+    import random
+
+    from pontem_spark.core.frame import concat
+
+    rng = random.Random(seed)
+    n = 40
+    vals = [
+        rng.choice([None, float("nan")]) if rng.random() < 0.12 else round(rng.uniform(-5, 5), 1)
+        for _ in range(n)
+    ]
+    idx = list(range(n))
+    rng.shuffle(idx)
+    w = pd.Series(vals, index=idx, dtype="float64")
+    s = Series(vals, index=idx, spark=spark)
+    for label, sp, pw in [
+        ("asc", s.sort_values(), w.sort_values(kind="stable")),
+        ("desc", s.sort_values(ascending=False), w.sort_values(ascending=False, kind="stable")),
+        ("na_first", s.sort_values(na_position="first"), w.sort_values(na_position="first", kind="stable")),
+        ("nlargest", s.nlargest(7), w.nlargest(7)),
+        ("nsmallest", s.nsmallest(7), w.nsmallest(7)),
+        ("neg step", s[::-2], w.iloc[::-2]),
+        ("rev then take", s[::-1][:5], w.iloc[::-1].iloc[:5]),
+    ]:
+        _same_series(sp.to_pandas(), pw, (label, "direct"))
+        _same_series((sp * 2).to_pandas(), pw * 2, (label, "*2"))
+        _same_series(sp.round(0).to_pandas(), pw.round(0), (label, "round"))
+        _same_series((sp > 0).to_pandas(), pw > 0, (label, "cmp"))
+        _same_series((sp * 2).head(4).to_pandas(), (pw * 2).head(4), (label, "head"))
+
+    cols = {"a": [rng.randint(0, 5) for _ in range(n)], "b": [round(rng.uniform(-3, 3), 1) for _ in range(n)]}
+    wf = pd.DataFrame(cols, index=idx)
+    df = DataFrame(cols, index=idx, spark=spark)
+    fs, ws = df.sort_values("b"), wf.sort_values("b", kind="stable")
+    _same_series((fs["b"] * 3).to_pandas(), ws["b"] * 3, "frame sort derived")
+    _same_series((fs["b"] > 0).to_pandas(), ws["b"] > 0, "frame sort nonmono")
+    fs["b"] = fs["b"] > 0
+    _same_series(fs.to_pandas()["a"], ws["a"], "frame setitem after sort")
+    _same_series(
+        (df.nlargest(6, "b")["b"] < 0).to_pandas(), wf.nlargest(6, "b")["b"] < 0, "frame nlargest"
+    )
+    # value_counts ties order by label (a documented deviation: pandas'
+    # first-appearance order is positional)
+    wvc = (
+        wf.value_counts().reset_index(name="n")
+        .sort_values(["n", "a", "b"], ascending=[False, True, True])
+        .set_index(["a", "b"])["n"]
+    )
+    _same_series((df.value_counts() * -1).to_pandas(), wvc * -1, "frame vc")
+    _same_series(
+        (concat([s.sort_values(), s.sort_values(ascending=False)]) * 2).to_pandas(),
+        pd.concat([w.sort_values(kind="stable"), w.sort_values(ascending=False, kind="stable")]) * 2,
+        "concat sorted",
+    )
